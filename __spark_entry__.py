@@ -1485,9 +1485,10 @@ def _q_blocking_quality(spark, sf_dir):
 def _q_link_fuzzy_full(spark, sf_dir):
     """Full pipeline INCLUDING seeded calibration. Oracled since round 4:
     the sample hash is engine-portable (md5 top 60 bits) and the quantile is
-    the exact ⌈q·n⌉-th smallest sampled distance (TakeOrderedAndProject, no
-    approxQuantile sketch), so DuckDB reproduces the calibrated threshold —
-    and therefore the result set — bit-for-bit."""
+    the exact ⌈q·n⌉-th smallest sampled distance (picked on the driver from
+    the exact sample-matrix jaccard distances, no approxQuantile sketch), so
+    DuckDB reproduces the calibrated threshold — and therefore the result
+    set — bit-for-bit."""
     x, y = _org_sides(spark, sf_dir)
     return link_orgs(x, y, CFG, algorithm="fuzzy", one_to_one=True).select(
         "name_x", "name_y", "stringdist", "minDist"

@@ -163,9 +163,11 @@ def candidate_pairs(
     ``x_prep`` / ``y_prep`` carry ``name_norm`` + the hash id (see
     functions/normalize.prepare_side).
 
-    ``x_count`` / ``y_count``: an already-known upper bound on that side's
-    distinct-name count (callers that calibrate have paid for the exact
-    count; never add an action just to learn it). A gram's posting list in
+    ``x_count`` / ``y_count``: an already-known upper bound on the distinct
+    values of that side's id column (the one fed to ``gram_index``); never
+    add an action just to learn it. A calibration's distinct-NAME counts
+    qualify only for ``prepare_side`` ids (content hashes of the name); ids
+    supplied from outside can outnumber names. A gram's posting list in
     the (per-id-distinct) index is bounded by the side's distinct-id count,
     so ``count <= max_block_df`` proves the df-cap a no-op and its
     aggregate + broadcast + anti-join subtree is pruned outright — the same

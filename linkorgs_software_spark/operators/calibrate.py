@@ -12,49 +12,61 @@ returns Inf meaning no constraint on an empty side). Unlike the reference's
 unseeded ``sample()``, ours is **seeded** (SURVEY.md §7.4 risk 3) so the
 threshold — and therefore F1 — is reproducible run-to-run.
 
-This is app-level selectivity estimation (the CBO analogy in SURVEY.md §4);
-the cross join is bounded at sample_cap² pairs so it never grows with data.
+The work is bounded (≤ ``calibration_sample`` names per side), so Spark
+does only what needs the full data: for a batch of requests ``(side_a,
+side_b, k)``, ONE action counts every side's distinct names and ONE collect
+gathers every ``(side, seed)`` sample, each shared by all requests naming
+it. The driver scores jaccard sample matrices in numpy; other measures
+(Catalyst and registered scorers, embedding L2) score their sample pairs in
+one Spark job per request and collect the ≤ cap² distances. Either way the
+threshold is the ⌈q·n⌉-th smallest distance, picked with ``np.partition``.
 """
 
 from __future__ import annotations
 
 import math
+from functools import reduce
+from typing import Callable, NamedTuple, Sequence
 
-from pyspark.sql import DataFrame
+import numpy as np
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructField, StructType
+from pyspark.storagelevel import StorageLevel
 
 from ..config import LinkConfig
 from ..functions.normalize import NORM_COL
 from ..functions.scorers import distance_expr
 
+# vocabulary columns per dense block of the jaccard kernel: driver memory
+# stays at (sample rows) × this many float32s per side
+_VOCAB_CHUNK = 4096
+
+
+class Side(NamedTuple):
+    """The distinct values of ``frame[col]``; ``n`` is their count when the
+    caller already knows it. Requests naming the same (frame, col, n)
+    share one count and one sample per seed."""
+
+    frame: DataFrame
+    col: str = NORM_COL
+    n: int | None = None
+
 
 def _seeded_sample(df: DataFrame, cap: int, seed: int, n: int | None = None) -> DataFrame:
-    """~cap rows, deterministic under (input, seed), with NO global limit.
+    """~cap rows, deterministic under (input, seed): a seeded hash-mod
+    filter with NO global limit (``limit`` is a single-partition barrier).
+    The cap is approximate, which only affects quantile precision; the
+    quantile target uses the exact counts.
 
-    ``sample().limit(cap)`` plants a GlobalLimit in the plan — a
-    single-partition barrier that serializes the downstream cross join
-    (measured 8x slowdown of the network calibration). A seeded hash-mod
-    filter keeps the sample fully parallel; the cap is approximate, which
-    only affects quantile-estimation precision, never the quantile target
-    (that uses exact full counts).
-
-    All-string frames hash with an ENGINE-PORTABLE key (md5 of a visible
-    string, top 60 bits as an integer) so an ANSI-SQL oracle reproduces the
-    exact sample membership — that, plus the exact rank quantile below, is
-    what lets the CALIBRATED flagship query be value-hash-checked end to
-    end. Frames carrying non-string columns (embedding calibration) keep
-    the engine-native xxhash64.
-
-    The string encoding is COLLISION-RESISTANT: each column is mapped to
-    its fixed-width md5 hex (NULL -> '-', which no md5 can produce), then
-    the seed + per-column digests concatenate with no separator. A plain
-    ``concat_ws('|')`` would SKIP null columns and not escape '|' in
-    values — rows ('a|b','c') vs ('a','b|c'), or (NULL,'x') vs ('x',NULL),
-    would get perfectly correlated sample membership, skewing the
-    calibration sample non-uniformly.
+    All-string frames hash with an ENGINE-PORTABLE, collision-resistant key
+    so an ANSI-SQL oracle reproduces the membership: each column becomes
+    its fixed-width md5 hex (NULL -> '-', which no md5 can produce), the
+    seed and the digests concatenate with no separator, and the top 60 bits
+    of that md5 are the hash (a ``concat_ws('|')`` key would correlate rows
+    ('a|b','c') and ('a','b|c'), or (NULL,'x') and ('x',NULL)). Other
+    frames (embedding calibration) use the engine-native xxhash64.
     """
-    from pyspark.sql.types import StringType
-
     n = df.count() if n is None else n
     if n <= cap:
         return df
@@ -62,49 +74,131 @@ def _seeded_sample(df: DataFrame, cap: int, seed: int, n: int | None = None) -> 
     cols = [F.col(c) for c in df.columns]
     if all(isinstance(f.dataType, StringType) for f in df.schema.fields):
         enc = [F.coalesce(F.md5(c), F.lit("-")) for c in cols]
-        h = F.conv(
-            F.substring(F.md5(F.concat(F.lit(str(seed)), *enc)), 1, 15),
-            16,
-            10,
-        ).cast("long")
+        h = F.conv(F.substring(F.md5(F.concat(F.lit(str(seed)), *enc)), 1, 15), 16, 10)
+        h = h.cast("long")
     else:
         h = F.xxhash64(*cols, F.lit(seed))
     return df.filter(F.pmod(h, F.lit(buckets)) == 0)
 
 
-def _exact_quantile(dists: DataFrame, q: float) -> float | None:
-    """Exact rank quantile of ``dists.dist``: the ⌈q·n⌉-th smallest value
-    (clamped to [1, n]).
+def _rank_pick(dists: np.ndarray, q: float) -> float | None:
+    """Exact rank quantile: the ⌈q·n⌉-th smallest of ``dists`` (clamped to
+    [1, n]), None when empty — deterministic and SQL-expressible, which is
+    what lets the calibrated flagship query be oracle-checked."""
+    n = dists.size
+    if n == 0:
+        return None
+    kk = max(1, min(n, math.ceil(q * n)))
+    return float(np.partition(dists, kk - 1)[kk - 1])
 
-    The calibration sample is bounded at ≤ ``calibration_sample``² pairs by
-    construction (reference ``CalibrateDistThres.R:55-56``), so an EXACT
-    quantile is cheap: ``orderBy(...).limit(k)`` compiles to
-    TakeOrderedAndProject (distributed partial top-k — no global sort
-    barrier), and ``max`` of those k rows is the k-th smallest. Unlike
-    ``approxQuantile`` (engine-private Greenwald-Khanna sketch), the rank
-    pick is deterministic and ANSI-SQL-expressible, which is what lets the
-    calibrated flagship query be oracle-checked.
+
+def _gram_sets(names: list, q: int) -> list[frozenset]:
+    """``qgram_set_expr(col, q)`` on the driver: distinct full-length
+    code-point windows; NULL and names shorter than q give the empty set."""
+    return [frozenset(s[i : i + q] for i in range(len(s) - q + 1)) if s else frozenset() for s in names]
+
+
+def _jaccard_dists(gx: list[frozenset], gy: list[frozenset]) -> np.ndarray:
+    """All pairwise jaccard distances, bit-identical to
+    ``jaccard_dist_from_sizes_expr``: exact integer intersections (0/1
+    float32 matmuls are exact below 2^24) over the grams both sides share,
+    in ``_VOCAB_CHUNK``-column blocks, then the Spark expression's IEEE
+    double op order — union = na + nb − inter, 1 − inter/union, 0.0 on an
+    empty union."""
+    vocab = {g: j for j, g in enumerate(set().union(*gx) & set().union(*gy))}
+
+    def block(sets, lo, w):
+        hits = [(i, vocab[g] - lo) for i, s in enumerate(sets) for g in s if lo <= vocab.get(g, -1) < lo + w]
+        m = np.zeros((len(sets), w), dtype=np.float32)
+        m[tuple(np.array(hits, dtype=np.int64).reshape(-1, 2).T)] = 1.0
+        return m
+
+    inter = np.zeros((len(gx), len(gy)), dtype=np.float32)
+    for lo in range(0, len(vocab), _VOCAB_CHUNK):
+        w = min(_VOCAB_CHUNK, len(vocab) - lo)
+        inter += block(gx, lo, w) @ block(gy, lo, w).T
+    inter = inter.astype(np.float64)
+    na = np.array([len(s) for s in gx], dtype=np.float64)
+    nb = np.array([len(s) for s in gy], dtype=np.float64)
+    union = (na[:, None] + nb[None, :]) - inter
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return np.where(union == 0, 0.0, 1.0 - inter / union).ravel()
+
+
+def _spark_dists(spark, xs: list, ys: list, dtype, pair_dist) -> np.ndarray:
+    """Score every sample pair in ONE Spark job; NULL/NaN distances dropped."""
+    a = spark.createDataFrame([(v,) for v in xs], StructType([StructField("_a", dtype)]))
+    b = spark.createDataFrame([(v,) for v in ys], StructType([StructField("_b", dtype)]))
+    d = a.crossJoin(b).select(pair_dist("_a", "_b").cast("double")).toArrow().column(0).to_numpy()
+    return d[~np.isnan(d)]  # to_numpy maps NULL to NaN
+
+
+def calibrate(
+    requests: Sequence[tuple[Side | DataFrame, Side | DataFrame, float]],
+    cfg: LinkConfig,
+    *,
+    measure: str | None = None,
+    pair_dist: Callable[[str, str], Column] | None = None,
+) -> list[tuple[float, int, int]]:
+    """One ``(thr, n_a, n_b)`` per request ``(side_a, side_b, k)``, in order.
+
+    A bare frame means ``Side(frame)``. ``side_a`` samples with
+    ``cfg.seed``, ``side_b`` with ``cfg.seed + 1``. ``pair_dist(a, b) ->
+    Column`` scores sample pairs in Spark; without it ``measure`` (default
+    ``cfg.distance_measure``) does, on the driver for ``jaccard``.
+
+    ``n_a`` / ``n_b`` are exact distinct-value counts. They bound a side's
+    distinct ids — and so may be passed to ``candidate_pairs`` — only for
+    ``prepare_side`` frames, whose ids are content hashes of the name.
     """
-    # Persist before the two actions: without it the count and the top-k
-    # pick each re-run the scored sample cross join — the calibration's
-    # dominant cost, paid twice (round-7 profile: ~3s per calibration, x2).
-    # The frame is one double column bounded at sample_cap² rows, so the
-    # cache is a few MB; values are unchanged.
-    dists = dists.persist()
+    measure = cfg.distance_measure if measure is None else measure
+    if pair_dist is None and measure != "jaccard":
+        pair_dist = lambda a, b: distance_expr(measure, a, b, qgram=cfg.qgram)  # noqa: E731
+    reqs = [[s if isinstance(s, Side) else Side(s) for s in (a, b)] + [k] for a, b, k in requests]
+    uniq = {(id(s.frame), s.col, s.n): s for r in reqs for s in r[:2]}
+    if not uniq:
+        return []
+    pos = {key: i for i, key in enumerate(uniq)}
+    index = [[pos[(id(s.frame), s.col, s.n)] for s in r[:2]] + r[2:] for r in reqs]
+    sides = list(uniq.values())
+
+    tagged = [s.frame.select(F.lit(i).alias("_side"), F.col(s.col).alias("_v")) for i, s in enumerate(sides)]
+    base = reduce(DataFrame.unionAll, tagged).distinct().persist(StorageLevel.MEMORY_AND_DISK_DESER)
     try:
-        n = dists.count()
-        if n == 0:
-            return None
-        kk = max(1, min(n, math.ceil(q * n)))
-        row = (
-            dists.orderBy(F.col("dist").asc())
-            .limit(kk)
-            .agg(F.max("dist").alias("m"))
-            .collect()[0]
-        )
-        return row["m"]
+        counts = [s.n for s in sides]
+        if None in counts:
+            got = dict(base.groupBy("_side").count().collect())
+            counts = [got.get(i, 0) if n is None else n for i, n in enumerate(counts)]
+        live = [(a, b) for a, b, _ in index if counts[a] and counts[b]]
+        draws = sorted({(a, cfg.seed) for a, _ in live} | {(b, cfg.seed + 1) for _, b in live})
+        samples: dict[tuple[int, int], list] = {d: [] for d in draws}
+        parts = [
+            _seeded_sample(
+                base.filter(F.col("_side") == i).select("_v"), cfg.calibration_sample, seed, counts[i]
+            ).select(F.lit(t).alias("_t"), "_v")
+            for t, (i, seed) in enumerate(draws)
+        ]
+        for r in reduce(DataFrame.unionAll, parts).collect() if parts else []:
+            samples[draws[r["_t"]]].append(r["_v"])
     finally:
-        dists.unpersist()
+        base.unpersist()
+
+    grams = {d: _gram_sets(v, cfg.qgram) for d, v in samples.items()} if pair_dist is None else {}
+    out = []
+    for a, b, k in index:
+        na, nb = counts[a], counts[b]
+        if na == 0 or nb == 0:
+            out.append((float("inf"), na, nb))
+            continue
+        xs, ys = (a, cfg.seed), (b, cfg.seed + 1)
+        if pair_dist is None:
+            dists = _jaccard_dists(grams[xs], grams[ys])
+        else:
+            dtype = base.schema["_v"].dataType
+            dists = _spark_dists(base.sparkSession, samples[xs], samples[ys], dtype, pair_dist)
+        thr = _rank_pick(dists, min(max(k / math.sqrt(float(na) * float(nb)), 0.0), 1.0))
+        out.append((float("inf") if thr is None else max(thr, 1e-6), na, nb))
+    return out
 
 
 def calibrated_threshold_on_column(
@@ -119,43 +213,12 @@ def calibrated_threshold_on_column(
     nx: int | None = None,
     ny: int | None = None,
 ) -> float:
-    """Calibrate over precomputed per-side columns (e.g. embeddings).
-
-    ``pair_dist_expr(x_col, y_col) -> Column`` scores a sampled cross join;
-    expensive per-row derivations (embedding kernels) must already live in
-    ``x_col``/``y_col`` so they are computed once per sampled row, not once
-    per sampled pair.
-    """
-    # Cache the distinct frames: each feeds 2-3 actions (count, sample
-    # filter, cross-join scan) that would otherwise re-run the upstream
-    # dedup shuffle per action.
-    x_all = x_df.select(x_col).dropDuplicates().cache()
-    y_all = y_df.select(F.col(y_col).alias("_ycal")).dropDuplicates().cache()
-    try:
-        nx = x_all.count() if nx is None else nx
-        ny = y_all.count() if ny is None else ny
-        if nx == 0 or ny == 0:
-            return float("inf")
-        xs = _seeded_sample(x_all, cfg.calibration_sample, cfg.seed, n=nx)
-        ys = _seeded_sample(y_all, cfg.calibration_sample, cfg.seed + 1, n=ny)
-        q = min(max(k / math.sqrt(float(nx) * float(ny)), 0.0), 1.0)
-        par = x_df.sparkSession.sparkContext.defaultParallelism
-        dists = (
-            xs.repartition(par)
-            .crossJoin(ys)
-            .select(pair_dist_expr(x_col, "_ycal").alias("dist"))
-            .filter(F.col("dist").isNotNull() & ~F.isnan("dist"))
-        )
-        if q >= 1.0:
-            thr = dists.agg(F.max("dist").alias("m")).collect()[0]["m"]
-        else:
-            thr = _exact_quantile(dists, q)
-        if thr is None:
-            return float("inf")
-        return max(float(thr), 1e-6)
-    finally:
-        x_all.unpersist()
-        y_all.unpersist()
+    """Calibrate over precomputed per-side columns (e.g. embeddings) scored
+    by ``pair_dist_expr(x_col, y_col) -> Column``; expensive per-row
+    derivations must already live in the columns so they run once per
+    sampled row, not per sampled pair. ``nx``/``ny`` replace the counts."""
+    sides = Side(x_df, x_col, nx), Side(y_df, y_col, ny)
+    return calibrate([(*sides, k)], cfg, pair_dist=pair_dist_expr)[0][0]
 
 
 def calibrated_threshold(
@@ -167,75 +230,9 @@ def calibrated_threshold(
     measure: str | None = None,
     return_counts: bool = False,
 ) -> float | tuple[float, int, int]:
-    """Data-dependent MaxDist for ``measure`` at budget ``k`` matches/row.
-
-    ``return_counts=True`` additionally returns the two exact distinct-name
-    counts the calibration already computed, as ``(thr, nx, ny)`` — callers
-    feed them to ``candidate_pairs`` as posting-list bounds (the df-cap
-    no-op proof) instead of paying a second count action.
-    """
+    """Data-dependent MaxDist for ``measure`` at budget ``k`` matches/row;
+    ``return_counts=True`` returns ``(thr, nx, ny)`` with the exact
+    distinct-name counts (see ``calibrate`` on using them as bounds)."""
     k = cfg.ave_match_number_per_alias if k is None else k
-    measure = cfg.distance_measure if measure is None else measure
-
-    # Cache the distinct-name frames across the count + sample + cross-join
-    # actions (the dominant fixed cost of a calibration is re-running the
-    # dedup shuffle once per action).
-    x_all = x_prep.select(NORM_COL).dropDuplicates().cache()
-    y_all = y_prep.select(F.col(NORM_COL).alias("_ynorm")).dropDuplicates().cache()
-    def _ret(v: float):
-        return (v, nx, ny) if return_counts else v
-
-    try:
-        nx = x_all.count()
-        ny = y_all.count()
-        if nx == 0 or ny == 0:
-            return _ret(float("inf"))
-        xs = _seeded_sample(x_all, cfg.calibration_sample, cfg.seed, n=nx)
-        ys = _seeded_sample(y_all, cfg.calibration_sample, cfg.seed + 1, n=ny)
-
-        q = k / math.sqrt(float(nx) * float(ny))
-        q = min(max(q, 0.0), 1.0)
-
-        # Spread the sample cross join: a BNLJ of two small frames otherwise
-        # lands in ONE partition and scores the whole sample on a single core.
-        par = x_prep.sparkSession.sparkContext.defaultParallelism
-        if measure == "jaccard":
-            # Pre-gram the SAMPLED names (≤ cap rows per side) so the cross
-            # join computes one array_intersect per pair instead of building
-            # both q-gram sets per pair (cap² set constructions otherwise —
-            # the dominant fixed cost of a calibration).
-            from ..functions.qgrams import jaccard_dist_from_sizes_expr, qgram_set_expr
-
-            # STRING sets here, deliberately: the calibration cross join is
-            # bounded at sample_cap^2 pairs, so the packed-set form's
-            # per-pair saving cannot amortize its larger expression trees —
-            # an interleaved bisect of the alias-path flow (which runs up
-            # to three calibrations) read ~10.2s with string sets vs ~14.7s
-            # with packed ones, while the unbounded-pair scoring paths
-            # (score_pairs, the resolver) keep the packed form where it
-            # measured 4.5x per-pair
-            xs = xs.select(
-                qgram_set_expr(NORM_COL, cfg.qgram).alias("_gx")
-            ).withColumn("_nx", F.size("_gx"))
-            ys = ys.select(
-                qgram_set_expr("_ynorm", cfg.qgram).alias("_gy")
-            ).withColumn("_ny", F.size("_gy"))
-            dist_expr_ = jaccard_dist_from_sizes_expr("_gx", "_gy", "_nx", "_ny")
-        else:
-            dist_expr_ = distance_expr(measure, NORM_COL, "_ynorm", qgram=cfg.qgram)
-        dists = (
-            xs.repartition(par)
-            .crossJoin(ys)
-            .select(dist_expr_.alias("dist"))
-            .filter(F.col("dist").isNotNull() & ~F.isnan("dist"))
-        )
-        if q >= 1.0:
-            thr = dists.agg(F.max("dist").alias("m")).collect()[0]["m"]
-        else:
-            thr = _exact_quantile(dists, q)
-        if thr is None:
-            return _ret(float("inf"))
-        return _ret(max(float(thr), 1e-6))
-    finally:
-        x_all.unpersist()
-        y_all.unpersist()
+    [res] = calibrate([(x_prep, y_prep, k)], cfg, measure=measure)
+    return res if return_counts else res[0]

@@ -100,6 +100,11 @@ def duplicated_spans(
     aggregates per doc. Span frequencies are counted, never joined into a
     pair blow-up — a viral boilerplate span costs one big count, not a
     bucket self-join.
+
+    Precondition: ``id_col`` values are unique. A small input is spread by
+    repartitioning on the id (``_spread_small_input``), so heavily repeated
+    ids would put their window explodes on few tasks; the ids are not
+    checked here.
     """
     from ..functions.text import tokens_expr
 

@@ -14,7 +14,8 @@ Spark-first: both directional matches reuse the SAME trigram blocking +
 scoring operators (the north rule's fixed blocking key), so no new join
 machinery exists here. The directory is treated as a regular (possibly
 huge — 0.5e9 aliases in the reference) side: AQE broadcasts it when it is
-actually small; nothing forces a broadcast.
+actually small; nothing forces a broadcast. ``link_orgs`` calibrates both
+directions in one ``calibrate`` batch with its raw match.
 """
 
 from __future__ import annotations
@@ -51,18 +52,22 @@ def match_to_directory(
     *,
     side_id: str,
     out_dist: str,
+    calibration: tuple[float, int, int] | None = None,
 ) -> DataFrame:
     """Closest directory entities per input name.
 
     Returns ``(side_id, name_norm, canonical_id, <out_dist>)`` — one row per
     (name, canonical_id), the minimum distance among that entity's aliases.
+    ``calibration``: a precomputed ``(thr, n_side, n_dir)``; None resolves it here.
     """
     # Same threshold priority as the raw stage (reference passes
     # MaxDist_network + AveMatchNumberPerAlias_network through the identical
     # code path, LinkOrgs_LinkOrgs.R:610-617): a non-None ave knob
     # recalibrates and overrides the fixed threshold.
     n_side = n_dir = None
-    if cfg.ave_match_number_per_alias_network is not None:
+    if calibration is not None:
+        thr, n_side, n_dir = calibration
+    elif cfg.ave_match_number_per_alias_network is not None:
         # recycle the calibration's exact distinct-name counts as the
         # blocking cap's posting-list bounds (candidate_pairs docstring)
         thr, n_side, n_dir = calibrated_threshold(

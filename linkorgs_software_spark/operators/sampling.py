@@ -11,7 +11,7 @@ every decision bit-for-bit.
 
 This is the engine's seeded-sampling story at the API surface; the internal
 calibration sampler (``operators/calibrate._seeded_sample``) uses the same
-hash-mod idea with xxhash64 where oracle portability is not needed.
+hash-mod idea (md5 for string rows, xxhash64 for embedding rows).
 """
 
 from __future__ import annotations

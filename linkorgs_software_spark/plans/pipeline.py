@@ -29,7 +29,7 @@ from ..config import DEFAULT, FALLBACK_MAX_DIST, LinkConfig
 from ..functions.embedding import l2_dist_udf, make_hash_embed_udf
 from ..functions.normalize import NORM_COL, pair_id_expr, prepare_side
 from ..operators.blocking import candidate_pairs
-from ..operators.calibrate import calibrated_threshold
+from ..operators.calibrate import calibrate
 from ..operators.dedup import keep_min_per_group, min_over_group
 from ..operators.network import (
     bridge,
@@ -90,9 +90,9 @@ def _rep_rows(prep: DataFrame, id_col: str, by_col: str, suffix: str) -> DataFra
     return rep
 
 
-def _resolve_threshold(
-    x_prep: DataFrame, y_prep: DataFrame, cfg: LinkConfig
-) -> tuple[float, int | None, int | None]:
+def _resolve_thresholds(
+    x_prep: DataFrame, y_prep: DataFrame, cfg: LinkConfig, dir_prep: DataFrame | None = None
+) -> tuple[tuple[float, int | None, int | None], tuple | None, tuple | None]:
     """Reference threshold priority (``LinkOrgs_PFuzzyDiscreteFullFxn.R:67-76``):
     a non-None ``ave_match_number_per_alias`` recomputes the threshold by
     calibration and OVERRIDES ``max_dist``; ``max_dist`` applies only when the
@@ -101,12 +101,17 @@ def _resolve_threshold(
 
     Returns ``(thr, nx, ny)``; the counts are the calibration's exact
     distinct-name counts when it ran (recycled as ``candidate_pairs``
-    posting-list bounds), else None — never computed just for the bound."""
-    if cfg.ave_match_number_per_alias is not None:
-        return calibrated_threshold(x_prep, y_prep, cfg, return_counts=True)
-    if cfg.max_dist is not None:
-        return cfg.max_dist, None, None
-    return FALLBACK_MAX_DIST, None, None
+    posting-list bounds), else None — never computed just for the bound.
+    Then the x→ and y→``dir_prep`` calibrations, None when there is no
+    directory or its threshold is pinned. All run as ONE ``calibrate`` batch."""
+    raw_k = cfg.ave_match_number_per_alias
+    net_k = None if dir_prep is None else cfg.ave_match_number_per_alias_network
+    reqs = [] if raw_k is None else [(x_prep, y_prep, raw_k)]
+    reqs += [] if net_k is None else [(x_prep, dir_prep, net_k), (y_prep, dir_prep, net_k)]
+    got = calibrate(reqs, cfg)
+    pinned = (FALLBACK_MAX_DIST if cfg.max_dist is None else cfg.max_dist, None, None)
+    raw = pinned if raw_k is None else got.pop(0)
+    return raw, *(got or (None, None))
 
 
 def _raw_match(
@@ -406,26 +411,33 @@ def link_orgs(
             "netdist_x", F.lit(0.0)
         ).withColumn("netdist_y", F.lit(0.0))
     else:
-        thr, nxc, nyc = _resolve_threshold(x_prep, y_prep, cfg)
+        dir_prep = None
+        if algorithm == "alias":
+            # cached: the two directional matches and the calibrations
+            # issue several actions against the pruned directory
+            # (MEMORY_AND_DISK, so an oversized directory spills, not OOMs)
+            dir_prep = _register_cache(prepare_directory(directory, cfg).cache())
+        # a resumed run skips the calibrations of completed directory stages
+        done = checkpointer is not None and all(map(checkpointer.is_complete, ("x2net", "y2net")))
+        cal_dir = None if done else dir_prep
+        (thr, nxc, nyc), x_cal, y_cal = _resolve_thresholds(x_prep, y_prep, cfg, cal_dir)
         z_raw = _stage(
             "scored_raw",
             lambda: _raw_match(x_prep, y_prep, cfg, thr, x_count=nxc, y_count=nyc),
         )
-        if algorithm == "alias":
-            # cached: the two directional matches and their calibrations
-            # issue several actions against the pruned directory
-            # (MEMORY_AND_DISK, so an oversized directory spills, not OOMs)
-            dir_prep = _register_cache(prepare_directory(directory, cfg).cache())
+        if dir_prep is not None:
             x2net = _stage(
                 "x2net",
                 lambda: match_to_directory(
-                    x_prep, dir_prep, cfg, side_id="x_id", out_dist="netdist_x"
+                    x_prep, dir_prep, cfg, side_id="x_id", out_dist="netdist_x",
+                    calibration=x_cal,
                 ),
             )
             y2net = _stage(
                 "y2net",
                 lambda: match_to_directory(
-                    y_prep, dir_prep, cfg, side_id="y_id", out_dist="netdist_y"
+                    y_prep, dir_prep, cfg, side_id="y_id", out_dist="netdist_y",
+                    calibration=y_cal,
                 ),
             )
             z_net = bridge(x2net, y2net)

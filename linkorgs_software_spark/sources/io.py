@@ -1,4 +1,4 @@
-"""Sources & sinks: table readers + resumable stage checkpoints.
+"""Sinks: resumable stage checkpoints.
 
 The reference ingests in-memory data.frames and cached ``.Rdata`` downloads
 (``LinkOrgs/R/LinkOrgs_LinkOrgs.R:150-163,460-477``; ``BuildHelpers.R:31-69``)
@@ -16,27 +16,6 @@ import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession
-
-TPCH_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
-
-
-def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-
-
-def read_tables(spark: SparkSession, sf_dir: str, names=TPCH_TABLES) -> dict[str, DataFrame]:
-    return {n: read_table(spark, sf_dir, n) for n in names}
 
 
 class StageCheckpointer:

@@ -177,29 +177,6 @@ def test_no_rdd_access_in_package():
     assert offenders == [], offenders
 
 
-def test_exact_quantile_is_distributed_top_k(spark):
-    """Calibration's exact rank quantile must compile to
-    TakeOrderedAndProject (distributed partial top-k) — NOT a global sort
-    or a single-partition window — so the quantile pick adds no
-    serialization barrier to the calibration path."""
-    from pyspark.sql import functions as F
-
-    dists = spark.range(10_000).select((F.col("id") % 997).cast("double").alias("dist"))
-    picked = dists.orderBy(F.col("dist").asc()).limit(50)
-    plan = _plan(picked)
-    assert "TakeOrderedAndProject" in plan, plan
-    assert "Window" not in plan
-
-    # and the quantile value itself is the exact k-th smallest
-    from linkorgs_software_spark.operators.calibrate import _exact_quantile
-
-    q = _exact_quantile(dists, 50 / 10_000)
-    values = sorted(r.dist for r in dists.collect())
-    import math
-
-    assert q == values[max(1, math.ceil(50 / 10_000 * 10_000)) - 1]
-
-
 def test_dedup_passages_single_tokens_scan(spark, tmp_path):
     """``dedup_passages`` must consume the detector's carried ``head_span``
     instead of re-tokenizing: exactly TWO scans of the corpus remain (the
