@@ -15,7 +15,7 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..cache import register_cache
+from ..cache import persist, scoped_caches
 
 
 @dataclass(frozen=True)
@@ -61,21 +61,23 @@ def assess_match_performance(
     ``n_x`` / ``n_y`` are the distinct-name counts of the two input tables
     (the TN universe, ``AssessMatches.R:64``).
     """
-    # Cache both deduped pair sets: ``z`` is typically the full linkage
-    # plan — without the cache each confusion count would re-run the whole
-    # pipeline (blocking + scoring + windows) once per count.
-    pred = _dedup_pairs(z, name_x, name_y).cache()
-    truth = _dedup_pairs(z_true, name_x, name_y).cache()
+    # Cache both deduped pair sets for the two counts: ``z`` is typically
+    # the full linkage plan — without the cache each confusion count would
+    # re-run the whole pipeline (blocking + scoring + windows) once per
+    # count. Released on return: the counts are all that escape.
+    with scoped_caches():
+        pred = persist(_dedup_pairs(z, name_x, name_y))
+        truth = persist(_dedup_pairs(z_true, name_x, name_y))
 
-    keys = ["name_x", "name_y"]
-    # TP and FP in one pass over pred; FN in one pass over truth.
-    marked = pred.join(truth.withColumn("_t", F.lit(1)), keys, "left")
-    row = marked.agg(
-        F.count(F.when(F.col("_t").isNotNull(), 1)).alias("tp"),
-        F.count(F.when(F.col("_t").isNull(), 1)).alias("fp"),
-    ).collect()[0]
-    tp, fp = row["tp"], row["fp"]
-    fn = truth.join(pred, keys, "left_anti").count()
+        keys = ["name_x", "name_y"]
+        # TP and FP in one pass over pred; FN in one pass over truth.
+        marked = pred.join(truth.withColumn("_t", F.lit(1)), keys, "left")
+        row = marked.agg(
+            F.count(F.when(F.col("_t").isNotNull(), 1)).alias("tp"),
+            F.count(F.when(F.col("_t").isNull(), 1)).alias("fp"),
+        ).collect()[0]
+        tp, fp = row["tp"], row["fp"]
+        fn = truth.join(pred, keys, "left_anti").count()
     tn = n_x * n_y - tp - fp - fn
     return MatchAssessment(tp=tp, fp=fp, fn=fn, tn=tn)
 
@@ -155,15 +157,12 @@ def skew_profile(
 
     keys = [key_cols] if isinstance(key_cols, str) else list(key_cols)
     key = F.concat_ws("|", *[F.col(c).cast("string") for c in keys])
-    # persisted + registered (cache.release_caches lifecycle): the eager
-    # totals collect below and the returned top-n plan otherwise each run
-    # the full key-count shuffle — doubling the cost of the very shuffle
-    # this diagnostic exists to measure
-    counts = register_cache(
-        df.select(key.alias("key"))
-        .groupBy("key")
-        .agg(F.count(F.lit(1)).alias("n_rows"))
-        .persist()
+    # persisted (cache.release_caches lifecycle): the eager totals collect
+    # below and the returned top-n plan otherwise each run the full
+    # key-count shuffle — doubling the cost of the very shuffle this
+    # diagnostic exists to measure
+    counts = persist(
+        df.select(key.alias("key")).groupBy("key").agg(F.count(F.lit(1)).alias("n_rows"))
     )
     tot = counts.agg(
         F.sum("n_rows").alias("_t"), F.count(F.lit(1)).alias("_k")
@@ -391,7 +390,7 @@ def resolution_diff(
     report is ONE declarative plan (every branch is a one-row aggregate,
     stitched back with broadcast-trivial crossJoins), so the driver runs
     one action, not a count per statistic. The cell frame is persisted
-    (``register_cache``) because five branches read it.
+    (``cache.persist``) because five branches read it.
     """
     a = old.select(
         F.col(id_col).alias("_id"), F.col(old_col).cast("string").alias("_o")
@@ -408,11 +407,10 @@ def resolution_diff(
             (F.col("_n").isNotNull() & F.col("_o").isNull()).cast("long")
         ).alias("n_only_new"),
     )
-    cells = register_cache(
+    cells = persist(
         joined.filter(F.col("_o").isNotNull() & F.col("_n").isNotNull())
         .groupBy("_o", "_n")
         .agg(F.count(F.lit(1)).alias("n_cell"))
-        .persist()
     )
     per_old = cells.groupBy("_o").agg(
         F.sum("n_cell").alias("n_o"),

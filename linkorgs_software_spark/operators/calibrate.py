@@ -32,8 +32,8 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
-from pyspark.storagelevel import StorageLevel
 
+from ..cache import persist, scoped_caches
 from ..config import LinkConfig
 from ..functions.normalize import NORM_COL
 from ..functions.scorers import distance_expr
@@ -163,8 +163,8 @@ def calibrate(
     sides = list(uniq.values())
 
     tagged = [s.frame.select(F.lit(i).alias("_side"), F.col(s.col).alias("_v")) for i, s in enumerate(sides)]
-    base = reduce(DataFrame.unionAll, tagged).distinct().persist(StorageLevel.MEMORY_AND_DISK_DESER)
-    try:
+    with scoped_caches():
+        base = persist(reduce(DataFrame.unionAll, tagged).distinct())
         counts = [s.n for s in sides]
         if None in counts:
             got = dict(base.groupBy("_side").count().collect())
@@ -180,8 +180,6 @@ def calibrate(
         ]
         for r in reduce(DataFrame.unionAll, parts).collect() if parts else []:
             samples[draws[r["_t"]]].append(r["_v"])
-    finally:
-        base.unpersist()
 
     grams = {d: _gram_sets(v, cfg.qgram) for d, v in samples.items()} if pair_dist is None else {}
     out = []

@@ -20,9 +20,8 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
-from ..cache import register_cache
+from ..cache import persist
 from ..functions.embedding import cosine_sim_expr
 from ..functions.qgrams import jaccard_qgram_dist_expr
 from ..functions.text import word_shingles_expr
@@ -128,10 +127,8 @@ def duplicated_spans(
     # persisting the exploded frame means the window explode — the linear-
     # in-total-tokens cost — runs once, feeding both the span-frequency
     # shuffle and the per-doc aggregate.
-    ex = register_cache(
-        df.select(
-            F.col(id_col).alias("_id"), F.explode_outer(spans_expr).alias("span")
-        ).persist(StorageLevel.MEMORY_AND_DISK_DESER)
+    ex = persist(
+        df.select(F.col(id_col).alias("_id"), F.explode_outer(spans_expr).alias("span"))
     )
     span_docs = (
         ex.filter(F.col("span").isNotNull())
@@ -202,11 +199,10 @@ def duplicated_span_runs(
             lambda i: F.md5(F.concat_ws(" ", F.slice(toks, i, k))),
         ),
     ).otherwise(F.array().cast("array<string>"))
-    ex = register_cache(
+    ex = persist(
         df.select(F.col(id_col).alias("_id"), F.posexplode(spans_expr).alias("_p0", "span"))
         .withColumn("pos", F.col("_p0") + 1)
         .drop("_p0")
-        .persist(StorageLevel.MEMORY_AND_DISK_DESER)
     )
     span_docs = (
         ex.groupBy("span")
@@ -459,11 +455,7 @@ def ngram_jaccard_dups(
         F.col(id_col).alias("id"),
         word_shingles_expr(text_col, shingle_k).alias("shingles"),
     )
-    idx = register_cache(
-        sh.select("id", F.explode("shingles").alias("s")).persist(
-            StorageLevel.MEMORY_AND_DISK_DESER
-        )
-    )
+    idx = persist(sh.select("id", F.explode("shingles").alias("s")))
     dfreq = idx.groupBy("s").agg(F.count(F.lit(1)).alias("_df"))
     # broadcast the OVER-cap shingles (bounded by n_rows/cap keys) and
     # anti-join — the keep-list is the shingle VOCABULARY, linear in corpus
@@ -527,11 +519,7 @@ def containment_pairs(
         F.col(id_col).alias("id"),
         word_shingles_expr(text_col, shingle_k).alias("shingles"),
     )
-    idx = register_cache(
-        sh.select("id", F.explode("shingles").alias("s")).persist(
-            StorageLevel.MEMORY_AND_DISK_DESER
-        )
-    )
+    idx = persist(sh.select("id", F.explode("shingles").alias("s")))
     dfreq = idx.groupBy("s").agg(F.count(F.lit(1)).alias("_df"))
     # over-cap anti-join, not keep-list semi-join — see ngram_dup_pairs /
     # apply_df_cap: the keep side is the (corpus-linear) vocabulary
@@ -667,7 +655,7 @@ def minhash_lsh_dups(
     )
     # the banded frame feeds the cap count AND both self-join sides: persist
     # (disk-spillable) so the signature aggregation runs once, not 3x
-    banded = register_cache(banded.persist(StorageLevel.MEMORY_AND_DISK_DESER))
+    banded = persist(banded)
     if max_bucket_df is not None:
         banded = apply_df_cap(banded, "bucket", max_bucket_df)
     cand = (
@@ -818,7 +806,7 @@ def simhash_dups(
     blocked = sig.select("id", "sig", F.explode(F.array(*block_cols)).alias("blk"))
     # simhash_expr (md5 per token) is the expensive projection; persist so the
     # cap count and both self-join sides read it once
-    blocked = register_cache(blocked.persist(StorageLevel.MEMORY_AND_DISK_DESER))
+    blocked = persist(blocked)
     if max_bucket_df is not None:
         blocked = apply_df_cap(blocked, "blk", max_bucket_df)
     cand = (
@@ -925,11 +913,12 @@ def corpus_profile(
     """
     from ..functions.text import token_count_expr
 
-    d = df.select(
-        F.md5(F.col(text_col)).alias("_h"),
-        token_count_expr(text_col).cast("long").alias("_nt"),
-    ).persist(StorageLevel.MEMORY_AND_DISK_DESER)
-    d = register_cache(d)
+    d = persist(
+        df.select(
+            F.md5(F.col(text_col)).alias("_h"),
+            token_count_expr(text_col).cast("long").alias("_nt"),
+        )
+    )
     agg = d.agg(
         F.count(F.lit(1)).alias("n_docs"),
         F.countDistinct("_h").alias("n_distinct_texts"),
@@ -1182,10 +1171,9 @@ def lm_quality_scores(
             ),
         ),
     ).otherwise(F.array().cast("array<struct<w1:string,w2:string>>"))
-    bg = register_cache(
+    bg = persist(
         base.select("_id", F.explode(bigrams_expr).alias("b"))
         .select("_id", F.col("b.w1").alias("w1"), F.col("b.w2").alias("w2"))
-        .persist(StorageLevel.MEMORY_AND_DISK_DESER)
     )
     c12 = bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("_c12"))
     c1 = bg.groupBy("w1").agg(F.count(F.lit(1)).alias("_c1"))
@@ -1373,7 +1361,7 @@ def _embedding_lsh_candidates(
     ).select("id", "v", "table_id", "bucket")
     # the bucket id costs n_planes x num_tables literal dot products per row
     # and feeds the cap count plus both self-join sides — compute it once
-    b = register_cache(b.persist(StorageLevel.MEMORY_AND_DISK_DESER))
+    b = persist(b)
     if max_bucket_df is not None:
         b = apply_df_cap(b, ["table_id", "bucket"], max_bucket_df)
     probed = expand_probes(b, n_planes=n_planes, multiprobe=multiprobe)
@@ -1737,14 +1725,14 @@ def _source_term_frame(
     they belong to no mixture slice), plus the corpus token total as one
     driver scalar. The frame feeds three downstream branches (corpus
     term counts, per-source totals, the scored join), so it is persisted
-    and registered with the cache registry (``release_caches``
-    lifecycle) like ``skew_profile``'s counts — without it the explode +
-    count shuffle runs once per consuming branch. (``vocab_divergence``
+    (``cache.persist``, ``release_caches`` lifecycle) like
+    ``skew_profile``'s counts — without it the explode + count shuffle
+    runs once per consuming branch. (``vocab_divergence``
     uses the shared ``categorical_divergence`` core instead, which
     persists its own count frame.)"""
     from ..functions.text import tokens_expr
 
-    st = register_cache(
+    st = persist(
         df.filter(F.col(source_col).isNotNull())
         .select(
             F.col(source_col).alias("source"),
@@ -1752,7 +1740,6 @@ def _source_term_frame(
         )
         .groupBy("source", "term")
         .agg(F.count(F.lit(1)).alias("c_st"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     n_total = st.agg(F.sum("c_st")).collect()[0][0] or 0
     return st, int(n_total)

@@ -20,9 +20,8 @@ import math
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
-from ..cache import register_cache
+from ..cache import persist
 
 
 def categorical_divergence(
@@ -46,21 +45,20 @@ def categorical_divergence(
     all.
 
     Scale shape: the input count frame is persisted (three consumers:
-    pooled key counts, per-group totals, the scored join) and
-    registered with the cache registry; the pooled total is ONE
-    collected scalar; per-group totals broadcast (group cardinality is
-    a config/window constant). Keys a group lacks contribute via the
+    pooled key counts, per-group totals, the scored join) through
+    ``cache.persist``; the pooled total is ONE collected scalar;
+    per-group totals broadcast (group cardinality is a config/window
+    constant). Keys a group lacks contribute via the
     closed-form remainders above, never as rows. round(·, 6) for
     oracle parity.
     """
-    st = register_cache(
+    st = persist(
         counts.select(
             F.col(group_col).alias("grp"),
             F.col(key_col).alias("key"),
             F.col(count_col).cast("double").alias("c"),
         )
         .filter(F.col("grp").isNotNull() & F.col("key").isNotNull() & (F.col("c") > 0))
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     n_total = st.agg(F.sum("c")).collect()[0][0] or 0.0
     ct = st.groupBy("key").agg(F.sum("c").alias("c_t"))

@@ -16,8 +16,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
+from ..cache import persist
 from ..config import LinkConfig
 from ..functions.normalize import NORM_COL
 from ..functions.qgrams import (
@@ -82,11 +82,10 @@ def score_pairs(
         # pushes the predicate INTO the scoring join's condition, where the
         # distance expression is evaluated on every probe row twice
         # (condition + projection) — measured ~8x slower than scoring once.
-        # Explicit MEMORY_AND_DISK: an oversized scored stage spills to local
-        # disk instead of evicting/OOMing executors (at prod scale the
-        # StageCheckpointer persists this stage durably instead —
-        # plans/pipeline.py routes through it when one is configured).
-        scored = scored.persist(StorageLevel.MEMORY_AND_DISK_DESER)
+        # At prod scale the StageCheckpointer persists this stage durably
+        # instead — plans/pipeline.py routes through it when one is
+        # configured.
+        scored = persist(scored)
         scored = scored.filter(F.col(DIST_COL) <= F.lit(float(max_dist)))
     return scored
 

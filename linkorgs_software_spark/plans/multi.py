@@ -25,6 +25,7 @@ from typing import Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..cache import persist
 from ..config import LinkConfig
 from ..functions.normalize import NORM_COL, prepare_side
 from ..operators.blocking import candidate_pairs
@@ -198,8 +199,6 @@ def link_many(
     if len(by_cols) != len(sides):
         raise ValueError("one `by` column per side (or a single string)")
 
-    from ..cache import register_cache
-
     prepared = []
     nodes = None
     for i, (df, col) in enumerate(zip(sides, by_cols)):
@@ -207,11 +206,7 @@ def link_many(
         # blocking joins, and every blocking join reads the side 3x (gram
         # index, gram-count denominator, scoring name attach) — without
         # the persist the normalize scan re-runs ~3(N-1) times per side
-        p = register_cache(
-            prepare_side(
-                df.select(F.col(col).alias("name")), "name", f"m{i}", cfg
-            ).persist()
-        )
+        p = persist(prepare_side(df.select(F.col(col).alias("name")), "name", f"m{i}", cfg))
         prepared.append(p)
         n = (
             p.groupBy(F.col(NORM_COL).alias("name_norm"))

@@ -25,6 +25,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..cache import call_caches, persist
 from ..config import DEFAULT, FALLBACK_MAX_DIST, LinkConfig
 from ..functions.embedding import l2_dist_udf, make_hash_embed_udf
 from ..functions.normalize import NORM_COL, pair_id_expr, prepare_side
@@ -40,43 +41,6 @@ from ..operators.network import (
 from ..operators.scoring import DIST_COL, score_pairs
 
 ALGORITHMS = ("fuzzy", "lookup", "alias", "embed")
-
-# Frames persisted by the CURRENT link_orgs call. Each new call retires the
-# previous call's entries, so a long-lived session running link_orgs in a
-# loop holds at most one call's worth of cached stages instead of leaking
-# executor storage until LRU eviction. A caller that still holds a previous
-# result (e.g. decomposition frames) keeps correct results — Spark just
-# recomputes the released stages on the next action.
-#
-# Registry mutations are lock-guarded (no list corruption under threads),
-# but the GENERATION semantics assume sequential link_orgs calls per
-# session: two concurrent calls retire each other's live persisted stages
-# mid-run. Results stay correct (Spark recomputes the lineage) — only the
-# persist speedup is lost. Concurrent linkage workloads should run in
-# separate Spark sessions.
-import threading
-
-_SESSION_LOCK = threading.Lock()
-_SESSION_CACHES: list = []
-
-
-def _register_cache(df: DataFrame) -> DataFrame:
-    with _SESSION_LOCK:
-        _SESSION_CACHES.append(df)
-    return df
-
-
-def _retire_previous_caches() -> None:
-    with _SESSION_LOCK:
-        frames = _SESSION_CACHES[:]
-        _SESSION_CACHES.clear()
-    for df in frames:
-        try:
-            df.unpersist(False)
-        except Exception:
-            # best-effort release only: the frame may belong to an already
-            # stopped session; failing retirement must not fail a new run
-            pass
 
 
 def _rep_rows(prep: DataFrame, id_col: str, by_col: str, suffix: str) -> DataFrame:
@@ -125,15 +89,10 @@ def _raw_match(
     # Materialize the blocked pair list: Catalyst pushes the threshold
     # predicate into the scoring join's condition, which would re-evaluate
     # the whole blocking shuffle; persisting makes the candidate set the
-    # stage boundary (MEMORY_AND_DISK so an oversized candidate set spills
-    # rather than OOMs; the checkpointer persists the downstream scored
-    # stage durably when configured).
-    from pyspark.storagelevel import StorageLevel
-
-    cands = _register_cache(
-        candidate_pairs(
-            x_prep, y_prep, cfg, x_count=x_count, y_count=y_count
-        ).persist(StorageLevel.MEMORY_AND_DISK_DESER)
+    # stage boundary (the checkpointer persists the downstream scored stage
+    # durably when configured).
+    cands = persist(
+        candidate_pairs(x_prep, y_prep, cfg, x_count=x_count, y_count=y_count)
     )
     return score_pairs(cands, x_prep, y_prep, cfg, max_dist=max_dist)
 
@@ -242,6 +201,7 @@ def _embed_match(
     return scored
 
 
+@call_caches()
 def link_orgs(
     x: DataFrame,
     y: DataFrame,
@@ -296,6 +256,11 @@ def link_orgs(
     detects completed stages and skips their computation entirely (north
     rule: resumable from checkpoint with lineage + metrics — Iceberg
     snapshots at prod, parquet + ``_metrics.jsonl`` here).
+
+    The returned frame is lazy and reads the stages this call persisted
+    (prepared sides, candidate and scored barriers, directory matches);
+    they stay cached until the next ``link_orgs`` call or
+    ``release_caches()`` (``cache.call_caches``).
     """
     # Input validation mirrors the reference's public checks
     # (tests/testthat/test-input-validation.R): a missing match column and a
@@ -321,11 +286,8 @@ def link_orgs(
     # The prepared sides feed several plan branches (gram index, gram-count
     # denominator, scoring dims, representative-row back-merge) — cache them
     # so each branch reads the normalized frame instead of re-deriving it.
-    # Retiring the PREVIOUS call's caches first keeps a long-lived session's
-    # executor storage bounded at one call's working set.
-    _retire_previous_caches()
-    x_prep = _register_cache(prepare_side(x, cfg.by_x, "x_id", cfg).cache())
-    y_prep = _register_cache(prepare_side(y, cfg.by_y, "y_id", cfg).cache())
+    x_prep = persist(prepare_side(x, cfg.by_x, "x_id", cfg))
+    y_prep = persist(prepare_side(y, cfg.by_y, "y_id", cfg))
 
     if export_embeddings_only:
         xe = _embedded_side(x_prep, cfg, embed_col_x)
@@ -352,18 +314,8 @@ def link_orgs(
         # kernel invocations for 2000 names). Persisted: the embedded frames
         # feed calibration counts + sampling AND the match join — without a
         # persist the pandas-UDF hash kernel would run 2-3x.
-        from pyspark.storagelevel import StorageLevel
-
-        xe = _register_cache(
-            _embedded_side(x_prep, cfg, embed_col_x).persist(
-                StorageLevel.MEMORY_AND_DISK_DESER
-            )
-        )
-        ye = _register_cache(
-            _embedded_side(y_prep, cfg, embed_col_y).persist(
-                StorageLevel.MEMORY_AND_DISK_DESER
-            )
-        )
+        xe = persist(_embedded_side(x_prep, cfg, embed_col_x))
+        ye = persist(_embedded_side(y_prep, cfg, embed_col_y))
         if cfg.ave_match_number_per_alias is not None:
             from ..operators.calibrate import calibrated_threshold_on_column
 
@@ -398,7 +350,7 @@ def link_orgs(
             multiprobe=embed_multiprobe,
         )
     elif algorithm == "lookup":
-        dir_prep = _register_cache(prepare_directory(directory, cfg).cache())
+        dir_prep = persist(prepare_directory(directory, cfg))
         # no forced broadcast: directories can be ~0.5e9 aliases; AQE
         # broadcasts small ones automatically
         xd = x_prep.select("x_id", NORM_COL).dropDuplicates(["x_id"]).join(
@@ -415,8 +367,7 @@ def link_orgs(
         if algorithm == "alias":
             # cached: the two directional matches and the calibrations
             # issue several actions against the pruned directory
-            # (MEMORY_AND_DISK, so an oversized directory spills, not OOMs)
-            dir_prep = _register_cache(prepare_directory(directory, cfg).cache())
+            dir_prep = persist(prepare_directory(directory, cfg))
         # a resumed run skips the calibrations of completed directory stages
         done = checkpointer is not None and all(map(checkpointer.is_complete, ("x2net", "y2net")))
         cal_dir = None if done else dir_prep

@@ -31,6 +31,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..cache import persist, scoped_caches
+
 
 def _prior_history_paths(spark: SparkSession, history_dir: str, batch_id: int) -> list:
     """Hadoop-FS listing of ``history_dir``'s batch partitions, excluding the
@@ -98,16 +100,14 @@ def dedup_batch(
         fresh = hashed.join(seen, "_h", "left_anti")
     else:
         fresh = hashed
-    fresh = fresh.persist()
-    try:
+    with scoped_caches():  # both writes read the persisted frame
+        fresh = persist(fresh)
         fresh.drop("_h", "_keep").write.mode("overwrite").parquet(
             f"{docs_dir}/batch_id={batch_id}"
         )
         fresh.select("_h", F.col(id_col)).write.mode("overwrite").parquet(
             f"{history_dir}/batch_id={batch_id}"
         )
-    finally:
-        fresh.unpersist()
 
 
 def incremental_exact_dedup(

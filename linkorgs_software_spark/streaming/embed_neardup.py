@@ -31,7 +31,7 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..cache import register_cache, scoped_caches
+from ..cache import persist, scoped_caches
 from ..functions.embedding import cosine_sim_expr
 from ..operators.ann import expand_probes, lsh_buckets, lsh_occupancy_guard
 from ..operators.blocking import apply_df_cap
@@ -65,10 +65,9 @@ def embed_neardup_batch(
 ) -> None:
     """Process one micro-batch (public, so replay behaviour is testable).
 
-    Wrapped in ``scoped_caches()`` like the text sibling: any
-    operator-internal persist registered during the batch is released when
-    the batch ends, so a long-running stream cannot accumulate pinned
-    frames batch over batch.
+    Wrapped in ``scoped_caches()`` like the text sibling: every frame
+    persisted during the batch is released when the batch ends, so a
+    long-running stream cannot accumulate pinned frames batch over batch.
 
     ``multiprobe`` mirrors ``embedding_neardup_lsh(multiprobe=)``: > 0
     additionally probes hamming-1 (or -2) neighbor buckets so moderately
@@ -152,129 +151,121 @@ def _embed_neardup_batch_inner(
         vec_col=vec_col, dim=dim, n_planes=n_planes, num_tables=num_tables, seed=seed
     )
 
-    new_b = lsh_buckets(
-        batch_df.select(F.col(id_col), F.col(vec_col)), **lsh_kw
-    ).select(F.col(id_col).alias("_id"), "table_id", "bucket").persist()
-    try:
-        # materialize the persist AND take the cap's free no-op guard in one
-        # action: new_b has exactly num_tables rows per vector, so no single
-        # (table_id, bucket) group can exceed n_new / num_tables — for any
-        # normally-sized micro-batch the df-cap is provably a no-op and its
-        # aggregate + broadcast-semi-join subtree (which sits on BOTH sides
-        # of the self-join and would otherwise be re-evaluated action after
-        # action — the round-5 1.6x regression) is skipped entirely.
-        n_new = new_b.count()
-        # intra-batch: drop the larger id of every verified near-dup pair;
-        # df-cap the EXACT buckets first (text-sibling symmetry — a viral
-        # vector in one oversized micro-batch must not square inside one
-        # bucket task), then probe-expand ONE self-join side only (see
-        # docstring; probes can never resurrect an over-cap bucket)
-        b_in = new_b
-        if max_bucket_df is not None and n_new > max_bucket_df * max(1, num_tables):
-            # oversized batch: the cap does real work — persist ITS output
-            # too (scoped_caches releases it at batch end), or the capped
-            # subtree is recomputed once per self-join side per action
-            b_in = register_cache(
-                apply_df_cap(new_b, ["table_id", "bucket"], max_bucket_df).persist()
-            )
-        probed_in = expand_probes(b_in, n_planes=n_planes, multiprobe=multiprobe)
-        cand_in = (
-            probed_in.alias("a")
-            .join(b_in.alias("b"), ["table_id", "bucket"])
-            .filter(F.col("a._id") < F.col("b._id"))
-            .select(F.col("a._id").alias("_id_a"), F.col("b._id").alias("_id_b"))
-            .distinct()
+    new_b = persist(
+        lsh_buckets(batch_df.select(F.col(id_col), F.col(vec_col)), **lsh_kw).select(
+            F.col(id_col).alias("_id"), "table_id", "bucket"
         )
-        vecs = batch_df.select(F.col(id_col).alias("_v_id"), F.col(vec_col).alias("_v"))
-        sim = cosine_sim_expr("_va", "_vb")
-        dropped_in = (
-            cand_in.join(vecs.select(F.col("_v_id").alias("_id_a"), F.col("_v").alias("_va")), "_id_a")
-            .join(vecs.select(F.col("_v_id").alias("_id_b"), F.col("_v").alias("_vb")), "_id_b")
-            .filter(sim >= F.lit(float(threshold)))
-            .select(F.col("_id_b").alias(id_col))
-            .distinct()
-        )
-        # persisted like the text sibling's survivors: the frame appears
-        # three times in fresh's lineage (anti-join base, history semi-join
-        # source, verify side), and without the persist the whole intra-batch
-        # verify subtree is recomputed at each occurrence
-        survivors = register_cache(
-            batch_df.join(dropped_in, id_col, "left_anti").persist()
-        )
+    )
+    # materialize the persist AND take the cap's free no-op guard in one
+    # action: new_b has exactly num_tables rows per vector, so no single
+    # (table_id, bucket) group can exceed n_new / num_tables — for any
+    # normally-sized micro-batch the df-cap is provably a no-op and its
+    # aggregate + broadcast-semi-join subtree (which sits on BOTH sides
+    # of the self-join and would otherwise be re-evaluated action after
+    # action — the round-5 1.6x regression) is skipped entirely.
+    n_new = new_b.count()
+    # intra-batch: drop the larger id of every verified near-dup pair;
+    # df-cap the EXACT buckets first (text-sibling symmetry — a viral
+    # vector in one oversized micro-batch must not square inside one
+    # bucket task), then probe-expand ONE self-join side only (see
+    # docstring; probes can never resurrect an over-cap bucket)
+    b_in = new_b
+    if max_bucket_df is not None and n_new > max_bucket_df * max(1, num_tables):
+        # oversized batch: the cap does real work — persist ITS output
+        # too (scoped_caches releases it at batch end), or the capped
+        # subtree is recomputed once per self-join side per action
+        b_in = persist(apply_df_cap(new_b, ["table_id", "bucket"], max_bucket_df))
+    probed_in = expand_probes(b_in, n_planes=n_planes, multiprobe=multiprobe)
+    cand_in = (
+        probed_in.alias("a")
+        .join(b_in.alias("b"), ["table_id", "bucket"])
+        .filter(F.col("a._id") < F.col("b._id"))
+        .select(F.col("a._id").alias("_id_a"), F.col("b._id").alias("_id_b"))
+        .distinct()
+    )
+    vecs = batch_df.select(F.col(id_col).alias("_v_id"), F.col(vec_col).alias("_v"))
+    sim = cosine_sim_expr("_va", "_vb")
+    dropped_in = (
+        cand_in.join(vecs.select(F.col("_v_id").alias("_id_a"), F.col("_v").alias("_va")), "_id_a")
+        .join(vecs.select(F.col("_v_id").alias("_id_b"), F.col("_v").alias("_vb")), "_id_b")
+        .filter(sim >= F.lit(float(threshold)))
+        .select(F.col("_id_b").alias(id_col))
+        .distinct()
+    )
+    # persisted like the text sibling's survivors: the frame appears
+    # three times in fresh's lineage (anti-join base, history semi-join
+    # source, verify side), and without the persist the whole intra-batch
+    # verify subtree is recomputed at each occurrence
+    survivors = persist(batch_df.join(dropped_in, id_col, "left_anti"))
 
-        # cross-batch: candidates from the PRIOR bucket history, verified by
-        # exact cosine against the stored embeddings
-        fresh = survivors
-        hist_tbl = history_table_name(out_dir, "embuckets")
-        prior = read_prior_history(spark, hist_tbl, buckets_dir, batch_id)
-        if occupancy_warn_factor is not None:
-            # one cheap row count per batch: warn (with the restart plane
-            # count) when batch + kept history have outgrown the fixed
-            # 2**n_planes bucket vocabulary — see the public docstring
-            hist_rows = prior.count() if prior is not None else 0
-            lsh_occupancy_guard(
-                n_new + hist_rows,
-                n_planes=n_planes,
-                num_tables=num_tables,
-                warn_factor=occupancy_warn_factor,
-                context=f"embed near-dup stream batch {batch_id}",
-            )
-        # embeddings slice is written in lockstep with the bucket table; an
-        # empty prior listing = no PRIOR batch (first-batch replay) — skip
-        prior_emb = _prior_history_paths(spark, emb_dir, batch_id)
-        if prior is not None and prior_emb:
-            old_b = prior.select(
-                "table_id", "bucket", F.col("vec_id").alias("_old_id")
-            )
-            if max_bucket_df is not None:
-                old_b = apply_df_cap(old_b, ["table_id", "bucket"], max_bucket_df)
-            surv_b = new_b.join(
-                survivors.select(F.col(id_col).alias("_id")), "_id", "left_semi"
-            )
-            # probes expand the micro-batch side (small side); the history
-            # side stays exact buckets so its bucketed scan stays pruned
-            surv_b = expand_probes(surv_b, n_planes=n_planes, multiprobe=multiprobe)
-            cand = (
-                surv_b.join(old_b, ["table_id", "bucket"])
-                .select(F.col("_id").alias("_new_id"), "_old_id")
-                .distinct()
-            )
-            old_v = spark.read.parquet(*prior_emb).select(
-                F.col("vec_id").alias("_old_id"), F.col("embedding").alias("_vb")
-            )
-            new_v = survivors.select(
-                F.col(id_col).alias("_new_id"), F.col(vec_col).alias("_va")
-            )
-            dup_new = (
-                cand.join(new_v, "_new_id")
-                .join(old_v, "_old_id")
-                .filter(cosine_sim_expr("_va", "_vb") >= F.lit(float(threshold)))
-                .select(F.col("_new_id").alias(id_col))
-                .distinct()
-            )
-            fresh = survivors.join(dup_new, id_col, "left_anti")
-        fresh = fresh.persist()
-        try:
-            fresh.write.mode("overwrite").parquet(f"{docs_dir}/batch_id={batch_id}")
-            # history = the kept rows' slice of the ALREADY-computed batch
-            # bucket frame (persisted new_b) — no second lsh_buckets pass
-            write_history_bucketed(
-                new_b.join(
-                    fresh.select(F.col(id_col).alias("_id")), "_id", "left_semi"
-                ).select("table_id", "bucket", F.col("_id").alias("vec_id")),
-                hist_tbl,
-                buckets_dir,
-                batch_id,
-                bucket_cols=("table_id", "bucket"),
-                num_buckets=num_history_buckets,
-            )
-            fresh.select(
-                F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding")
-            ).write.mode("overwrite").parquet(f"{emb_dir}/batch_id={batch_id}")
-        finally:
-            fresh.unpersist()
-    finally:
-        new_b.unpersist()
+    # cross-batch: candidates from the PRIOR bucket history, verified by
+    # exact cosine against the stored embeddings
+    fresh = survivors
+    hist_tbl = history_table_name(out_dir, "embuckets")
+    prior = read_prior_history(spark, hist_tbl, buckets_dir, batch_id)
+    if occupancy_warn_factor is not None:
+        # one cheap row count per batch: warn (with the restart plane
+        # count) when batch + kept history have outgrown the fixed
+        # 2**n_planes bucket vocabulary — see the public docstring
+        hist_rows = prior.count() if prior is not None else 0
+        lsh_occupancy_guard(
+            n_new + hist_rows,
+            n_planes=n_planes,
+            num_tables=num_tables,
+            warn_factor=occupancy_warn_factor,
+            context=f"embed near-dup stream batch {batch_id}",
+        )
+    # embeddings slice is written in lockstep with the bucket table; an
+    # empty prior listing = no PRIOR batch (first-batch replay) — skip
+    prior_emb = _prior_history_paths(spark, emb_dir, batch_id)
+    if prior is not None and prior_emb:
+        old_b = prior.select(
+            "table_id", "bucket", F.col("vec_id").alias("_old_id")
+        )
+        if max_bucket_df is not None:
+            old_b = apply_df_cap(old_b, ["table_id", "bucket"], max_bucket_df)
+        surv_b = new_b.join(
+            survivors.select(F.col(id_col).alias("_id")), "_id", "left_semi"
+        )
+        # probes expand the micro-batch side (small side); the history
+        # side stays exact buckets so its bucketed scan stays pruned
+        surv_b = expand_probes(surv_b, n_planes=n_planes, multiprobe=multiprobe)
+        cand = (
+            surv_b.join(old_b, ["table_id", "bucket"])
+            .select(F.col("_id").alias("_new_id"), "_old_id")
+            .distinct()
+        )
+        old_v = spark.read.parquet(*prior_emb).select(
+            F.col("vec_id").alias("_old_id"), F.col("embedding").alias("_vb")
+        )
+        new_v = survivors.select(
+            F.col(id_col).alias("_new_id"), F.col(vec_col).alias("_va")
+        )
+        dup_new = (
+            cand.join(new_v, "_new_id")
+            .join(old_v, "_old_id")
+            .filter(cosine_sim_expr("_va", "_vb") >= F.lit(float(threshold)))
+            .select(F.col("_new_id").alias(id_col))
+            .distinct()
+        )
+        fresh = survivors.join(dup_new, id_col, "left_anti")
+    fresh = persist(fresh)
+    fresh.write.mode("overwrite").parquet(f"{docs_dir}/batch_id={batch_id}")
+    # history = the kept rows' slice of the ALREADY-computed batch
+    # bucket frame (persisted new_b) — no second lsh_buckets pass
+    write_history_bucketed(
+        new_b.join(
+            fresh.select(F.col(id_col).alias("_id")), "_id", "left_semi"
+        ).select("table_id", "bucket", F.col("_id").alias("vec_id")),
+        hist_tbl,
+        buckets_dir,
+        batch_id,
+        bucket_cols=("table_id", "bucket"),
+        num_buckets=num_history_buckets,
+    )
+    fresh.select(
+        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("embedding")
+    ).write.mode("overwrite").parquet(f"{emb_dir}/batch_id={batch_id}")
 
 
 def rebucket_embed_history(

@@ -49,7 +49,7 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..cache import register_cache, scoped_caches
+from ..cache import persist, scoped_caches
 from ..functions.qgrams import jaccard_qgram_dist_expr
 from ..functions.text import word_shingles_expr
 from ..operators.blocking import apply_df_cap
@@ -81,11 +81,11 @@ def neardup_batch(
 ) -> None:
     """Process one micro-batch (public, so replay behaviour is testable).
 
-    Wrapped in ``scoped_caches()``: the LSH operators persist + register
-    the banded frame per call, and a stream calls them once per micro-batch
-    — without per-batch release a long-running query would pin one frame
-    per batch forever (growing executor storage AND driver registry without
-    bound).
+    Wrapped in ``scoped_caches()``: the batch persists its banded frame,
+    shingle sets, survivors and kept docs, and a stream runs one batch per
+    trigger — without per-batch release a long-running query would pin
+    those frames batch over batch (growing executor storage AND the driver
+    registry without bound).
 
     ``compact_every``: when set, once ``compact_every`` committed batch
     partitions accumulate, the bucket-table partitions older than this
@@ -156,128 +156,112 @@ def _neardup_batch_inner(
     # inside minhash_lsh_dups, once for survivors, once for the history
     # write) — a 3x fixed cost per micro-batch that set the streaming
     # latency floor.
-    banded = minhash_band_buckets(
-        batch_df,
-        id_col=id_col,
-        text_col=text_col,
-        num_hashes=num_hashes,
-        bands=bands,
-        shingle_k=shingle_k,
-    ).select(F.col("id").alias(id_col), "bucket").persist()
-    sh = batch_df.select(
-        F.col(id_col), word_shingles_expr(text_col, shingle_k).alias("shingles")
-    ).persist()
-    try:
-        # materialize the persist and take the cap's free no-op guard in
-        # one action (embed-sibling symmetry, round 6): each doc emits
-        # exactly `bands` bucket rows, so no bucket's posting list can
-        # exceed n_banded / bands — for a normally-sized micro-batch the
-        # cap is provably a no-op and its aggregate+broadcast subtree
-        # (sitting on BOTH self-join sides) is skipped entirely
-        n_banded = banded.count()
-        # 1. intra-batch near-dups: drop the larger id of every verified
-        # pair (same semantics as the batch minhash_lsh_dups operator)
-        b = banded
-        if max_bucket_df is not None and n_banded > max_bucket_df * max(1, bands):
-            # oversized batch: the cap does real work — persist its output
-            # (scoped_caches releases at batch end) so the aggregate +
-            # broadcast-semi-join subtree isn't evaluated once per
-            # self-join side (the round-5 embed-path lesson)
-            b = register_cache(
-                apply_df_cap(banded, "bucket", max_bucket_df).persist()
-            )
-        cand_in = (
-            b.alias("a")
-            .join(b.alias("b"), "bucket")
-            .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-            .select(
-                F.col(f"a.{id_col}").alias("_id_a"), F.col(f"b.{id_col}").alias("_id_b")
-            )
+    banded = persist(
+        minhash_band_buckets(
+            batch_df,
+            id_col=id_col,
+            text_col=text_col,
+            num_hashes=num_hashes,
+            bands=bands,
+            shingle_k=shingle_k,
+        ).select(F.col("id").alias(id_col), "bucket")
+    )
+    sh = persist(
+        batch_df.select(F.col(id_col), word_shingles_expr(text_col, shingle_k).alias("shingles"))
+    )
+    # materialize the persist and take the cap's free no-op guard in
+    # one action (embed-sibling symmetry, round 6): each doc emits
+    # exactly `bands` bucket rows, so no bucket's posting list can
+    # exceed n_banded / bands — for a normally-sized micro-batch the
+    # cap is provably a no-op and its aggregate+broadcast subtree
+    # (sitting on BOTH self-join sides) is skipped entirely
+    n_banded = banded.count()
+    # 1. intra-batch near-dups: drop the larger id of every verified
+    # pair (same semantics as the batch minhash_lsh_dups operator)
+    b = banded
+    if max_bucket_df is not None and n_banded > max_bucket_df * max(1, bands):
+        # oversized batch: the cap does real work — persist its output
+        # (scoped_caches releases at batch end) so the aggregate +
+        # broadcast-semi-join subtree isn't evaluated once per
+        # self-join side (the round-5 embed-path lesson)
+        b = persist(apply_df_cap(banded, "bucket", max_bucket_df))
+    cand_in = (
+        b.alias("a")
+        .join(b.alias("b"), "bucket")
+        .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
+        .select(
+            F.col(f"a.{id_col}").alias("_id_a"), F.col(f"b.{id_col}").alias("_id_b")
+        )
+        .distinct()
+    )
+    sim = F.lit(1.0) - jaccard_qgram_dist_expr("sh_a", "sh_b")
+    dropped = (
+        cand_in.join(
+            sh.select(F.col(id_col).alias("_id_a"), F.col("shingles").alias("sh_a")),
+            "_id_a",
+        )
+        .join(
+            sh.select(F.col(id_col).alias("_id_b"), F.col("shingles").alias("sh_b")),
+            "_id_b",
+        )
+        .filter(sim >= F.lit(float(threshold)))
+        .select(F.col("_id_b").alias(id_col))
+        .distinct()
+    )
+    survivors = persist(batch_df.join(dropped, id_col, "left_anti"))
+    # 2. cross-batch: candidates from the PRIOR bucket history
+    # (bucketed table — history side joins without an Exchange; see
+    # history.py), verified by exact jaccard vs stored shingle sets
+    fresh = survivors
+    hist_tbl = history_table_name(out_dir, "buckets")
+    prior = read_prior_history(spark, hist_tbl, buckets_dir, batch_id)
+    # the shingle slice is written in lockstep with the bucket
+    # table, so an empty prior-shingle listing means no PRIOR batch
+    # exists (e.g. a replay of the very first batch) — skip
+    prior_shingles = _prior_history_paths(spark, shingles_dir, batch_id)
+    if prior is not None and prior_shingles:
+        new_b = banded.join(survivors.select(id_col), id_col, "left_semi")
+        old_b = prior.select("bucket", F.col("doc_id").alias("_old_id"))
+        if max_bucket_df is not None:
+            old_b = apply_df_cap(old_b, "bucket", max_bucket_df)
+        cand = (
+            new_b.join(old_b, "bucket")
+            .select(F.col(id_col).alias("_new_id"), "_old_id")
             .distinct()
         )
-        sim = F.lit(1.0) - jaccard_qgram_dist_expr("sh_a", "sh_b")
-        dropped = (
-            cand_in.join(
-                sh.select(F.col(id_col).alias("_id_a"), F.col("shingles").alias("sh_a")),
-                "_id_a",
-            )
-            .join(
-                sh.select(F.col(id_col).alias("_id_b"), F.col("shingles").alias("sh_b")),
-                "_id_b",
-            )
-            .filter(sim >= F.lit(float(threshold)))
-            .select(F.col("_id_b").alias(id_col))
+        new_sh = sh.select(
+            F.col(id_col).alias("_new_id"), F.col("shingles").alias("sh_a")
+        )
+        old_sh = spark.read.parquet(*prior_shingles).select(
+            F.col("doc_id").alias("_old_id"), F.col("shingles").alias("sh_b")
+        )
+        dup_new = (
+            cand.join(new_sh, "_new_id")
+            .join(old_sh, "_old_id")
+            .withColumn("_sim", sim)
+            .filter(F.col("_sim") >= F.lit(float(threshold)))
+            .select(F.col("_new_id").alias(id_col))
             .distinct()
         )
-        survivors = batch_df.join(dropped, id_col, "left_anti").persist()
-        try:
-            # 2. cross-batch: candidates from the PRIOR bucket history
-            # (bucketed table — history side joins without an Exchange; see
-            # history.py), verified by exact jaccard vs stored shingle sets
-            fresh = survivors
-            hist_tbl = history_table_name(out_dir, "buckets")
-            prior = read_prior_history(spark, hist_tbl, buckets_dir, batch_id)
-            # the shingle slice is written in lockstep with the bucket
-            # table, so an empty prior-shingle listing means no PRIOR batch
-            # exists (e.g. a replay of the very first batch) — skip
-            prior_shingles = _prior_history_paths(spark, shingles_dir, batch_id)
-            if prior is not None and prior_shingles:
-                new_b = banded.join(
-                    survivors.select(id_col), id_col, "left_semi"
-                )
-                old_b = prior.select("bucket", F.col("doc_id").alias("_old_id"))
-                if max_bucket_df is not None:
-                    old_b = apply_df_cap(old_b, "bucket", max_bucket_df)
-                cand = (
-                    new_b.join(old_b, "bucket")
-                    .select(F.col(id_col).alias("_new_id"), "_old_id")
-                    .distinct()
-                )
-                new_sh = sh.select(
-                    F.col(id_col).alias("_new_id"), F.col("shingles").alias("sh_a")
-                )
-                old_sh = spark.read.parquet(*prior_shingles).select(
-                    F.col("doc_id").alias("_old_id"), F.col("shingles").alias("sh_b")
-                )
-                dup_new = (
-                    cand.join(new_sh, "_new_id")
-                    .join(old_sh, "_old_id")
-                    .withColumn("_sim", sim)
-                    .filter(F.col("_sim") >= F.lit(float(threshold)))
-                    .select(F.col("_new_id").alias(id_col))
-                    .distinct()
-                )
-                fresh = survivors.join(dup_new, id_col, "left_anti")
-            fresh = fresh.persist()
-            try:
-                # 3. idempotent per-batch overwrites: docs + history slices
-                # (history = the KEPT docs' slices of the shared frames)
-                fresh.write.mode("overwrite").parquet(
-                    f"{docs_dir}/batch_id={batch_id}"
-                )
-                fresh_ids = fresh.select(id_col)
-                write_history_bucketed(
-                    banded.join(fresh_ids, id_col, "left_semi").select(
-                        "bucket", F.col(id_col).alias("doc_id")
-                    ),
-                    hist_tbl,
-                    buckets_dir,
-                    batch_id,
-                    bucket_cols=("bucket",),
-                    num_buckets=num_history_buckets,
-                )
-                sh.join(fresh_ids, id_col, "left_semi").select(
-                    F.col(id_col).alias("doc_id"), "shingles"
-                ).write.mode("overwrite").parquet(
-                    f"{shingles_dir}/batch_id={batch_id}"
-                )
-            finally:
-                fresh.unpersist()
-        finally:
-            survivors.unpersist()
-    finally:
-        banded.unpersist()
-        sh.unpersist()
+        fresh = survivors.join(dup_new, id_col, "left_anti")
+    fresh = persist(fresh)
+    # 3. idempotent per-batch overwrites: docs + history slices
+    # (history = the KEPT docs' slices of the shared frames)
+    fresh.write.mode("overwrite").parquet(f"{docs_dir}/batch_id={batch_id}")
+    fresh_ids = fresh.select(id_col)
+    write_history_bucketed(
+        banded.join(fresh_ids, id_col, "left_semi").select(
+            "bucket", F.col(id_col).alias("doc_id")
+        ),
+        hist_tbl,
+        buckets_dir,
+        batch_id,
+        bucket_cols=("bucket",),
+        num_buckets=num_history_buckets,
+    )
+    sh.join(fresh_ids, id_col, "left_semi").select(
+        F.col(id_col).alias("doc_id"), "shingles"
+    ).write.mode("overwrite").parquet(f"{shingles_dir}/batch_id={batch_id}")
 
 
 def incremental_neardup_dedup(

@@ -68,7 +68,7 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..cache import register_cache, scoped_caches
+from ..cache import persist, scoped_caches
 from ..config import DEFAULT, LinkConfig
 from ..functions.normalize import NORM_COL, prepare_side
 from ..functions.scorers import distance_expr
@@ -152,17 +152,13 @@ def _resolve_batch_inner(
             plain_paths=(entities_dir,),
         )
 
-    prep = register_cache(
-        prepare_side(batch_df, name_col, "_rid", cfg).persist()
-    )
+    prep = persist(prepare_side(batch_df, name_col, "_rid", cfg))
     # distinct-name granularity: every downstream join is per normalized
     # name; the final assignment fan-out back to rows is one equi-join.
     # The node id IS prepare_side's content-hash id (xxhash64(name_norm)),
     # so the fan-out join key already sits on every prepared row.
-    names = register_cache(
-        prep.select(NORM_COL, F.col("_rid").alias("_nid")).distinct().persist()
-    )
-    tri = register_cache(gram_index(names, "_nid", cfg).persist())
+    names = persist(prep.select(NORM_COL, F.col("_rid").alias("_nid")).distinct())
+    tri = persist(gram_index(names, "_nid", cfg))
     ntri = tri.groupBy("_nid").agg(F.count(F.lit(1)).alias("_n_grams"))
     # One cheap count on the cached distinct-name frame buys two plan
     # prunings per batch: a gram's posting list in `tri` (distinct per
@@ -197,12 +193,11 @@ def _resolve_batch_inner(
         _set_expr = (
             packed_qgram_set_expr if cfg.qgram <= 3 else qgram_set_expr
         )
-        names_g = register_cache(
+        names_g = persist(
             names.select(
                 "_nid", _set_expr(NORM_COL, cfg.qgram).alias("_gset")
             )
             .withColumn("_gsz", F.size("_gset"))
-            .persist()
         )
 
     # ---- 2. MATCH against the prior directory -------------------------
@@ -255,7 +250,7 @@ def _resolve_batch_inner(
                 )
                 .filter(F.col("_dist") <= F.lit(float(max_dist)))
             )
-        matched = register_cache(
+        matched = persist(
             verified.groupBy("_nid")
             .agg(
                 F.min_by(
@@ -266,7 +261,6 @@ def _resolve_batch_inner(
                 ).alias("_best")
             )
             .select("_nid", "_best.entity_id", "_best.stringdist")
-            .persist()
         )
 
     # ---- 3. CREATE entities for the unmatched names -------------------
@@ -306,7 +300,7 @@ def _resolve_batch_inner(
         # candidate pair is slower than the scoring they save (nested
         # types defeat the columnar cache) — measured as a 2x regression
         # of the whole query before this select was added
-        scored = register_cache(
+        scored = persist(
             cand_new.join(
                 names_g.select(
                     F.col("_nid").alias("x_id"),
@@ -330,10 +324,9 @@ def _resolve_batch_inner(
                     "stringdist"
                 ),
             )
-            .persist()
         )
     else:
-        scored = register_cache(
+        scored = persist(
             cand_new.join(
                 names.select(F.col("_nid").alias("x_id"), F.col(NORM_COL).alias("_nx")),
                 "x_id",
@@ -346,31 +339,24 @@ def _resolve_batch_inner(
                 "stringdist",
                 distance_expr(cfg.distance_measure, "_nx", "_ny", qgram=cfg.qgram),
             )
-            .persist()
         )
-    edges = register_cache(
+    edges = persist(
         scored.filter(F.col("stringdist") <= F.lit(float(create_max_dist)))
         .select(F.col("x_id").alias("src"), F.col("y_id").alias("dst"))
-        .persist()
     )
     if edges.limit(1).count() == 0:
         # no similar pairs among the new names: all singletons — skip the
         # iterative CC (whose per-round jobs would re-drive nothing)
-        created = register_cache(
-            unmatched.select(
-                "_nid", NORM_COL, F.col("_nid").alias("entity_id")
-            ).persist()
-        )
+        created = persist(unmatched.select("_nid", NORM_COL, F.col("_nid").alias("entity_id")))
     else:
         comp = connected_components(edges)
-        created = register_cache(
+        created = persist(
             unmatched.join(comp.withColumnRenamed("id", "_nid"), "_nid", "left")
             .select(
                 "_nid",
                 NORM_COL,
                 F.coalesce(F.col("component"), F.col("_nid")).alias("entity_id"),
             )
-            .persist()
         )
 
     # ---- assignment output (idempotent overwrite) ---------------------
@@ -398,9 +384,7 @@ def _resolve_batch_inner(
             .select("_nid", NORM_COL, "entity_id")
         )
         new_aliases = new_aliases.unionByName(novel_matched)
-    new_aliases = register_cache(
-        new_aliases.withColumnRenamed("_nid", "alias_id").persist()
-    )
+    new_aliases = persist(new_aliases.withColumnRenamed("_nid", "alias_id"))
     write_history_bucketed(
         tri.join(
             new_aliases.select(F.col("alias_id").alias("_nid")), "_nid", "left_semi"
@@ -467,13 +451,12 @@ def compact_directory(
     remap_path = os.path.join(out_dir, "remaps", f"watermark={watermark}")
     with scoped_caches():
         dir_df = spark.read.parquet(*paths)
-        remap = register_cache(
+        remap = persist(
             merge_entities(
                 dir_df, cfg, max_dist=max_dist,
                 entity_col="entity_id", name_col=NORM_COL,
             )
             .filter(F.col("entity_id") != F.col("merged_entity_id"))
-            .persist()
         )
         if remap.limit(1).count() == 0:
             return None

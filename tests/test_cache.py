@@ -1,0 +1,77 @@
+"""The persist/release lifecycle: ``cache.py`` owns every persist and
+release in the package, and its scopes decide when a frame is released."""
+
+import pathlib
+import re
+import sys
+import threading
+
+import linkorgs_software_spark
+from linkorgs_software_spark import cache, release_caches, scoped_caches
+
+PKG = pathlib.Path(linkorgs_software_spark.__file__).parent
+_STORAGE_CALL = re.compile(r"\.persist\(|\.cache\(\)|\.unpersist\(|StorageLevel")
+
+
+def test_cache_module_is_the_only_persist_site():
+    """No module but ``cache.py`` persists, caches, unpersists or picks a
+    storage level: every persisted frame is tracked by one registry."""
+    hits = [
+        f"{path.relative_to(PKG)}:{n}: {line.strip()}"
+        for path in sorted(PKG.rglob("*.py"))
+        if path.name != "cache.py" or path.parent != PKG
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if _STORAGE_CALL.search(line)
+    ]
+    assert not hits, "\n".join(hits)
+
+
+def test_scopes_release_their_own_frames(spark, stored_rdds):
+    """A scope releases what was persisted inside it, nested scopes and the
+    call lifetime included; a scope open on one thread does not capture
+    another thread's persists, which join the session list."""
+    release_caches()
+    before = stored_rdds()
+    with scoped_caches():
+        outer = cache.persist(spark.range(11))
+        with scoped_caches():
+            cache.persist(spark.range(12)).count()
+        outer.count()
+        assert len(stored_rdds() - before) == 1  # the inner frame is gone
+        t = threading.Thread(target=lambda: cache.persist(spark.range(13)))
+        t.start()
+        t.join(timeout=60)
+        assert not t.is_alive()
+    assert stored_rdds() <= before
+
+    with cache.call_caches():
+        cache.persist(spark.range(14)).count()
+    assert len(stored_rdds() - before) == 1  # outlives its block
+    with cache.call_caches():
+        cache.persist(spark.range(15)).count()
+    assert len(stored_rdds() - before) == 1  # the next block released it
+    assert release_caches() == 2  # the thread's frame and the last call's
+    assert stored_rdds() <= before
+
+
+def test_concurrent_persists_are_all_tracked(spark):
+    """Threads persisting at once into the session list lose no entry."""
+    n_threads, per_thread = 8, 20
+    release_caches()
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [
+            threading.Thread(
+                target=lambda t=t: [cache.persist(spark.range(t * per_thread + i + 1)) for i in range(per_thread)]
+            )
+            for t in range(n_threads)
+        ]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert release_caches() == n_threads * per_thread

@@ -259,19 +259,41 @@ def test_with_per_side_override_beats_by_shorthand(spark):
         cfg.with_(by="a", by_x="b")
 
 
-def test_repeated_link_calls_release_prior_caches(spark, fixture_tables):
+@pytest.mark.parametrize("algorithm", ["fuzzy", "alias"])
+def test_repeated_link_calls_release_prior_caches(spark, stored_rdds, algorithm):
     """A long-lived session calling link_orgs in a loop must not accumulate
-    cached stages: each call retires the previous call's persisted frames,
-    so executor storage stays bounded at one call's working set."""
-    cfg = fixed_threshold_config(max_dist=0.4)
+    cached stages: each call releases everything the previous call
+    persisted (the score_pairs barriers and directory matches included), so
+    executor storage stays bounded at one call's working set, and
+    release_caches() frees the last call's stages. Every call links
+    DIFFERENT inputs: Spark's CacheManager dedupes persists of identical
+    plans, so repeating one input would hide a leak."""
+    from linkorgs_software_spark import release_caches
+    from linkorgs_software_spark.sources.fixtures import gen_linkage_fixture
+
+    release_caches()
+    before = stored_rdds()
     sizes = []
-    for _ in range(3):
-        z = link_orgs(
-            fixture_tables["org_x"], fixture_tables["org_y"], cfg, algorithm="fuzzy"
-        )
+    for seed in (101, 102, 103):
+        fx = gen_linkage_fixture(spark, n_entities=60, seed=seed)
+        directory = fx["alias_directory"] if algorithm == "alias" else None
+        z = link_orgs(fx["org_x"], fx["org_y"], LinkConfig(), algorithm=algorithm, directory=directory)
         z.count()
-        sizes.append(len(spark.sparkContext._jsc.sc().getRDDStorageInfo()))
+        sizes.append(len(stored_rdds()))
     assert sizes[2] <= sizes[0]  # no growth call-over-call
+    assert release_caches() > 0
+    assert stored_rdds() <= before
+
+
+def test_assess_releases_its_pair_sets(spark, stored_rdds, fixture_tables):
+    """assess_match_performance caches its two deduped pair sets for the
+    confusion counts; only the counts escape, so both are released before
+    it returns."""
+    truth = fixture_tables["z_true"]
+    before = stored_rdds()
+    a = assess_match_performance(truth.where("name_x < 'm'"), truth, n_x=60, n_y=60)
+    assert a.fp == 0 and a.tp > 0 and a.fn > 0
+    assert stored_rdds() <= before
 
 
 def test_embed_cols_must_come_together(spark, fixture_tables):

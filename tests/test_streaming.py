@@ -538,24 +538,6 @@ def test_incremental_sink_idempotent_on_replay(spark, tmp_path):
     assert n1 == n2 > 0
 
 
-def test_neardup_batch_releases_operator_caches(spark, tmp_path):
-    """Each micro-batch runs LSH operators that persist + register internal
-    frames; ``scoped_caches()`` must release them when the batch ends so a
-    long-running stream does not pin one frame per batch forever."""
-    import linkorgs_software_spark.cache as cache
-    from linkorgs_software_spark.streaming import neardup_batch
-
-    out = str(tmp_path / "cc_out")
-    schema = "doc_id long, text string"
-    b0 = spark.createDataFrame([(1, _BASE), (2, _OTHER)], schema)
-    registry_before = len(cache._OPERATOR_CACHES)
-    storage_before = len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
-    neardup_batch(b0, 0, out, threshold=0.5)
-    neardup_batch(b0.withColumn("doc_id", F.col("doc_id") + 10), 1, out, threshold=0.5)
-    assert len(cache._OPERATOR_CACHES) == registry_before
-    assert len(spark.sparkContext._jsc.sc().getRDDStorageInfo()) == storage_before
-
-
 def test_neardup_history_join_shuffle_free_on_history_side(spark, tmp_path):
     """The round-4 scale fix: the cross-batch candidate join must read the
     bucket history as a BUCKETED scan with no Exchange above it — only the
@@ -1003,18 +985,45 @@ def test_incremental_resolve_stream_end_to_end(spark, tmp_path):
     assert len({next(iter(v)) for v in by_norm.values()}) == 2
 
 
-def test_resolve_batch_releases_operator_caches(spark, tmp_path):
-    import linkorgs_software_spark.cache as cache
-    from linkorgs_software_spark.streaming import resolve_batch
+def _release_batches(spark, batch_fn):
+    """Two consecutive batches (so the cross-batch path runs) and the keyword
+    arguments for one batch function."""
+    if batch_fn == "embed_neardup_batch":
+        import numpy as np
 
-    out = str(tmp_path / "resolve_cc")
-    b0 = spark.createDataFrame([("Acme Corp",), ("Globex Inc",)], "name string")
-    registry_before = len(cache._OPERATOR_CACHES)
-    storage_before = len(spark.sparkContext._jsc.sc().getRDDStorageInfo())
-    resolve_batch(b0, 0, out)
-    resolve_batch(spark.createDataFrame([("Initech LLC",)], "name string"), 1, out)
-    assert len(cache._OPERATOR_CACHES) == registry_before
-    assert len(spark.sparkContext._jsc.sc().getRDDStorageInfo()) == storage_before
+        rng = np.random.RandomState(3)
+        vecs = [[float(x) for x in rng.normal(size=16)] for _ in range(4)]
+        schema = "vec_id long, embedding array<float>"
+        b0 = spark.createDataFrame([(1, vecs[0]), (2, vecs[1])], schema)
+        b1 = spark.createDataFrame([(3, vecs[2]), (4, vecs[3])], schema)
+        return b0, b1, {"dim": 16, "threshold": 0.99}
+    if batch_fn == "resolve_batch":
+        b0 = spark.createDataFrame([("Acme Corp",), ("Globex Inc",)], "name string")
+        return b0, spark.createDataFrame([("Initech LLC",)], "name string"), {}
+    b0 = spark.createDataFrame([(1, _BASE), (2, _OTHER)], "doc_id long, text string")
+    kw = {"threshold": 0.5} if batch_fn == "neardup_batch" else {}
+    return b0, b0.withColumn("doc_id", F.col("doc_id") + 10), kw
+
+
+@pytest.mark.parametrize(
+    "batch_fn", ["neardup_batch", "embed_neardup_batch", "dedup_batch", "resolve_batch"]
+)
+def test_batch_releases_its_caches(spark, stored_rdds, tmp_path, batch_fn):
+    """Each micro-batch persists frames its stages share; ``scoped_caches()``
+    must release them when the batch ends so a long-running stream does not
+    pin frames batch over batch: no RDD cached during the batches is still
+    cached, and nothing is left for ``release_caches()``."""
+    from linkorgs_software_spark import release_caches, streaming
+
+    run = getattr(streaming, batch_fn)
+    b0, b1, kw = _release_batches(spark, batch_fn)
+    out = str(tmp_path / batch_fn)
+    release_caches()
+    storage_before = stored_rdds()
+    run(b0, 0, out, **kw)
+    run(b1, 1, out, **kw)
+    assert stored_rdds() <= storage_before
+    assert release_caches() == 0
 
 
 def test_compact_directory_merges_split_entities(spark, tmp_path):
