@@ -25,6 +25,7 @@ from ..cache import persist
 from ..functions.embedding import cosine_sim_expr
 from ..functions.qgrams import jaccard_qgram_dist_expr
 from ..functions.text import word_shingles_expr
+from ..sources.io import plan_size_bytes
 from .blocking import apply_df_cap
 
 
@@ -46,14 +47,9 @@ def _spread_small_input(df: DataFrame, key_col: str) -> DataFrame:
     Keyed on the doc id (unique ⇒ uniform), not round-robin, so no
     pre-repartition sort is paid and retries stay deterministic.
     """
-    spark = df.sparkSession
-    par = spark.sparkContext.defaultParallelism
-    try:
-        raw = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        size = int(raw if isinstance(raw, int) else raw.toString())
-    except Exception:
-        return df
-    if size <= 0 or size >= par * 32 * 1024 * 1024:
+    par = df.sparkSession.sparkContext.defaultParallelism
+    size = plan_size_bytes(df)
+    if size is None or size >= par * 32 * 1024 * 1024:
         return df
     return df.repartition(par, F.col(key_col))
 

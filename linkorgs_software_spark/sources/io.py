@@ -11,11 +11,43 @@ carrying row counts — a re-run detects a completed stage and skips it.
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
+import re
 import time
 
 from pyspark.sql import DataFrame, SparkSession
+
+
+def hadoop_fs(spark: SparkSession, path: str):
+    """``(FileSystem, Path(path), Path class)``: local disk, HDFS or S3."""
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    hpath = Path(path)
+    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath, Path
+
+
+def dir_table_name(prefix: str, directory: str, name: str) -> str:
+    """Catalog name for a table stored under ``directory``. The sanitized
+    path is lossy (``/data/a-b`` and ``/data/a_b`` collide), so an md5 of the
+    exact absolute path keeps two directories from sharing one table (the
+    first registration's LOCATION would win: silent cross-writes)."""
+    abspath = os.path.abspath(directory)
+    suffix = re.sub(r"\W+", "_", abspath).strip("_")
+    digest = hashlib.md5(abspath.encode("utf-8")).hexdigest()[:8]
+    return f"{prefix}_{suffix}_{digest}_{name}"
+
+
+def plan_size_bytes(df: DataFrame) -> int | None:
+    """The optimizer's size estimate for ``df`` (no action, no ``.rdd``), or
+    None when unknown: no JVM plan to probe (Spark Connect frames), or the
+    defaultSizeInBytes sentinel (~2^63) of a source without statistics."""
+    try:
+        raw = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+        size = int(raw if isinstance(raw, int) else raw.toString())
+    except Exception:
+        return None
+    return size if 0 < size < 1 << 50 else None
 
 
 class StageCheckpointer:
@@ -99,16 +131,14 @@ class StageCheckpointer:
         out = self.spark.read.parquet(path)
         if not min_files or len(out.inputFiles()) >= min_files:
             return out
-        jvm = self.spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(path)
-        fs = hpath.getFileSystem(self.spark._jsc.hadoopConfiguration())
-        marker = jvm.org.apache.hadoop.fs.Path(path, "_resplit_done")
+        fs, hpath, Path = hadoop_fs(self.spark, path)
+        marker = Path(path, "_resplit_done")
         if fs.exists(marker):
             return out
         tmp = path + "__resplit"
         out.repartition(min_files).write.mode("overwrite").parquet(tmp)
         fs.delete(hpath, True)
-        fs.rename(jvm.org.apache.hadoop.fs.Path(tmp), hpath)
+        fs.rename(Path(tmp), hpath)
         fs.create(marker, True).close()
         return self.spark.read.parquet(path)
 
@@ -132,16 +162,7 @@ class StageCheckpointer:
         joins (score → dedup → fuse → back-merge) reuse one physical
         distribution instead of re-shuffling per stage.
         """
-        import hashlib as _hashlib
-        import re as _re
-
-        # sanitized path + md5 digest of the exact path: the \W+ sanitize is
-        # lossy (a-b and a_b collide), and two checkpointers on colliding
-        # base dirs must not silently share one catalog table
-        abspath = os.path.abspath(self.base_dir)
-        suffix = _re.sub(r"\W+", "_", abspath).strip("_")
-        digest = _hashlib.md5(abspath.encode("utf-8")).hexdigest()[:8]
-        table = f"ckpt_{suffix}_{digest}_{name}"
+        table = dir_table_name("ckpt", self.base_dir, name)
         if self.spark.catalog.tableExists(table):
             return self.spark.table(table)
         t0 = time.time()

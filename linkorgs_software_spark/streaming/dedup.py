@@ -28,34 +28,15 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..cache import persist, scoped_caches
+from .history import maybe_compact, prior_batch_paths
+from .incremental import bind_batch, run_stream
 
 
-def _prior_history_paths(spark: SparkSession, history_dir: str, batch_id: int) -> list:
-    """Hadoop-FS listing of ``history_dir``'s batch partitions, excluding the
-    current batch (whose directory may exist from a failed prior attempt).
-
-    Missing history dir => [] (genuinely the first batch). Any other listing
-    failure propagates — treating a transient FS error as "first batch" would
-    silently disable cross-batch dedup for this batch.
-    """
-    jvm = spark._jvm
-    path = jvm.org.apache.hadoop.fs.Path(history_dir)
-    fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(path):
-        return []
-    current = f"batch_id={batch_id}"
-    out = []
-    for st in fs.listStatus(path):
-        name = st.getPath().getName()
-        if st.isDirectory() and name.startswith("batch_id=") and name != current:
-            out.append(st.getPath().toString())
-    return out
-
-
+@scoped_caches()
 def dedup_batch(
     batch_df: DataFrame,
     batch_id: int,
@@ -79,8 +60,6 @@ def dedup_batch(
     docs_dir = os.path.join(out_dir, "docs")
     spark = batch_df.sparkSession
     if compact_every is not None:
-        from .history import maybe_compact
-
         maybe_compact(
             spark,
             watermark=batch_id,
@@ -94,20 +73,19 @@ def dedup_batch(
         "_keep"
     )
     # cross-batch: drop anything whose hash is already in PRIOR history
-    prior = _prior_history_paths(spark, history_dir, batch_id)
+    prior = prior_batch_paths(spark, history_dir, batch_id)
     if prior:
         seen = spark.read.parquet(*prior).select("_h")
         fresh = hashed.join(seen, "_h", "left_anti")
     else:
         fresh = hashed
-    with scoped_caches():  # both writes read the persisted frame
-        fresh = persist(fresh)
-        fresh.drop("_h", "_keep").write.mode("overwrite").parquet(
-            f"{docs_dir}/batch_id={batch_id}"
-        )
-        fresh.select("_h", F.col(id_col)).write.mode("overwrite").parquet(
-            f"{history_dir}/batch_id={batch_id}"
-        )
+    fresh = persist(fresh)  # both writes read the persisted frame
+    fresh.drop("_h", "_keep").write.mode("overwrite").parquet(
+        f"{docs_dir}/batch_id={batch_id}"
+    )
+    fresh.select("_h", F.col(id_col)).write.mode("overwrite").parquet(
+        f"{history_dir}/batch_id={batch_id}"
+    )
 
 
 def incremental_exact_dedup(
@@ -115,32 +93,15 @@ def incremental_exact_dedup(
     out_dir: str,
     checkpoint_path: str,
     *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    compact_every: int | None = None,
     available_now: bool = False,
+    **batch_kw,
 ):
     """Start a streaming query writing only never-seen-before documents.
 
     ``docs_stream`` needs (id_col, text_col, ...). Kept docs land in
     ``out_dir/docs/batch_id=N``; the hash history in ``out_dir/history``.
+    ``batch_kw`` are ``dedup_batch``'s keywords (``id_col``, ``text_col``,
+    ``compact_every``), applied to every micro-batch.
     """
-
-    def _dedup_batch(batch_df: DataFrame, batch_id: int) -> None:
-        dedup_batch(
-            batch_df,
-            batch_id,
-            out_dir,
-            id_col=id_col,
-            text_col=text_col,
-            compact_every=compact_every,
-        )
-
-    writer = (
-        docs_stream.writeStream.foreachBatch(_dedup_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-    )
-    if available_now:  # drain everything available, then stop (batch-style runs)
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    batch = bind_batch(dedup_batch, out_dir, batch_kw)
+    return run_stream(docs_stream, batch, checkpoint_path, available_now=available_now)

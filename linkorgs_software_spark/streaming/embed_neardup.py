@@ -35,16 +35,19 @@ from ..cache import persist, scoped_caches
 from ..functions.embedding import cosine_sim_expr
 from ..operators.ann import expand_probes, lsh_buckets, lsh_occupancy_guard
 from ..operators.blocking import apply_df_cap
-from .dedup import _prior_history_paths
 from .history import (
     history_table_name,
+    list_batch_ids,
     maybe_compact,
+    prior_batch_paths,
     read_prior_history,
     recommended_history_buckets,
     write_history_bucketed,
 )
+from .incremental import bind_batch, run_stream
 
 
+@scoped_caches()
 def embed_neardup_batch(
     batch_df: DataFrame,
     batch_id: int,
@@ -65,7 +68,7 @@ def embed_neardup_batch(
 ) -> None:
     """Process one micro-batch (public, so replay behaviour is testable).
 
-    Wrapped in ``scoped_caches()`` like the text sibling: every frame
+    Decorated with ``scoped_caches()`` like the text sibling: every frame
     persisted during the batch is released when the batch ends, so a
     long-running stream cannot accumulate pinned frames batch over batch.
 
@@ -94,44 +97,6 @@ def embed_neardup_batch(
     ``occupancy_warn_factor`` x the 16-rows/bucket target (one cheap row
     count per batch; ``None`` disables).
     """
-    with scoped_caches():
-        _embed_neardup_batch_inner(
-            batch_df,
-            batch_id,
-            out_dir,
-            dim=dim,
-            id_col=id_col,
-            vec_col=vec_col,
-            threshold=threshold,
-            n_planes=n_planes,
-            num_tables=num_tables,
-            seed=seed,
-            max_bucket_df=max_bucket_df,
-            num_history_buckets=num_history_buckets,
-            multiprobe=multiprobe,
-            compact_every=compact_every,
-            occupancy_warn_factor=occupancy_warn_factor,
-        )
-
-
-def _embed_neardup_batch_inner(
-    batch_df: DataFrame,
-    batch_id: int,
-    out_dir: str,
-    *,
-    dim: int,
-    id_col: str,
-    vec_col: str,
-    threshold: float,
-    n_planes: int,
-    num_tables: int,
-    seed: int,
-    max_bucket_df: int | None,
-    num_history_buckets: int | None,
-    multiprobe: int,
-    compact_every: int | None,
-    occupancy_warn_factor: float | None = 4.0,
-) -> None:
     if num_history_buckets is None:  # scale-adaptive default; only the
         # table-creating first batch actually consumes the resolved value
         num_history_buckets = recommended_history_buckets(batch_df)
@@ -217,7 +182,7 @@ def _embed_neardup_batch_inner(
         )
     # embeddings slice is written in lockstep with the bucket table; an
     # empty prior listing = no PRIOR batch (first-batch replay) — skip
-    prior_emb = _prior_history_paths(spark, emb_dir, batch_id)
+    prior_emb = prior_batch_paths(spark, emb_dir, batch_id)
     if prior is not None and prior_emb:
         old_b = prior.select(
             "table_id", "bucket", F.col("vec_id").alias("_old_id")
@@ -302,8 +267,6 @@ def rebucket_embed_history(
     O(kept history) total, the unavoidable cost of any re-hash, paid
     OFFLINE once instead of per-batch forever via a saturated vocabulary.
     """
-    from .history import list_batch_ids
-
     buckets_dir = os.path.join(out_dir, "history", "buckets")
     emb_dir = os.path.join(out_dir, "history", "embeddings")
     hist_tbl = history_table_name(out_dir, "embuckets")
@@ -331,48 +294,14 @@ def incremental_embed_neardup(
     out_dir: str,
     checkpoint_path: str,
     *,
-    dim: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.95,
-    n_planes: int = 8,
-    num_tables: int = 4,
-    seed: int = 42,
-    max_bucket_df: int | None = 5000,
-    num_history_buckets: int | None = None,
-    multiprobe: int = 0,
-    compact_every: int | None = None,
-    occupancy_warn_factor: float | None = 4.0,
     available_now: bool = False,
+    **batch_kw,
 ):
     """Start a streaming query keeping only vectors that are not cosine
     near-dups of anything previously kept. Kept rows land in
-    ``out_dir/docs/batch_id=N``; LSH state under ``out_dir/history``."""
-
-    def _batch(batch_df: DataFrame, batch_id: int) -> None:
-        embed_neardup_batch(
-            batch_df,
-            batch_id,
-            out_dir,
-            dim=dim,
-            id_col=id_col,
-            vec_col=vec_col,
-            threshold=threshold,
-            n_planes=n_planes,
-            num_tables=num_tables,
-            seed=seed,
-            max_bucket_df=max_bucket_df,
-            num_history_buckets=num_history_buckets,
-            multiprobe=multiprobe,
-            compact_every=compact_every,
-            occupancy_warn_factor=occupancy_warn_factor,
-        )
-
-    writer = (
-        vec_stream.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    ``out_dir/docs/batch_id=N``; LSH state under ``out_dir/history``.
+    ``batch_kw`` are ``embed_neardup_batch``'s keywords (``dim`` is
+    required; ``threshold``, ``n_planes``, ``multiprobe``, ...), applied
+    to every micro-batch."""
+    batch = bind_batch(embed_neardup_batch, out_dir, batch_kw)
+    return run_stream(vec_stream, batch, checkpoint_path, available_now=available_now)

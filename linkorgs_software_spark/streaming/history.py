@@ -13,8 +13,8 @@ partition transform at prod):
     partitions, so per-batch join cost is O(batch + matching buckets), not
     O(history);
   * ``batch_id`` partition pruning gives the same replay-safety rule as
-    ``dedup._prior_history_paths`` (a replayed batch never anti-joins its
-    own previous attempt) without listing directories;
+    ``prior_batch_paths`` (a replayed batch never anti-joins its own
+    previous attempt) without listing directories;
   * per-batch idempotent overwrite is dynamic partition overwrite on
     ``batch_id`` — a replay rewrites exactly its own partition.
 
@@ -30,35 +30,19 @@ yet" — same error contract as the exact-dedup history.
 
 from __future__ import annotations
 
-import hashlib
 import json
 import os
-import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.io import dir_table_name, hadoop_fs, plan_size_bytes
+
 
 def history_table_name(out_dir: str, slice_name: str) -> str:
-    """Deterministic catalog name derived from the stream's output dir.
-
-    The readable suffix comes from ``re.sub(r'\\W+', '_')``, which is LOSSY
-    (``/data/a-b`` and ``/data/a_b`` both sanitize to ``data_a_b``), so an
-    md5 digest of the exact absolute path disambiguates: two streams with
-    colliding sanitized paths must NOT share one catalog table — the first
-    registration's LOCATION would win and the second stream's history reads
-    and writes would silently land in the first's directory (wrong
-    kept/dropped decisions with no error)."""
-    abspath = os.path.abspath(out_dir)
-    suffix = re.sub(r"\W+", "_", abspath).strip("_")
-    digest = hashlib.md5(abspath.encode("utf-8")).hexdigest()[:8]
-    return f"stream_hist_{suffix}_{digest}_{slice_name}"
-
-
-def _fs_and_path(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath, jvm
+    """Deterministic catalog name derived from the stream's output dir
+    (``sources.io.dir_table_name`` — distinct dirs never share a table)."""
+    return dir_table_name("stream_hist", out_dir, slice_name)
 
 
 def _spec_path(path: str) -> str:
@@ -66,8 +50,8 @@ def _spec_path(path: str) -> str:
 
 
 def _write_spec(spark: SparkSession, path: str, spec: dict) -> None:
-    fs, _, jvm = _fs_and_path(spark, path)
-    out = fs.create(jvm.org.apache.hadoop.fs.Path(_spec_path(path)), True)
+    fs, _, Path = hadoop_fs(spark, path)
+    out = fs.create(Path(_spec_path(path)), True)
     try:
         out.write(bytearray(json.dumps(spec).encode("utf-8")))
     finally:
@@ -75,15 +59,15 @@ def _write_spec(spark: SparkSession, path: str, spec: dict) -> None:
 
 
 def _read_spec(spark: SparkSession, path: str) -> dict | None:
-    fs, _, jvm = _fs_and_path(spark, path)
-    p = jvm.org.apache.hadoop.fs.Path(_spec_path(path))
+    fs, _, Path = hadoop_fs(spark, path)
+    p = Path(_spec_path(path))
     if not fs.exists(p):
         return None
     stream = fs.open(p)
     try:
         # py4j cannot fill a Python buffer in place; commons-io (on Spark's
         # classpath) drains the stream JVM-side and returns the string
-        text = jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
+        text = spark._jvm.org.apache.commons.io.IOUtils.toString(stream, "UTF-8")
     finally:
         stream.close()
     return json.loads(text)
@@ -132,18 +116,9 @@ def recommended_history_buckets(
     batch volume will grow far past the bootstrap batch should pass an
     explicit production count instead.
     """
-    try:
-        raw = (
-            batch_df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-        size = int(raw if isinstance(raw, int) else raw.toString())
-    except Exception:
-        return lo
-    # a source with no statistics (in-memory frames, some streaming
-    # sources) reports Spark's defaultSizeInBytes sentinel (~2^63); any
-    # such absurd estimate means UNKNOWN, not huge — fall back to ``lo``
-    # and let production streams pass an explicit count
-    if size <= 0 or size >= 1 << 50:
+    size = plan_size_bytes(batch_df)
+    if size is None:  # unknown, not huge: fall back to ``lo`` and let
+        # production streams pass an explicit count
         return lo
     return max(lo, min(hi, (size + target_bytes - 1) // target_bytes))
 
@@ -195,7 +170,7 @@ def write_history_bucketed(
 def list_batch_ids(spark: SparkSession, path: str) -> list[int]:
     """Batch ids present as ``batch_id=N`` directories under ``path``
     (negative ids are compaction snapshots). Missing dir => []."""
-    fs, hpath, _ = _fs_and_path(spark, path)
+    fs, hpath, _ = hadoop_fs(spark, path)
     if not fs.exists(hpath):
         return []
     out = []
@@ -207,6 +182,15 @@ def list_batch_ids(spark: SparkSession, path: str) -> list[int]:
             except ValueError:
                 continue
     return sorted(out)
+
+
+def prior_batch_paths(spark: SparkSession, path: str, batch_id: int) -> list[str]:
+    """The ``batch_id=N`` directories under ``path`` except ``batch_id``'s
+    own, which may hold a failed prior attempt a replay must not read.
+    Missing dir => [] (the first batch); any other listing failure
+    propagates, so a transient FS error never passes for "no history"."""
+    ids = list_batch_ids(spark, path)
+    return [os.path.join(path, f"batch_id={b}") for b in ids if b != batch_id]
 
 
 def _fold_set(
@@ -260,7 +244,7 @@ def compact_plain_history(
     fold, new_id = _fold_set(ids, watermark, which=which)
     if len(fold) < max(min_fold, 1):
         return None
-    fs, _, jvm = _fs_and_path(spark, path)
+    fs, _, Path = hadoop_fs(spark, path)
     dirs = [os.path.join(path, f"batch_id={b}") for b in fold]
     tmp = path.rstrip("/") + "__compact_tmp"
     folded = spark.read.parquet(*dirs)
@@ -268,12 +252,9 @@ def compact_plain_history(
         folded = transform(folded)
     folded.write.mode("overwrite").parquet(tmp)
     # rename INTO the partition namespace only after the tmp write committed
-    fs.rename(
-        jvm.org.apache.hadoop.fs.Path(tmp),
-        jvm.org.apache.hadoop.fs.Path(os.path.join(path, f"batch_id={new_id}")),
-    )
+    fs.rename(Path(tmp), Path(os.path.join(path, f"batch_id={new_id}")))
     for d in dirs:
-        fs.delete(jvm.org.apache.hadoop.fs.Path(d), True)
+        fs.delete(Path(d), True)
     return new_id
 
 
@@ -302,7 +283,7 @@ def compact_bucketed_history(
         return None
     data_cols = [c for c, _ in spec["columns"]]
     tmp = path.rstrip("/") + "__compact_tmp"
-    fs, _, jvm = _fs_and_path(spark, path)
+    fs, _, Path = hadoop_fs(spark, path)
     try:
         # materialize OUTSIDE the table location first: Spark refuses to
         # overwrite a table it is simultaneously reading, and the tmp copy
@@ -326,12 +307,9 @@ def compact_bucketed_history(
             spark.sql(
                 f"ALTER TABLE {table} DROP IF EXISTS PARTITION (batch_id={int(b)})"
             )
-            fs.delete(
-                jvm.org.apache.hadoop.fs.Path(os.path.join(path, f"batch_id={b}")),
-                True,
-            )
+            fs.delete(Path(os.path.join(path, f"batch_id={b}")), True)
     finally:
-        fs.delete(jvm.org.apache.hadoop.fs.Path(tmp), True)
+        fs.delete(Path(tmp), True)
     return new_id
 
 
@@ -399,7 +377,7 @@ def read_prior_history(
     spark: SparkSession, table: str, path: str, batch_id: int
 ) -> DataFrame | None:
     """PRIOR batches' history (``batch_id != N`` — partition pruning), or
-    None when no history exists yet. Mirrors ``dedup._prior_history_paths``
+    None when no history exists yet. Mirrors ``prior_batch_paths``
     semantics: missing history => first batch; unreadable history raises."""
     if not _ensure_table(spark, table, path):
         return None

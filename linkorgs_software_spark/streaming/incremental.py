@@ -12,15 +12,42 @@ exactly-once* by writing each batch to a ``batch_id=N`` subdirectory with
 appending duplicates (the standard idempotent-foreachBatch pattern; an
 Iceberg/Delta sink would use a transactional MERGE keyed on batch_id
 instead). Readers load ``sink_path`` as a partitioned parquet table.
+
+Every streaming operator in this package starts through ``run_stream``
+with a batch function that honours that contract.
 """
 
 from __future__ import annotations
+
+import functools
+import inspect
 
 from pyspark.sql import DataFrame
 
 from ..config import DEFAULT, LinkConfig
 from ..plans.pipeline import link_orgs
 from ..sources.fixtures import extract_mentions
+
+
+def run_stream(stream: DataFrame, batch_fn, checkpoint_path: str, *, available_now: bool = False):
+    """Start ``stream`` with ``batch_fn(batch_df, batch_id)`` as its
+    foreachBatch sink, checkpointed at ``checkpoint_path``;
+    ``available_now`` drains what is available, then stops."""
+    writer = (
+        stream.writeStream.foreachBatch(batch_fn)
+        .option("checkpointLocation", checkpoint_path)
+        .outputMode("append")
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
+def bind_batch(batch_fn, out_dir: str, batch_kw: dict):
+    """``batch_fn`` with ``out_dir`` and ``batch_kw`` bound; a misspelt
+    keyword raises ``TypeError`` now, not inside the first micro-batch."""
+    inspect.signature(batch_fn).bind(None, 0, out_dir, **batch_kw)
+    return functools.partial(batch_fn, out_dir=out_dir, **batch_kw)
 
 
 def incremental_link(
@@ -49,9 +76,4 @@ def incremental_link(
         # idempotent per-batch path: replays overwrite, never duplicate
         z.write.mode("overwrite").parquet(f"{sink_path}/batch_id={batch_id}")
 
-    return (
-        transcripts_stream.writeStream.foreachBatch(_link_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-        .start()
-    )
+    return run_stream(transcripts_stream, _link_batch, checkpoint_path)

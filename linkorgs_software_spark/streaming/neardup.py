@@ -54,16 +54,18 @@ from ..functions.qgrams import jaccard_qgram_dist_expr
 from ..functions.text import word_shingles_expr
 from ..operators.blocking import apply_df_cap
 from ..operators.corpus import minhash_band_buckets
-from .dedup import _prior_history_paths
 from .history import (
     history_table_name,
     maybe_compact,
+    prior_batch_paths,
     read_prior_history,
     recommended_history_buckets,
     write_history_bucketed,
 )
+from .incremental import bind_batch, run_stream
 
 
+@scoped_caches()
 def neardup_batch(
     batch_df: DataFrame,
     batch_id: int,
@@ -81,7 +83,7 @@ def neardup_batch(
 ) -> None:
     """Process one micro-batch (public, so replay behaviour is testable).
 
-    Wrapped in ``scoped_caches()``: the batch persists its banded frame,
+    Decorated with ``scoped_caches()``: the batch persists its banded frame,
     shingle sets, survivors and kept docs, and a stream runs one batch per
     trigger — without per-batch release a long-running query would pin
     those frames batch over batch (growing executor storage AND the driver
@@ -97,38 +99,6 @@ def neardup_batch(
     lifetime); without it a year-long stream accumulates
     O(batches · num_history_buckets) files.
     """
-    with scoped_caches():
-        _neardup_batch_inner(
-            batch_df,
-            batch_id,
-            out_dir,
-            id_col=id_col,
-            text_col=text_col,
-            num_hashes=num_hashes,
-            bands=bands,
-            shingle_k=shingle_k,
-            threshold=threshold,
-            max_bucket_df=max_bucket_df,
-            num_history_buckets=num_history_buckets,
-            compact_every=compact_every,
-        )
-
-
-def _neardup_batch_inner(
-    batch_df: DataFrame,
-    batch_id: int,
-    out_dir: str,
-    *,
-    id_col: str,
-    text_col: str,
-    num_hashes: int,
-    bands: int,
-    shingle_k: int,
-    threshold: float,
-    max_bucket_df: int | None,
-    num_history_buckets: int | None,
-    compact_every: int | None,
-) -> None:
     if num_history_buckets is None:  # scale-adaptive default; only the
         # table-creating first batch actually consumes the resolved value
         num_history_buckets = recommended_history_buckets(batch_df)
@@ -218,7 +188,7 @@ def _neardup_batch_inner(
     # the shingle slice is written in lockstep with the bucket
     # table, so an empty prior-shingle listing means no PRIOR batch
     # exists (e.g. a replay of the very first batch) — skip
-    prior_shingles = _prior_history_paths(spark, shingles_dir, batch_id)
+    prior_shingles = prior_batch_paths(spark, shingles_dir, batch_id)
     if prior is not None and prior_shingles:
         new_b = banded.join(survivors.select(id_col), id_col, "left_semi")
         old_b = prior.select("bucket", F.col("doc_id").alias("_old_id"))
@@ -269,42 +239,13 @@ def incremental_neardup_dedup(
     out_dir: str,
     checkpoint_path: str,
     *,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 16,
-    bands: int = 4,
-    shingle_k: int = 3,
-    threshold: float = 0.5,
-    max_bucket_df: int | None = 5000,
-    num_history_buckets: int | None = None,
-    compact_every: int | None = None,
     available_now: bool = False,
+    **batch_kw,
 ):
     """Start a streaming query that keeps only documents which are not
     near-dups of anything previously ingested. Kept docs land in
-    ``out_dir/docs/batch_id=N``; LSH state under ``out_dir/history``."""
-
-    def _batch(batch_df: DataFrame, batch_id: int) -> None:
-        neardup_batch(
-            batch_df,
-            batch_id,
-            out_dir,
-            id_col=id_col,
-            text_col=text_col,
-            num_hashes=num_hashes,
-            bands=bands,
-            shingle_k=shingle_k,
-            threshold=threshold,
-            max_bucket_df=max_bucket_df,
-            num_history_buckets=num_history_buckets,
-            compact_every=compact_every,
-        )
-
-    writer = (
-        docs_stream.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    ``out_dir/docs/batch_id=N``; LSH state under ``out_dir/history``.
+    ``batch_kw`` are ``neardup_batch``'s keywords (``threshold``,
+    ``bands``, ``compact_every``, ...), applied to every micro-batch."""
+    batch = bind_batch(neardup_batch, out_dir, batch_kw)
+    return run_stream(docs_stream, batch, checkpoint_path, available_now=available_now)

@@ -74,17 +74,20 @@ from ..functions.normalize import NORM_COL, prepare_side
 from ..functions.scorers import distance_expr
 from ..operators.blocking import apply_df_cap, gram_index
 from ..operators.cluster import connected_components
-from .dedup import _prior_history_paths
 from .history import (
     compact_plain_history,
     history_table_name,
+    list_batch_ids,
     maybe_compact,
+    prior_batch_paths,
     read_prior_history,
     recommended_history_buckets,
     write_history_bucketed,
 )
+from .incremental import bind_batch, run_stream
 
 
+@scoped_caches()
 def resolve_batch(
     batch_df: DataFrame,
     batch_id: int,
@@ -109,32 +112,8 @@ def resolve_batch(
     one id that no later batch can split (the directory is append-only).
     Production setting: lenient ``max_dist``, strict ``create_max_dist``.
     """
-    with scoped_caches():
-        _resolve_batch_inner(
-            batch_df,
-            batch_id,
-            out_dir,
-            name_col=name_col,
-            cfg=cfg,
-            max_dist=max_dist,
-            create_max_dist=max_dist if create_max_dist is None else create_max_dist,
-            num_history_buckets=num_history_buckets,
-            compact_every=compact_every,
-        )
-
-
-def _resolve_batch_inner(
-    batch_df: DataFrame,
-    batch_id: int,
-    out_dir: str,
-    *,
-    name_col: str,
-    cfg: LinkConfig,
-    max_dist: float,
-    create_max_dist: float,
-    num_history_buckets: int | None,
-    compact_every: int | None,
-) -> None:
+    if create_max_dist is None:
+        create_max_dist = max_dist
     if num_history_buckets is None:  # scale-adaptive default; only the
         # table-creating first batch actually consumes the resolved value
         num_history_buckets = recommended_history_buckets(batch_df)
@@ -202,7 +181,7 @@ def _resolve_batch_inner(
 
     # ---- 2. MATCH against the prior directory -------------------------
     prior_grams = read_prior_history(spark, grams_tbl, grams_dir, batch_id)
-    prior_ent_paths = _prior_history_paths(spark, entities_dir, batch_id)
+    prior_ent_paths = prior_batch_paths(spark, entities_dir, batch_id)
     matched = None
     if prior_grams is not None and prior_ent_paths:
         btri = tri
@@ -445,7 +424,9 @@ def compact_directory(
     from ..plans.multi import merge_entities
 
     entities_dir = os.path.join(out_dir, "history", "entities")
-    paths = _prior_history_paths(spark, entities_dir, watermark)
+    # exactly what compact_plain_history folds: snapshots + batches < watermark
+    ids = [b for b in list_batch_ids(spark, entities_dir) if b < watermark]
+    paths = [os.path.join(entities_dir, f"batch_id={b}") for b in ids]
     if not paths:
         return None
     remap_path = os.path.join(out_dir, "remaps", f"watermark={watermark}")
@@ -486,22 +467,21 @@ def incremental_resolve(
     out_dir: str,
     checkpoint_path: str,
     *,
-    name_col: str = "name",
     cfg: LinkConfig = DEFAULT,
     max_dist: float = 0.5,
-    create_max_dist: float | None = None,
-    num_history_buckets: int | None = None,
-    compact_every: int | None = None,
     merge_every: int | None = None,
     merge_max_dist: float | None = None,
     available_now: bool = False,
+    **batch_kw,
 ):
     """Start a streaming query resolving each micro-batch of mentions
     against the evolving directory. Resolved rows land in
     ``out_dir/assignments/batch_id=N``; directory state under
-    ``out_dir/history``.
+    ``out_dir/history``. ``batch_kw`` are ``resolve_batch``'s other keywords
+    (``create_max_dist``, ``compact_every``, ...); ``cfg`` and ``max_dist``
+    go to both ``resolve_batch`` and the merge pass.
 
-    ``merge_every=K`` runs ``compact_directory`` before every K-th batch
+    ``merge_every=K`` (K >= 1) runs ``compact_directory`` before every K-th batch
     (watermark = the incoming batch id, which is by construction
     uncommitted — exactly the contract the merge pass requires), at
     ``merge_max_dist`` (default: ``max_dist`` — two entities either of
@@ -511,6 +491,9 @@ def incremental_resolve(
     Remaps accumulate durably under ``out_dir/remaps``; already-written
     assignment slices are remapped lazily by the consumer
     (``plans.multi.apply_entity_remap``), never rewritten in place."""
+    if merge_every is not None and merge_every < 1:
+        raise ValueError(f"merge_every must be >= 1, got {merge_every}")
+    resolve = bind_batch(resolve_batch, out_dir, dict(batch_kw, cfg=cfg, max_dist=max_dist))
 
     def _batch(batch_df: DataFrame, batch_id: int) -> None:
         if merge_every is not None and batch_id > 0 and batch_id % merge_every == 0:
@@ -521,23 +504,6 @@ def incremental_resolve(
                 cfg=cfg,
                 max_dist=max_dist if merge_max_dist is None else merge_max_dist,
             )
-        resolve_batch(
-            batch_df,
-            batch_id,
-            out_dir,
-            name_col=name_col,
-            cfg=cfg,
-            max_dist=max_dist,
-            create_max_dist=create_max_dist,
-            num_history_buckets=num_history_buckets,
-            compact_every=compact_every,
-        )
+        resolve(batch_df, batch_id)
 
-    writer = (
-        mentions_stream.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", checkpoint_path)
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return run_stream(mentions_stream, _batch, checkpoint_path, available_now=available_now)

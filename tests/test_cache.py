@@ -1,6 +1,8 @@
 """The persist/release lifecycle: ``cache.py`` owns every persist and
-release in the package, and its scopes decide when a frame is released."""
+release in the package, and its scopes decide when a frame is released.
+A second grep guard pins ``run_stream`` as the package's one stream starter."""
 
+import ast
 import pathlib
 import re
 import sys
@@ -22,6 +24,28 @@ def test_cache_module_is_the_only_persist_site():
         if path.name != "cache.py" or path.parent != PKG
         for n, line in enumerate(path.read_text().splitlines(), 1)
         if _STORAGE_CALL.search(line)
+    ]
+    assert not hits, "\n".join(hits)
+
+
+def test_run_stream_is_the_only_stream_starter():
+    """No package code outside ``streaming.incremental.run_stream`` touches
+    ``writeStream``: every stream starts with one checkpoint and trigger
+    handling."""
+    starter = pathlib.Path("streaming", "incremental.py")
+    source = (PKG / starter).read_text()
+    fn = next(
+        n for n in ast.parse(source).body
+        if isinstance(n, ast.FunctionDef) and n.name == "run_stream"
+    )
+    inside = range(fn.lineno, fn.end_lineno + 1)
+    assert any("writeStream" in source.splitlines()[n - 1] for n in inside)
+    hits = [
+        f"{path.relative_to(PKG)}:{n}: {line.strip()}"
+        for path in sorted(PKG.rglob("*.py"))
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if "writeStream" in line
+        and not (path.relative_to(PKG) == starter and n in inside)
     ]
     assert not hits, "\n".join(hits)
 

@@ -101,6 +101,26 @@ def test_history_buckets_floor_and_clamp(spark, tmp_path):
     assert 8 <= recommended_history_buckets(big) <= 4096
 
 
+def test_plan_size_probe_failure_reads_as_unknown(spark, monkeypatch):
+    """Both size guards share one probe: a frame whose JVM plan cannot be
+    read (as on Spark Connect) has an unknown size, so the spread guard
+    returns its input and the history bucket rule returns ``lo``."""
+    from linkorgs_software_spark.operators.corpus import _spread_small_input
+    from linkorgs_software_spark.sources.io import plan_size_bytes
+    from linkorgs_software_spark.streaming.history import recommended_history_buckets
+
+    class _NoPlan:
+        def queryExecution(self):
+            raise RuntimeError("no JVM plan")
+
+    df = spark.range(10).select(F.col("id").alias("doc_id"))
+    assert plan_size_bytes(df) > 0
+    monkeypatch.setattr(df, "_jdf", _NoPlan())
+    assert plan_size_bytes(df) is None
+    assert _spread_small_input(df, "doc_id") is df
+    assert recommended_history_buckets(df, lo=5) == 5
+
+
 # ---------------------------------------------------------------------------
 # packed q-gram sets: exact equivalence with the string form
 # ---------------------------------------------------------------------------

@@ -97,38 +97,6 @@ def test_sessionize_stream_state_spans_micro_batches(spark, tmp_path):
     assert out == {1: 1, 2: 1, 3: 1, 4: 2}
 
 
-def test_incremental_exact_dedup_across_batches(spark, tmp_path):
-    """A doc seen in an earlier micro-batch must not be emitted again, even
-    under a different id; intra-batch dups collapse to the min id."""
-    from linkorgs_software_spark.streaming import incremental_exact_dedup
-
-    src = str(tmp_path / "dd_src")
-    out = str(tmp_path / "dd_out")
-    ckpt = str(tmp_path / "dd_ckpt")
-    os.makedirs(src, exist_ok=True)
-    schema = "doc_id long, text string"
-
-    def _write(name, rows):
-        spark.createDataFrame(rows, schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(f"{src}/{name}")
-
-    def _run():
-        stream = spark.readStream.schema(schema).parquet(f"{src}/*")
-        q = incremental_exact_dedup(stream, out, ckpt, available_now=True)
-        q.awaitTermination(120)
-
-    _write("a", [(1, "alpha"), (2, "alpha"), (3, "beta")])   # 2 is intra dup
-    _run()
-    _write("b", [(4, "alpha"), (5, "gamma")])                # 4 is cross dup
-    _run()
-
-    kept = sorted(r.doc_id for r in spark.read.parquet(f"{out}/docs").collect())
-    assert kept == [1, 3, 5]
-    hist = spark.read.parquet(f"{out}/history")
-    assert hist.count() == 3  # one history row per unique content
-
-
 def test_incremental_dedup_replay_is_idempotent(spark, tmp_path):
     """A re-executed micro-batch (failure before checkpoint commit) must
     reproduce its first attempt's output — NOT anti-join against its own
@@ -230,33 +198,89 @@ def test_incremental_neardup_intra_batch_and_replay(spark, tmp_path):
     assert kept_replay == [7, 9]  # not emptied by its own prior history
 
 
-def test_incremental_neardup_stream_end_to_end(spark, tmp_path):
-    """The writeStream wiring: two availableNow drains over a file source."""
-    from linkorgs_software_spark.streaming import incremental_neardup_dedup
+def _drain_case(kind):
+    """One history starter's two-drain scenario: (starter, schema, drain-1
+    rows, drain-2 rows, starter keywords, kept ids, the history slice
+    holding one row per kept record)."""
+    from linkorgs_software_spark import streaming
 
-    src = str(tmp_path / "nds_src")
-    out = str(tmp_path / "nds_out")
-    ckpt = str(tmp_path / "nds_ckpt")
-    os.makedirs(src, exist_ok=True)
-    schema = "doc_id long, text string"
+    text = "doc_id long, text string"
+    if kind == "exact":
+        return (
+            streaming.incremental_exact_dedup, text,
+            [(1, "alpha"), (2, "alpha"), (3, "beta")],  # 2 is intra dup
+            [(4, "alpha"), (5, "gamma")],  # 4 is cross dup
+            {}, [1, 3, 5], "history",  # one history row per unique content
+        )
+    if kind == "neardup":
+        return (
+            streaming.incremental_neardup_dedup, text,
+            [(1, _BASE)],
+            [(2, _EDITED), (3, _OTHER)],  # 2 is an edited re-post of 1
+            {"threshold": 0.5}, [1, 3], "history/shingles",
+        )
+    import numpy as np
 
-    def _write(name, rows):
+    rng = np.random.RandomState(3)
+    base, other = rng.normal(size=16), rng.normal(size=16)
+    pert = base + rng.normal(scale=1e-3, size=16)
+    return (
+        streaming.incremental_embed_neardup, "vec_id long, embedding array<float>",
+        [(1, [float(x) for x in base])],
+        [(2, [float(x) for x in pert]), (3, [float(x) for x in other])],  # 2 ~ 1
+        {"dim": 16, "threshold": 0.99}, [1, 3], "history/embeddings",
+    )
+
+
+@pytest.mark.parametrize("kind", ["exact", "neardup", "embed"])
+def test_history_stream_two_drains(spark, tmp_path, kind):
+    """The writeStream wiring: two availableNow drains over a file source.
+    A record seen in an earlier drain is not emitted again, even under a
+    different id (or, for the near-dup starters, lightly edited);
+    intra-batch dups collapse to the min id."""
+    starter, schema, rows_a, rows_b, kw, want, hist = _drain_case(kind)
+    src, out, ckpt = (str(tmp_path / d) for d in ("src", "out", "ckpt"))
+
+    def _drain(name, rows):
         spark.createDataFrame(rows, schema).coalesce(1).write.mode(
             "overwrite"
         ).parquet(f"{src}/{name}")
-
-    def _run():
         stream = spark.readStream.schema(schema).parquet(f"{src}/*")
-        q = incremental_neardup_dedup(stream, out, ckpt, threshold=0.5,
-                                      available_now=True)
+        q = starter(stream, out, ckpt, available_now=True, **kw)
         q.awaitTermination(180)
 
-    _write("a", [(1, _BASE)])
-    _run()
-    _write("b", [(2, _EDITED), (3, _OTHER)])
-    _run()
-    kept = sorted(r.doc_id for r in spark.read.parquet(f"{out}/docs").collect())
-    assert kept == [1, 3]  # the edited re-post was deduped against history
+    _drain("a", rows_a)
+    _drain("b", rows_b)
+    id_col = schema.split()[0]
+    kept = sorted(r[id_col] for r in spark.read.parquet(f"{out}/docs").collect())
+    assert kept == want
+    assert spark.read.parquet(f"{out}/{hist}").count() == len(want)
+
+
+def test_starters_check_arguments_before_start(spark, tmp_path):
+    """A bad starter argument fails before the stream starts, not inside a
+    micro-batch after earlier ones committed: ``merge_every=0`` (a modulo
+    by zero in batch 1) raises ValueError, and a misspelt batch keyword
+    raises TypeError in every history starter."""
+    from linkorgs_software_spark import streaming
+
+    os.makedirs(tmp_path / "src")
+    stream = spark.readStream.schema("doc_id long, text string").parquet(
+        str(tmp_path / "src")
+    )
+    out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
+    with pytest.raises(ValueError, match="merge_every"):
+        streaming.incremental_resolve(stream, out, ckpt, merge_every=0)
+    for starter, kw in [
+        (streaming.incremental_exact_dedup, {}),
+        (streaming.incremental_neardup_dedup, {}),
+        (streaming.incremental_embed_neardup, {"dim": 16}),
+        (streaming.incremental_resolve, {}),
+    ]:
+        with pytest.raises(TypeError, match="compact_evry"):
+            starter(stream, out, ckpt, compact_evry=2, **kw)
+    assert not spark.streams.active
+    assert not os.path.exists(ckpt)
 
 
 def test_incremental_embed_neardup_cross_batch_and_replay(spark, tmp_path):
@@ -1091,6 +1115,27 @@ def test_compact_directory_no_merge_is_noop(spark, tmp_path):
     assert compact_directory(spark, out, watermark=2, max_dist=0.2) is None
     assert not os.path.exists(f"{out}/remaps")
     assert list_batch_ids(spark, f"{out}/history/entities") == [0, 1]
+
+
+def test_compact_directory_reads_nothing_at_or_above_watermark(spark, tmp_path):
+    """Slices at or above ``watermark`` are neither read nor folded: with
+    the near-named variant only in slice 2, a merge at watermark 1 sees one
+    entity, merges nothing, and leaves slice 2 as it was."""
+    from linkorgs_software_spark.streaming import compact_directory, resolve_batch
+    from linkorgs_software_spark.streaming.history import list_batch_ids
+
+    out = str(tmp_path / "resolve_watermark")
+    for batch_id, name in [(0, "Acme Corporation"), (2, "Acme Corporation x")]:
+        resolve_batch(
+            spark.createDataFrame([(name,)], "name string"),
+            batch_id, out, max_dist=0.05,
+        )
+    slice2 = f"{out}/history/entities/batch_id=2"
+    before = sorted(spark.read.parquet(slice2).collect())
+    assert compact_directory(spark, out, watermark=1, max_dist=0.4) is None
+    assert not os.path.exists(f"{out}/remaps")
+    assert list_batch_ids(spark, f"{out}/history/entities") == [0, 2]
+    assert sorted(spark.read.parquet(slice2).collect()) == before
 
 
 def test_incremental_resolve_merge_every_in_stream(spark, tmp_path):

@@ -1,6 +1,6 @@
 """Capture the streaming resolver's create-path scoring plan, before/after.
 
-The resolver's scoring frames are internal to ``_resolve_batch_inner``, so
+The resolver's scoring frames are internal to ``resolve_batch``, so
 the declared-query plan capture can't show them. This tool rebuilds the
 create-path `scored` frame on the bench fixture in BOTH formulations —
 the round-start form (per-pair ``distance_expr("jaccard")`` over joined
