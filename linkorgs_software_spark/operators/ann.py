@@ -186,7 +186,8 @@ def probe_buckets_expr(bucket_col: str, *, n_planes: int, multiprobe: int) -> F.
     reference's all-pairs euclidean regime,
     ``LinkOrgs/R/LinkOrgs_PFuzzyEuclideanInternal.R:133-163``).
     """
-    assert 0 <= multiprobe <= 2, "multiprobe supports hamming 0..2"
+    if not 0 <= multiprobe <= 2:
+        raise ValueError(f"multiprobe supports hamming 0..2; got {multiprobe}")
     c = F.col(bucket_col)
     vals = [c]
     if multiprobe >= 1:
@@ -209,7 +210,7 @@ def expand_probes(
     double-count hamming distance (a and b each one flip away meet at
     hamming 2) and square the fan-out.
     """
-    if multiprobe <= 0:
+    if multiprobe == 0:
         return df
     return df.withColumn(
         bucket_col,

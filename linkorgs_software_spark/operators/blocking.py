@@ -26,6 +26,8 @@ Scale levers (all absent from the single-node reference — SURVEY.md §4):
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -53,11 +55,12 @@ def apply_df_cap(
 ) -> DataFrame:
     """Drop grams whose posting list exceeds ``cap`` (skew/stop-gram guard).
 
-    Shared by every blocking-style self/pair join in the engine (trigram
-    blocking here, MinHash/SimHash band buckets and embedding-LSH buckets in
-    operators/corpus.py): a key whose posting list squares inside one join
-    task is the canonical 100 TB skew-killer, so the cap is applied before
-    *any* key-equality pair generation.
+    Shared by every blocking-style self/pair join in the engine: trigram
+    blocking here, and every near-dup bucket self-join through
+    ``bucket_pairs`` below (shingle, MinHash, SimHash and embedding-LSH
+    keys, batch and streaming). A key whose posting list squares inside
+    one join task is the canonical 100 TB skew-killer, so the cap is
+    applied before *any* key-equality pair generation.
 
     ``gram_col`` may be one column name or a list of them — a composite key
     (e.g. LSH ``(table_id, bucket)``) counts and anti-joins on all columns
@@ -81,6 +84,46 @@ def apply_df_cap(
     counts = index.groupBy(*cols).agg(F.count(F.lit(1)).alias("_df"))
     over = counts.filter(F.col("_df") > cap).select(*cols)
     return index.join(F.broadcast(over), cols, "left_anti")
+
+
+def bucket_pairs(
+    index: DataFrame,
+    key: str | list[str] | tuple[str, ...],
+    *,
+    cap: int | None = None,
+    probe: Callable[[DataFrame], DataFrame] | None = None,
+) -> DataFrame:
+    """Candidate pairs of a bucket self-join — the near-dup family's one
+    candidate step (shingle, MinHash band, SimHash block and embedding-LSH
+    keys; batch operators and streaming micro-batches alike).
+
+    ``index`` has an ``id`` column, the ``key`` column(s), and any further
+    columns, which are carried to both sides of each pair. Keys over
+    ``cap`` are dropped first (``apply_df_cap``). ``probe`` (for example
+    ``ann.expand_probes``) then rewrites the LEFT side's keys only, after
+    the cap, so a probe never resurrects an over-cap key and hamming
+    distance is not counted twice. Returns ``id_a, id_b`` plus
+    ``<c>_a, <c>_b`` per carried column, with ``id_a < id_b`` and one row
+    per ``(id_a, id_b)`` however many keys the pair shares; verification
+    is the caller's.
+    """
+    keys = [key] if isinstance(key, str) else list(key)
+    if cap is not None:
+        index = apply_df_cap(index, keys, cap)
+    left = index if probe is None else probe(index)
+    carried = [c for c in index.columns if c != "id" and c not in keys]
+    return (
+        left.alias("a")
+        .join(index.alias("b"), keys)
+        .filter(F.col("a.id") < F.col("b.id"))
+        .select(
+            F.col("a.id").alias("id_a"),
+            F.col("b.id").alias("id_b"),
+            *[F.col(f"a.{c}").alias(f"{c}_a") for c in carried],
+            *[F.col(f"b.{c}").alias(f"{c}_b") for c in carried],
+        )
+        .dropDuplicates(["id_a", "id_b"])
+    )
 
 
 def recommended_block_df(n_rows: int, *, frac: float = 0.1, lo: int = 500) -> int:

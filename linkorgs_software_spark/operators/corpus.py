@@ -11,6 +11,11 @@ an ANSI-SQL oracle:
   * embedding       — cosine-threshold near-dup (brute force verify;
                       hyperplane-LSH candidates at scale — see ann.py)
 
+The four near-dup families share one candidate step,
+``blocking.bucket_pairs``: df-cap hot keys, self-join on the key, keep
+``id_a < id_b``, one row per pair. They differ only in the key (shingle,
+band, bit-block, LSH bucket) and in the verify that follows.
+
 Hash portability: every hash is ``md5`` of a visible string (hex compared
 lexicographically), so Spark and DuckDB agree bit-for-bit; no engine-private
 hash (xxhash64/duckdb hash) crosses the oracle boundary.
@@ -26,7 +31,7 @@ from ..functions.embedding import cosine_sim_expr
 from ..functions.qgrams import jaccard_qgram_dist_expr
 from ..functions.text import word_shingles_expr
 from ..sources.io import plan_size_bytes
-from .blocking import apply_df_cap
+from .blocking import bucket_pairs
 
 
 def _spread_small_input(df: DataFrame, key_col: str) -> DataFrame:
@@ -452,23 +457,7 @@ def ngram_jaccard_dups(
         word_shingles_expr(text_col, shingle_k).alias("shingles"),
     )
     idx = persist(sh.select("id", F.explode("shingles").alias("s")))
-    dfreq = idx.groupBy("s").agg(F.count(F.lit(1)).alias("_df"))
-    # broadcast the OVER-cap shingles (bounded by n_rows/cap keys) and
-    # anti-join — the keep-list is the shingle VOCABULARY, linear in corpus
-    # size, and broadcasting it is a driver OOM at scale (apply_df_cap's
-    # rationale; output-identical by set algebra)
-    idx = idx.join(
-        F.broadcast(dfreq.filter(F.col("_df") > max_block_df).select("s")),
-        "s",
-        "left_anti",
-    )
-    cand = (
-        idx.alias("a")
-        .join(idx.alias("b"), "s")
-        .filter(F.col("a.id") < F.col("b.id"))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
+    cand = bucket_pairs(idx, "s", cap=max_block_df)
     a = sh.select(F.col("id").alias("id_a"), F.col("shingles").alias("sh_a"))
     b = sh.select(F.col("id").alias("id_b"), F.col("shingles").alias("sh_b"))
     sim = F.lit(1.0) - jaccard_qgram_dist_expr("sh_a", "sh_b")
@@ -516,21 +505,7 @@ def containment_pairs(
         word_shingles_expr(text_col, shingle_k).alias("shingles"),
     )
     idx = persist(sh.select("id", F.explode("shingles").alias("s")))
-    dfreq = idx.groupBy("s").agg(F.count(F.lit(1)).alias("_df"))
-    # over-cap anti-join, not keep-list semi-join — see ngram_dup_pairs /
-    # apply_df_cap: the keep side is the (corpus-linear) vocabulary
-    idx = idx.join(
-        F.broadcast(dfreq.filter(F.col("_df") > max_block_df).select("s")),
-        "s",
-        "left_anti",
-    )
-    cand = (
-        idx.alias("a")
-        .join(idx.alias("b"), "s")
-        .filter(F.col("a.id") < F.col("b.id"))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
+    cand = bucket_pairs(idx, "s", cap=max_block_df)
     a = sh.select(F.col("id").alias("id_a"), F.col("shingles").alias("sh_a"))
     b = sh.select(F.col("id").alias("id_b"), F.col("shingles").alias("sh_b"))
     inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
@@ -604,6 +579,13 @@ def minhash_band_buckets(
     — which is what lets the streaming operator compare a micro-batch
     against a bucket history written by earlier batches.
     """
+    if not (1 <= bands <= num_hashes and num_hashes % bands == 0):
+        # rows = 0 would give every doc the same bands keys, so every doc
+        # shares every bucket and the df-cap then drops them all
+        raise ValueError(
+            f"bands must divide num_hashes with 1 <= bands <= num_hashes; "
+            f"got bands={bands}, num_hashes={num_hashes}"
+        )
     rows = num_hashes // bands
     sig = minhash_signatures(
         df, id_col=id_col, text_col=text_col, num_hashes=num_hashes, shingle_k=shingle_k
@@ -651,16 +633,7 @@ def minhash_lsh_dups(
     )
     # the banded frame feeds the cap count AND both self-join sides: persist
     # (disk-spillable) so the signature aggregation runs once, not 3x
-    banded = persist(banded)
-    if max_bucket_df is not None:
-        banded = apply_df_cap(banded, "bucket", max_bucket_df)
-    cand = (
-        banded.alias("a")
-        .join(banded.alias("b"), "bucket")
-        .filter(F.col("a.id") < F.col("b.id"))
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
+    cand = bucket_pairs(persist(banded), "bucket", cap=max_bucket_df)
     sh = df.select(
         F.col(id_col).alias("id"), word_shingles_expr(text_col, shingle_k).alias("sh")
     )
@@ -699,7 +672,8 @@ def simhash_expr(text_col, *, bits: int = SIMHASH_BITS):
     ``ann._sign_bucket_expr`` for the same fix); a Column input falls back
     to the identical Column-algebra formulation.
     """
-    assert 1 <= bits <= 64
+    if not 1 <= bits <= 64:
+        raise ValueError(f"simhash bits must be in [1, 64]; got {bits}")
     if not isinstance(text_col, str):
         return _simhash_expr_col(text_col, bits=bits)
     c = f"lower(`{text_col}`)"
@@ -784,7 +758,12 @@ def simhash_dups(
     ``minhash_lsh_dups`` — an over-duplicated corpus otherwise squares
     inside one block bucket's self-join task.
     """
-    assert blocks > max_hamming, "pigeonhole requires blocks > max_hamming"
+    if not max_hamming < blocks <= bits:
+        # blocks > bits gives 0-bit blocks: every doc shares every block key
+        raise ValueError(
+            f"pigeonhole recall needs max_hamming < blocks <= bits; got "
+            f"blocks={blocks}, max_hamming={max_hamming}, bits={bits}"
+        )
     width = bits // blocks
     sig = _spread_small_input(df, id_col).select(
         F.col(id_col).alias("id"), simhash_expr(text_col, bits=bits).alias("sig")
@@ -802,21 +781,7 @@ def simhash_dups(
     blocked = sig.select("id", "sig", F.explode(F.array(*block_cols)).alias("blk"))
     # simhash_expr (md5 per token) is the expensive projection; persist so the
     # cap count and both self-join sides read it once
-    blocked = persist(blocked)
-    if max_bucket_df is not None:
-        blocked = apply_df_cap(blocked, "blk", max_bucket_df)
-    cand = (
-        blocked.alias("a")
-        .join(blocked.alias("b"), "blk")
-        .filter(F.col("a.id") < F.col("b.id"))
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.col("a.sig").alias("sig_a"),
-            F.col("b.sig").alias("sig_b"),
-        )
-        .distinct()
-    )
+    cand = bucket_pairs(persist(blocked), "blk", cap=max_bucket_df)
     return (
         cand.withColumn("hamming", F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b"))))
         .filter(F.col("hamming") <= max_hamming)
@@ -1357,21 +1322,11 @@ def _embedding_lsh_candidates(
     ).select("id", "v", "table_id", "bucket")
     # the bucket id costs n_planes x num_tables literal dot products per row
     # and feeds the cap count plus both self-join sides — compute it once
-    b = persist(b)
-    if max_bucket_df is not None:
-        b = apply_df_cap(b, ["table_id", "bucket"], max_bucket_df)
-    probed = expand_probes(b, n_planes=n_planes, multiprobe=multiprobe)
-    return (
-        probed.alias("a")
-        .join(b.alias("b"), ["table_id", "bucket"])
-        .filter(F.col("a.id") < F.col("b.id"))
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.col("a.v").alias("v_a"),
-            F.col("b.v").alias("v_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
+    return bucket_pairs(
+        persist(b),
+        ["table_id", "bucket"],
+        cap=max_bucket_df,
+        probe=lambda d: expand_probes(d, n_planes=n_planes, multiprobe=multiprobe),
     )
 
 

@@ -11,17 +11,18 @@ mentions links against a static reference side and appends to the sink;
 """
 
 from .dedup import dedup_batch, incremental_exact_dedup  # noqa: F401
-from .embed_neardup import (  # noqa: F401
-    embed_neardup_batch,
-    incremental_embed_neardup,
-    rebucket_embed_history,
-)
 from .incremental import incremental_link  # noqa: F401
 from .resolve import (  # noqa: F401
     compact_directory,
     incremental_resolve,
     resolve_batch,
 )
-from .neardup import incremental_neardup_dedup, neardup_batch  # noqa: F401
+from .neardup import (  # noqa: F401
+    embed_neardup_batch,
+    incremental_embed_neardup,
+    incremental_neardup_dedup,
+    neardup_batch,
+    rebucket_embed_history,
+)
 from .sessions import sessionize_stream  # noqa: F401
 from .windows import windowed_event_stats  # noqa: F401

@@ -1,61 +1,60 @@
-"""Incremental NEAR-dup dedup for a streaming document feed.
+"""Incremental NEAR-dup dedup for streaming feeds: text and embeddings.
 
-``incremental_exact_dedup`` drops byte-identical re-ingestions; this is its
-fuzzy sibling: a new document is dropped when it is a MinHash-LSH near-dup
-(verified shingle jaccard >= threshold) of ANY document already ingested —
-lightly-edited recrawls, boilerplate variants, re-posts.
+``incremental_exact_dedup`` drops byte-identical re-ingestions; its two
+fuzzy siblings here drop a new row that is a verified near-dup of ANY row
+already kept. Text (``neardup_batch``) uses MinHash-LSH band buckets and
+shingle jaccard — lightly-edited recrawls, boilerplate variants, re-posts.
+Embeddings (``embed_neardup_batch``) use hyperplane-LSH buckets and cosine
+— semantic re-posts. Both run one flow (``_lsh_dedup_batch``) and differ
+only in their bucket keys and the payload they verify.
 
-State on disk, both append-only and narrow:
-  * ``history/buckets``  — (bucket, doc_id): the band-bucket posting lists
-    of every KEPT doc (``bands`` rows per doc). Candidate generation is a
-    bucket equi-join of the micro-batch against this table — never a scan
-    of past text.
-  * ``history/shingles`` — (doc_id, shingles): the shingle sets needed to
-    VERIFY candidates exactly. Only candidates' rows are read (the bucket
-    join's doc_ids semi-join this table), so verification cost scales with
-    candidate volume, not history size.
+State on disk, append-only and narrow:
+  * ``history/buckets`` — bucket posting lists of every KEPT row:
+    ``(bucket, doc_id)`` in catalog table ``history_table_name(out_dir,
+    "buckets")``, or ``(table_id, bucket, vec_id)`` in ``"embuckets"``.
+    Candidates come from a bucket equi-join of the micro-batch against
+    it — never a scan of past text or vectors.
+  * ``history/shingles`` ``(doc_id, shingles)`` or ``history/embeddings``
+    ``(vec_id, embedding)`` — the payload to VERIFY candidates exactly,
+    read id-joined, so verify cost tracks candidate volume.
 
 Per micro-batch N:
-  1. intra-batch: MinHash-LSH pairs within the batch; any doc that is a
-     verified near-dup of a smaller-id batch doc is dropped (pairwise
-     canonical-min rule — chains within ONE micro-batch collapse to the
-     smallest id; cross-batch chains are handled naturally because only
-     kept docs enter history).
-  2. cross-batch: survivors' band buckets join the PRIOR history buckets
-     (``batch_id != N`` — same replay-safety rule as ``dedup.py``: a replay
-     must not anti-join its own previous attempt), verified by exact
-     jaccard against the stored shingle sets.
+  1. intra-batch: one ``bucket_pairs`` self-join; a row that is a verified
+     near-dup of a smaller-id batch row is dropped (chains within ONE
+     micro-batch collapse to the smallest id; cross-batch chains resolve
+     because only kept rows enter history).
+  2. cross-batch: survivors' buckets join the PRIOR history buckets
+     (``batch_id != N`` — a replay must not anti-join its own previous
+     attempt, as in ``dedup.py``), verified against the stored payload.
   3. idempotent overwrite of ``docs/batch_id=N`` and both history slices.
 
-Hot buckets are df-capped exactly like the batch operator — a viral
-boilerplate document otherwise turns one bucket's posting list into a
-quadratic candidate task.
-
-At 100 TB the per-batch cost is dominated by the bucket equi-join against
-an ever-growing history, so ``history/buckets`` is a catalog table
-partitioned by ``batch_id`` AND hash-bucketed on ``bucket``
-(``streaming/history.py``; the checkpointer's ``run_bucketed`` pattern /
-Iceberg bucket partitioning): the history side of the candidate join is an
-Exchange-free bucketed scan — only the micro-batch side shuffles, into
-``num_history_buckets`` partitions — and replay exclusion is ``batch_id``
-partition pruning. The shingle slice stays plain ``batch_id=N`` parquet:
-it is only read id-joined at candidate volume, never scanned.
+Hot buckets are df-capped like the batch operators (a viral document
+otherwise squares one posting list); embedding probes expand the
+micro-batch side only, after the cap. The bucket table is partitioned by
+``batch_id`` AND hash-bucketed on its key (``streaming/history.py``), so
+the history side of the candidate join is an Exchange-free bucketed scan
+and replay exclusion is partition pruning; the payload slice stays plain
+``batch_id=N`` parquet. Hyperplanes are seeded and ``dim`` explicit, so
+every batch hashes into the SAME bucket space.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..cache import persist, scoped_caches
+from ..functions.embedding import cosine_sim_expr
 from ..functions.qgrams import jaccard_qgram_dist_expr
 from ..functions.text import word_shingles_expr
-from ..operators.blocking import apply_df_cap
+from ..operators.ann import expand_probes, lsh_buckets, lsh_occupancy_guard
+from ..operators.blocking import apply_df_cap, bucket_pairs
 from ..operators.corpus import minhash_band_buckets
 from .history import (
     history_table_name,
+    list_batch_ids,
     maybe_compact,
     prior_batch_paths,
     read_prior_history,
@@ -63,6 +62,155 @@ from .history import (
     write_history_bucketed,
 )
 from .incremental import bind_batch, run_stream
+
+
+def _verified(cand, left, right, sim, threshold: float) -> DataFrame:
+    """``cand (id_a, id_b)`` joined to each side's ``(id, p)`` payload,
+    kept where ``sim(p_a, p_b) >= threshold``."""
+    return (
+        cand.join(left.select(F.col("id").alias("id_a"), F.col("p").alias("p_a")), "id_a")
+        .join(right.select(F.col("id").alias("id_b"), F.col("p").alias("p_b")), "id_b")
+        .filter(sim("p_a", "p_b") >= F.lit(float(threshold)))
+    )
+
+
+def _lsh_dedup_batch(
+    batch_df: DataFrame,
+    batch_id: int,
+    out_dir: str,
+    keys: DataFrame,
+    payload: Column,
+    *,
+    cache_payload: bool,
+    id_col: str,
+    history: tuple[str, str, str, str],
+    sim,
+    threshold: float,
+    rows_per_id: int,
+    max_bucket_df: int | None,
+    probe,
+    num_history_buckets: int | None,
+    compact_every: int | None,
+    check_prior=None,
+) -> None:
+    """The flow both near-dup batches share (module docstring, steps 1-3).
+
+    ``keys`` is the persisted ``(id, <key cols>)`` bucket frame of the
+    batch (``rows_per_id`` rows per id); ``payload`` is the expression over
+    the batch's columns that ``sim`` verifies. A derived payload (shingle
+    sets) is costly to recompute, so with ``cache_payload`` it is built
+    once for the whole batch, persisted, and restricted by id; a stored
+    column (vectors) is projected from whichever rows are at hand.
+    ``history`` names the history slices: (bucket table slice, payload
+    dir, history id column, history payload column).
+    ``check_prior(n_keys, prior)`` runs between the intra- and cross-batch
+    steps.
+    """
+    if num_history_buckets is None:  # scale-adaptive default; only the
+        # table-creating first batch actually consumes the resolved value
+        num_history_buckets = recommended_history_buckets(batch_df)
+    spark = batch_df.sparkSession
+    table_slice, plain, hist_id, hist_p = history
+    buckets_dir = os.path.join(out_dir, "history", "buckets")
+    plain_dir = os.path.join(out_dir, "history", plain)
+    hist_tbl = history_table_name(out_dir, table_slice)
+    if compact_every is not None:
+        # before reading history: the cheapest moment (this batch's join
+        # then scans the compacted layout). Watermark = this batch id —
+        # strictly-older batches are committed and can never replay.
+        maybe_compact(
+            spark,
+            watermark=batch_id,
+            every=compact_every,
+            bucketed=(hist_tbl, buckets_dir),
+            plain_paths=(plain_dir,),
+        )
+    key_cols = [c for c in keys.columns if c != "id"]
+
+    def payload_of(rows: DataFrame) -> DataFrame:
+        return rows.select(F.col(id_col).alias("id"), payload.alias("p"))
+
+    batch_p = persist(payload_of(batch_df)) if cache_payload else payload_of(batch_df)
+    # materialize the persist AND take the cap's free no-op guard in one
+    # action: each id emits exactly `rows_per_id` bucket rows, so no
+    # bucket's posting list can exceed n_keys / rows_per_id — for a
+    # normally-sized micro-batch the cap is provably a no-op and its
+    # aggregate + broadcast subtree (sitting on BOTH self-join sides) is
+    # skipped entirely
+    n_keys = keys.count()
+    capped = keys
+    if max_bucket_df is not None and n_keys > max_bucket_df * max(1, rows_per_id):
+        # oversized batch: the cap does real work — persist its output
+        # (scoped_caches releases it at batch end) so the aggregate +
+        # broadcast-semi-join subtree isn't evaluated once per self-join
+        # side per action (the round-5 embed-path lesson)
+        capped = persist(apply_df_cap(keys, key_cols, max_bucket_df))
+    # 1. intra-batch near-dups: drop the larger id of every verified pair
+    # (same semantics as the batch operators)
+    cand_in = bucket_pairs(capped, key_cols, probe=probe)
+    dropped = (
+        _verified(cand_in, batch_p, batch_p, sim, threshold)
+        .select(F.col("id_b").alias(id_col))
+        .distinct()
+    )
+    # persisted: the frame appears three times in fresh's lineage
+    # (anti-join base, history semi-join source, verify side), and without
+    # the persist the intra-batch verify subtree is recomputed at each
+    survivors = persist(batch_df.join(dropped, id_col, "left_anti"))
+    # 2. cross-batch: candidates from the PRIOR bucket history (bucketed
+    # table — history side joins without an Exchange; see history.py),
+    # verified against the stored payload
+    fresh = survivors
+    prior = read_prior_history(spark, hist_tbl, buckets_dir, batch_id)
+    if check_prior is not None:
+        check_prior(n_keys, prior)
+    # the payload slice is written in lockstep with the bucket table, so an
+    # empty prior listing means no PRIOR batch exists (e.g. a replay of the
+    # very first batch) — skip
+    prior_plain = prior_batch_paths(spark, plain_dir, batch_id)
+    if prior is not None and prior_plain:
+        new_b = keys.join(survivors.select(F.col(id_col).alias("id")), "id", "left_semi")
+        if probe is not None:
+            # probes expand the micro-batch side (small side); the history
+            # side stays exact buckets so its bucketed scan stays pruned
+            new_b = probe(new_b)
+        old_b = prior.select(*key_cols, F.col(hist_id).alias("id_b"))
+        if max_bucket_df is not None:
+            old_b = apply_df_cap(old_b, key_cols, max_bucket_df)
+        cand = (
+            new_b.select(F.col("id").alias("id_a"), *key_cols)
+            .join(old_b, key_cols)
+            .select("id_a", "id_b")
+            .distinct()
+        )
+        # the candidates restrict a cached batch payload to survivors
+        new_p = batch_p if cache_payload else payload_of(survivors)
+        old_p = spark.read.parquet(*prior_plain).select(
+            F.col(hist_id).alias("id"), F.col(hist_p).alias("p")
+        )
+        dup_new = (
+            _verified(cand, new_p, old_p, sim, threshold)
+            .select(F.col("id_a").alias(id_col))
+            .distinct()
+        )
+        fresh = survivors.join(dup_new, id_col, "left_anti")
+    fresh = persist(fresh)
+    # 3. idempotent per-batch overwrites: docs + history slices (history =
+    # the KEPT rows' slices of the shared frames — no second hashing pass)
+    fresh.write.mode("overwrite").parquet(os.path.join(out_dir, "docs", f"batch_id={batch_id}"))
+    kept = fresh.select(F.col(id_col).alias("id"))
+    write_history_bucketed(
+        keys.join(kept, "id", "left_semi").select(*key_cols, F.col("id").alias(hist_id)),
+        hist_tbl,
+        buckets_dir,
+        batch_id,
+        bucket_cols=tuple(key_cols),
+        num_buckets=num_history_buckets,
+    )
+    kept_p = batch_p.join(kept, "id", "left_semi") if cache_payload else payload_of(fresh)
+    kept_p.select(F.col("id").alias(hist_id), F.col("p").alias(hist_p)).write.mode(
+        "overwrite"
+    ).parquet(os.path.join(plain_dir, f"batch_id={batch_id}"))
 
 
 @scoped_caches()
@@ -99,139 +247,170 @@ def neardup_batch(
     lifetime); without it a year-long stream accumulates
     O(batches · num_history_buckets) files.
     """
-    if num_history_buckets is None:  # scale-adaptive default; only the
-        # table-creating first batch actually consumes the resolved value
-        num_history_buckets = recommended_history_buckets(batch_df)
-    buckets_dir = os.path.join(out_dir, "history", "buckets")
-    shingles_dir = os.path.join(out_dir, "history", "shingles")
-    docs_dir = os.path.join(out_dir, "docs")
-    spark = batch_df.sparkSession
-    if compact_every is not None:
-        # before reading history: the cheapest moment (this batch's join
-        # then scans the compacted layout). Watermark = this batch id —
-        # strictly-older batches are committed and can never replay.
-        maybe_compact(
-            spark,
-            watermark=batch_id,
-            every=compact_every,
-            bucketed=(history_table_name(out_dir, "buckets"), buckets_dir),
-            plain_paths=(shingles_dir,),
+    # The banded frame (signature aggregation — the expensive
+    # explode+groupBy) is computed ONCE and shared by both candidate joins
+    # and the bucket-history write; the shingle sets are cached once for
+    # both verifies and the shingle-history write (cache_payload).
+    banded = persist(minhash_band_buckets(
+        batch_df, id_col=id_col, text_col=text_col,
+        num_hashes=num_hashes, bands=bands, shingle_k=shingle_k,
+    ))
+    _lsh_dedup_batch(
+        batch_df, batch_id, out_dir, banded, word_shingles_expr(text_col, shingle_k),
+        cache_payload=True,
+        id_col=id_col,
+        history=("buckets", "shingles", "doc_id", "shingles"),
+        sim=lambda a, b: F.lit(1.0) - jaccard_qgram_dist_expr(a, b),
+        threshold=threshold,
+        rows_per_id=bands,
+        max_bucket_df=max_bucket_df,
+        probe=None,
+        num_history_buckets=num_history_buckets,
+        compact_every=compact_every,
+    )
+
+
+@scoped_caches()
+def embed_neardup_batch(
+    batch_df: DataFrame,
+    batch_id: int,
+    out_dir: str,
+    *,
+    dim: int,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    threshold: float = 0.95,
+    n_planes: int = 8,
+    num_tables: int = 4,
+    seed: int = 42,
+    max_bucket_df: int | None = 5000,
+    num_history_buckets: int | None = None,
+    multiprobe: int = 0,
+    compact_every: int | None = None,
+    occupancy_warn_factor: float | None = 4.0,
+) -> None:
+    """Process one micro-batch (public, so replay behaviour is testable).
+
+    Decorated with ``scoped_caches()`` like the text sibling: every frame
+    persisted during the batch is released when the batch ends, so a
+    long-running stream cannot accumulate pinned frames batch over batch.
+
+    ``multiprobe`` mirrors ``embedding_neardup_lsh(multiprobe=)``: > 0
+    additionally probes hamming-1 (or -2) neighbor buckets so moderately
+    similar vectors (cosine ~0.8, where exact-bucket recall sags) are
+    caught. Probes expand the MICRO-BATCH side only — the small side of
+    both joins, and expanding one side is also the correct side count-wise
+    (both sides would double-count hamming distance). Caps apply to exact
+    buckets before expansion, so a probe can never resurrect an over-cap
+    bucket.
+
+    ``compact_every`` folds committed history partitions older than this
+    batch into one snapshot partition once ``compact_every`` of them
+    accumulate — same lifecycle bound as the text sibling (file count,
+    MSCK recovery, and scan metadata stay O(compact_every)).
+
+    ``occupancy_warn_factor``: a stream is pinned to its start-time
+    ``n_planes`` (bucket ids must be stream-constant), so as kept history
+    accumulates into the FIXED ``num_tables * 2**n_planes`` vocabulary,
+    mean occupancy — and with it candidate volume, quadratically — grows
+    (the round-5 measured law behind ``ann.recommended_n_planes``). Each
+    batch therefore checks the vocabulary-bound occupancy of
+    batch + kept history rows and emits a ``RuntimeWarning`` naming the
+    plane count to restart the stream with when it exceeds
+    ``occupancy_warn_factor`` x the 16-rows/bucket target (one cheap row
+    count per batch; ``None`` disables).
+    """
+    new_b = persist(
+        lsh_buckets(
+            batch_df.select(F.col(id_col), F.col(vec_col)),
+            vec_col=vec_col, dim=dim, n_planes=n_planes, num_tables=num_tables, seed=seed,
+        ).select(F.col(id_col).alias("id"), "table_id", "bucket")
+    )
+
+    def check_occupancy(n_new: int, prior: DataFrame | None) -> None:
+        # one cheap row count per batch: warn (with the restart plane
+        # count) when batch + kept history have outgrown the fixed
+        # 2**n_planes bucket vocabulary — see the public docstring
+        if occupancy_warn_factor is None:
+            return
+        lsh_occupancy_guard(
+            n_new + (prior.count() if prior is not None else 0),
+            n_planes=n_planes,
+            num_tables=num_tables,
+            warn_factor=occupancy_warn_factor,
+            context=f"embed near-dup stream batch {batch_id}",
         )
 
-    # The batch's banded frame (signature aggregation — the expensive
-    # explode+groupBy) and its shingle sets are each computed ONCE and
-    # shared by every stage: intra-batch candidates, cross-batch
-    # candidates, both verifies, and both history writes. The previous
-    # layout recomputed the signature shuffle three times per batch (once
-    # inside minhash_lsh_dups, once for survivors, once for the history
-    # write) — a 3x fixed cost per micro-batch that set the streaming
-    # latency floor.
-    banded = persist(
-        minhash_band_buckets(
-            batch_df,
-            id_col=id_col,
-            text_col=text_col,
-            num_hashes=num_hashes,
-            bands=bands,
-            shingle_k=shingle_k,
-        ).select(F.col("id").alias(id_col), "bucket")
+    _lsh_dedup_batch(
+        batch_df, batch_id, out_dir, new_b, F.col(vec_col),
+        cache_payload=False,
+        id_col=id_col,
+        history=("embuckets", "embeddings", "vec_id", "embedding"),
+        sim=cosine_sim_expr,
+        threshold=threshold,
+        rows_per_id=num_tables,
+        max_bucket_df=max_bucket_df,
+        probe=lambda d: expand_probes(d, n_planes=n_planes, multiprobe=multiprobe),
+        num_history_buckets=num_history_buckets,
+        compact_every=compact_every,
+        check_prior=check_occupancy,
     )
-    sh = persist(
-        batch_df.select(F.col(id_col), word_shingles_expr(text_col, shingle_k).alias("shingles"))
+
+
+def rebucket_embed_history(
+    spark,
+    out_dir: str,
+    *,
+    dim: int,
+    n_planes: int,
+    num_tables: int = 4,
+    seed: int = 42,
+    num_history_buckets: int = 64,
+) -> int:
+    """OFFLINE plane-count migration for a stopped embed near-dup stream —
+    the action the occupancy guardrail's warning calls for. A running
+    stream is pinned to its start-time ``n_planes`` (bucket ids must be
+    stream-constant for cross-batch candidates to mean anything), so when
+    kept history outgrows the fixed ``2**n_planes`` vocabulary (the
+    measured round-5 law), the operator: stops the stream, runs this, and
+    restarts with the NEW plane count — keeping every kept vector's dedup
+    history instead of starting blind.
+
+    Mechanics: the embeddings slice (``history/embeddings/batch_id=N``,
+    plain parquet, written in lockstep with the bucket table) is the
+    ground truth; each partition's vectors re-hash through ``lsh_buckets``
+    at the new geometry and idempotently overwrite the SAME ``batch_id``
+    partition of the bucket table (``write_history_bucketed`` dynamic
+    partition overwrite), so replay exclusion, compaction snapshots
+    (negative ids), and the Exchange-free bucketed join all behave exactly
+    as before — only the bucket values change. Re-running after a crash
+    just overwrites the same partitions again. Returns the number of
+    history partitions rebucketed.
+
+    Scale shape: one read + one bucketed write per history partition —
+    O(kept history) total, the unavoidable cost of any re-hash, paid
+    OFFLINE once instead of per-batch forever via a saturated vocabulary.
+    """
+    buckets_dir = os.path.join(out_dir, "history", "buckets")
+    emb_dir = os.path.join(out_dir, "history", "embeddings")
+    hist_tbl = history_table_name(out_dir, "embuckets")
+    lsh_kw = dict(
+        vec_col="embedding", dim=dim, n_planes=n_planes,
+        num_tables=num_tables, seed=seed,
     )
-    # materialize the persist and take the cap's free no-op guard in
-    # one action (embed-sibling symmetry, round 6): each doc emits
-    # exactly `bands` bucket rows, so no bucket's posting list can
-    # exceed n_banded / bands — for a normally-sized micro-batch the
-    # cap is provably a no-op and its aggregate+broadcast subtree
-    # (sitting on BOTH self-join sides) is skipped entirely
-    n_banded = banded.count()
-    # 1. intra-batch near-dups: drop the larger id of every verified
-    # pair (same semantics as the batch minhash_lsh_dups operator)
-    b = banded
-    if max_bucket_df is not None and n_banded > max_bucket_df * max(1, bands):
-        # oversized batch: the cap does real work — persist its output
-        # (scoped_caches releases at batch end) so the aggregate +
-        # broadcast-semi-join subtree isn't evaluated once per
-        # self-join side (the round-5 embed-path lesson)
-        b = persist(apply_df_cap(banded, "bucket", max_bucket_df))
-    cand_in = (
-        b.alias("a")
-        .join(b.alias("b"), "bucket")
-        .filter(F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .select(
-            F.col(f"a.{id_col}").alias("_id_a"), F.col(f"b.{id_col}").alias("_id_b")
+    ids = list_batch_ids(spark, emb_dir)
+    for b in ids:
+        vecs = spark.read.parquet(os.path.join(emb_dir, f"batch_id={b}"))
+        new_b = lsh_buckets(vecs.select("vec_id", "embedding"), **lsh_kw)
+        write_history_bucketed(
+            new_b.select("table_id", "bucket", "vec_id"),
+            hist_tbl,
+            buckets_dir,
+            b,
+            bucket_cols=("table_id", "bucket"),
+            num_buckets=num_history_buckets,
         )
-        .distinct()
-    )
-    sim = F.lit(1.0) - jaccard_qgram_dist_expr("sh_a", "sh_b")
-    dropped = (
-        cand_in.join(
-            sh.select(F.col(id_col).alias("_id_a"), F.col("shingles").alias("sh_a")),
-            "_id_a",
-        )
-        .join(
-            sh.select(F.col(id_col).alias("_id_b"), F.col("shingles").alias("sh_b")),
-            "_id_b",
-        )
-        .filter(sim >= F.lit(float(threshold)))
-        .select(F.col("_id_b").alias(id_col))
-        .distinct()
-    )
-    survivors = persist(batch_df.join(dropped, id_col, "left_anti"))
-    # 2. cross-batch: candidates from the PRIOR bucket history
-    # (bucketed table — history side joins without an Exchange; see
-    # history.py), verified by exact jaccard vs stored shingle sets
-    fresh = survivors
-    hist_tbl = history_table_name(out_dir, "buckets")
-    prior = read_prior_history(spark, hist_tbl, buckets_dir, batch_id)
-    # the shingle slice is written in lockstep with the bucket
-    # table, so an empty prior-shingle listing means no PRIOR batch
-    # exists (e.g. a replay of the very first batch) — skip
-    prior_shingles = prior_batch_paths(spark, shingles_dir, batch_id)
-    if prior is not None and prior_shingles:
-        new_b = banded.join(survivors.select(id_col), id_col, "left_semi")
-        old_b = prior.select("bucket", F.col("doc_id").alias("_old_id"))
-        if max_bucket_df is not None:
-            old_b = apply_df_cap(old_b, "bucket", max_bucket_df)
-        cand = (
-            new_b.join(old_b, "bucket")
-            .select(F.col(id_col).alias("_new_id"), "_old_id")
-            .distinct()
-        )
-        new_sh = sh.select(
-            F.col(id_col).alias("_new_id"), F.col("shingles").alias("sh_a")
-        )
-        old_sh = spark.read.parquet(*prior_shingles).select(
-            F.col("doc_id").alias("_old_id"), F.col("shingles").alias("sh_b")
-        )
-        dup_new = (
-            cand.join(new_sh, "_new_id")
-            .join(old_sh, "_old_id")
-            .withColumn("_sim", sim)
-            .filter(F.col("_sim") >= F.lit(float(threshold)))
-            .select(F.col("_new_id").alias(id_col))
-            .distinct()
-        )
-        fresh = survivors.join(dup_new, id_col, "left_anti")
-    fresh = persist(fresh)
-    # 3. idempotent per-batch overwrites: docs + history slices
-    # (history = the KEPT docs' slices of the shared frames)
-    fresh.write.mode("overwrite").parquet(f"{docs_dir}/batch_id={batch_id}")
-    fresh_ids = fresh.select(id_col)
-    write_history_bucketed(
-        banded.join(fresh_ids, id_col, "left_semi").select(
-            "bucket", F.col(id_col).alias("doc_id")
-        ),
-        hist_tbl,
-        buckets_dir,
-        batch_id,
-        bucket_cols=("bucket",),
-        num_buckets=num_history_buckets,
-    )
-    sh.join(fresh_ids, id_col, "left_semi").select(
-        F.col(id_col).alias("doc_id"), "shingles"
-    ).write.mode("overwrite").parquet(f"{shingles_dir}/batch_id={batch_id}")
+    return len(ids)
 
 
 def incremental_neardup_dedup(
@@ -249,3 +428,21 @@ def incremental_neardup_dedup(
     ``bands``, ``compact_every``, ...), applied to every micro-batch."""
     batch = bind_batch(neardup_batch, out_dir, batch_kw)
     return run_stream(docs_stream, batch, checkpoint_path, available_now=available_now)
+
+
+def incremental_embed_neardup(
+    vec_stream: DataFrame,
+    out_dir: str,
+    checkpoint_path: str,
+    *,
+    available_now: bool = False,
+    **batch_kw,
+):
+    """Start a streaming query keeping only vectors that are not cosine
+    near-dups of anything previously kept. Kept rows land in
+    ``out_dir/docs/batch_id=N``; LSH state under ``out_dir/history``.
+    ``batch_kw`` are ``embed_neardup_batch``'s keywords (``dim`` is
+    required; ``threshold``, ``n_planes``, ``multiprobe``, ...), applied
+    to every micro-batch."""
+    batch = bind_batch(embed_neardup_batch, out_dir, batch_kw)
+    return run_stream(vec_stream, batch, checkpoint_path, available_now=available_now)

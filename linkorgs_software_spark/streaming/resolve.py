@@ -10,8 +10,8 @@ bridge (its directory ships precomputed, ``LinkOrgs/R/LinkOrgs_LinkOrgs.R:
 460-477``); here the directory is BUILT online, which is how a production
 mention stream actually bootstraps one.
 
-State on disk, same layout discipline as the dedup streams
-(``neardup.py`` / ``embed_neardup.py``):
+State on disk, same layout discipline as the near-dup streams
+(``neardup.py``):
 
   * ``history/grams``    — (gram, alias_id): trigram posting lists of every
     directory alias, a catalog table partitioned by ``batch_id`` and

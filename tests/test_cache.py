@@ -1,6 +1,7 @@
 """The persist/release lifecycle: ``cache.py`` owns every persist and
 release in the package, and its scopes decide when a frame is released.
-A second grep guard pins ``run_stream`` as the package's one stream starter."""
+Two more grep guards pin ``run_stream`` as the package's one stream starter
+and ``blocking.bucket_pairs`` as its one bucket self-join."""
 
 import ast
 import pathlib
@@ -48,6 +49,35 @@ def test_run_stream_is_the_only_stream_starter():
         and not (path.relative_to(PKG) == starter and n in inside)
     ]
     assert not hits, "\n".join(hits)
+
+
+_SELF_JOIN = re.compile(r'\.alias\("a"\)\s*\.join\(')
+
+
+def _enclosing_function(source: str, lineno: int) -> str | None:
+    fns = [
+        n for n in ast.walk(ast.parse(source))
+        if isinstance(n, ast.FunctionDef) and n.lineno <= lineno <= n.end_lineno
+    ]
+    return min(fns, key=lambda n: n.end_lineno - n.lineno).name if fns else None
+
+
+def test_bucket_pairs_is_the_only_bucket_self_join():
+    """Every near-dup candidate self-join goes through
+    ``blocking.bucket_pairs`` (cap, join on the key, ``id_a < id_b``, one
+    row per pair). The one exception is ``corpus.source_overlap``, which
+    counts shared keys per source pair instead of emitting id pairs."""
+    allowed = {
+        (pathlib.Path("operators", "blocking.py"), "bucket_pairs"),
+        (pathlib.Path("operators", "corpus.py"), "source_overlap"),
+    }
+    found = set()
+    for path in sorted(PKG.rglob("*.py")):
+        source = path.read_text()
+        for m in _SELF_JOIN.finditer(source):
+            lineno = source.count("\n", 0, m.start()) + 1
+            found.add((path.relative_to(PKG), _enclosing_function(source, lineno)))
+    assert found == allowed, sorted(found ^ allowed)
 
 
 def test_scopes_release_their_own_frames(spark, stored_rdds):

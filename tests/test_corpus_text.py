@@ -12,13 +12,21 @@ from linkorgs_software_spark.functions.text import (
     token_count_expr,
     word_shingles_expr,
 )
-from linkorgs_software_spark.operators.ann import brute_force_topk, ivf_topk, lsh_topk
+from linkorgs_software_spark.operators.ann import (
+    brute_force_topk,
+    expand_probes,
+    ivf_topk,
+    lsh_topk,
+    probe_buckets_expr,
+)
 from linkorgs_software_spark.operators.corpus import (
     clean_corpus,
     clean_corpus_verdicts,
+    containment_pairs,
     embedding_neardup,
     embedding_neardup_lsh,
     exact_dup_groups,
+    minhash_band_buckets,
     minhash_lsh_dups,
     ngram_jaccard_dups,
     simhash_dups,
@@ -201,10 +209,19 @@ def test_deterministic_split_disjoint_exhaustive(spark, docs):
     assert a == b
 
 
-def test_minhash_lsh_hot_bucket_capped(spark, docs):
-    """A flood of identical docs (one degenerate band bucket) must not square:
-    with the cap the flood's bucket is dropped, while a disjoint near-dup
-    pair in an ordinary bucket is still found."""
+_CAPPED_TEXT_FAMILIES = {
+    "minhash": lambda c: minhash_lsh_dups(c, threshold=0.99, max_bucket_df=100),
+    "simhash": lambda c: simhash_dups(c, max_hamming=0, max_bucket_df=100),
+    "ngram": lambda c: ngram_jaccard_dups(c, threshold=0.99, max_block_df=100),
+    "containment": lambda c: containment_pairs(c, threshold=0.99, max_block_df=100),
+}
+
+
+@pytest.mark.parametrize("family", sorted(_CAPPED_TEXT_FAMILIES))
+def test_text_neardup_hot_bucket_capped(spark, docs, family):
+    """A flood of identical docs (one degenerate bucket per key) must not
+    square: with the cap the flood's keys are dropped, while a disjoint
+    near-dup pair in ordinary buckets is still found."""
     one = docs.limit(1)
     flood = one.crossJoin(spark.range(1000).select(F.col("id").alias("_i"))).select(
         (F.col("_i") + 500000).alias("doc_id"), "text"
@@ -213,26 +230,48 @@ def test_minhash_lsh_hot_bucket_capped(spark, docs):
         docs.filter("doc_id = 1").withColumn("doc_id", F.col("doc_id") + 100000)
     )
     corpus = flood.unionAll(pair.select("doc_id", "text"))
-    out = minhash_lsh_dups(corpus, threshold=0.99, max_bucket_df=100)
-    pairs = {(r.id_a, r.id_b) for r in out.collect()}
+    out = _CAPPED_TEXT_FAMILIES[family](corpus)
+    # containment reports (contained_id, container_id); the rest id_a < id_b
+    pairs = {tuple(sorted(r[:2])) for r in out.collect()}
     assert (1, 100001) in pairs
-    # nothing from the flood: its bucket exceeded the cap
+    # nothing from the flood: its buckets exceeded the cap
     assert all(not (a >= 500000 and b >= 500000) for a, b in pairs)
 
 
-def test_simhash_hot_bucket_capped(spark, docs):
-    one = docs.limit(1)
-    flood = one.crossJoin(spark.range(1000).select(F.col("id").alias("_i"))).select(
-        (F.col("_i") + 500000).alias("doc_id"), "text"
-    )
-    pair = docs.filter("doc_id = 1").unionAll(
-        docs.filter("doc_id = 1").withColumn("doc_id", F.col("doc_id") + 100000)
-    )
-    corpus = flood.unionAll(pair.select("doc_id", "text"))
-    out = simhash_dups(corpus, max_hamming=0, max_bucket_df=100)
-    pairs = {(r.id_a, r.id_b) for r in out.collect()}
-    assert (1, 100001) in pairs
-    assert all(not (a >= 500000 and b >= 500000) for a, b in pairs)
+@pytest.mark.parametrize(
+    "call",
+    [
+        lambda d: minhash_band_buckets(d, num_hashes=4, bands=8),
+        lambda d: minhash_lsh_dups(d, num_hashes=4, bands=8),
+        lambda d: minhash_band_buckets(d, num_hashes=16, bands=5),
+        lambda d: minhash_band_buckets(d, num_hashes=16, bands=0),
+        lambda d: simhash_expr("text", bits=0),
+        lambda d: simhash_expr("text", bits=65),
+        lambda d: simhash_dups(d, max_hamming=4, blocks=4),
+        lambda d: simhash_dups(d, bits=16, blocks=17),
+        lambda d: probe_buckets_expr("bucket", n_planes=8, multiprobe=3),
+        lambda d: expand_probes(d, n_planes=8, multiprobe=-1),
+    ],
+    ids=[
+        "bands_over_hashes",
+        "lsh_dups_bands_over_hashes",
+        "bands_not_dividing",
+        "zero_bands",
+        "simhash_zero_bits",
+        "simhash_65_bits",
+        "simhash_blocks_not_over_hamming",
+        "simhash_blocks_over_bits",
+        "multiprobe_3",
+        "multiprobe_negative",
+    ],
+)
+def test_lsh_parameter_checks_raise_value_error(docs, call):
+    """Input checks are ``ValueError``s, which ``python -O`` keeps: banding
+    with fewer than one row per band, or SimHash blocks of zero bits, would
+    give every doc the same keys, and ``blocks <= max_hamming`` loses the
+    pigeonhole recall guarantee."""
+    with pytest.raises(ValueError):
+        call(docs)
 
 
 def test_simhash_wide_signature_survives_cap_in_large_distinct_corpus(spark):

@@ -1050,6 +1050,49 @@ def test_batch_releases_its_caches(spark, stored_rdds, tmp_path, batch_fn):
     assert release_caches() == 0
 
 
+# Most Spark jobs per call seen on ``_release_batches``' inputs before the
+# two near-dup batches shared one flow (six runs on local[4]): (first batch,
+# second batch, which adds the cross-batch path).
+_NEARDUP_BATCH_JOBS = {"neardup_batch": (17, 38), "embed_neardup_batch": (13, 32)}
+# (table slice, its columns, plain slice, its columns) a resuming stream reads
+_NEARDUP_HISTORY = {
+    "neardup_batch": ("buckets", ["bucket", "doc_id"], "shingles", ["doc_id", "shingles"]),
+    "embed_neardup_batch": (
+        "embuckets", ["table_id", "bucket", "vec_id"], "embeddings", ["vec_id", "embedding"],
+    ),
+}
+
+
+@pytest.mark.parametrize("batch_fn", ["neardup_batch", "embed_neardup_batch"])
+def test_neardup_batch_jobs_and_history_layout(spark, tmp_path, batch_fn):
+    """A near-dup batch runs no more Spark jobs than the measured count, and
+    its history keeps the table name and column names a running stream
+    resumes from."""
+    from linkorgs_software_spark import streaming
+    from linkorgs_software_spark.streaming.history import history_table_name
+
+    run = getattr(streaming, batch_fn)
+    b0, b1, kw = _release_batches(spark, batch_fn)
+    out = str(tmp_path / batch_fn)
+    sc = spark.sparkContext
+    jobs = []
+    for batch_id, df in enumerate((b0, b1)):
+        group = f"neardup-jobs-{batch_fn}-{batch_id}"
+        sc.setJobGroup(group, batch_fn)
+        try:
+            run(df, batch_id, out, **kw)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
+    assert all(0 < n <= cap for n, cap in zip(jobs, _NEARDUP_BATCH_JOBS[batch_fn])), jobs
+    table, table_cols, plain, plain_cols = _NEARDUP_HISTORY[batch_fn]
+    hist = spark.table(history_table_name(out, table))
+    assert [c for c in hist.columns if c != "batch_id"] == table_cols
+    plain_df = spark.read.parquet(os.path.join(out, "history", plain))
+    assert [c for c in plain_df.columns if c != "batch_id"] == plain_cols
+
+
 def test_compact_directory_merges_split_entities(spark, tmp_path):
     """The offline merge pass: two entities minted in separate batches at
     a strict threshold fold into one via ``compact_directory`` at a

@@ -27,9 +27,11 @@ DEFAULT_QUERIES = [
     "merge_entities",
     "stop_grams",
     "minhash_lsh_pairs",
+    "simhash_pairs",
     "ngram_dup_pairs",
     "containment_pairs",
     "embedding_neardup_lsh",
+    "embedding_neardup_multiprobe",
 ]
 
 
