@@ -12,7 +12,7 @@ array set ops) — no UDF, stays in whole-stage codegen.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
@@ -125,36 +125,3 @@ def jaccard_dist_from_sizes_expr(
     inter = F.size(F.array_intersect(a, b)).cast("double")
     union = na + nb - inter
     return F.when(union == 0, F.lit(0.0)).otherwise(F.lit(1.0) - inter / union)
-
-
-def explode_qgrams(
-    df: DataFrame,
-    name_col: str,
-    id_col: str,
-    q: int,
-    *,
-    prefix_cap: int | None = 100,
-    out_col: str = "gram",
-) -> DataFrame:
-    """Long-format inverted index ``(id, gram)`` — distinct per row.
-
-    The reference materializes this as the ``trigram_index`` table
-    (``BuildHelpers.R:190-205``: full q-gram windows at starts
-    1..min(len−q+1, 100) plus only the position-1 short window for
-    strings shorter than q); here it is an ``explode`` over a native array
-    expression (no UDTF). The output is distinct per (id, gram) — which is
-    what blocking's *shared distinct grams* count requires — WITHOUT a
-    dedup aggregation: ``qgram_set_expr`` is ``array_distinct`` per row, so
-    each input row's exploded grams are already unique, and callers feed
-    one row per id (``blocking.gram_index`` dedups ids first). A
-    ``dropDuplicates([id, gram])`` here would be a no-op that still costs
-    a full hash aggregation over the exploded index on every build.
-    """
-    return df.select(
-        F.col(id_col),
-        F.explode(
-            qgram_set_expr(
-                name_col, q, prefix_cap=prefix_cap, full_only=False, tails=False
-            )
-        ).alias(out_col),
-    )

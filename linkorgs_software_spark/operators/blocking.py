@@ -28,26 +28,43 @@ from __future__ import annotations
 
 from typing import Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..config import LinkConfig
 from ..functions.normalize import NORM_COL
-from ..functions.qgrams import explode_qgrams
+from ..functions.qgrams import qgram_set_expr
 
 SHARED_COL = "shared_grams"
+
+
+def gram_set_expr(name_col: str, cfg: LinkConfig) -> Column:
+    """One name's distinct blocking grams (the reference index,
+    ``BuildHelpers.R:190-205``). ``gram_index`` explodes it and
+    ``scoring.explain_pairs`` intersects it, so a pair is explained with
+    the grams it is blocked with."""
+    q, cap = cfg.block_ngram, cfg.name_prefix_cap
+    return qgram_set_expr(name_col, q, prefix_cap=cap, full_only=False, tails=False)
 
 
 def gram_index(df: DataFrame, id_col: str, cfg: LinkConfig) -> DataFrame:
     """Distinct ``(id, gram)`` inverted index for one side.
 
-    The per-id dedup also guarantees ``explode_qgrams``' one-row-per-id
-    precondition (its output is distinct per (id, gram) without any dedup
-    aggregation of its own — see functions/qgrams.py)."""
+    Distinct per (id, gram) without a dedup aggregation of its own: the
+    gram set is ``array_distinct`` per row and the ids are deduplicated
+    first, so each id explodes exactly once. A ``dropDuplicates([id,
+    gram])`` here would be a no-op that still costs a full hash
+    aggregation over the exploded index on every build."""
     uniq = df.select(id_col, NORM_COL).dropDuplicates([id_col])
-    return explode_qgrams(
-        uniq, NORM_COL, id_col, cfg.block_ngram, prefix_cap=cfg.name_prefix_cap
+    return uniq.select(
+        F.col(id_col), F.explode(gram_set_expr(NORM_COL, cfg)).alias("gram")
     )
+
+
+def shared_gram_rule(shared: str, n_grams: str, cfg: LinkConfig) -> Column:
+    """The reference's candidate rule: at least ``ceil(min_shared_frac ·
+    n_grams)`` shared grams, ``n_grams`` counted before any df cap."""
+    return F.col(shared) >= F.ceil(F.lit(float(cfg.min_shared_frac)) * F.col(n_grams))
 
 
 def apply_df_cap(
@@ -191,38 +208,36 @@ def induced_stop_grams(
     )
 
 
-def candidate_pairs(
-    x_prep: DataFrame,
-    y_prep: DataFrame,
+def shared_gram_pairs(
+    x_tri: DataFrame,
+    y_tri: DataFrame,
     cfg: LinkConfig,
     *,
-    x_id: str = "x_id",
-    y_id: str = "y_id",
+    x_id: str,
+    y_id: str,
     x_count: int | None = None,
     y_count: int | None = None,
 ) -> DataFrame:
-    """Blocked candidate pairs ``(x_id, y_id, shared_grams, n_grams_x)``.
-
-    ``x_prep`` / ``y_prep`` carry ``name_norm`` + the hash id (see
-    functions/normalize.prepare_side).
+    """The blocking rule over two prebuilt ``gram_index`` frames, and the
+    engine's one way from gram indexes to name-pair candidates
+    (``candidate_pairs``; the streaming resolver's match and create steps,
+    which reuse one persisted index). In order: the denominator
+    ``n_grams_x`` = |distinct grams(x)|, taken BEFORE any cap so the
+    >= ceil(frac · n) contract stays monotone under capping; the df cap
+    (``apply_df_cap``) per side; salting when ``cfg.salt_buckets > 1``;
+    the gram equi-join, shared count per (x, y) and ``shared_gram_rule``.
 
     ``x_count`` / ``y_count``: an already-known upper bound on the distinct
-    values of that side's id column (the one fed to ``gram_index``); never
-    add an action just to learn it. A calibration's distinct-NAME counts
-    qualify only for ``prepare_side`` ids (content hashes of the name); ids
-    supplied from outside can outnumber names. A gram's posting list in
-    the (per-id-distinct) index is bounded by the side's distinct-id count,
-    so ``count <= max_block_df`` proves the df-cap a no-op and its
-    aggregate + broadcast + anti-join subtree is pruned outright — the same
-    guard ``streaming.resolve`` applies to its batch side (round-7 measure:
-    the cap subtrees were ~40% of candidate-generation wall on sides far
-    under the cap). ``None`` (unknown) keeps the cap unconditionally.
-    """
-    x_tri = gram_index(x_prep, x_id, cfg)
-    y_tri = gram_index(y_prep, y_id, cfg)
+    ids of that side's index. A gram's posting list is bounded by it, so
+    ``count <= max_block_df`` proves the cap a no-op and its aggregate +
+    broadcast + anti-join subtree is pruned outright (round-7 measure: the
+    cap subtrees were ~40% of candidate-generation wall on sides far under
+    the cap). ``None`` (unknown) keeps the cap unconditionally.
 
-    # Denominator BEFORE any cap: |distinct grams(x)| — keeps the reference's
-    # >= ceil(frac * n) contract monotone under capping.
+    Returns ``(x_id, y_id, shared_grams, n_grams_x)``. A self-join passes
+    one index under two id names and filters ``x_id < y_id`` afterwards;
+    Catalyst pushes that filter into the gram join.
+    """
     x_ntri = x_tri.groupBy(x_id).agg(F.count(F.lit(1)).alias("n_grams_x"))
 
     if cfg.max_block_df is not None:
@@ -244,13 +259,41 @@ def candidate_pairs(
         .groupBy(x_id, y_id)
         .agg(F.count(F.lit(1)).alias(SHARED_COL))
     )
+    return shared.join(x_ntri, x_id).filter(
+        shared_gram_rule(SHARED_COL, "n_grams_x", cfg)
+    )
 
-    return (
-        shared.join(x_ntri, x_id)
-        .filter(
-            F.col(SHARED_COL)
-            >= F.ceil(F.lit(float(cfg.min_shared_frac)) * F.col("n_grams_x"))
-        )
+
+def candidate_pairs(
+    x_prep: DataFrame,
+    y_prep: DataFrame,
+    cfg: LinkConfig,
+    *,
+    x_id: str = "x_id",
+    y_id: str = "y_id",
+    x_count: int | None = None,
+    y_count: int | None = None,
+) -> DataFrame:
+    """Blocked candidate pairs ``(x_id, y_id, shared_grams, n_grams_x)``:
+    one ``gram_index`` per side, then ``shared_gram_pairs``.
+
+    ``x_prep`` / ``y_prep`` carry ``name_norm`` + the hash id (see
+    functions/normalize.prepare_side).
+
+    ``x_count`` / ``y_count`` bound the distinct values of that side's id
+    column (see ``shared_gram_pairs``); never add an action just to learn
+    one. A calibration's distinct-NAME counts qualify only for
+    ``prepare_side`` ids (content hashes of the name); ids supplied from
+    outside can outnumber names.
+    """
+    return shared_gram_pairs(
+        gram_index(x_prep, x_id, cfg),
+        gram_index(y_prep, y_id, cfg),
+        cfg,
+        x_id=x_id,
+        y_id=y_id,
+        x_count=x_count,
+        y_count=y_count,
     )
 
 

@@ -26,54 +26,68 @@ from ..functions.qgrams import (
     qgram_set_expr,
 )
 from ..functions.scorers import distance_expr
+from .blocking import SHARED_COL, gram_set_expr, shared_gram_rule
 
 DIST_COL = "stringdist"
 
 
-def score_pairs(
+def name_sets(names: DataFrame, cfg: LinkConfig) -> DataFrame:
+    """The per-name scoring frame: ``names`` (any id columns plus
+    ``name_norm``) with, for jaccard, each row's q-gram set ``_g`` and
+    its size ``_n``. Built once per distinct name (n rows) instead of per
+    candidate pair (can be 1000x more rows), so the per-pair work drops to
+    ONE array_intersect — the union size is |A|+|B|−|A∩B| from the
+    joined-in sizes. For q <= 3 the sets are PACKED bigint arrays
+    (injective code-point pack, identical cardinalities/intersections):
+    long hashing makes the per-pair intersect ~4.5x cheaper than
+    UTF8String hashing. Other measures score the name strings directly,
+    so their frame comes back unchanged."""
+    if cfg.distance_measure != "jaccard":
+        return names
+    set_expr = packed_qgram_set_expr if cfg.qgram <= 3 else qgram_set_expr
+    return names.withColumn("_g", set_expr(NORM_COL, cfg.qgram)).withColumn(
+        "_n", F.size("_g")
+    )
+
+
+def score_name_pairs(
     pairs: DataFrame,
-    x_prep: DataFrame,
-    y_prep: DataFrame,
+    x_names: DataFrame,
+    y_names: DataFrame,
     cfg: LinkConfig,
     *,
     x_id: str = "x_id",
     y_id: str = "y_id",
     max_dist: float | None = None,
 ) -> DataFrame:
-    """Attach normalized names, score, and (optionally) threshold-filter.
+    """Score id pairs against two per-name frames (``name_sets`` output) —
+    the engine's one name-pair scorer: ``score_pairs`` and both steps of
+    the streaming resolver call it.
 
-    Returns ``(x_id, y_id, name_norm_x, name_norm_y, stringdist)``.
+    ``x_names`` is keyed by ``x_id`` and ``y_names`` by ``y_id``. Each of
+    their other columns comes out once per side, suffixed ``_x`` / ``_y``
+    (``name_norm`` → ``name_norm_x``; the set columns ``_g`` / ``_n`` →
+    ``_gx`` / ``_nx``, dropped after scoring), beside ``stringdist``:
+    ``cfg.distance_measure`` over the two names. A frame is joined as
+    given, so a key repeated in it (an alias listed under two entities)
+    repeats its pairs.
     """
-    xn = x_prep.select(F.col(x_id), F.col(NORM_COL).alias("name_norm_x")).dropDuplicates([x_id])
-    yn = y_prep.select(F.col(y_id), F.col(NORM_COL).alias("name_norm_y")).dropDuplicates([y_id])
+
+    def side(names: DataFrame, id_col: str, sfx: str) -> DataFrame:
+        # "name_norm" -> "name_norm_x", "_g" -> "_gx"; the id keeps its name
+        cols = [(c, f"{c}{sfx}" if c.startswith("_") else f"{c}_{sfx}") for c in names.columns]
+        return names.select(*[F.col(c).alias(c if c == id_col else t) for c, t in cols])
 
     if cfg.distance_measure == "jaccard":
-        # Precompute each side's q-gram set AND its size ONCE per distinct
-        # name (n rows) instead of per candidate pair (can be 1000x more
-        # rows): the per-pair work drops to ONE array_intersect — the union
-        # size is |A|+|B|−|A∩B| from the joined-in per-side sizes. For
-        # q <= 3 the sets are PACKED bigint arrays (injective code-point
-        # pack, identical cardinalities/intersections): long hashing makes
-        # the per-pair intersect ~4.5x cheaper than UTF8String hashing.
-        set_expr = (
-            packed_qgram_set_expr if cfg.qgram <= 3 else qgram_set_expr
-        )
-        xn = xn.withColumn("_gx", set_expr("name_norm_x", cfg.qgram)).withColumn(
-            "_nx", F.size("_gx")
-        )
-        yn = yn.withColumn("_gy", set_expr("name_norm_y", cfg.qgram)).withColumn(
-            "_ny", F.size("_gy")
-        )
         dist = jaccard_dist_from_sizes_expr("_gx", "_gy", "_nx", "_ny")
     else:
         dist = distance_expr(
             cfg.distance_measure, "name_norm_x", "name_norm_y", qgram=cfg.qgram
         )
-
     scored = (
         pairs.select(x_id, y_id)
-        .join(xn, x_id)
-        .join(yn, y_id)
+        .join(side(x_names, x_id, "x"), x_id)
+        .join(side(y_names, y_id, "y"), y_id)
         .withColumn(DIST_COL, dist)
         .drop("_gx", "_gy", "_nx", "_ny")
     )
@@ -90,6 +104,29 @@ def score_pairs(
     return scored
 
 
+def score_pairs(
+    pairs: DataFrame,
+    x_prep: DataFrame,
+    y_prep: DataFrame,
+    cfg: LinkConfig,
+    *,
+    x_id: str = "x_id",
+    y_id: str = "y_id",
+    max_dist: float | None = None,
+) -> DataFrame:
+    """Attach normalized names, score, and (optionally) threshold-filter:
+    ``score_name_pairs`` over one ``name_sets`` frame per side, each built
+    from that side's distinct ids.
+
+    Returns ``(x_id, y_id, name_norm_x, name_norm_y, stringdist)``.
+    """
+    xn = name_sets(x_prep.select(x_id, NORM_COL).dropDuplicates([x_id]), cfg)
+    yn = name_sets(y_prep.select(y_id, NORM_COL).dropDuplicates([y_id]), cfg)
+    return score_name_pairs(
+        pairs, xn, yn, cfg, x_id=x_id, y_id=y_id, max_dist=max_dist
+    )
+
+
 def explain_pairs(
     pairs: DataFrame,
     cfg: LinkConfig,
@@ -99,42 +136,32 @@ def explain_pairs(
     measures: tuple = ("jaccard", "levenshtein", "jw", "osa"),
 ) -> DataFrame:
     """Match EXPLAINABILITY surface: for each raw name pair, the
-    normalized forms, the blocking evidence (shared / total trigram
-    counts and whether the pair would survive the >= ceil(5%) blocking
-    rule), and the full panel of distances — what an ER practitioner
-    reads to understand why a pair did (or did not) match, and to pick
-    thresholds. A debugging/triage tool, not a pipeline stage: run it on
-    a HANDFUL of pairs (it scores every requested measure per row).
+    normalized forms, the blocking evidence (shared / total blocking-gram
+    counts and whether the pair passes the blocking rule, both from
+    ``blocking.gram_set_expr`` and ``blocking.shared_gram_rule`` — the
+    df cap aside, what ``candidate_pairs`` decides), and the full panel
+    of distances — what an ER practitioner reads to understand why a pair
+    did (or did not) match, and to pick thresholds. A debugging/triage
+    tool, not a pipeline stage: run it on a HANDFUL of pairs (it scores
+    every requested measure per row).
     """
     from ..functions.normalize import normalize_expr
-    from ..functions.qgrams import qgram_array_expr
 
-    nx = normalize_expr(
-        name_x,
-        to_lower=cfg.to_lower,
-        norm_space=cfg.norm_space,
-        remove_punct=cfg.remove_punct,
-    )
-    ny = normalize_expr(
-        name_y,
-        to_lower=cfg.to_lower,
-        norm_space=cfg.norm_space,
-        remove_punct=cfg.remove_punct,
-    )
-    d = pairs.withColumn("name_norm_x", nx).withColumn("name_norm_y", ny)
-    gx = F.array_distinct(qgram_array_expr("name_norm_x", 3, tails=False))
-    gy = F.array_distinct(qgram_array_expr("name_norm_y", 3, tails=False))
-    d = (
-        d.withColumn("_gx", gx)
-        .withColumn("_gy", gy)
-        .withColumn("n_grams_x", F.size("_gx"))
-        .withColumn("n_grams_y", F.size("_gy"))
-        .withColumn("shared_grams", F.size(F.array_intersect("_gx", "_gy")))
-        .withColumn(
-            "would_block",
-            F.col("shared_grams")
-            >= F.ceil(F.lit(float(cfg.min_shared_frac)) * F.col("n_grams_x")),
+    d = pairs
+    for sfx, raw in (("x", name_x), ("y", name_y)):
+        norm = normalize_expr(
+            raw,
+            to_lower=cfg.to_lower,
+            norm_space=cfg.norm_space,
+            remove_punct=cfg.remove_punct,
         )
+        d = d.withColumn(f"name_norm_{sfx}", norm)
+        d = d.withColumn(f"_g{sfx}", gram_set_expr(f"name_norm_{sfx}", cfg))
+    d = (
+        d.withColumn("n_grams_x", F.size("_gx"))
+        .withColumn("n_grams_y", F.size("_gy"))
+        .withColumn(SHARED_COL, F.size(F.array_intersect("_gx", "_gy")))
+        .withColumn("would_block", shared_gram_rule(SHARED_COL, "n_grams_x", cfg))
     )
     for m in measures:
         d = d.withColumn(

@@ -28,19 +28,24 @@ Per micro-batch N:
   1. normalize mention names (``prepare_side`` — reference normalization);
      work at DISTINCT-name granularity (node id = ``xxhash64(name_norm)``,
      the same content-keyed id rule as ``record_id_expr``).
-  2. MATCH: batch trigrams equi-join the PRIOR gram history
-     (``batch_id != N`` — replay must not see its own failed attempt),
-     df-capped on BOTH sides; the reference's >= ceil(min_shared_frac ·
-     |trigrams(name)|) rule gates candidates; candidates verify by
-     ``cfg.distance_measure`` against the alias strings (id-join into the
-     entities slice); best match per name = min (distance, entity_id).
-  3. CREATE: names with no acceptable match pair among THEMSELVES (a
-     self-join straight off the batch's persisted gram index, verified by
-     ``cfg.distance_measure`` at ``create_max_dist``) and resolve
-     transitively via ``connected_components`` — a batch introducing
-     "acme corp" and "acme corp." mints ONE entity. The entity id is the
-     component minimum of the member name hashes: content-derived, so a
-     replayed batch mints byte-identical ids.
+  2. MATCH: ``blocking.shared_gram_pairs`` over the batch's persisted
+     gram index and the PRIOR gram history (``batch_id != N`` — replay
+     must not see its own failed attempt): the reference's >=
+     ceil(min_shared_frac · |trigrams(name)|) rule, the history side
+     always df-capped, the batch side only when its distinct-name count
+     could exceed the cap. Candidates verify through
+     ``scoring.score_name_pairs`` against the alias rows of the entities
+     slices (``cfg.distance_measure``, the batch's q-gram sets built once
+     in ``scoring.name_sets``); best match per name = min (distance,
+     entity_id).
+  3. CREATE: names with no acceptable match pair among THEMSELVES (the
+     same blocking core over the unmatched slice of the batch gram index
+     on both sides, ``x_id < y_id``, scored by the same scorer at
+     ``create_max_dist``) and resolve transitively via
+     ``connected_components`` — a batch introducing "acme corp" and
+     "acme corp." mints ONE entity. The entity id is the component
+     minimum of the member name hashes: content-derived, so a replayed
+     batch mints byte-identical ids.
   4. append the directory delta: every new entity's aliases, plus each
      MATCHED name whose exact normalized form was new to the directory
      (distance > 0 — an exact-form alias would have matched at 0). Both
@@ -71,9 +76,9 @@ from pyspark.sql import functions as F
 from ..cache import persist, scoped_caches
 from ..config import DEFAULT, LinkConfig
 from ..functions.normalize import NORM_COL, prepare_side
-from ..functions.scorers import distance_expr
-from ..operators.blocking import apply_df_cap, gram_index
+from ..operators.blocking import gram_index, shared_gram_pairs
 from ..operators.cluster import connected_components
+from ..operators.scoring import DIST_COL, name_sets, score_name_pairs
 from .history import (
     compact_plain_history,
     history_table_name,
@@ -135,194 +140,80 @@ def resolve_batch(
     # distinct-name granularity: every downstream join is per normalized
     # name; the final assignment fan-out back to rows is one equi-join.
     # The node id IS prepare_side's content-hash id (xxhash64(name_norm)),
-    # so the fan-out join key already sits on every prepared row.
-    names = persist(prep.select(NORM_COL, F.col("_rid").alias("_nid")).distinct())
-    tri = persist(gram_index(names, "_nid", cfg))
-    ntri = tri.groupBy("_nid").agg(F.count(F.lit(1)).alias("_n_grams"))
-    # One cheap count on the cached distinct-name frame buys two plan
-    # prunings per batch: a gram's posting list in `tri` (distinct per
-    # name) is bounded by the batch's distinct-name count, so when
-    # n_names <= max_block_df the batch-side df-caps are PROVABLY no-ops
-    # and their aggregate + broadcast + anti-join subtrees are skipped
-    # outright (the history side still caps — its posting lists track
-    # directory lifetime). Same guard idiom as neardup_batch's
-    # n_banded check.
-    n_names = names.count()
-    batch_cap_bites = (
-        cfg.max_block_df is not None and n_names > cfg.max_block_df
+    # so the fan-out join key already sits on every prepared row. The
+    # frame carries each name's scoring q-gram set (``name_sets``), built
+    # once per batch for both the match and the create scoring.
+    names = persist(
+        name_sets(prep.select(NORM_COL, F.col("_rid").alias("_nid")).distinct(), cfg)
     )
-    # Jaccard verify/create scoring joins PRE-COMPUTED per-name q-gram
-    # sets and sizes (one set build per distinct name) instead of
-    # rebuilding both sets inside every candidate-pair row — the same
-    # once-per-name trick as operators.scoring.score_pairs, with
-    # bit-identical distance arithmetic (jaccard_dist_from_sizes_expr).
-    # Round-7 profiling: batch 0 of the bench workload scores ~5e5
-    # create-path candidate pairs, and the per-pair double set build was
-    # the largest single CPU sink of the whole query.
-    use_jac = cfg.distance_measure == "jaccard"
-    if use_jac:
-        from ..functions.qgrams import (
-            jaccard_dist_from_sizes_expr,
-            packed_qgram_set_expr,
-            qgram_set_expr,
-        )
-
-        # packed bigint sets for q <= 3: same cardinalities, ~4.5x
-        # cheaper per-pair intersect (see packed_qgram_set_expr)
-        _set_expr = (
-            packed_qgram_set_expr if cfg.qgram <= 3 else qgram_set_expr
-        )
-        names_g = persist(
-            names.select(
-                "_nid", _set_expr(NORM_COL, cfg.qgram).alias("_gset")
-            )
-            .withColumn("_gsz", F.size("_gset"))
-        )
+    tri = persist(gram_index(names, "_nid", cfg))
+    # One cheap count on the cached distinct-name frame bounds every
+    # gram's posting list in `tri` and in any slice of it, so with
+    # n_names <= max_block_df the blocking core skips the batch-side df
+    # caps outright (the history side still caps — its posting lists
+    # track directory lifetime).
+    n_names = names.count()
 
     # ---- 2. MATCH against the prior directory -------------------------
     prior_grams = read_prior_history(spark, grams_tbl, grams_dir, batch_id)
     prior_ent_paths = prior_batch_paths(spark, entities_dir, batch_id)
     matched = None
     if prior_grams is not None and prior_ent_paths:
-        btri = tri
-        old = prior_grams.select("gram", "alias_id")
-        if batch_cap_bites:
-            btri = apply_df_cap(btri, "gram", cfg.max_block_df)
-        if cfg.max_block_df is not None:
-            old = apply_df_cap(old, "gram", cfg.max_block_df)
-        shared = (
-            btri.join(old, "gram")
-            .groupBy("_nid", "alias_id")
-            .agg(F.count(F.lit(1)).alias("_shared"))
+        cand = shared_gram_pairs(
+            tri,
+            prior_grams.select("gram", "alias_id"),
+            cfg,
+            x_id="_nid",
+            y_id="alias_id",
+            x_count=n_names,
         )
-        cand = shared.join(ntri, "_nid").filter(
-            F.col("_shared")
-            >= F.ceil(F.lit(float(cfg.min_shared_frac)) * F.col("_n_grams"))
+        # alias rows are scored as listed, never deduplicated by alias_id:
+        # a compact_directory crash leaves one alias under its old and its
+        # merged entity id, and the min (distance, entity_id) pick below
+        # resolves the pair to the merged one
+        aliases = name_sets(
+            spark.read.parquet(*prior_ent_paths).select("alias_id", "entity_id", NORM_COL),
+            cfg,
         )
-        aliases = spark.read.parquet(*prior_ent_paths).select(
-            "alias_id", "entity_id", F.col(NORM_COL).alias("_alias_norm")
-        )
-        if use_jac:
-            # per-alias set computed below the join (once per directory
-            # alias row), per-name set joined from the cached names_g
-            aliases = aliases.select(
-                "alias_id",
-                "entity_id",
-                _set_expr("_alias_norm", cfg.qgram).alias("_aset"),
-            ).withColumn("_asz", F.size("_aset"))
-            dist = jaccard_dist_from_sizes_expr("_gset", "_aset", "_gsz", "_asz")
-            verified = (
-                cand.join(aliases, "alias_id")
-                .join(names_g, "_nid")
-                .withColumn("_dist", dist)
-                .filter(F.col("_dist") <= F.lit(float(max_dist)))
-            )
-        else:
-            verified = (
-                cand.join(aliases, "alias_id")
-                .join(names, "_nid")
-                .withColumn(
-                    "_dist",
-                    distance_expr(
-                        cfg.distance_measure, NORM_COL, "_alias_norm", qgram=cfg.qgram
-                    ),
-                )
-                .filter(F.col("_dist") <= F.lit(float(max_dist)))
-            )
+        verified = score_name_pairs(
+            cand, names, aliases, cfg, x_id="_nid", y_id="alias_id"
+        ).filter(F.col(DIST_COL) <= F.lit(float(max_dist)))
         matched = persist(
             verified.groupBy("_nid")
             .agg(
                 F.min_by(
-                    F.struct(
-                        F.col("entity_id"), F.col("_dist").alias("stringdist")
-                    ),
-                    F.struct(F.col("_dist"), F.col("entity_id")),
+                    F.struct(F.col("entity_id_y").alias("entity_id"), F.col(DIST_COL)),
+                    F.struct(F.col(DIST_COL), F.col("entity_id_y")),
                 ).alias("_best")
             )
             .select("_nid", "_best.entity_id", "_best.stringdist")
         )
 
     # ---- 3. CREATE entities for the unmatched names -------------------
-    unmatched = names
+    unmatched, utri = names, tri
     if matched is not None:
         unmatched = names.join(matched, "_nid", "left_anti")
-    # candidate self-join straight off the PERSISTED batch gram index
-    # (candidate_pairs would re-explode both sides from scratch — two more
-    # gram builds and df-cap aggregates per micro-batch for frames this
-    # batch already computed). Same semantics: df-cap, then the
-    # >= ceil(min_shared_frac * |grams(x)|) rule with the PRE-cap
-    # denominator (monotone-under-capping contract, blocking.py).
-    utri = tri.join(unmatched.select("_nid"), "_nid", "left_semi")
-    if batch_cap_bites:  # utri ⊆ tri, so the same n_names bound applies
-        utri = apply_df_cap(utri, "gram", cfg.max_block_df)
-    cand_new = (
-        utri.select(F.col("_nid").alias("x_id"), "gram")
-        .join(utri.select(F.col("_nid").alias("y_id"), "gram"), "gram")
-        .filter(F.col("x_id") < F.col("y_id"))
-        .groupBy("x_id", "y_id")
-        .agg(F.count(F.lit(1)).alias("_shared"))
-        .join(
-            ntri.select(F.col("_nid").alias("x_id"), "_n_grams"), "x_id"
-        )
-        .filter(
-            F.col("_shared")
-            >= F.ceil(F.lit(float(cfg.min_shared_frac)) * F.col("_n_grams"))
-        )
+        utri = tri.join(matched.select("_nid"), "_nid", "left_anti")
+    # candidate self-join over the unmatched slice of the PERSISTED batch
+    # gram index (candidate_pairs would re-explode both sides from
+    # scratch); the slice's posting lists are bounded by n_names too
+    cand_new = shared_gram_pairs(
+        utri.withColumnRenamed("_nid", "x_id"),
+        utri.withColumnRenamed("_nid", "y_id"),
+        cfg,
+        x_id="x_id",
+        y_id="y_id",
+        x_count=n_names,
+        y_count=n_names,
+    ).filter(F.col("x_id") < F.col("y_id"))
+    scored = score_name_pairs(
+        cand_new,
+        names.withColumnRenamed("_nid", "x_id"),
+        names.withColumnRenamed("_nid", "y_id"),
+        cfg,
+        max_dist=create_max_dist,
     )
-    # persist BEFORE the threshold filter (the pushdown-into-join guard
-    # score_pairs applies, here registry-tracked so scoped_caches releases
-    # it at batch end instead of pinning one frame per micro-batch)
-    if use_jac:
-        # project the pair down to (ids, stringdist) BEFORE the persist:
-        # the joined-in gram-set arrays exist only to feed the distance
-        # expression, and caching array<string> columns for every
-        # candidate pair is slower than the scoring they save (nested
-        # types defeat the columnar cache) — measured as a 2x regression
-        # of the whole query before this select was added
-        scored = persist(
-            cand_new.join(
-                names_g.select(
-                    F.col("_nid").alias("x_id"),
-                    F.col("_gset").alias("_gx"),
-                    F.col("_gsz").alias("_nx"),
-                ),
-                "x_id",
-            )
-            .join(
-                names_g.select(
-                    F.col("_nid").alias("y_id"),
-                    F.col("_gset").alias("_gy"),
-                    F.col("_gsz").alias("_ny"),
-                ),
-                "y_id",
-            )
-            .select(
-                "x_id",
-                "y_id",
-                jaccard_dist_from_sizes_expr("_gx", "_gy", "_nx", "_ny").alias(
-                    "stringdist"
-                ),
-            )
-        )
-    else:
-        scored = persist(
-            cand_new.join(
-                names.select(F.col("_nid").alias("x_id"), F.col(NORM_COL).alias("_nx")),
-                "x_id",
-            )
-            .join(
-                names.select(F.col("_nid").alias("y_id"), F.col(NORM_COL).alias("_ny")),
-                "y_id",
-            )
-            .withColumn(
-                "stringdist",
-                distance_expr(cfg.distance_measure, "_nx", "_ny", qgram=cfg.qgram),
-            )
-        )
-    edges = persist(
-        scored.filter(F.col("stringdist") <= F.lit(float(create_max_dist)))
-        .select(F.col("x_id").alias("src"), F.col("y_id").alias("dst"))
-    )
+    edges = persist(scored.select(F.col("x_id").alias("src"), F.col("y_id").alias("dst")))
     if edges.limit(1).count() == 0:
         # no similar pairs among the new names: all singletons — skip the
         # iterative CC (whose per-round jobs would re-drive nothing)

@@ -1,7 +1,9 @@
 """The persist/release lifecycle: ``cache.py`` owns every persist and
 release in the package, and its scopes decide when a frame is released.
-Two more grep guards pin ``run_stream`` as the package's one stream starter
-and ``blocking.bucket_pairs`` as its one bucket self-join."""
+More grep guards pin ``run_stream`` as the package's one stream starter,
+``blocking.bucket_pairs`` as its one bucket self-join, and the blocking and
+scoring modules as the one home of the name-blocking rule and the name
+scorer."""
 
 import ast
 import pathlib
@@ -78,6 +80,27 @@ def test_bucket_pairs_is_the_only_bucket_self_join():
             lineno = source.count("\n", 0, m.start()) + 1
             found.add((path.relative_to(PKG), _enclosing_function(source, lineno)))
     assert found == allowed, sorted(found ^ allowed)
+
+
+def test_one_name_blocking_rule_and_one_name_scorer():
+    """The shared-gram rule (``cfg.min_shared_frac``) is applied only in
+    ``operators/blocking.py`` and the per-name jaccard distance
+    (``jaccard_dist_from_sizes_expr``) is called only in
+    ``operators/scoring.py``; every other name-pair path calls them."""
+    homes = {
+        "cfg.min_shared_frac": pathlib.Path("operators", "blocking.py"),
+        "jaccard_dist_from_sizes_expr(": pathlib.Path("operators", "scoring.py"),
+    }
+    hits = [
+        f"{path.relative_to(PKG)}:{n}: {line.strip()}"
+        for path in sorted(PKG.rglob("*.py"))
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        for needle, home in homes.items()
+        if needle in line
+        and path.relative_to(PKG) != home
+        and not line.lstrip().startswith("def ")
+    ]
+    assert not hits, "\n".join(hits)
 
 
 def test_scopes_release_their_own_frames(spark, stored_rdds):

@@ -163,3 +163,39 @@ def test_explain_pairs_debug_surface(spark):
     assert diff.shared_grams == 0 and not diff.would_block
     assert diff.dist_jaccard == 1.0
     assert diff.dist_levenshtein > 0
+
+
+# Two names of 147 characters whose only shared trigrams start after
+# position 100: the 100-character prefix cap keeps them out of blocking.
+_CAPPED_X = ("abcdefghijklm" * 8)[:102] + "zyxwvutsrqponmlkjihgfedcbaqwertyuiopasdfghjkl"
+_CAPPED_Y = ("nopqrstuvwxyz" * 8)[:102] + "zyxwvutsrqponmlkjihgfedcbaqwertyuiopasdfghjkl"
+
+
+@pytest.mark.parametrize(
+    "name_x,name_y,cfg_kw",
+    [(_CAPPED_X, _CAPPED_Y, {}), ("ab xy", "ab zq", {"block_ngram": 2})],
+    ids=["prefix_cap", "bigram"],
+)
+def test_explain_pairs_blocking_evidence_matches_candidate_pairs(
+    spark, name_x, name_y, cfg_kw
+):
+    """``explain_pairs``' gram counts and verdict are the ones blocking
+    uses: the blocking gram index's size for x, the grams both indexes
+    share, and whether ``candidate_pairs`` yields the pair."""
+    from linkorgs_software_spark.config import LinkConfig
+    from linkorgs_software_spark.functions.normalize import prepare_side
+    from linkorgs_software_spark.operators.blocking import candidate_pairs, gram_index
+    from linkorgs_software_spark.operators.scoring import explain_pairs
+
+    cfg = LinkConfig(**cfg_kw)
+    ex = explain_pairs(
+        spark.createDataFrame([(name_x, name_y)], "name_x string, name_y string"), cfg
+    ).first()
+    xp = prepare_side(spark.createDataFrame([(name_x,)], "name string"), "name", "x_id", cfg)
+    yp = prepare_side(spark.createDataFrame([(name_y,)], "name string"), "name", "y_id", cfg)
+    xg, yg = gram_index(xp, "x_id", cfg), gram_index(yp, "y_id", cfg)
+    n_x, shared = xg.count(), xg.join(yg, "gram").count()
+    cands = candidate_pairs(xp, yp, cfg).collect()
+    assert (ex.n_grams_x, ex.shared_grams, ex.would_block) == (n_x, shared, bool(cands))
+    if cands:
+        assert (cands[0].n_grams_x, cands[0].shared_grams) == (n_x, shared)

@@ -919,18 +919,22 @@ def test_tier2_only_trigger_merges_stranded_snapshots(spark, tmp_path):
     assert spark.read.parquet(f"{d}/batch_id=-4").count() == 6
 
 
-def test_incremental_resolve_match_create_replay(spark, tmp_path):
+@pytest.mark.parametrize(
+    "cfg", [LinkConfig(), LinkConfig(salt_buckets=4)], ids=["default", "salt4"]
+)
+def test_incremental_resolve_match_create_replay(spark, tmp_path, cfg):
     """The evolving-directory resolver: batch 0 mints entities (with
     within-batch transitive merge), batch 1 matches known aliases and
     mints only the genuinely new name, and a replayed batch reproduces
-    byte-identical assignments without duplicating directory rows."""
+    byte-identical assignments without duplicating directory rows. A
+    salted gram join gives the same results."""
     from linkorgs_software_spark.streaming import resolve_batch
 
     out = str(tmp_path / "resolve_out")
     b0 = spark.createDataFrame(
         [("Acme Corp",), ("Acme Corp x",), ("Globex Inc",)], "name string"
     )
-    resolve_batch(b0, 0, out)
+    resolve_batch(b0, 0, out, cfg=cfg)
     a0 = {r.name: r for r in spark.read.parquet(f"{out}/assignments/batch_id=0").collect()}
     # within-batch transitive merge: the two acme variants share one entity
     assert a0["Acme Corp"].entity_id == a0["Acme Corp x"].entity_id
@@ -940,7 +944,7 @@ def test_incremental_resolve_match_create_replay(spark, tmp_path):
     b1 = spark.createDataFrame(
         [("ACME corp.",), ("Globex, Inc",), ("Initech LLC",)], "name string"
     )
-    resolve_batch(b1, 1, out)
+    resolve_batch(b1, 1, out, cfg=cfg)
     a1 = {r.name: r for r in spark.read.parquet(f"{out}/assignments/batch_id=1").collect()}
     assert a1["ACME corp."].matched_prior and a1["ACME corp."].stringdist == 0.0
     assert a1["ACME corp."].entity_id == a0["Acme Corp"].entity_id
@@ -948,7 +952,7 @@ def test_incremental_resolve_match_create_replay(spark, tmp_path):
     assert not a1["Initech LLC"].matched_prior
 
     # replay batch 1: identical assignments, no duplicate directory rows
-    resolve_batch(b1, 1, out)
+    resolve_batch(b1, 1, out, cfg=cfg)
     a1r = {r.name: r for r in spark.read.parquet(f"{out}/assignments/batch_id=1").collect()}
     assert {(k, v.entity_id, v.matched_prior) for k, v in a1.items()} == {
         (k, v.entity_id, v.matched_prior) for k, v in a1r.items()
@@ -983,6 +987,32 @@ def test_incremental_resolve_fuzzy_alias_enriches_directory(spark, tmp_path):
     )
     r2 = spark.read.parquet(f"{out}/assignments/batch_id=2").collect()[0]
     assert r2.matched_prior and r2.stringdist == 0.0 and r2.entity_id == e0
+
+
+def test_resolve_crash_window_duplicate_alias_resolves_to_merged_id(spark, tmp_path):
+    """A crash between ``compact_directory``'s snapshot rename and its
+    delete of the folded slices leaves one alias under two entity ids: the
+    old one and the merged one, which is the component minimum. The match
+    step's min (distance, entity_id) pick resolves a mention of that alias
+    to the merged id."""
+    from linkorgs_software_spark.streaming import resolve_batch
+
+    out = str(tmp_path / "resolve_crash")
+    resolve_batch(
+        spark.createDataFrame([("Acme Corp",), ("Globex Inc",)], "name string"), 0, out
+    )
+    acme = spark.read.parquet(f"{out}/history/entities/batch_id=0").filter(
+        F.col("name_norm") == "acme corp"
+    )
+    merged = acme.first().entity_id - 1
+    # the snapshot slice (negative batch id) the fold renames in first
+    acme.withColumn("entity_id", F.lit(merged).cast("long")).write.parquet(
+        f"{out}/history/entities/batch_id=-1"
+    )
+    resolve_batch(spark.createDataFrame([("ACME corp.",)], "name string"), 1, out)
+    r = spark.read.parquet(f"{out}/assignments/batch_id=1").collect()[0]
+    assert r.matched_prior and r.stringdist == 0.0
+    assert r.entity_id == merged
 
 
 def test_incremental_resolve_stream_end_to_end(spark, tmp_path):
@@ -1050,34 +1080,59 @@ def test_batch_releases_its_caches(spark, stored_rdds, tmp_path, batch_fn):
     assert release_caches() == 0
 
 
-# Most Spark jobs per call seen on ``_release_batches``' inputs before the
-# two near-dup batches shared one flow (six runs on local[4]): (first batch,
-# second batch, which adds the cross-batch path).
-_NEARDUP_BATCH_JOBS = {"neardup_batch": (17, 38), "embed_neardup_batch": (13, 32)}
+# Most Spark jobs per call seen on local[4] at the commit before each flow
+# was shared, one count per batch of ``_job_batches``: the near-dup batches
+# before the two shared one flow (six runs), resolve_batch before it called
+# the blocking and scoring modules (six runs read (26, 43-44, 54), an
+# earlier set (26, 43-46, 54-55)).
+_BATCH_JOBS = {
+    "neardup_batch": (17, 38),
+    "embed_neardup_batch": (13, 32),
+    "resolve_batch": (26, 46, 55),
+}
 # (table slice, its columns, plain slice, its columns) a resuming stream reads
-_NEARDUP_HISTORY = {
+_BATCH_HISTORY = {
     "neardup_batch": ("buckets", ["bucket", "doc_id"], "shingles", ["doc_id", "shingles"]),
     "embed_neardup_batch": (
         "embuckets", ["table_id", "bucket", "vec_id"], "embeddings", ["vec_id", "embedding"],
     ),
+    "resolve_batch": (
+        "grams", ["gram", "alias_id"], "entities", ["alias_id", "entity_id", "name_norm"],
+    ),
 }
 
 
-@pytest.mark.parametrize("batch_fn", ["neardup_batch", "embed_neardup_batch"])
-def test_neardup_batch_jobs_and_history_layout(spark, tmp_path, batch_fn):
-    """A near-dup batch runs no more Spark jobs than the measured count, and
-    its history keeps the table name and column names a running stream
-    resumes from."""
+def _job_batches(spark, batch_fn):
+    """``_release_batches``' two batches; the resolver gets a third whose
+    names both match the directory and mint new entities."""
+    b0, b1, kw = _release_batches(spark, batch_fn)
+    batches = [b0, b1]
+    if batch_fn == "resolve_batch":
+        batches.append(
+            spark.createDataFrame(
+                [("ACME corp.",), ("Acme Corp x",), ("Hooli",)], "name string"
+            )
+        )
+    return batches, kw
+
+
+@pytest.mark.parametrize(
+    "batch_fn", ["neardup_batch", "embed_neardup_batch", "resolve_batch"]
+)
+def test_batch_jobs_and_history_layout(spark, tmp_path, batch_fn):
+    """A streaming batch runs no more Spark jobs than the measured count,
+    and its history keeps the table name and column names a running
+    stream resumes from."""
     from linkorgs_software_spark import streaming
     from linkorgs_software_spark.streaming.history import history_table_name
 
     run = getattr(streaming, batch_fn)
-    b0, b1, kw = _release_batches(spark, batch_fn)
+    batches, kw = _job_batches(spark, batch_fn)
     out = str(tmp_path / batch_fn)
     sc = spark.sparkContext
     jobs = []
-    for batch_id, df in enumerate((b0, b1)):
-        group = f"neardup-jobs-{batch_fn}-{batch_id}"
+    for batch_id, df in enumerate(batches):
+        group = f"batch-jobs-{batch_fn}-{batch_id}"
         sc.setJobGroup(group, batch_fn)
         try:
             run(df, batch_id, out, **kw)
@@ -1085,8 +1140,10 @@ def test_neardup_batch_jobs_and_history_layout(spark, tmp_path, batch_fn):
             sc.setLocalProperty("spark.jobGroup.id", None)
             sc.setLocalProperty("spark.job.description", None)
         jobs.append(len(sc.statusTracker().getJobIdsForGroup(group)))
-    assert all(0 < n <= cap for n, cap in zip(jobs, _NEARDUP_BATCH_JOBS[batch_fn])), jobs
-    table, table_cols, plain, plain_cols = _NEARDUP_HISTORY[batch_fn]
+    caps = _BATCH_JOBS[batch_fn]
+    assert len(jobs) == len(caps), jobs
+    assert all(0 < n <= cap for n, cap in zip(jobs, caps)), jobs
+    table, table_cols, plain, plain_cols = _BATCH_HISTORY[batch_fn]
     hist = spark.table(history_table_name(out, table))
     assert [c for c in hist.columns if c != "batch_id"] == table_cols
     plain_df = spark.read.parquet(os.path.join(out, "history", plain))
@@ -1229,11 +1286,24 @@ def test_incremental_resolve_merge_every_in_stream(spark, tmp_path):
     assert os.path.exists(f"{out}/remaps/watermark=2")
 
 
+def _plan_paths(node, path=()):
+    """Every node of a physical plan with its root-first ancestor path."""
+    path = path + (node,)
+    yield node, path
+    kids = node.children()
+    for k in range(kids.size()):
+        yield from _plan_paths(kids.apply(k), path)
+
+
 def test_resolve_history_gram_join_shuffle_free(spark, tmp_path):
-    """The resolver's match join reads the gram directory history as a
-    BUCKETED scan with no Exchange above it — only the mention batch
-    shuffles, so per-batch match cost tracks the batch, not directory
-    lifetime (same invariant as the neardup streams)."""
+    """The resolver's match candidates — the blocking core over a batch
+    gram index and the prior gram history, the history side df-capped —
+    read the history as a BUCKETED scan with no shuffle Exchange between
+    that scan and the gram join: only the mention batch shuffles, so
+    per-batch match cost tracks the batch, not directory lifetime (same
+    invariant as the neardup streams)."""
+    from linkorgs_software_spark.functions.normalize import prepare_side
+    from linkorgs_software_spark.operators.blocking import gram_index, shared_gram_pairs
     from linkorgs_software_spark.streaming import resolve_batch
     from linkorgs_software_spark.streaming.history import (
         history_table_name,
@@ -1248,23 +1318,47 @@ def test_resolve_history_gram_join_shuffle_free(spark, tmp_path):
     tbl = history_table_name(out, "grams")
     assert spark.catalog.tableExists(tbl)
     prior = read_prior_history(spark, tbl, f"{out}/history/grams", 1)
-    batch_grams = spark.createDataFrame([("acm", 7)], "gram string, _nid long")
+    cfg = LinkConfig()
+    assert cfg.max_block_df is not None  # the history side is capped
+    batch = prepare_side(
+        spark.createDataFrame([("Acme Corp x",)], "name string"), "name", "_nid", cfg
+    )
+    cand = shared_gram_pairs(
+        gram_index(batch, "_nid", cfg),
+        prior.select("gram", "alias_id"),
+        cfg,
+        x_id="_nid",
+        y_id="alias_id",
+        x_count=1,
+    )
     old_broadcast = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     old_aqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        plan = (
-            batch_grams.join(prior.select("gram", "alias_id"), "gram")
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
+        plan = cand._jdf.queryExecution().executedPlan()
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_broadcast)
         spark.conf.set("spark.sql.adaptive.enabled", old_aqe)
-    assert "Bucketed: true" in plan, plan
-    # exactly ONE exchange: the mention-batch side; none above the history scan
-    assert plan.count("Exchange") == 1, plan
-    seg_after_scan = plan[plan.index("FileScan parquet"):]
-    assert "Exchange" not in seg_after_scan
+
+    def name(node):
+        return node.getClass().getSimpleName()
+
+    def is_gram_join(node):
+        return (
+            name(node) in ("SortMergeJoinExec", "ShuffledHashJoinExec")
+            and node.joinType().toString() == "Inner"
+            and "gram" in node.leftKeys().toString()
+        )
+
+    scans = [
+        path for node, path in _plan_paths(plan)
+        if name(node) == "FileSourceScanExec" and node.bucketedScan()
+    ]
+    assert scans, plan.toString()
+    for path in scans:
+        # the nodes between the gram join and the history scan
+        joins = [k for k, node in enumerate(path) if is_gram_join(node)]
+        assert joins, plan.toString()
+        between = [name(node) for node in path[joins[-1] + 1:]]
+        assert "ShuffleExchangeExec" not in between, plan.toString()

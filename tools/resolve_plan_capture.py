@@ -4,10 +4,12 @@ The resolver's scoring frames are internal to ``resolve_batch``, so
 the declared-query plan capture can't show them. This tool rebuilds the
 create-path `scored` frame on the bench fixture in BOTH formulations —
 the round-start form (per-pair ``distance_expr("jaccard")`` over joined
-name strings) and the current form (pre-computed packed q-gram sets +
-``jaccard_dist_from_sizes_expr``) — and writes their
-``explain("formatted")`` to ``plans/r07/resolve_scored_{before,after}.txt``.
-Both formulations are asserted row- and value-identical first.
+name strings) and the current form (the resolver's own calls: candidates
+from ``blocking.shared_gram_pairs``, scores from
+``scoring.score_name_pairs`` over one ``scoring.name_sets`` frame) — and
+writes their ``explain("formatted")`` to
+``plans/r07/resolve_scored_{before,after}.txt``. Both formulations are
+asserted row- and value-identical first.
 """
 
 from __future__ import annotations
@@ -27,31 +29,30 @@ def main() -> None:
 
     from linkorgs_software_spark.config import DEFAULT
     from linkorgs_software_spark.functions.normalize import NORM_COL, prepare_side
-    from linkorgs_software_spark.functions.qgrams import (
-        jaccard_dist_from_sizes_expr,
-        packed_qgram_set_expr,
-    )
     from linkorgs_software_spark.functions.scorers import distance_expr
-    from linkorgs_software_spark.operators.blocking import gram_index
+    from linkorgs_software_spark.operators.blocking import gram_index, shared_gram_pairs
+    from linkorgs_software_spark.operators.scoring import name_sets, score_name_pairs
     from linkorgs_software_spark.sources.fixtures import gen_linkage_fixture
 
     cfg = DEFAULT
     fx = gen_linkage_fixture(spark, n_entities=1500, seed=42)
     prep = prepare_side(fx["org_x"].select("name"), "name", "_rid", cfg)
-    names = prep.select(NORM_COL, F.col("_rid").alias("_nid")).distinct().persist()
+    names = name_sets(
+        prep.select(NORM_COL, F.col("_rid").alias("_nid")).distinct(), cfg
+    ).persist()
+    n_names = names.count()
     tri = gram_index(names, "_nid", cfg).persist()
-    ntri = tri.groupBy("_nid").agg(F.count(F.lit(1)).alias("_n_grams"))
     cand = (
-        tri.select(F.col("_nid").alias("x_id"), "gram")
-        .join(tri.select(F.col("_nid").alias("y_id"), "gram"), "gram")
-        .filter(F.col("x_id") < F.col("y_id"))
-        .groupBy("x_id", "y_id")
-        .agg(F.count(F.lit(1)).alias("_shared"))
-        .join(ntri.select(F.col("_nid").alias("x_id"), "_n_grams"), "x_id")
-        .filter(
-            F.col("_shared")
-            >= F.ceil(F.lit(float(cfg.min_shared_frac)) * F.col("_n_grams"))
+        shared_gram_pairs(
+            tri.withColumnRenamed("_nid", "x_id"),
+            tri.withColumnRenamed("_nid", "y_id"),
+            cfg,
+            x_id="x_id",
+            y_id="y_id",
+            x_count=n_names,
+            y_count=n_names,
         )
+        .filter(F.col("x_id") < F.col("y_id"))
         .persist()
     )
     before = (
@@ -71,36 +72,12 @@ def main() -> None:
             ),
         )
     )
-    names_g = (
-        names.select("_nid", packed_qgram_set_expr(NORM_COL, cfg.qgram).alias("_gset"))
-        .withColumn("_gsz", F.size("_gset"))
-        .persist()
-    )
-    after = (
-        cand.join(
-            names_g.select(
-                F.col("_nid").alias("x_id"),
-                F.col("_gset").alias("_gx"),
-                F.col("_gsz").alias("_nx"),
-            ),
-            "x_id",
-        )
-        .join(
-            names_g.select(
-                F.col("_nid").alias("y_id"),
-                F.col("_gset").alias("_gy"),
-                F.col("_gsz").alias("_ny"),
-            ),
-            "y_id",
-        )
-        .select(
-            "x_id",
-            "y_id",
-            jaccard_dist_from_sizes_expr("_gx", "_gy", "_nx", "_ny").alias(
-                "stringdist"
-            ),
-        )
-    )
+    after = score_name_pairs(
+        cand,
+        names.withColumnRenamed("_nid", "x_id"),
+        names.withColumnRenamed("_nid", "y_id"),
+        cfg,
+    ).select("x_id", "y_id", "stringdist")
     mismatch = (
         before.withColumnRenamed("stringdist", "d1")
         .join(after.withColumnRenamed("stringdist", "d2"), ["x_id", "y_id"])
