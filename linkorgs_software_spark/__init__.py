@@ -5,7 +5,7 @@ Blocked fuzzy matching, alias-bridged (network) matching, embedding-space
 matching, transitive clustering, and match evaluation — re-expressed as
 idiomatic Spark DataFrame plans (SURVEY.md is the blueprint), plus the
 corpus operators a 100 TB training-data pipeline needs (dedup families,
-ANN, text analysis, multimodal plumbing).
+ANN, text analysis).
 """
 
 from .cache import release_caches, scoped_caches

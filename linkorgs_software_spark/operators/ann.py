@@ -24,7 +24,6 @@ per-list top-k is a map-side window.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -226,42 +225,14 @@ def lsh_buckets(
     n_planes: int = 8,
     num_tables: int = 2,
     seed: int = 42,
-    impl: str = "catalyst",
 ) -> DataFrame:
     """Attach (table_id, bucket) rows — one output row per hash table.
 
-    ``impl`` selects the projection kernel (measured head-to-head on a
-    150k x 64-dim fixture, 4 tables x 8 planes — table in
-    BENCH/BASELINE.md):
-
-    * ``"catalyst"`` (default): literal-plane dot products as ONE generated
-      SQL expression. ~2.4x slower at volume (higher-order array functions
-      do not enter whole-stage codegen), but its sequential-fold arithmetic
-      is what the DuckDB value-hash oracles mirror bit-for-bit — a
-      differently-ordered summation can flip the SIGN of a near-zero dot
-      product and with it a bucket bit, so the portable default stays on
-      the fold (same reasoning that replaced approxQuantile with the exact
-      rank pick).
-    * ``"numpy"``: one Arrow-batched pandas UDF computing all tables'
-      sign bits as a single matmul — 2.4x faster wall-clock at 150k
-      vectors on 32 splits (22x on one split: the per-row expression cost
-      dominates unsplit scans), identical bucket ids on every fixture
-      measured — though NOT guaranteed bit-identical: see
-      ``_lsh_buckets_numpy`` for the near-zero-dot and NULL-vector
-      divergences (both recall-only). The right kernel for ANN-scale
-      corpora where candidates are exact-verified downstream anyway.
+    The literal-plane dot products are ONE generated SQL expression whose
+    sequential-fold arithmetic the DuckDB value-hash oracles mirror
+    bit-for-bit: a differently-ordered summation can flip the SIGN of a
+    near-zero dot product and with it a bucket bit.
     """
-    if impl == "numpy":
-        return _lsh_buckets_numpy(
-            df,
-            vec_col=vec_col,
-            dim=dim,
-            n_planes=n_planes,
-            num_tables=num_tables,
-            seed=seed,
-        )
-    if impl != "catalyst":
-        raise ValueError(f"unknown lsh_buckets impl: {impl!r}")
     tables = []
     for t in range(num_tables):
         planes = _hyperplanes(dim, n_planes, seed + 1000 * t)
@@ -274,63 +245,6 @@ def lsh_buckets(
     return df.withColumn("_tb", F.explode(F.array(*tables))).select(
         "*", F.col("_tb.table_id").alias("table_id"), F.col("_tb.bucket").alias("bucket")
     ).drop("_tb")
-
-
-def _lsh_buckets_numpy(
-    df: DataFrame,
-    *,
-    vec_col: str,
-    dim: int,
-    n_planes: int,
-    num_tables: int,
-    seed: int,
-) -> DataFrame:
-    """Arrow-batched bucket projection: one einsum over the whole batch
-    computes every table's sign bits at once (planes snapshot into the UDF
-    closure — workers never re-derive them).
-
-    Parity caveats vs ``impl="catalyst"`` (stated, not papered over):
-    NULL or wrong-width vectors produce a NULL code array here, and the
-    downstream ``posexplode`` drops those rows from the bucket frame —
-    they simply generate no candidates. And einsum's batched summation
-    order can differ from the catalyst expression's sequential left fold,
-    so a dot product within float rounding of zero can flip a sign bit
-    between the two impls (never observed on the measured fixtures, but
-    possible). Both effects are RECALL-only: every candidate is exact
-    re-scored downstream, so a divergent bucket can miss a pair, never
-    admit a wrong one."""
-    from pyspark.sql.types import ArrayType, LongType
-
-    pm = np.stack(
-        [_hyperplanes(dim, n_planes, seed + 1000 * t) for t in range(num_tables)]
-    )
-    _check_finite_weights(pm, "hyperplanes")
-    shifts = np.arange(n_planes)
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def _codes(v: pd.Series) -> pd.Series:
-        vals = v.to_numpy()
-        mask = np.array(
-            [x is not None and len(x) == dim for x in vals], dtype=bool
-        )
-        out = np.empty(len(vals), dtype=object)
-        out[~mask] = None
-        if mask.any():
-            X = np.stack(vals[mask]).astype(np.float64)
-            bits = np.einsum("tpd,nd->ntp", pm, X) > 0
-            codes = (bits.astype(np.int64) << shifts).sum(axis=2)
-            # element-wise into the object array: a direct masked assign
-            # would coerce the per-row code arrays into one 2-D block
-            boxed = np.empty(len(codes), dtype=object)
-            boxed[:] = list(codes)
-            out[mask] = boxed
-        return pd.Series(list(out))
-
-    return (
-        df.withColumn("_bks", _codes(vec_col))
-        .select("*", F.posexplode("_bks").alias("table_id", "bucket"))
-        .drop("_bks")
-    )
 
 
 def _train_centroids(

@@ -18,7 +18,6 @@ import datetime as dt
 import random
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 _ADJ = ["acme", "global", "united", "pacific", "northern", "stellar", "apex",
@@ -146,9 +145,3 @@ def gen_transcripts(
             rows.append((conv, turn, role, text, tool, t))
     return spark.createDataFrame(rows, TRANSCRIPT_SCHEMA)
 
-
-def extract_mentions(transcripts: DataFrame) -> DataFrame:
-    """Org mentions from ``[[...]]`` markers — see plans.transcripts."""
-    from ..plans.transcripts import extract_mentions as _extract
-
-    return _extract(transcripts)

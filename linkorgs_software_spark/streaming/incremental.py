@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame
 
 from ..config import DEFAULT, LinkConfig
 from ..plans.pipeline import link_orgs
-from ..sources.fixtures import extract_mentions
+from ..plans.transcripts import extract_mentions
 
 
 def run_stream(stream: DataFrame, batch_fn, checkpoint_path: str, *, available_now: bool = False):

@@ -312,7 +312,7 @@ def compact_directory(
     merge rewrites only ``alias -> entity``, which is why this pass costs
     one directory self-link plus one entities rewrite — never a rebuild
     of the bucketed gram index."""
-    from ..plans.multi import merge_entities
+    from ..plans.multi import apply_entity_remap, merge_entities
 
     entities_dir = os.path.join(out_dir, "history", "entities")
     # exactly what compact_plain_history folds: snapshots + batches < watermark
@@ -334,21 +334,9 @@ def compact_directory(
             return None
         remap.write.mode("overwrite").parquet(remap_path)
     saved = spark.read.parquet(remap_path)
-
-    def _remap_entities(df: DataFrame) -> DataFrame:
-        return (
-            df.join(
-                saved.withColumnRenamed("merged_entity_id", "_m"),
-                "entity_id",
-                "left",
-            )
-            .withColumn("entity_id", F.coalesce("_m", F.col("entity_id")))
-            .drop("_m")
-        )
-
     compact_plain_history(
         spark, entities_dir, watermark=watermark,
-        transform=_remap_entities, min_fold=1,
+        transform=lambda df: apply_entity_remap(df, saved), min_fold=1,
     )
     return saved
 

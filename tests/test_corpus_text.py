@@ -829,55 +829,6 @@ def test_strip_boilerplate_rejects_oversized_span_list(spark):
     assert strip_boilerplate_spans(docs, small, k=8, max_spans=10).count() == 1
 
 
-def test_lsh_buckets_numpy_impl_matches_catalyst(spark):
-    """The Arrow/numpy bucket kernel (the measured 2.4x winner at 150k
-    vectors) must produce the SAME (id, table_id, bucket) rows as the
-    oracle-mirrored Catalyst fold on real fixture vectors."""
-    from linkorgs_software_spark.operators.ann import lsh_buckets
-
-    emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet").select(
-        "vec_id", "embedding"
-    )
-    kw = dict(vec_col="embedding", dim=64, n_planes=8, num_tables=4, seed=42)
-    a = {
-        (r.vec_id, r.table_id, r.bucket)
-        for r in lsh_buckets(emb, **kw).collect()
-    }
-    b = {
-        (r.vec_id, r.table_id, r.bucket)
-        for r in lsh_buckets(emb, impl="numpy", **kw).collect()
-    }
-    assert a == b and len(a) == emb.count() * 4
-
-
-def test_lsh_buckets_numpy_tolerates_null_and_ragged_vectors(spark):
-    """NULL / wrong-width vectors must not crash the Arrow kernel (ADVICE
-    r5): they produce NO bucket rows (posexplode of a NULL code array) —
-    a documented recall-only divergence from the catalyst impl; valid rows
-    still bucket identically to catalyst."""
-    from linkorgs_software_spark.operators.ann import lsh_buckets
-
-    rows = [
-        (1, [float(i) for i in range(8)]),
-        (2, None),
-        (3, [1.0, 2.0]),  # ragged: width != dim
-        (4, [float(-i) for i in range(8)]),
-    ]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-    kw = dict(vec_col="embedding", dim=8, n_planes=4, num_tables=2, seed=7)
-    got = {
-        (r.vec_id, r.table_id, r.bucket)
-        for r in lsh_buckets(emb, impl="numpy", **kw).collect()
-    }
-    assert {v for v, _, _ in got} == {1, 4}  # null/ragged drop, no crash
-    valid = emb.filter("vec_id in (1, 4)")
-    want = {
-        (r.vec_id, r.table_id, r.bucket)
-        for r in lsh_buckets(valid, **kw).collect()
-    }
-    assert got == want
-
-
 def test_recommended_n_planes_scale_rule():
     """The measured occupancy rule: planes grow with log2(corpus), clamped;
     the 10x scale-run sizes reproduce the measured good configs."""

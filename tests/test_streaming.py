@@ -544,7 +544,7 @@ def test_incremental_sink_idempotent_on_replay(spark, tmp_path):
     from linkorgs_software_spark.streaming.incremental import incremental_link as _  # noqa: F401
     from linkorgs_software_spark.config import LinkConfig
     from linkorgs_software_spark.plans.pipeline import link_orgs
-    from linkorgs_software_spark.sources.fixtures import extract_mentions
+    from linkorgs_software_spark.plans.transcripts import extract_mentions
 
     fx = gen_linkage_fixture(spark, n_entities=10, seed=7)
     names = [r.name for r in fx["org_x"].collect()]

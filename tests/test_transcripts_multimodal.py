@@ -1,24 +1,13 @@
-"""Transcript invariants (driver input_hint), mention extraction,
-checkpointer resumability, multimodal plumbing."""
+"""Transcript invariants (driver input_hint), mention extraction and
+checkpointer resumability."""
 
-import os
-
-import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from linkorgs_software_spark.config import LinkConfig, fixed_threshold_config
-from linkorgs_software_spark.functions.multimodal import (
-    extract_features,
-    frame_sample_plan,
-    gen_media_fixture,
-)
+from linkorgs_software_spark.config import fixed_threshold_config
 from linkorgs_software_spark.plans.pipeline import link_orgs
-from linkorgs_software_spark.sources.fixtures import (
-    extract_mentions,
-    gen_linkage_fixture,
-    gen_transcripts,
-)
+from linkorgs_software_spark.plans.transcripts import extract_mentions
+from linkorgs_software_spark.sources.fixtures import gen_linkage_fixture, gen_transcripts
 from linkorgs_software_spark.sources.io import StageCheckpointer
 
 
@@ -84,247 +73,3 @@ def test_checkpointer_resumes(spark, tmp_path):
     assert df1.count() == df2.count() == 5
     m = ckpt.metrics()
     assert m[0]["stage"] == "stage_a" and m[0]["rows"] == 5
-
-
-def test_media_feature_extraction_shape(spark):
-    media = gen_media_fixture(spark, 9)
-    feats = extract_features(media)
-    rows = feats.collect()
-    assert len(rows) == 9
-    for r in rows:
-        assert len(r.feature) == 16
-        assert r.n_bytes > 0
-    # deterministic across runs
-    again = {r.media_id: list(r.feature) for r in extract_features(media).collect()}
-    first = {r.media_id: list(r.feature) for r in rows}
-    assert first == again
-
-
-def test_media_decoder_gate_both_paths(spark):
-    """The decode gate: a registered real decoder is used on executors (the
-    registry is snapshot into the mapInPandas closure); unregistered kinds
-    keep the deterministic fallback."""
-    import numpy as np
-
-    from linkorgs_software_spark.functions import multimodal as mm
-
-    media = gen_media_fixture(spark, 9)
-    baseline = {r.media_id: list(r.feature) for r in extract_features(media).collect()}
-
-    def ones_decoder(payload: bytes) -> np.ndarray:
-        return np.ones(mm.FEATURE_DIM, dtype=np.float32)
-
-    prev = mm._DECODERS.get("image")
-    mm.register_decoder("image", ones_decoder)
-    try:
-        gated = extract_features(media).collect()
-    finally:  # restore the auto-wired decoder, don't just drop the override
-        if prev is None:
-            del mm._DECODERS["image"]
-        else:
-            mm._DECODERS["image"] = prev
-    for r in gated:
-        if r.kind == "image":
-            assert list(r.feature) == [1.0] * mm.FEATURE_DIM
-        else:  # audio/video kinds keep the deterministic fallback
-            assert list(r.feature) == baseline[r.media_id]
-
-
-def test_real_wav_decode_runs_in_sandbox(spark):
-    """A GENUINE media decode (not the hash fallback) must execute here:
-    the stdlib-``wave`` featurizer is auto-wired for audio when soundfile is
-    absent, so a valid WAV payload yields real per-segment RMS features —
-    loud-then-silent audio concentrates energy in the early segments —
-    while non-WAV audio bytes still fall back per payload."""
-    import io
-    import wave as wave_mod
-
-    import numpy as np
-
-    from linkorgs_software_spark.functions import multimodal as mm
-
-    assert "audio" in mm._DECODERS  # soundfile or stdlib wave — always wired
-
-    # 1 second of 16-bit mono: loud square wave then digital silence
-    buf = io.BytesIO()
-    with wave_mod.open(buf, "wb") as w:
-        w.setnchannels(1)
-        w.setsampwidth(2)
-        w.setframerate(8000)
-        loud = (np.tile([20000, -20000], 2000)).astype("<i2")
-        quiet = np.zeros(4000, dtype="<i2")
-        w.writeframes(np.concatenate([loud, quiet]).tobytes())
-    payload = buf.getvalue()
-
-    media = spark.createDataFrame(
-        [(0, "audio", payload, ("wav", 0, 0, 1000)),
-         (1, "audio", b"not a wav at all", ("bin", 0, 0, 0))],
-        mm.MEDIA_SCHEMA,
-    )
-    feats = {r.media_id: np.array(r.feature) for r in extract_features(media).collect()}
-
-    expect = mm._wave_audio_features(payload)
-    assert np.allclose(feats[0], expect, atol=1e-6)
-    # real decode, not the byte-histogram fake
-    assert not np.allclose(feats[0], mm._fake_decode_features(payload), atol=1e-6)
-    # energy concentrated in the loud first half
-    assert feats[0][: 8].sum() > 10 * feats[0][8:].sum()
-    # undecodable audio bytes fall back to the deterministic fake
-    assert np.allclose(feats[1], mm._fake_decode_features(b"not a wav at all"), atol=1e-6)
-
-
-def test_real_bmp_decode_runs_in_sandbox(spark):
-    """A genuine IMAGE decode must execute here too: the stdlib BMP reader
-    is auto-wired when PIL is absent, so a valid 24-bit BMP yields a real
-    luminance histogram — an all-dark image concentrates mass in the first
-    histogram bin — while non-BMP image bytes fall back per payload."""
-    import struct
-
-    import numpy as np
-
-    from linkorgs_software_spark.functions import multimodal as mm
-
-    assert "image" in mm._DECODERS  # PIL or stdlib BMP — always wired
-
-    w, h = 6, 4
-    stride = ((w * 3 + 3) // 4) * 4
-    raster = bytearray()
-    for _ in range(h):
-        row = bytes([10, 10, 10] * w)  # near-black BGR pixels
-        raster += row + b"\x00" * (stride - len(row))
-    header = (
-        b"BM"
-        + struct.pack("<IHHI", 14 + 40 + len(raster), 0, 0, 14 + 40)
-        + struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(raster), 0, 0, 0, 0)
-    )
-    payload = header + bytes(raster)
-
-    media = spark.createDataFrame(
-        [(0, "image", payload, ("bmp", w, h, 0)),
-         (1, "image", b"not an image", ("bin", 0, 0, 0))],
-        mm.MEDIA_SCHEMA,
-    )
-    feats = {r.media_id: np.array(r.feature) for r in extract_features(media).collect()}
-    expect = mm._bmp_image_features(payload)
-    assert np.allclose(feats[0], expect, atol=1e-6)
-    assert not np.allclose(feats[0], mm._fake_decode_features(payload), atol=1e-6)
-    assert feats[0][0] == 1.0 and feats[0][1:].sum() == 0.0  # all-dark image
-    assert np.allclose(feats[1], mm._fake_decode_features(b"not an image"), atol=1e-6)
-
-
-def test_frame_sampling_counts(spark):
-    media = gen_media_fixture(spark, 9)
-    frames = frame_sample_plan(media, every_ms=1000)
-    vids = media.filter("kind = 'video'").select("media_id", "meta.duration_ms").collect()
-    expect = sum(1 + (max(v.duration_ms - 1, 0)) // 1000 for v in vids)
-    assert frames.count() == expect
-
-
-def test_real_avi_video_decode_runs_in_sandbox(spark):
-    """The video modality's genuine decode: an uncompressed raw-DIB AVI is
-    RIFF-walked and luminance-featurized through the whole-media path
-    (auto-wired stdlib decoder), while a compressed/unknown payload falls
-    back to the deterministic fake per payload."""
-    import numpy as np
-
-    import linkorgs_software_spark.functions.multimodal as mm
-    from linkorgs_software_spark.functions.multimodal import (
-        extract_features,
-        gen_avi_payload,
-    )
-
-    payload = gen_avi_payload(w=16, h=8, n_frames=4, fps=10, seed=42)
-    media = spark.createDataFrame(
-        [(0, "video", payload, ("avi", 16, 8, 400)),
-         (1, "video", b"not a video", ("bin", 0, 0, 1000))],
-        mm.MEDIA_SCHEMA,
-    )
-    feats = {r.media_id: np.array(r.feature) for r in extract_features(media).collect()}
-    expect = mm._avi_video_features(payload)
-    assert np.allclose(feats[0], expect, atol=1e-6)
-    assert not np.allclose(feats[0], mm._fake_decode_features(payload), atol=1e-6)
-    # 4 flat-gray frames at 4 distinct levels -> exactly 4 bins at 0.5
-    assert np.isclose(np.linalg.norm(feats[0]), 1.0, atol=1e-6)
-    assert (np.isclose(feats[0], 0.5, atol=1e-6).sum()) == 4
-    assert np.allclose(feats[1], mm._fake_decode_features(b"not a video"), atol=1e-6)
-
-
-def test_avi_second_stream_video_uses_matching_geometry():
-    """A two-stream AVI (audio stream 0, video stream 1) must decode the
-    VIDEO stream's frames with the VIDEO stream's strf geometry: frame
-    chunks are filtered by the stream-number prefix ('01db'), and an audio
-    data chunk ('00wb') or the audio strf must never be mistaken for video
-    (previously the first strf won and every '##db'/'##dc' chunk was
-    collected regardless of stream)."""
-    import struct
-
-    import numpy as np
-
-    import linkorgs_software_spark.functions.multimodal as mm
-
-    def chunk(fcc, data):
-        pad = b"\x00" if len(data) & 1 else b""
-        return fcc + struct.pack("<I", len(data)) + data + pad
-
-    def lst(kind, data):
-        return chunk(b"LIST", kind + data)
-
-    w, h, nch = 16, 8, 3
-    stride = ((w * nch + 3) // 4) * 4
-    frame_sz = stride * h
-    avih = struct.pack("<14I", 100000, 0, 0, 0, 2, 0, 2, frame_sz, w, h, 0, 0, 0, 0)
-    strh_a = b"auds" + b"\x00" * 4 + b"\x00" * 48
-    strf_a = struct.pack("<HHIIHH", 1, 1, 8000, 16000, 2, 16)  # WAVEFORMATEX
-    strh_v = b"vids" + b"DIB " + b"\x00" * 48
-    strf_v = struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, frame_sz, 0, 0, 0, 0)
-    hdrl = lst(
-        b"hdrl",
-        chunk(b"avih", avih)
-        + lst(b"strl", chunk(b"strh", strh_a) + chunk(b"strf", strf_a))
-        + lst(b"strl", chunk(b"strh", strh_v) + chunk(b"strf", strf_v)),
-    )
-    row = bytes([100] * (w * nch)) + b"\x00" * (stride - w * nch)
-    movi = lst(
-        b"movi",
-        chunk(b"00wb", b"\x01\x02" * 100)  # audio data: must be ignored
-        + chunk(b"01db", row * h)
-        + chunk(b"01db", row * h),
-    )
-    body = b"AVI " + hdrl + movi
-    payload = b"RIFF" + struct.pack("<I", len(body)) + body
-
-    pw, ph, bpp, usec, frames = mm._parse_avi(payload)
-    assert (pw, ph, bpp) == (w, h, 24)
-    assert len(frames) == 2 and all(len(f) == frame_sz for f in frames)
-    v = mm._avi_video_features(payload)
-    assert np.isclose(np.linalg.norm(v), 1.0, atol=1e-6)
-    assert np.isclose(v.max(), 1.0, atol=1e-6)  # one flat gray level
-
-
-def test_frame_sample_then_decode_per_frame(spark):
-    """frame_sample_plan -> extract_frame_features: each sampled timestamp
-    decodes ITS OWN frame (10 fps, sampling every 100ms -> frame f at
-    f*100ms), and distinct frames yield distinct feature vectors."""
-    import numpy as np
-
-    import linkorgs_software_spark.functions.multimodal as mm
-    from linkorgs_software_spark.functions.multimodal import (
-        extract_frame_features,
-        frame_sample_plan,
-        gen_avi_payload,
-    )
-
-    payload = gen_avi_payload(w=16, h=8, n_frames=4, fps=10, seed=42)
-    media = spark.createDataFrame(
-        [(0, "video", payload, ("avi", 16, 8, 400))], mm.MEDIA_SCHEMA
-    )
-    frames = frame_sample_plan(media, every_ms=100)
-    out = {r.frame_ms: np.array(r.feature) for r in extract_frame_features(frames).collect()}
-    assert sorted(out) == [0, 100, 200, 300]
-    # each frame is one flat gray level -> a single hot histogram bin,
-    # different bin per frame
-    hot = {ms: int(np.argmax(v)) for ms, v in out.items()}
-    assert len(set(hot.values())) == 4
-    for v in out.values():
-        assert np.isclose(np.linalg.norm(v), 1.0, atol=1e-6)
-        assert np.isclose(v.max(), 1.0, atol=1e-6)
