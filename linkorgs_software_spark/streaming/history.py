@@ -132,7 +132,9 @@ def write_history_bucketed(
     bucket_cols: tuple[str, ...],
     num_buckets: int = 64,
 ) -> None:
-    """Idempotently (over)write ``df`` as this batch's history slice."""
+    """Idempotently (over)write ``df`` as this batch's history slice. Make
+    it the batch's last action: the insert refreshes the table, which
+    clears every cached frame reading it, so later actions recompute them."""
     spark = df.sparkSession
     stamped = df.withColumn("batch_id", F.lit(int(batch_id)).cast("int"))
     if _ensure_table(spark, table, path):

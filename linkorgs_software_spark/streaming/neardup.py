@@ -26,7 +26,8 @@ Per micro-batch N:
   2. cross-batch: survivors' buckets join the PRIOR history buckets
      (``batch_id != N`` — a replay must not anti-join its own previous
      attempt, as in ``dedup.py``), verified against the stored payload.
-  3. idempotent overwrite of ``docs/batch_id=N`` and both history slices.
+  3. idempotent overwrite of ``docs/batch_id=N`` and both history slices,
+     the bucketed insert last (``write_history_bucketed``).
 
 Hot buckets are df-capped like the batch operators (a viral document
 otherwise squares one posting list); embedding probes expand the
@@ -196,9 +197,14 @@ def _lsh_dedup_batch(
         fresh = survivors.join(dup_new, id_col, "left_anti")
     fresh = persist(fresh)
     # 3. idempotent per-batch overwrites: docs + history slices (history =
-    # the KEPT rows' slices of the shared frames — no second hashing pass)
+    # the KEPT rows' slices of the shared frames — no second hashing pass);
+    # the insert last, as its refresh clears `fresh` (it reads the table)
     fresh.write.mode("overwrite").parquet(os.path.join(out_dir, "docs", f"batch_id={batch_id}"))
     kept = fresh.select(F.col(id_col).alias("id"))
+    kept_p = batch_p.join(kept, "id", "left_semi") if cache_payload else payload_of(fresh)
+    kept_p.select(F.col("id").alias(hist_id), F.col("p").alias(hist_p)).write.mode(
+        "overwrite"
+    ).parquet(os.path.join(plain_dir, f"batch_id={batch_id}"))
     write_history_bucketed(
         keys.join(kept, "id", "left_semi").select(*key_cols, F.col("id").alias(hist_id)),
         hist_tbl,
@@ -207,10 +213,6 @@ def _lsh_dedup_batch(
         bucket_cols=tuple(key_cols),
         num_buckets=num_history_buckets,
     )
-    kept_p = batch_p.join(kept, "id", "left_semi") if cache_payload else payload_of(fresh)
-    kept_p.select(F.col("id").alias(hist_id), F.col("p").alias(hist_p)).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(plain_dir, f"batch_id={batch_id}"))
 
 
 @scoped_caches()
@@ -231,11 +233,8 @@ def neardup_batch(
 ) -> None:
     """Process one micro-batch (public, so replay behaviour is testable).
 
-    Decorated with ``scoped_caches()``: the batch persists its banded frame,
-    shingle sets, survivors and kept docs, and a stream runs one batch per
-    trigger — without per-batch release a long-running query would pin
-    those frames batch over batch (growing executor storage AND the driver
-    registry without bound).
+    Decorated with ``scoped_caches()``: every frame the batch persists is
+    released when it ends, so a stream never pins frames batch over batch.
 
     ``compact_every``: when set, once ``compact_every`` committed batch
     partitions accumulate, the bucket-table partitions older than this
@@ -290,10 +289,6 @@ def embed_neardup_batch(
     occupancy_warn_factor: float | None = 4.0,
 ) -> None:
     """Process one micro-batch (public, so replay behaviour is testable).
-
-    Decorated with ``scoped_caches()`` like the text sibling: every frame
-    persisted during the batch is released when the batch ends, so a
-    long-running stream cannot accumulate pinned frames batch over batch.
 
     ``multiprobe`` mirrors ``embedding_neardup_lsh(multiprobe=)``: > 0
     additionally probes hamming-1 (or -2) neighbor buckets so moderately

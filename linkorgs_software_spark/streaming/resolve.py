@@ -48,9 +48,11 @@ Per micro-batch N:
      batch mints byte-identical ids.
   4. append the directory delta: every new entity's aliases, plus each
      MATCHED name whose exact normalized form was new to the directory
-     (distance > 0 — an exact-form alias would have matched at 0). Both
-     slices written to ``batch_id=N`` (idempotent overwrite), grams
-     bucketed via ``write_history_bucketed``.
+     (distance > 0 — an exact-form alias would have matched at 0),
+     written to ``entities/batch_id=N`` (idempotent overwrite). Last,
+     after the batch's caches are released, the gram delta is indexed from
+     that slice and inserted (``write_history_bucketed``): the insert's
+     refresh would clear every cached frame that reads the grams table.
 
 Append-only semantics, stated honestly: within the stream the directory
 never MERGES two existing entities — a mention similar to aliases of two
@@ -92,7 +94,6 @@ from .history import (
 from .incremental import bind_batch, run_stream
 
 
-@scoped_caches()
 def resolve_batch(
     batch_df: DataFrame,
     batch_id: int,
@@ -135,139 +136,139 @@ def resolve_batch(
             bucketed=(grams_tbl, grams_dir),
             plain_paths=(entities_dir,),
         )
+    entities_slice = f"{entities_dir}/batch_id={batch_id}"
 
-    prep = persist(prepare_side(batch_df, name_col, "_rid", cfg))
-    # distinct-name granularity: every downstream join is per normalized
-    # name; the final assignment fan-out back to rows is one equi-join.
-    # The node id IS prepare_side's content-hash id (xxhash64(name_norm)),
-    # so the fan-out join key already sits on every prepared row. The
-    # frame carries each name's scoring q-gram set (``name_sets``), built
-    # once per batch for both the match and the create scoring.
-    names = persist(
-        name_sets(prep.select(NORM_COL, F.col("_rid").alias("_nid")).distinct(), cfg)
-    )
-    tri = persist(gram_index(names, "_nid", cfg))
-    # One cheap count on the cached distinct-name frame bounds every
-    # gram's posting list in `tri` and in any slice of it, so with
-    # n_names <= max_block_df the blocking core skips the batch-side df
-    # caps outright (the history side still caps — its posting lists
-    # track directory lifetime).
-    n_names = names.count()
+    with scoped_caches():
+        prep = persist(prepare_side(batch_df, name_col, "_rid", cfg))
+        # distinct-name granularity: every downstream join is per normalized
+        # name; the final assignment fan-out back to rows is one equi-join.
+        # The node id IS prepare_side's content-hash id (xxhash64(name_norm)),
+        # so the fan-out join key already sits on every prepared row. The
+        # frame carries each name's scoring q-gram set (``name_sets``), built
+        # once per batch for both the match and the create scoring.
+        names = persist(
+            name_sets(prep.select(NORM_COL, F.col("_rid").alias("_nid")).distinct(), cfg)
+        )
+        tri = persist(gram_index(names, "_nid", cfg))
+        # One cheap count on the cached distinct-name frame bounds every
+        # gram's posting list in `tri` and in any slice of it, so with
+        # n_names <= max_block_df the blocking core skips the batch-side df
+        # caps outright (the history side still caps — its posting lists
+        # track directory lifetime).
+        n_names = names.count()
 
-    # ---- 2. MATCH against the prior directory -------------------------
-    prior_grams = read_prior_history(spark, grams_tbl, grams_dir, batch_id)
-    prior_ent_paths = prior_batch_paths(spark, entities_dir, batch_id)
-    matched = None
-    if prior_grams is not None and prior_ent_paths:
-        cand = shared_gram_pairs(
-            tri,
-            prior_grams.select("gram", "alias_id"),
+        # ---- 2. MATCH against the prior directory ---------------------
+        prior_grams = read_prior_history(spark, grams_tbl, grams_dir, batch_id)
+        prior_ent_paths = prior_batch_paths(spark, entities_dir, batch_id)
+        matched = None
+        if prior_grams is not None and prior_ent_paths:
+            cand = shared_gram_pairs(
+                tri,
+                prior_grams.select("gram", "alias_id"),
+                cfg,
+                x_id="_nid",
+                y_id="alias_id",
+                x_count=n_names,
+            )
+            # alias rows are scored as listed, never deduplicated by alias_id:
+            # a compact_directory crash leaves one alias under its old and its
+            # merged entity id, and the min (distance, entity_id) pick below
+            # resolves the pair to the merged one
+            aliases = name_sets(
+                spark.read.parquet(*prior_ent_paths).select("alias_id", "entity_id", NORM_COL),
+                cfg,
+            )
+            pairs = score_name_pairs(cand, names, aliases, cfg, x_id="_nid", y_id="alias_id")
+            # best alias (NULL distance last), then max_dist: a filter above
+            # the aggregate stays out of the scoring join's condition, where
+            # the distance would run twice per candidate
+            matched = persist(
+                pairs.groupBy("_nid")
+                .agg(
+                    F.min_by(
+                        F.struct(F.col("entity_id_y").alias("entity_id"), F.col(DIST_COL)),
+                        F.struct(F.coalesce(DIST_COL, F.lit(float("inf"))), "entity_id_y"),
+                    ).alias("_best")
+                )
+                .select("_nid", "_best.entity_id", "_best.stringdist")
+                .filter(F.col(DIST_COL) <= F.lit(float(max_dist)))
+            )
+
+        # ---- 3. CREATE entities for the unmatched names ---------------
+        unmatched, utri = names, tri
+        if matched is not None:
+            unmatched = names.join(matched, "_nid", "left_anti")
+            utri = tri.join(matched.select("_nid"), "_nid", "left_anti")
+        # candidate self-join over the unmatched slice of the PERSISTED batch
+        # gram index (candidate_pairs would re-explode both sides from
+        # scratch); the slice's posting lists are bounded by n_names too
+        cand_new = shared_gram_pairs(
+            utri.withColumnRenamed("_nid", "x_id"),
+            utri.withColumnRenamed("_nid", "y_id"),
             cfg,
-            x_id="_nid",
-            y_id="alias_id",
+            x_id="x_id",
+            y_id="y_id",
             x_count=n_names,
-        )
-        # alias rows are scored as listed, never deduplicated by alias_id:
-        # a compact_directory crash leaves one alias under its old and its
-        # merged entity id, and the min (distance, entity_id) pick below
-        # resolves the pair to the merged one
-        aliases = name_sets(
-            spark.read.parquet(*prior_ent_paths).select("alias_id", "entity_id", NORM_COL),
+            y_count=n_names,
+        ).filter(F.col("x_id") < F.col("y_id"))
+        scored = score_name_pairs(
+            cand_new,
+            names.withColumnRenamed("_nid", "x_id"),
+            names.withColumnRenamed("_nid", "y_id"),
             cfg,
+            max_dist=create_max_dist,
         )
-        verified = score_name_pairs(
-            cand, names, aliases, cfg, x_id="_nid", y_id="alias_id"
-        ).filter(F.col(DIST_COL) <= F.lit(float(max_dist)))
-        matched = persist(
-            verified.groupBy("_nid")
-            .agg(
-                F.min_by(
-                    F.struct(F.col("entity_id_y").alias("entity_id"), F.col(DIST_COL)),
-                    F.struct(F.col(DIST_COL), F.col("entity_id_y")),
-                ).alias("_best")
+        edges = persist(scored.select(F.col("x_id").alias("src"), F.col("y_id").alias("dst")))
+        if edges.limit(1).count() == 0:
+            # no similar pairs among the new names: all singletons — skip the
+            # iterative CC (whose per-round jobs would re-drive nothing)
+            created = persist(unmatched.select("_nid", NORM_COL, F.col("_nid").alias("entity_id")))
+        else:
+            comp = connected_components(edges)
+            created = persist(
+                unmatched.join(comp.withColumnRenamed("id", "_nid"), "_nid", "left")
+                .select(
+                    "_nid",
+                    NORM_COL,
+                    F.coalesce(F.col("component"), F.col("_nid")).alias("entity_id"),
+                )
             )
-            .select("_nid", "_best.entity_id", "_best.stringdist")
-        )
 
-    # ---- 3. CREATE entities for the unmatched names -------------------
-    unmatched, utri = names, tri
-    if matched is not None:
-        unmatched = names.join(matched, "_nid", "left_anti")
-        utri = tri.join(matched.select("_nid"), "_nid", "left_anti")
-    # candidate self-join over the unmatched slice of the PERSISTED batch
-    # gram index (candidate_pairs would re-explode both sides from
-    # scratch); the slice's posting lists are bounded by n_names too
-    cand_new = shared_gram_pairs(
-        utri.withColumnRenamed("_nid", "x_id"),
-        utri.withColumnRenamed("_nid", "y_id"),
-        cfg,
-        x_id="x_id",
-        y_id="y_id",
-        x_count=n_names,
-        y_count=n_names,
-    ).filter(F.col("x_id") < F.col("y_id"))
-    scored = score_name_pairs(
-        cand_new,
-        names.withColumnRenamed("_nid", "x_id"),
-        names.withColumnRenamed("_nid", "y_id"),
-        cfg,
-        max_dist=create_max_dist,
-    )
-    edges = persist(scored.select(F.col("x_id").alias("src"), F.col("y_id").alias("dst")))
-    if edges.limit(1).count() == 0:
-        # no similar pairs among the new names: all singletons — skip the
-        # iterative CC (whose per-round jobs would re-drive nothing)
-        created = persist(unmatched.select("_nid", NORM_COL, F.col("_nid").alias("entity_id")))
-    else:
-        comp = connected_components(edges)
-        created = persist(
-            unmatched.join(comp.withColumnRenamed("id", "_nid"), "_nid", "left")
-            .select(
-                "_nid",
-                NORM_COL,
-                F.coalesce(F.col("component"), F.col("_nid")).alias("entity_id"),
+        # ---- assignment output (idempotent overwrite) -----------------
+        assign = created.select(
+            "_nid",
+            "entity_id",
+            F.lit(None).cast("double").alias("stringdist"),
+            F.lit(False).alias("matched_prior"),
+        )
+        if matched is not None:
+            assign = matched.withColumn("matched_prior", F.lit(True)).unionByName(assign)
+        out_rows = prep.join(assign.withColumnRenamed("_nid", "_rid"), "_rid")
+        out_rows.write.mode("overwrite").parquet(f"{assign_dir}/batch_id={batch_id}")
+
+        # ---- 4. directory delta: new entities' aliases + novel forms --
+        new_aliases = created.select("_nid", NORM_COL, "entity_id")
+        if matched is not None:
+            novel_matched = (
+                matched.filter(F.col("stringdist") > 0)
+                .join(names, "_nid")
+                .select("_nid", NORM_COL, "entity_id")
             )
-        )
+            new_aliases = new_aliases.unionByName(novel_matched)
+        new_aliases.select(
+            F.col("_nid").alias("alias_id"), "entity_id", NORM_COL
+        ).write.mode("overwrite").parquet(entities_slice)
 
-    # ---- assignment output (idempotent overwrite) ---------------------
-    assign_created = created.select(
-        "_nid",
-        "entity_id",
-        F.lit(None).cast("double").alias("stringdist"),
-        F.lit(False).alias("matched_prior"),
-    )
-    if matched is not None:
-        assign = matched.withColumn("matched_prior", F.lit(True)).unionByName(
-            assign_created
-        )
-    else:
-        assign = assign_created
-    out_rows = prep.join(assign.withColumnRenamed("_nid", "_rid"), "_rid")
-    out_rows.write.mode("overwrite").parquet(f"{assign_dir}/batch_id={batch_id}")
-
-    # ---- 4. directory delta: new entities' aliases + novel alias forms
-    new_aliases = created.select("_nid", NORM_COL, "entity_id")
-    if matched is not None:
-        novel_matched = (
-            matched.filter(F.col("stringdist") > 0)
-            .join(names, "_nid")
-            .select("_nid", NORM_COL, "entity_id")
-        )
-        new_aliases = new_aliases.unionByName(novel_matched)
-    new_aliases = persist(new_aliases.withColumnRenamed("_nid", "alias_id"))
+    # last, with nothing cached: the insert's refresh clears the frames
+    # reading the grams table (module docstring, step 4)
     write_history_bucketed(
-        tri.join(
-            new_aliases.select(F.col("alias_id").alias("_nid")), "_nid", "left_semi"
-        ).select("gram", F.col("_nid").alias("alias_id")),
+        gram_index(spark.read.parquet(entities_slice), "alias_id", cfg).select("gram", "alias_id"),
         grams_tbl,
         grams_dir,
         batch_id,
         bucket_cols=("gram",),
         num_buckets=num_history_buckets,
     )
-    new_aliases.select("alias_id", "entity_id", NORM_COL).write.mode(
-        "overwrite"
-    ).parquet(f"{entities_dir}/batch_id={batch_id}")
 
 
 def compact_directory(

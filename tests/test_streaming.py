@@ -1080,15 +1080,14 @@ def test_batch_releases_its_caches(spark, stored_rdds, tmp_path, batch_fn):
     assert release_caches() == 0
 
 
-# Most Spark jobs per call seen on local[4] at the commit before each flow
-# was shared, one count per batch of ``_job_batches``: the near-dup batches
-# before the two shared one flow (six runs), resolve_batch before it called
-# the blocking and scoring modules (six runs read (26, 43-44, 54), an
-# earlier set (26, 43-46, 54-55)).
+# Most Spark jobs per call seen on local[4], one count per batch of
+# ``_job_batches``, over two sets of six runs once each batch wrote its
+# bucketed history last (neardup_batch (16-18, 27-29), embed_neardup_batch
+# (12-13, 24-25), resolve_batch (23, 33, 37) in every run).
 _BATCH_JOBS = {
-    "neardup_batch": (17, 38),
-    "embed_neardup_batch": (13, 32),
-    "resolve_batch": (26, 46, 55),
+    "neardup_batch": (18, 29),
+    "embed_neardup_batch": (13, 25),
+    "resolve_batch": (23, 33, 37),
 }
 # (table slice, its columns, plain slice, its columns) a resuming stream reads
 _BATCH_HISTORY = {
@@ -1148,6 +1147,88 @@ def test_batch_jobs_and_history_layout(spark, tmp_path, batch_fn):
     assert [c for c in hist.columns if c != "batch_id"] == table_cols
     plain_df = spark.read.parquet(os.path.join(out, "history", plain))
     assert [c for c in plain_df.columns if c != "batch_id"] == plain_cols
+
+
+def test_resolve_history_insert_runs_after_batch_caches_release(
+    spark, stored_rdds, tmp_path, monkeypatch
+):
+    """The grams insert refreshes the table, and a refresh clears every
+    cached frame whose plan reads it, so ``resolve_batch`` inserts last,
+    after its caches are released: when it calls ``write_history_bucketed``
+    no frame the batch persisted is still cached."""
+    from linkorgs_software_spark.streaming import resolve
+
+    real = resolve.write_history_bucketed
+    leaked = []
+
+    def insert(*args, **kw):
+        leaked.append(stored_rdds() - before)
+        return real(*args, **kw)
+
+    monkeypatch.setattr(resolve, "write_history_bucketed", insert)
+    batches, kw = _job_batches(spark, "resolve_batch")
+    out = str(tmp_path / "resolve_insert_last")
+    for batch_id, df in enumerate(batches):
+        before = stored_rdds()
+        resolve.resolve_batch(df, batch_id, out, **kw)
+    assert leaked == [set()] * len(batches), leaked
+
+
+@pytest.mark.parametrize("batch_fn", ["neardup_batch", "embed_neardup_batch"])
+def test_neardup_payload_slice_precedes_bucket_insert(spark, tmp_path, monkeypatch, batch_fn):
+    """The near-dup core writes its payload slice before the bucketed
+    insert, whose table refresh clears the cached cross-batch verify: when
+    it calls ``write_history_bucketed``, ``history/<payload>/batch_id=N``
+    is already committed."""
+    from linkorgs_software_spark import streaming
+    from linkorgs_software_spark.streaming import neardup
+
+    real = neardup.write_history_bucketed
+    plain = _BATCH_HISTORY[batch_fn][2]
+    out = str(tmp_path / batch_fn)
+    committed = []
+
+    def insert(df, table, path, batch_id, **kw):
+        slice_dir = os.path.join(out, "history", plain, f"batch_id={batch_id}")
+        committed.append(os.path.exists(os.path.join(slice_dir, "_SUCCESS")))
+        return real(df, table, path, batch_id, **kw)
+
+    monkeypatch.setattr(neardup, "write_history_bucketed", insert)
+    batches, kw = _job_batches(spark, batch_fn)
+    for batch_id, df in enumerate(batches):
+        getattr(streaming, batch_fn)(df, batch_id, out, **kw)
+    assert committed == [True] * len(batches), committed
+
+
+def test_resolve_gram_history_is_the_entities_gram_index(spark, tmp_path):
+    """The grams table is derived state: after three resolver batches each
+    of its slices holds exactly ``gram_index`` over the entities slice of
+    the same batch."""
+    from linkorgs_software_spark.operators.blocking import gram_index
+    from linkorgs_software_spark.streaming import resolve_batch
+    from linkorgs_software_spark.streaming.history import history_table_name, list_batch_ids
+
+    batches, kw = _job_batches(spark, "resolve_batch")
+    out = str(tmp_path / "resolve_grams")
+    for batch_id, df in enumerate(batches):
+        resolve_batch(df, batch_id, out, **kw)
+    grams = {
+        tuple(r)
+        for r in spark.table(history_table_name(out, "grams"))
+        .select("gram", "alias_id", "batch_id")
+        .collect()
+    }
+    entities_dir = os.path.join(out, "history", "entities")
+    ids = list_batch_ids(spark, entities_dir)
+    assert ids == [0, 1, 2]
+    want = set()
+    for b in ids:
+        slice_df = spark.read.parquet(os.path.join(entities_dir, f"batch_id={b}"))
+        want |= {
+            (r.gram, r.alias_id, b)
+            for r in gram_index(slice_df, "alias_id", LinkConfig()).collect()
+        }
+    assert grams == want
 
 
 def test_compact_directory_merges_split_entities(spark, tmp_path):
