@@ -48,17 +48,16 @@ def gram_set_expr(name_col: str, cfg: LinkConfig) -> Column:
 
 
 def gram_index(df: DataFrame, id_col: str, cfg: LinkConfig) -> DataFrame:
-    """Distinct ``(id, gram)`` inverted index for one side.
+    """``(id, gram, n_grams)`` inverted index over DISTINCT ids (an
+    ``scoring.index_side`` frame, the resolver's entities slices):
+    ``n_grams`` is the id's gram count before any df cap.
 
-    Distinct per (id, gram) without a dedup aggregation of its own: the
-    gram set is ``array_distinct`` per row and the ids are deduplicated
-    first, so each id explodes exactly once. A ``dropDuplicates([id,
-    gram])`` here would be a no-op that still costs a full hash
-    aggregation over the exploded index on every build."""
-    uniq = df.select(id_col, NORM_COL).dropDuplicates([id_col])
-    return uniq.select(
-        F.col(id_col), F.explode(gram_set_expr(NORM_COL, cfg)).alias("gram")
-    )
+    Ids must be distinct, and nothing here deduplicates them: a repeated
+    id explodes twice, which double-counts its shared grams in
+    ``shared_gram_pairs`` and lets in extra candidates."""
+    sets = df.select(id_col, gram_set_expr(NORM_COL, cfg).alias("_gs"))
+    sets = sets.withColumn("n_grams", F.size("_gs").cast("long"))
+    return sets.select(id_col, F.explode("_gs").alias("gram"), "n_grams")
 
 
 def shared_gram_rule(shared: str, n_grams: str, cfg: LinkConfig) -> Column:
@@ -170,27 +169,23 @@ def induced_stop_grams(
 ) -> DataFrame:
     """The grams a df cap would DROP from the blocking join, with their
     document frequency — the inspectable face of ``max_block_df`` /
-    ``recommended_block_df``. Run it before a big linkage to see what the
-    cap costs: the output is precisely the stop-gram vocabulary
-    (``"corp"``, ``"inc"``, shared suffix trigrams) whose posting lists
-    would otherwise square inside the gram join, and precisely the grams
-    ``apply_df_cap`` removes at this cap. df-based stopword induction as
-    a first-class diagnostic, sibling of ``assess.skew_profile`` (which
-    profiles an arbitrary pre-aggregated key; this one owns the
-    normalize → trigram pipeline so its numbers match the real join).
+    ``recommended_block_df``: the stop-gram vocabulary (``"corp"``,
+    ``"inc"``, shared suffix trigrams) whose posting lists would otherwise
+    square inside the gram join, exactly the grams ``apply_df_cap``
+    removes at this cap. Sibling of ``assess.skew_profile``, which
+    profiles an arbitrary pre-aggregated key.
 
     ``prep`` is a prepared side (``functions.normalize.prepare_side``
-    output, as fed to ``candidate_pairs``). ``cap=None`` sizes the cap by
-    the measured scaling law ``recommended_block_df(n_names)`` — one
-    scalar count, the same price ``ann.recommended_n_planes`` pays.
+    output). ``cap=None`` sizes the cap by ``recommended_block_df(n_names)``
+    — one scalar count, the price ``ann.recommended_n_planes`` pays.
 
     Returns ``(gram, df, df_share, cap)``: posting-list size, its share
-    of the side's distinct names, and the cap used (so a profile row is
-    self-describing). Scale shape: explode → one map-side-combinable
-    groupBy(gram) count → filter; no joins, no windows, output bounded by
-    the (tiny) over-cap vocabulary.
+    of the side's distinct names, and the cap used. Scale shape: explode
+    → one map-side-combinable groupBy(gram) count → filter.
     """
-    index = gram_index(prep, id_col, cfg)
+    from .scoring import index_side  # scoring imports this module
+
+    index = gram_index(index_side(prep, id_col, cfg), id_col, cfg)
     n_names = index.select(id_col).distinct().count()
     used_cap = recommended_block_df(n_names) if cap is None else int(cap)
     return (
@@ -219,13 +214,14 @@ def shared_gram_pairs(
     y_count: int | None = None,
 ) -> DataFrame:
     """The blocking rule over two prebuilt ``gram_index`` frames, and the
-    engine's one way from gram indexes to name-pair candidates
-    (``candidate_pairs``; the streaming resolver's match and create steps,
-    which reuse one persisted index). In order: the denominator
-    ``n_grams_x`` = |distinct grams(x)|, taken BEFORE any cap so the
-    >= ceil(frac · n) contract stays monotone under capping; the df cap
-    (``apply_df_cap``) per side; salting when ``cfg.salt_buckets > 1``;
-    the gram equi-join, shared count per (x, y) and ``shared_gram_rule``.
+    engine's one way from gram indexes to name-pair candidates. Ids must
+    be distinct per side: a repeated id double-counts its shared grams and
+    lets in extra candidates. In order: the df cap
+    (``apply_df_cap``) per side, which keeps x's pre-cap ``n_grams`` so
+    the >= ceil(frac · n) contract stays monotone under capping; salting
+    when ``cfg.salt_buckets > 1``; the gram equi-join, shared count per
+    (x, y) and ``shared_gram_rule``. ``y_tri`` needs only ``(y_id,
+    gram)``.
 
     ``x_count`` / ``y_count``: an already-known upper bound on the distinct
     ids of that side's index. A gram's posting list is bounded by it, so
@@ -238,8 +234,8 @@ def shared_gram_pairs(
     one index under two id names and filters ``x_id < y_id`` afterwards;
     Catalyst pushes that filter into the gram join.
     """
-    x_ntri = x_tri.groupBy(x_id).agg(F.count(F.lit(1)).alias("n_grams_x"))
-
+    x_tri = x_tri.withColumnRenamed("n_grams", "n_grams_x")
+    y_tri = y_tri.drop("n_grams")
     if cfg.max_block_df is not None:
         if x_count is None or x_count > cfg.max_block_df:
             x_tri = apply_df_cap(x_tri, "gram", cfg.max_block_df)
@@ -254,13 +250,12 @@ def shared_gram_pairs(
     else:
         join_keys = ["gram"]
 
-    shared = (
+    return (
         x_tri.join(y_tri, join_keys)
-        .groupBy(x_id, y_id)
+        .groupBy(x_id, y_id, "n_grams_x")
         .agg(F.count(F.lit(1)).alias(SHARED_COL))
-    )
-    return shared.join(x_ntri, x_id).filter(
-        shared_gram_rule(SHARED_COL, "n_grams_x", cfg)
+        .filter(shared_gram_rule(SHARED_COL, "n_grams_x", cfg))
+        .select(x_id, y_id, SHARED_COL, "n_grams_x")
     )
 
 
@@ -274,11 +269,10 @@ def candidate_pairs(
     x_count: int | None = None,
     y_count: int | None = None,
 ) -> DataFrame:
-    """Blocked candidate pairs ``(x_id, y_id, shared_grams, n_grams_x)``:
-    one ``gram_index`` per side, then ``shared_gram_pairs``.
-
-    ``x_prep`` / ``y_prep`` carry ``name_norm`` + the hash id (see
-    functions/normalize.prepare_side).
+    """Blocked candidate pairs ``(x_id, y_id, shared_grams, n_grams_x)``
+    of two prepared sides (``functions.normalize.prepare_side`` output):
+    a wrapper that indexes each side (``scoring.index_side``, then
+    ``gram_index``) and runs ``shared_gram_pairs``.
 
     ``x_count`` / ``y_count`` bound the distinct values of that side's id
     column (see ``shared_gram_pairs``); never add an action just to learn
@@ -286,15 +280,12 @@ def candidate_pairs(
     ``prepare_side`` ids (content hashes of the name); ids supplied from
     outside can outnumber names.
     """
-    return shared_gram_pairs(
-        gram_index(x_prep, x_id, cfg),
-        gram_index(y_prep, y_id, cfg),
-        cfg,
-        x_id=x_id,
-        y_id=y_id,
-        x_count=x_count,
-        y_count=y_count,
-    )
+    from .scoring import index_side  # scoring imports this module
+
+    x_tri = gram_index(index_side(x_prep, x_id, cfg), x_id, cfg)
+    y_tri = gram_index(index_side(y_prep, y_id, cfg), y_id, cfg)
+    kw = dict(x_id=x_id, y_id=y_id, x_count=x_count, y_count=y_count)
+    return shared_gram_pairs(x_tri, y_tri, cfg, **kw)
 
 
 def sorted_neighborhood_pairs(

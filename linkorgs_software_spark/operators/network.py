@@ -14,8 +14,9 @@ Spark-first: both directional matches reuse the SAME trigram blocking +
 scoring operators (the north rule's fixed blocking key), so no new join
 machinery exists here. The directory is treated as a regular (possibly
 huge — 0.5e9 aliases in the reference) side: AQE broadcasts it when it is
-actually small; nothing forces a broadcast. ``link_orgs`` calibrates both
-directions in one ``calibrate`` batch with its raw match.
+actually small; nothing forces a broadcast. ``link_orgs`` indexes the
+directory once for both directions and calibrates them in one
+``calibrate`` batch with its raw match.
 """
 
 from __future__ import annotations
@@ -23,12 +24,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..config import LinkConfig
+from ..config import FALLBACK_MAX_DIST, LinkConfig
 from ..functions.normalize import NORM_COL, prepare_side
-from .blocking import candidate_pairs
 from .calibrate import calibrated_threshold
 from .dedup import keep_min_per_group
-from .scoring import DIST_COL, score_pairs
+from .scoring import DIST_COL, IndexedSide, index_side, indexed, match_sides
 
 ALIAS_ID = "alias_id"
 
@@ -54,53 +54,59 @@ def match_to_directory(
     out_dist: str,
     calibration: tuple[float, int, int] | None = None,
 ) -> DataFrame:
-    """Closest directory entities per input name.
+    """Closest directory entities per input name, from a prepared side and
+    a ``prepare_directory`` frame: a wrapper that indexes both and runs
+    ``directory_matches``.
 
-    Returns ``(side_id, name_norm, canonical_id, <out_dist>)`` — one row per
-    (name, canonical_id), the minimum distance among that entity's aliases.
-    ``calibration``: a precomputed ``(thr, n_side, n_dir)``; None resolves it here.
+    ``calibration``: a precomputed ``(thr, n_side, n_dir)``; None
+    calibrates here when ``cfg.ave_match_number_per_alias_network`` is set
+    (its distinct-name counts bound the blocking cap).
     """
-    # Same threshold priority as the raw stage (reference passes
-    # MaxDist_network + AveMatchNumberPerAlias_network through the identical
-    # code path, LinkOrgs_LinkOrgs.R:610-617): a non-None ave knob
-    # recalibrates and overrides the fixed threshold.
-    n_side = n_dir = None
-    if calibration is not None:
-        thr, n_side, n_dir = calibration
-    elif cfg.ave_match_number_per_alias_network is not None:
-        # recycle the calibration's exact distinct-name counts as the
-        # blocking cap's posting-list bounds (candidate_pairs docstring)
-        thr, n_side, n_dir = calibrated_threshold(
+    if calibration is None and cfg.ave_match_number_per_alias_network is not None:
+        calibration = calibrated_threshold(
             side_prep, dir_prep, cfg, k=cfg.ave_match_number_per_alias_network,
             return_counts=True,
         )
-    elif cfg.max_dist_network is not None:
-        thr = cfg.max_dist_network
-    else:
-        from ..config import FALLBACK_MAX_DIST
+    side = indexed(index_side(side_prep, side_id, cfg), side_id, cfg)
+    dir_names = index_side(dir_prep, ALIAS_ID, cfg, carry=("canonical_id",))
+    return directory_matches(
+        side, indexed(dir_names, ALIAS_ID, cfg), cfg,
+        out_dist=out_dist, calibration=calibration,
+    )
 
-        thr = FALLBACK_MAX_DIST
-    cands = candidate_pairs(
-        side_prep, dir_prep, cfg, x_id=side_id, y_id=ALIAS_ID,
-        x_count=n_side, y_count=n_dir,
-    )
-    scored = score_pairs(
-        cands, side_prep, dir_prep, cfg, x_id=side_id, y_id=ALIAS_ID, max_dist=thr
-    )
-    # No forced broadcast: the reference's real directory is ~0.5e9 aliases
-    # (LinkOrgs README.md:21-23) — far beyond broadcast range. Catalyst/AQE
-    # broadcasts automatically when the directory is actually small.
-    hits = (
-        scored.join(dir_prep.select(ALIAS_ID, "canonical_id"), ALIAS_ID)
-        .select(
-            F.col(side_id),
-            F.col("name_norm_x").alias(NORM_COL),
-            "canonical_id",
-            F.col(DIST_COL).alias(out_dist),
-        )
+
+def directory_matches(
+    side: IndexedSide,
+    directory: IndexedSide,
+    cfg: LinkConfig,
+    *,
+    out_dist: str,
+    calibration: tuple[float, int | None, int | None] | None = None,
+) -> DataFrame:
+    """Closest directory entities per input name, over an indexed side and
+    an indexed directory (``index_side`` rows carrying ``canonical_id``).
+
+    Returns ``(<side id>, name_norm, canonical_id, <out_dist>)`` — one row
+    per (name, canonical_id), the minimum distance among that entity's
+    aliases. ``calibration``: ``(thr, n_side, n_dir)``; None uses the
+    fixed threshold (``cfg.max_dist_network``, else the reference default).
+    """
+    # Same threshold priority as the raw stage (reference passes
+    # MaxDist_network + AveMatchNumberPerAlias_network through the identical
+    # code path, LinkOrgs_LinkOrgs.R:610-617).
+    if calibration is None:
+        fixed = cfg.max_dist_network
+        calibration = (FALLBACK_MAX_DIST if fixed is None else fixed, None, None)
+    thr, n_side, n_dir = calibration
+    scored = match_sides(side, directory, cfg, x_count=n_side, y_count=n_dir, max_dist=thr)
+    hits = scored.select(
+        F.col(side.id),
+        F.col("name_norm_x").alias(NORM_COL),
+        F.col("canonical_id_y").alias("canonical_id"),
+        F.col(DIST_COL).alias(out_dist),
     )
     return keep_min_per_group(
-        hits, [side_id, "canonical_id"], out_dist, tiebreak_cols=[NORM_COL]
+        hits, [side.id, "canonical_id"], out_dist, tiebreak_cols=[NORM_COL]
     )
 
 
@@ -126,16 +132,10 @@ def fuse_scores(
               + na20(stringdist)`` per row (``LinkOrgs_LinkOrgs.R:726-741``);
     the per-pair minimum and dedup happen downstream.
     """
-    parts = []
-    if z_raw is not None:
-        parts.append(z_raw)
-    if z_network is not None:
-        parts.append(z_network)
+    parts = [p for p in (z_raw, z_network) if p is not None]
     if not parts:
         raise ValueError("fuse_scores: need at least one of z_raw / z_network")
-    z = parts[0]
-    for p in parts[1:]:
-        z = z.unionByName(p, allowMissingColumns=True)
+    z = parts[0] if len(parts) == 1 else z_raw.unionByName(z_network, allowMissingColumns=True)
     for c in (DIST_COL, "netdist_x", "netdist_y"):
         if c not in z.columns:
             z = z.withColumn(c, F.lit(None).cast("double"))

@@ -5,14 +5,16 @@ Reference: candidates surviving the shared-trigram filter are scored with
 (``LinkOrgs/R/LinkOrgs_PFuzzyDiscreteInternal.R:140-148``) — a theta join
 realized, as in every Spark ER engine, as block → score → filter.
 
-The names needed for scoring are attached by two equi-joins against the
-deduplicated (id, name) side tables (the reference's positional
-``cbind(x[ix,], y[iy,])`` re-join — ``PFuzzyDiscreteFullFxn.R:84-88``).
-``repartitionByRange`` on the pair key before a pandas-UDF scorer keeps
-Arrow batches balanced when block sizes are skewed.
+Each input is indexed once (``index_side``: its distinct names with their
+q-gram sets) and every match it takes part in probes that one build. The
+names are attached to a pair by two equi-joins against the indexed sides
+(the reference's positional ``cbind(x[ix,], y[iy,])`` re-join —
+``PFuzzyDiscreteFullFxn.R:84-88``).
 """
 
 from __future__ import annotations
+
+from typing import NamedTuple, Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -26,7 +28,13 @@ from ..functions.qgrams import (
     qgram_set_expr,
 )
 from ..functions.scorers import distance_expr
-from .blocking import SHARED_COL, gram_set_expr, shared_gram_rule
+from .blocking import (
+    SHARED_COL,
+    gram_index,
+    gram_set_expr,
+    shared_gram_pairs,
+    shared_gram_rule,
+)
 
 DIST_COL = "stringdist"
 
@@ -50,6 +58,66 @@ def name_sets(names: DataFrame, cfg: LinkConfig) -> DataFrame:
     )
 
 
+def index_side(
+    prep: DataFrame, id_col: str, cfg: LinkConfig, *, carry: Sequence[str] = ()
+) -> DataFrame:
+    """The one per-input build of name-pair matching, and the only place a
+    side is deduplicated: ``prep``'s ``(id_col, name_norm, *carry)`` rows,
+    one per id, with their ``name_sets``. ``carry`` columns (the
+    directory's ``canonical_id``) spare a match a join back to its input."""
+    return name_sets(prep.select(id_col, NORM_COL, *carry).dropDuplicates([id_col]), cfg)
+
+
+class IndexedSide(NamedTuple):
+    """One input, built once for every match it takes part in."""
+
+    names: DataFrame
+    grams: DataFrame
+    id: str
+
+
+def indexed(names: DataFrame, id_col: str, cfg: LinkConfig) -> IndexedSide:
+    """``names`` (``index_side`` rows) with their ``gram_index``."""
+    return IndexedSide(names, gram_index(names, id_col, cfg), id_col)
+
+
+def match_sides(
+    x: IndexedSide,
+    y: IndexedSide,
+    cfg: LinkConfig,
+    *,
+    x_count: int | None = None,
+    y_count: int | None = None,
+    max_dist: float | None = None,
+) -> DataFrame:
+    """``shared_gram_pairs`` over two indexed sides' gram indexes, then
+    ``score_name_pairs`` over their rows."""
+    kw = dict(x_id=x.id, y_id=y.id)
+    cands = shared_gram_pairs(x.grams, y.grams, cfg, x_count=x_count, y_count=y_count, **kw)
+    return score_name_pairs(cands, x.names, y.names, cfg, max_dist=max_dist, **kw)
+
+
+def match_self(
+    side: IndexedSide,
+    cfg: LinkConfig,
+    *,
+    count: int | None = None,
+    max_dist: float | None = None,
+) -> DataFrame:
+    """Blocked and scored pairs of one indexed side with itself, its id
+    renamed to ``x_id`` / ``y_id``, one row per unordered pair (``x_id <
+    y_id``, which Catalyst pushes into the gram join); ``count`` bounds
+    the side's ids."""
+    x, y = (
+        IndexedSide(*(f.withColumnRenamed(side.id, c) for f in (side.names, side.grams)), c)
+        for c in ("x_id", "y_id")
+    )
+    cands = shared_gram_pairs(
+        x.grams, y.grams, cfg, x_id="x_id", y_id="y_id", x_count=count, y_count=count
+    ).filter(F.col("x_id") < F.col("y_id"))
+    return score_name_pairs(cands, x.names, y.names, cfg, max_dist=max_dist)
+
+
 def score_name_pairs(
     pairs: DataFrame,
     x_names: DataFrame,
@@ -61,8 +129,8 @@ def score_name_pairs(
     max_dist: float | None = None,
 ) -> DataFrame:
     """Score id pairs against two per-name frames (``name_sets`` output) —
-    the engine's one name-pair scorer: ``score_pairs`` and both steps of
-    the streaming resolver call it.
+    the engine's one name-pair scorer: ``match_sides``, ``score_pairs``
+    and both steps of the streaming resolver call it.
 
     ``x_names`` is keyed by ``x_id`` and ``y_names`` by ``y_id``. Each of
     their other columns comes out once per side, suffixed ``_x`` / ``_y``
@@ -96,11 +164,7 @@ def score_name_pairs(
         # pushes the predicate INTO the scoring join's condition, where the
         # distance expression is evaluated on every probe row twice
         # (condition + projection) — measured ~8x slower than scoring once.
-        # At prod scale the StageCheckpointer persists this stage durably
-        # instead — plans/pipeline.py routes through it when one is
-        # configured.
-        scored = persist(scored)
-        scored = scored.filter(F.col(DIST_COL) <= F.lit(float(max_dist)))
+        scored = persist(scored).filter(F.col(DIST_COL) <= F.lit(float(max_dist)))
     return scored
 
 
@@ -114,17 +178,14 @@ def score_pairs(
     y_id: str = "y_id",
     max_dist: float | None = None,
 ) -> DataFrame:
-    """Attach normalized names, score, and (optionally) threshold-filter:
-    ``score_name_pairs`` over one ``name_sets`` frame per side, each built
-    from that side's distinct ids.
+    """Attach normalized names, score, and (optionally) threshold-filter
+    arbitrary id pairs of two prepared sides: a wrapper that indexes each
+    side (``index_side``) and runs ``score_name_pairs``.
 
     Returns ``(x_id, y_id, name_norm_x, name_norm_y, stringdist)``.
     """
-    xn = name_sets(x_prep.select(x_id, NORM_COL).dropDuplicates([x_id]), cfg)
-    yn = name_sets(y_prep.select(y_id, NORM_COL).dropDuplicates([y_id]), cfg)
-    return score_name_pairs(
-        pairs, xn, yn, cfg, x_id=x_id, y_id=y_id, max_dist=max_dist
-    )
+    xn, yn = index_side(x_prep, x_id, cfg), index_side(y_prep, y_id, cfg)
+    return score_name_pairs(pairs, xn, yn, cfg, x_id=x_id, y_id=y_id, max_dist=max_dist)
 
 
 def explain_pairs(

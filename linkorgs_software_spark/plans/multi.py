@@ -9,9 +9,9 @@ and connected components assign one ``entity_id`` per transitively-linked
 name group across ALL sources — the N-way generalization of the alias
 directory's precomputed ``canonical_id``.
 
-Scale shape: C(N,2) pairwise blocking joins (each df-capped exactly like
-the 2-way path — sources are typically few, so the pair count is small
-while each join is large), one union of narrow edge frames, and the
+Scale shape: one index per source, C(N,2) pairwise matches over them (each
+df-capped exactly like the 2-way path — sources are typically few, so the
+pair count is small while each join is large), one union of edges, and the
 O(log diameter) pointer-jumping components. Node keys are
 ``"<side:02d>:<name_norm>"`` strings, so the component label (min node
 key) is deterministic and ANSI-SQL-portable; singleton names (no accepted
@@ -28,9 +28,8 @@ from pyspark.sql import functions as F
 from ..cache import persist
 from ..config import LinkConfig
 from ..functions.normalize import NORM_COL, prepare_side
-from ..operators.blocking import candidate_pairs
 from ..operators.cluster import connected_components
-from ..operators.scoring import DIST_COL, score_pairs
+from ..operators.scoring import DIST_COL, index_side, indexed, match_self, match_sides
 
 
 def _node_key(side: int, norm_col) -> F.Column:
@@ -62,11 +61,10 @@ def merge_entities(
     (``LinkOrgs/R/LinkOrgs_LinkOrgs.R:460-477`` consumes a PREBUILT
     ``canonical_id``; this builds that id from the directory itself).
 
-    Scale shape: one df-capped trigram self-join over DISTINCT alias
-    names (the same machinery as ``link_orgs``' blocking), alias pairs
-    lifted to entity pairs at candidate volume, pointer-jumping
-    ``connected_components`` over the (tiny) entity graph. Nothing
-    touches alias rows pairwise except through the capped gram join.
+    Scale shape: one df-capped gram self-join over one index of the
+    distinct alias names (``scoring.match_self``), alias pairs lifted to
+    entity pairs at candidate volume, pointer-jumping
+    ``connected_components`` over the (tiny) entity graph.
 
     ``return_edges=True`` returns the accepted entity-edge evidence frame
     ``(entity_x, entity_y, name_norm_x, name_norm_y, stringdist)`` instead
@@ -80,25 +78,18 @@ def merge_entities(
         cfg,
     )
     a2e = prep.select("_aid", NORM_COL, "_ent").distinct()
-    names = a2e.select("_aid", NORM_COL).distinct()
-    nx = names.select(F.col("_aid").alias("_ax"), NORM_COL)
-    ny = names.select(F.col("_aid").alias("_ay"), NORM_COL)
-    pairs = candidate_pairs(nx, ny, cfg, x_id="_ax", y_id="_ay").filter(
-        F.col("_ax") < F.col("_ay")
-    )
-    scored = score_pairs(
-        pairs, nx, ny, cfg, x_id="_ax", y_id="_ay", max_dist=max_dist
-    )
-    ex = a2e.select(F.col("_aid").alias("_ax"), F.col("_ent").alias("_ex"))
-    ey = a2e.select(F.col("_aid").alias("_ay"), F.col("_ent").alias("_ey"))
+    # one index of the distinct names serves both sides of the self-join
+    scored = match_self(indexed(index_side(a2e, "_aid", cfg), "_aid", cfg), cfg, max_dist=max_dist)
+    ex = a2e.select(F.col("_aid").alias("x_id"), F.col("_ent").alias("_ex"))
+    ey = a2e.select(F.col("_aid").alias("y_id"), F.col("_ent").alias("_ey"))
     # canonical orientation entity_x < entity_y (the alias self-join orders
     # by name hash, which is unrelated to entity order — without this, one
     # entity pair reached through two alias pairs could survive dedup twice
     # in opposite orientations)
     flip = F.col("_ex") > F.col("_ey")
     fuzzy = (
-        scored.join(ex, "_ax")
-        .join(ey, "_ay")
+        scored.join(ex, "x_id")
+        .join(ey, "y_id")
         .filter(F.col("_ex") != F.col("_ey"))
         .select(
             F.when(flip, F.col("_ey")).otherwise(F.col("_ex")).alias("_ex"),
@@ -199,15 +190,12 @@ def link_many(
     if len(by_cols) != len(sides):
         raise ValueError("one `by` column per side (or a single string)")
 
-    prepared = []
+    indexes = []
     nodes = None
     for i, (df, col) in enumerate(zip(sides, by_cols)):
-        # persisted: each side feeds its node frame plus N-1 pairwise
-        # blocking joins, and every blocking join reads the side 3x (gram
-        # index, gram-count denominator, scoring name attach) — without
-        # the persist the normalize scan re-runs ~3(N-1) times per side
-        p = persist(prepare_side(df.select(F.col(col).alias("name")), "name", f"m{i}", cfg))
-        prepared.append(p)
+        # indexed once, persisted: each of its N-1 matches reads it twice
+        p = prepare_side(df.select(F.col(col).alias("name")), "name", f"m{i}", cfg)
+        indexes.append(indexed(persist(index_side(p, f"m{i}", cfg)), f"m{i}", cfg))
         n = (
             p.groupBy(F.col(NORM_COL).alias("name_norm"))
             .agg(F.min("name").alias("name"))
@@ -223,18 +211,7 @@ def link_many(
     edges = None
     for i in range(len(sides)):
         for j in range(i + 1, len(sides)):
-            pairs = candidate_pairs(
-                prepared[i], prepared[j], cfg, x_id=f"m{i}", y_id=f"m{j}"
-            )
-            scored = score_pairs(
-                pairs,
-                prepared[i],
-                prepared[j],
-                cfg,
-                x_id=f"m{i}",
-                y_id=f"m{j}",
-                max_dist=max_dist,
-            )
+            scored = match_sides(indexes[i], indexes[j], cfg, max_dist=max_dist)
             e = scored.select(
                 F.lit(i).cast("int").alias("side_x"),
                 F.lit(j).cast("int").alias("side_y"),

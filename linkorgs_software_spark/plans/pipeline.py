@@ -29,16 +29,17 @@ from ..cache import call_caches, persist
 from ..config import DEFAULT, FALLBACK_MAX_DIST, LinkConfig
 from ..functions.embedding import l2_dist_udf, make_hash_embed_udf
 from ..functions.normalize import NORM_COL, pair_id_expr, prepare_side
-from ..operators.blocking import candidate_pairs
+from ..operators.blocking import gram_index, shared_gram_pairs
 from ..operators.calibrate import calibrate
 from ..operators.dedup import keep_min_per_group, min_over_group
 from ..operators.network import (
+    ALIAS_ID,
     bridge,
+    directory_matches,
     fuse_scores,
-    match_to_directory,
     prepare_directory,
 )
-from ..operators.scoring import DIST_COL, score_pairs
+from ..operators.scoring import DIST_COL, index_side, indexed, match_sides
 
 ALGORITHMS = ("fuzzy", "lookup", "alias", "embed")
 
@@ -64,7 +65,7 @@ def _resolve_thresholds(
     default MaxDist = 0.20.
 
     Returns ``(thr, nx, ny)``; the counts are the calibration's exact
-    distinct-name counts when it ran (recycled as ``candidate_pairs``
+    distinct-name counts when it ran (recycled as ``shared_gram_pairs``
     posting-list bounds), else None — never computed just for the bound.
     Then the x→ and y→``dir_prep`` calibrations, None when there is no
     directory or its threshold is pinned. All run as ONE ``calibrate`` batch."""
@@ -76,25 +77,6 @@ def _resolve_thresholds(
     pinned = (FALLBACK_MAX_DIST if cfg.max_dist is None else cfg.max_dist, None, None)
     raw = pinned if raw_k is None else got.pop(0)
     return raw, *(got or (None, None))
-
-
-def _raw_match(
-    x_prep: DataFrame,
-    y_prep: DataFrame,
-    cfg: LinkConfig,
-    max_dist: float,
-    x_count: int | None = None,
-    y_count: int | None = None,
-) -> DataFrame:
-    # Materialize the blocked pair list: Catalyst pushes the threshold
-    # predicate into the scoring join's condition, which would re-evaluate
-    # the whole blocking shuffle; persisting makes the candidate set the
-    # stage boundary (the checkpointer persists the downstream scored stage
-    # durably when configured).
-    cands = persist(
-        candidate_pairs(x_prep, y_prep, cfg, x_count=x_count, y_count=y_count)
-    )
-    return score_pairs(cands, x_prep, y_prep, cfg, max_dist=max_dist)
 
 
 def _embedded_side(prep: DataFrame, cfg: LinkConfig, embed_col: str | None) -> DataFrame:
@@ -150,19 +132,18 @@ def _embed_match(
       * ``"none"``    — the reference's literal all-pairs semantics
         (bounded inputs only).
     """
-    xn = (
-        x_prep.select("x_id", NORM_COL).dropDuplicates(["x_id"])
-        .join(xe, NORM_COL)
-        .select("x_id", F.col(NORM_COL).alias("name_norm_x"), F.col("_emb").alias("_emb_x"))
+    xs, ys = index_side(x_prep, "x_id", cfg), index_side(y_prep, "y_id", cfg)
+    xn = xs.join(xe, NORM_COL).select(
+        "x_id", F.col(NORM_COL).alias("name_norm_x"), F.col("_emb").alias("_emb_x")
     )
-    yn = (
-        y_prep.select("y_id", NORM_COL).dropDuplicates(["y_id"])
-        .join(ye, NORM_COL)
-        .select("y_id", F.col(NORM_COL).alias("name_norm_y"), F.col("_emb").alias("_emb_y"))
+    yn = ys.join(ye, NORM_COL).select(
+        "y_id", F.col(NORM_COL).alias("name_norm_y"), F.col("_emb").alias("_emb_y")
     )
     if blocking == "trigram":
-        cands = candidate_pairs(x_prep, y_prep, cfg).select("x_id", "y_id")
-        scored = cands.join(xn, "x_id").join(yn, "y_id")
+        cands = shared_gram_pairs(
+            gram_index(xs, "x_id", cfg), gram_index(ys, "y_id", cfg), cfg, x_id="x_id", y_id="y_id"
+        )
+        scored = cands.select("x_id", "y_id").join(xn, "x_id").join(yn, "y_id")
     elif blocking == "ann":
         from ..operators.ann import expand_probes, lsh_buckets
 
@@ -258,7 +239,7 @@ def link_orgs(
     snapshots at prod, parquet + ``_metrics.jsonl`` here).
 
     The returned frame is lazy and reads the stages this call persisted
-    (prepared sides, candidate and scored barriers, directory matches);
+    (prepared and indexed sides, scored barriers, directory matches);
     they stay cached until the next ``link_orgs`` call or
     ``release_caches()`` (``cache.call_caches``).
     """
@@ -283,9 +264,9 @@ def link_orgs(
     if algorithm in ("lookup", "alias") and directory is None:
         raise ValueError(f"algorithm {algorithm!r} requires a directory DataFrame")
 
-    # The prepared sides feed several plan branches (gram index, gram-count
-    # denominator, scoring dims, representative-row back-merge) — cache them
-    # so each branch reads the normalized frame instead of re-deriving it.
+    # The prepared sides feed several plan branches (calibration, the
+    # indexed sides, representative-row back-merge) — cache them so each
+    # branch reads the normalized frame instead of re-deriving it.
     x_prep = persist(prepare_side(x, cfg.by_x, "x_id", cfg))
     y_prep = persist(prepare_side(y, cfg.by_y, "y_id", cfg))
 
@@ -353,43 +334,43 @@ def link_orgs(
         dir_prep = persist(prepare_directory(directory, cfg))
         # no forced broadcast: directories can be ~0.5e9 aliases; AQE
         # broadcasts small ones automatically
-        xd = x_prep.select("x_id", NORM_COL).dropDuplicates(["x_id"]).join(
-            dir_prep, NORM_COL
-        ).select("x_id", F.col(NORM_COL).alias("name_norm_x"), "canonical_id")
-        yd = y_prep.select("y_id", NORM_COL).dropDuplicates(["y_id"]).join(
-            dir_prep, NORM_COL
-        ).select("y_id", F.col(NORM_COL).alias("name_norm_y"), "canonical_id")
+        xd = index_side(x_prep, "x_id", cfg).join(dir_prep, NORM_COL).select(
+            "x_id", F.col(NORM_COL).alias("name_norm_x"), "canonical_id"
+        )
+        yd = index_side(y_prep, "y_id", cfg).join(dir_prep, NORM_COL).select(
+            "y_id", F.col(NORM_COL).alias("name_norm_y"), "canonical_id"
+        )
         z_net = xd.join(yd, "canonical_id").withColumn(
             "netdist_x", F.lit(0.0)
         ).withColumn("netdist_y", F.lit(0.0))
     else:
+        # One indexed side per input (distinct names, scoring sets, gram
+        # index), persisted here and probed by every match it takes part in.
+        def index(prep, id_col, carry=()):
+            return indexed(persist(index_side(prep, id_col, cfg, carry=carry)), id_col, cfg)
+
         dir_prep = None
         if algorithm == "alias":
-            # cached: the two directional matches and the calibrations
-            # issue several actions against the pruned directory
+            # cached: the calibrations and the directory index read it
             dir_prep = persist(prepare_directory(directory, cfg))
         # a resumed run skips the calibrations of completed directory stages
         done = checkpointer is not None and all(map(checkpointer.is_complete, ("x2net", "y2net")))
         cal_dir = None if done else dir_prep
         (thr, nxc, nyc), x_cal, y_cal = _resolve_thresholds(x_prep, y_prep, cfg, cal_dir)
+        xs, ys = index(x_prep, "x_id"), index(y_prep, "y_id")
         z_raw = _stage(
             "scored_raw",
-            lambda: _raw_match(x_prep, y_prep, cfg, thr, x_count=nxc, y_count=nyc),
+            lambda: match_sides(xs, ys, cfg, x_count=nxc, y_count=nyc, max_dist=thr),
         )
         if dir_prep is not None:
+            ds = index(dir_prep, ALIAS_ID, ("canonical_id",))
             x2net = _stage(
                 "x2net",
-                lambda: match_to_directory(
-                    x_prep, dir_prep, cfg, side_id="x_id", out_dist="netdist_x",
-                    calibration=x_cal,
-                ),
+                lambda: directory_matches(xs, ds, cfg, out_dist="netdist_x", calibration=x_cal),
             )
             y2net = _stage(
                 "y2net",
-                lambda: match_to_directory(
-                    y_prep, dir_prep, cfg, side_id="y_id", out_dist="netdist_y",
-                    calibration=y_cal,
-                ),
+                lambda: directory_matches(ys, ds, cfg, out_dist="netdist_y", calibration=y_cal),
             )
             z_net = bridge(x2net, y2net)
 

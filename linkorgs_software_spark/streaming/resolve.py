@@ -19,8 +19,11 @@ State on disk, same layout discipline as the near-dup streams
     WITHOUT an Exchange; only the micro-batch side shuffles (into
     ``num_history_buckets`` partitions).
   * ``history/entities`` — (alias_id, entity_id, name_norm): the alias
-    directory itself. Plain ``batch_id=N`` parquet — only ever read
-    id-joined at candidate volume (verification), never scanned.
+    directory itself, plain ``batch_id=N`` parquet. The match step scans
+    every prior slice and builds the scoring q-gram sets of every alias
+    row below the ``alias_id`` join, so its verify cost grows with
+    directory lifetime, not candidate volume (ROADMAP direction 2 stores
+    the sets at write time instead).
   * ``assignments/batch_id=N`` — the batch's resolved rows (idempotent
     overwrite: a replayed batch overwrites its own output).
 
@@ -78,9 +81,16 @@ from pyspark.sql import functions as F
 from ..cache import persist, scoped_caches
 from ..config import DEFAULT, LinkConfig
 from ..functions.normalize import NORM_COL, prepare_side
-from ..operators.blocking import gram_index, shared_gram_pairs
+from ..operators.blocking import gram_index
 from ..operators.cluster import connected_components
-from ..operators.scoring import DIST_COL, name_sets, score_name_pairs
+from ..operators.scoring import (
+    DIST_COL,
+    IndexedSide,
+    index_side,
+    match_self,
+    match_sides,
+    name_sets,
+)
 from .history import (
     compact_plain_history,
     history_table_name,
@@ -144,11 +154,9 @@ def resolve_batch(
         # name; the final assignment fan-out back to rows is one equi-join.
         # The node id IS prepare_side's content-hash id (xxhash64(name_norm)),
         # so the fan-out join key already sits on every prepared row. The
-        # frame carries each name's scoring q-gram set (``name_sets``), built
-        # once per batch for both the match and the create scoring.
-        names = persist(
-            name_sets(prep.select(NORM_COL, F.col("_rid").alias("_nid")).distinct(), cfg)
-        )
+        # batch side is indexed once (``index_side``) for both the match and
+        # the create scoring.
+        names = persist(index_side(prep.withColumnRenamed("_rid", "_nid"), "_nid", cfg))
         tri = persist(gram_index(names, "_nid", cfg))
         # One cheap count on the cached distinct-name frame bounds every
         # gram's posting list in `tri` and in any slice of it, so with
@@ -162,14 +170,6 @@ def resolve_batch(
         prior_ent_paths = prior_batch_paths(spark, entities_dir, batch_id)
         matched = None
         if prior_grams is not None and prior_ent_paths:
-            cand = shared_gram_pairs(
-                tri,
-                prior_grams.select("gram", "alias_id"),
-                cfg,
-                x_id="_nid",
-                y_id="alias_id",
-                x_count=n_names,
-            )
             # alias rows are scored as listed, never deduplicated by alias_id:
             # a compact_directory crash leaves one alias under its old and its
             # merged entity id, and the min (distance, entity_id) pick below
@@ -178,7 +178,8 @@ def resolve_batch(
                 spark.read.parquet(*prior_ent_paths).select("alias_id", "entity_id", NORM_COL),
                 cfg,
             )
-            pairs = score_name_pairs(cand, names, aliases, cfg, x_id="_nid", y_id="alias_id")
+            prior = IndexedSide(aliases, prior_grams.select("gram", "alias_id"), "alias_id")
+            pairs = match_sides(IndexedSide(names, tri, "_nid"), prior, cfg, x_count=n_names)
             # best alias (NULL distance last), then max_dist: a filter above
             # the aggregate stays out of the scoring join's condition, where
             # the distance would run twice per candidate
@@ -200,23 +201,9 @@ def resolve_batch(
             unmatched = names.join(matched, "_nid", "left_anti")
             utri = tri.join(matched.select("_nid"), "_nid", "left_anti")
         # candidate self-join over the unmatched slice of the PERSISTED batch
-        # gram index (candidate_pairs would re-explode both sides from
-        # scratch); the slice's posting lists are bounded by n_names too
-        cand_new = shared_gram_pairs(
-            utri.withColumnRenamed("_nid", "x_id"),
-            utri.withColumnRenamed("_nid", "y_id"),
-            cfg,
-            x_id="x_id",
-            y_id="y_id",
-            x_count=n_names,
-            y_count=n_names,
-        ).filter(F.col("x_id") < F.col("y_id"))
-        scored = score_name_pairs(
-            cand_new,
-            names.withColumnRenamed("_nid", "x_id"),
-            names.withColumnRenamed("_nid", "y_id"),
-            cfg,
-            max_dist=create_max_dist,
+        # gram index; the slice's posting lists are bounded by n_names too
+        scored = match_self(
+            IndexedSide(names, utri, "_nid"), cfg, count=n_names, max_dist=create_max_dist
         )
         edges = persist(scored.select(F.col("x_id").alias("src"), F.col("y_id").alias("dst")))
         if edges.limit(1).count() == 0:

@@ -91,6 +91,31 @@ def test_blocking_salted_equals_unsalted(spark):
     assert plain == salted
 
 
+@pytest.mark.parametrize("cfg_kw", [{}, {"max_block_df": 2}], ids=["default", "cap2"])
+def test_repeated_names_block_and_score_as_their_distinct_names(spark, cfg_kw):
+    """A prepared side may repeat a name (raw duplicates, or spellings that
+    normalize alike): ``candidate_pairs`` and ``score_pairs`` index each
+    side's distinct names, so repeats add no shared grams, no df-cap
+    weight and no pair."""
+    from linkorgs_software_spark.operators.scoring import score_pairs
+
+    cfg = LinkConfig(**cfg_kw)
+    xs = ["Acme Corp", "ACME corp.", "Acme Corp", "Globex Inc", "Initech LLC", "Initech LLC"]
+    ys = ["acme corporation", "Globex Inc", "globex inc", "Globex", "initech"]
+    xp, yp = _sides(spark, xs, ys, cfg)
+    xd, yd = xp.dropDuplicates(["x_id"]), yp.dropDuplicates(["y_id"])
+    assert (xp.count(), yp.count()) == (6, 5) and (xd.count(), yd.count()) == (3, 4)
+
+    def rows(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    cands = rows(candidate_pairs(xp, yp, cfg))
+    assert cands and cands == rows(candidate_pairs(xd, yd, cfg))
+    pairs = candidate_pairs(xd, yd, cfg)
+    scored = rows(score_pairs(pairs, xp, yp, cfg))
+    assert len(scored) == len(cands) and scored == rows(score_pairs(pairs, xd, yd, cfg))
+
+
 def test_calibration_positive_and_clamped(spark, fixture_tables):
     cfg = LinkConfig()
     xp = prepare_side(fixture_tables["org_x"], "name", "x_id", cfg)

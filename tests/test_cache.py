@@ -84,22 +84,28 @@ def test_bucket_pairs_is_the_only_bucket_self_join():
 
 def test_one_name_blocking_rule_and_one_name_scorer():
     """The shared-gram rule (``cfg.min_shared_frac``) is applied only in
-    ``operators/blocking.py`` and the per-name jaccard distance
+    ``operators/blocking.py``, the per-name jaccard distance
     (``jaccard_dist_from_sizes_expr``) is called only in
-    ``operators/scoring.py``; every other name-pair path calls them."""
+    ``operators/scoring.py``, and a side's scoring sets (``name_sets``) are
+    built only by ``scoring.index_side`` and for the resolver's entity
+    alias rows, which are scored as listed, never deduplicated by
+    ``alias_id`` (the ``compact_directory`` crash window). A home is a
+    module, or one function in it."""
+    blocking, scoring = pathlib.Path("operators", "blocking.py"), pathlib.Path("operators", "scoring.py")
     homes = {
-        "cfg.min_shared_frac": pathlib.Path("operators", "blocking.py"),
-        "jaccard_dist_from_sizes_expr(": pathlib.Path("operators", "scoring.py"),
+        "cfg.min_shared_frac": {(blocking, None)},
+        "jaccard_dist_from_sizes_expr(": {(scoring, None)},
+        "name_sets(": {(scoring, "index_side"), (pathlib.Path("streaming", "resolve.py"), "resolve_batch")},
     }
-    hits = [
-        f"{path.relative_to(PKG)}:{n}: {line.strip()}"
-        for path in sorted(PKG.rglob("*.py"))
-        for n, line in enumerate(path.read_text().splitlines(), 1)
-        for needle, home in homes.items()
-        if needle in line
-        and path.relative_to(PKG) != home
-        and not line.lstrip().startswith("def ")
-    ]
+    hits = []
+    for path in sorted(PKG.rglob("*.py")):
+        rel, source = path.relative_to(PKG), path.read_text()
+        for n, line in enumerate(source.splitlines(), 1):
+            for needle, home in homes.items():
+                if needle not in line or line.lstrip().startswith("def ") or (rel, None) in home:
+                    continue
+                if (rel, _enclosing_function(source, n)) not in home:
+                    hits.append(f"{rel}:{n}: {line.strip()}")
     assert not hits, "\n".join(hits)
 
 

@@ -2,6 +2,10 @@
 test-linkorgs-workflows.R, test-network-cache.R, test-integration.R,
 test-edge-cases.R (SURVEY.md §5)."""
 
+import collections
+import pathlib
+import sys
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -43,6 +47,74 @@ def test_alias_one_to_one_f1_gate(spark, fixture_tables):
         n_y=60,
     )
     assert a.f1 >= 0.99
+
+
+def _alias_call(fixture_tables):
+    return link_orgs(
+        fixture_tables["org_x"],
+        fixture_tables["org_y"],
+        LinkConfig(),
+        algorithm="alias",
+        directory=fixture_tables["alias_directory"],
+        one_to_one=True,
+    )
+
+
+def test_alias_call_indexes_each_input_once(spark, fixture_tables, monkeypatch):
+    """One alias call builds one indexed side per input (x, y and the
+    directory): one ``index_side``, one ``name_sets`` and one
+    ``gram_index`` each, and no match deduplicates a side again."""
+    from linkorgs_software_spark.operators import blocking, scoring
+
+    calls = collections.Counter()
+    for mod, name in ((scoring, "index_side"), (scoring, "name_sets"), (blocking, "gram_index")):
+        orig = getattr(mod, name, None)
+
+        def counted(*a, _orig=orig, _name=name, **kw):
+            calls[_name] += 1
+            return _orig(*a, **kw)
+
+        for m in [m for n, m in sys.modules.items() if n.startswith("linkorgs_software_spark")]:
+            if orig is not None and getattr(m, name, None) is orig:
+                monkeypatch.setattr(m, name, counted)
+
+    # side dedupes, by the blocking / scoring / network function issuing them
+    dedupes = collections.Counter()
+    frame = type(spark.range(1))
+    for meth in ("dropDuplicates", "distinct"):
+
+        def traced(self, *a, _orig=getattr(frame, meth), **kw):
+            code = sys._getframe(1).f_code
+            path = pathlib.Path(code.co_filename)
+            if path.parent.name == "operators" and path.stem in ("blocking", "scoring", "network"):
+                dedupes[code.co_name] += 1
+            return _orig(self, *a, **kw)
+
+        monkeypatch.setattr(frame, meth, traced)
+    _alias_call(fixture_tables)
+    assert calls == {"index_side": 3, "name_sets": 3, "gram_index": 3}, calls
+    assert dedupes == {"index_side": 3}, dedupes
+
+
+# Most Spark jobs seen for one ``_alias_call`` plus the collect of its
+# result on local[4], over N runs (the layout before one indexed side per
+# input ran 53 in every run).
+_ALIAS_CALL_JOBS = 40
+
+
+def test_alias_call_jobs(spark, fixture_tables):
+    """One alias one-to-one call, result collected, runs no more Spark jobs
+    than the measured count."""
+    sc = spark.sparkContext
+    group = "alias-call-jobs"
+    sc.setJobGroup(group, "link_orgs alias one_to_one")
+    try:
+        rows = _alias_call(fixture_tables).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert rows and 0 < jobs <= _ALIAS_CALL_JOBS, jobs
 
 
 def test_network_bridge_links_tiny_directory(spark):

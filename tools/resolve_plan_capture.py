@@ -6,7 +6,7 @@ create-path `scored` frame on the bench fixture in BOTH formulations —
 the round-start form (per-pair ``distance_expr("jaccard")`` over joined
 name strings) and the current form (the resolver's own calls: candidates
 from ``blocking.shared_gram_pairs``, scores from
-``scoring.score_name_pairs`` over one ``scoring.name_sets`` frame) — and
+``scoring.score_name_pairs`` over one ``scoring.index_side`` frame) — and
 writes their ``explain("formatted")`` to
 ``plans/r07/resolve_scored_{before,after}.txt``. Both formulations are
 asserted row- and value-identical first.
@@ -31,15 +31,13 @@ def main() -> None:
     from linkorgs_software_spark.functions.normalize import NORM_COL, prepare_side
     from linkorgs_software_spark.functions.scorers import distance_expr
     from linkorgs_software_spark.operators.blocking import gram_index, shared_gram_pairs
-    from linkorgs_software_spark.operators.scoring import name_sets, score_name_pairs
+    from linkorgs_software_spark.operators.scoring import index_side, score_name_pairs
     from linkorgs_software_spark.sources.fixtures import gen_linkage_fixture
 
     cfg = DEFAULT
     fx = gen_linkage_fixture(spark, n_entities=1500, seed=42)
     prep = prepare_side(fx["org_x"].select("name"), "name", "_rid", cfg)
-    names = name_sets(
-        prep.select(NORM_COL, F.col("_rid").alias("_nid")).distinct(), cfg
-    ).persist()
+    names = index_side(prep.withColumnRenamed("_rid", "_nid"), "_nid", cfg).persist()
     n_names = names.count()
     tri = gram_index(names, "_nid", cfg).persist()
     cand = (
