@@ -18,28 +18,31 @@ State on disk, same layout discipline as the near-dup streams
     hash-bucketed on ``gram`` — the candidate join's history side scans
     WITHOUT an Exchange; only the micro-batch side shuffles (into
     ``num_history_buckets`` partitions).
-  * ``history/entities`` — (alias_id, entity_id, name_norm): the alias
-    directory itself, plain ``batch_id=N`` parquet. The match step scans
-    every prior slice and builds the scoring q-gram sets of every alias
-    row below the ``alias_id`` join, so its verify cost grows with
-    directory lifetime, not candidate volume (ROADMAP direction 2 stores
-    the sets at write time instead).
+  * ``history/entities`` — ``ENTITIES_SCHEMA`` rows, the alias directory
+    itself: plain ``batch_id=N`` parquet, read with that schema (a read
+    without one runs a footer-inference job). The match step builds the
+    q-gram sets of every prior alias row, so its verify cost grows with
+    directory lifetime (ROADMAP direction 2 stores them at write time).
   * ``assignments/batch_id=N`` — the batch's resolved rows (idempotent
     overwrite: a replayed batch overwrites its own output).
+
+Both plain slices are written through an AQE rebalance (one file per small
+batch: ``advisoryPartitionSizeInBytes`` sets the count, not the shuffle
+partitions a persisted frame keeps), so the gram insert, which reads the
+slice back, writes at most ``num_history_buckets`` files. Only frames two
+steps reuse are persisted (rows, names, matches, new entities), not the
+gram index (an explode of the names) or the edges (a scorer projection).
 
 Per micro-batch N:
   1. normalize mention names (``prepare_side`` — reference normalization);
      work at DISTINCT-name granularity (node id = ``xxhash64(name_norm)``,
      the same content-keyed id rule as ``record_id_expr``).
-  2. MATCH: ``blocking.shared_gram_pairs`` over the batch's persisted
-     gram index and the PRIOR gram history (``batch_id != N`` — replay
-     must not see its own failed attempt): the reference's >=
-     ceil(min_shared_frac · |trigrams(name)|) rule, the history side
-     always df-capped, the batch side only when its distinct-name count
-     could exceed the cap. Candidates verify through
-     ``scoring.score_name_pairs`` against the alias rows of the entities
-     slices (``cfg.distance_measure``, the batch's q-gram sets built once
-     in ``scoring.name_sets``); best match per name = min (distance,
+  2. MATCH: ``blocking.shared_gram_pairs`` over the batch's gram index
+     and the PRIOR gram history (``batch_id != N`` — replay must not see
+     its own failed attempt), the history side always df-capped, the
+     batch side only when its distinct-name count could exceed the cap.
+     Candidates verify through ``scoring.score_name_pairs`` against the
+     entities slices' alias rows; best match per name = min (distance,
      entity_id).
   3. CREATE: names with no acceptable match pair among THEMSELVES (the
      same blocking core over the unmatched slice of the batch gram index
@@ -77,6 +80,7 @@ import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StringType, StructType
 
 from ..cache import persist, scoped_caches
 from ..config import DEFAULT, LinkConfig
@@ -102,6 +106,11 @@ from .history import (
     write_history_bucketed,
 )
 from .incremental import bind_batch, run_stream
+
+# a ``history/entities`` slice, as its writer selects it and its readers declare it
+ENTITIES_SCHEMA = StructType().add("alias_id", LongType()).add("entity_id", LongType()).add(
+    NORM_COL, StringType()
+)
 
 
 def resolve_batch(
@@ -130,9 +139,6 @@ def resolve_batch(
     """
     if create_max_dist is None:
         create_max_dist = max_dist
-    if num_history_buckets is None:  # scale-adaptive default; only the
-        # table-creating first batch actually consumes the resolved value
-        num_history_buckets = recommended_history_buckets(batch_df)
     grams_dir = os.path.join(out_dir, "history", "grams")
     entities_dir = os.path.join(out_dir, "history", "entities")
     assign_dir = os.path.join(out_dir, "assignments")
@@ -150,14 +156,11 @@ def resolve_batch(
 
     with scoped_caches():
         prep = persist(prepare_side(batch_df, name_col, "_rid", cfg))
-        # distinct-name granularity: every downstream join is per normalized
-        # name; the final assignment fan-out back to rows is one equi-join.
-        # The node id IS prepare_side's content-hash id (xxhash64(name_norm)),
-        # so the fan-out join key already sits on every prepared row. The
-        # batch side is indexed once (``index_side``) for both the match and
-        # the create scoring.
+        # distinct-name granularity, indexed once for the match and the
+        # create scoring; the node id is prepare_side's content hash, so the
+        # fan-out back to rows is one equi-join on the prepared key
         names = persist(index_side(prep.withColumnRenamed("_rid", "_nid"), "_nid", cfg))
-        tri = persist(gram_index(names, "_nid", cfg))
+        tri = gram_index(names, "_nid", cfg)
         # One cheap count on the cached distinct-name frame bounds every
         # gram's posting list in `tri` and in any slice of it, so with
         # n_names <= max_block_df the blocking core skips the batch-side df
@@ -167,6 +170,9 @@ def resolve_batch(
 
         # ---- 2. MATCH against the prior directory ---------------------
         prior_grams = read_prior_history(spark, grams_tbl, grams_dir, batch_id)
+        if prior_grams is None and num_history_buckets is None:
+            # scale-adaptive default, used only by the table-creating batch
+            num_history_buckets = recommended_history_buckets(batch_df)
         prior_ent_paths = prior_batch_paths(spark, entities_dir, batch_id)
         matched = None
         if prior_grams is not None and prior_ent_paths:
@@ -174,10 +180,7 @@ def resolve_batch(
             # a compact_directory crash leaves one alias under its old and its
             # merged entity id, and the min (distance, entity_id) pick below
             # resolves the pair to the merged one
-            aliases = name_sets(
-                spark.read.parquet(*prior_ent_paths).select("alias_id", "entity_id", NORM_COL),
-                cfg,
-            )
+            aliases = name_sets(spark.read.schema(ENTITIES_SCHEMA).parquet(*prior_ent_paths), cfg)
             prior = IndexedSide(aliases, prior_grams.select("gram", "alias_id"), "alias_id")
             pairs = match_sides(IndexedSide(names, tri, "_nid"), prior, cfg, x_count=n_names)
             # best alias (NULL distance last), then max_dist: a filter above
@@ -200,12 +203,12 @@ def resolve_batch(
         if matched is not None:
             unmatched = names.join(matched, "_nid", "left_anti")
             utri = tri.join(matched.select("_nid"), "_nid", "left_anti")
-        # candidate self-join over the unmatched slice of the PERSISTED batch
-        # gram index; the slice's posting lists are bounded by n_names too
+        # candidate self-join over the unmatched slice of the batch gram
+        # index; the slice's posting lists are bounded by n_names too
         scored = match_self(
             IndexedSide(names, utri, "_nid"), cfg, count=n_names, max_dist=create_max_dist
         )
-        edges = persist(scored.select(F.col("x_id").alias("src"), F.col("y_id").alias("dst")))
+        edges = scored.select(F.col("x_id").alias("src"), F.col("y_id").alias("dst"))
         if edges.limit(1).count() == 0:
             # no similar pairs among the new names: all singletons — skip the
             # iterative CC (whose per-round jobs would re-drive nothing)
@@ -230,26 +233,22 @@ def resolve_batch(
         )
         if matched is not None:
             assign = matched.withColumn("matched_prior", F.lit(True)).unionByName(assign)
-        out_rows = prep.join(assign.withColumnRenamed("_nid", "_rid"), "_rid")
+        out_rows = prep.join(assign.withColumnRenamed("_nid", "_rid"), "_rid").hint("rebalance")
         out_rows.write.mode("overwrite").parquet(f"{assign_dir}/batch_id={batch_id}")
 
         # ---- 4. directory delta: new entities' aliases + novel forms --
-        new_aliases = created.select("_nid", NORM_COL, "entity_id")
+        new_aliases = created
         if matched is not None:
-            novel_matched = (
-                matched.filter(F.col("stringdist") > 0)
-                .join(names, "_nid")
-                .select("_nid", NORM_COL, "entity_id")
-            )
-            new_aliases = new_aliases.unionByName(novel_matched)
-        new_aliases.select(
-            F.col("_nid").alias("alias_id"), "entity_id", NORM_COL
-        ).write.mode("overwrite").parquet(entities_slice)
+            novel = matched.filter(F.col(DIST_COL) > 0).join(names, "_nid")
+            new_aliases = created.unionByName(novel.select(*created.columns))
+        delta = new_aliases.withColumnRenamed("_nid", "alias_id").select(*ENTITIES_SCHEMA.names)
+        delta.hint("rebalance").write.mode("overwrite").parquet(entities_slice)
 
     # last, with nothing cached: the insert's refresh clears the frames
     # reading the grams table (module docstring, step 4)
     write_history_bucketed(
-        gram_index(spark.read.parquet(entities_slice), "alias_id", cfg).select("gram", "alias_id"),
+        gram_index(spark.read.schema(ENTITIES_SCHEMA).parquet(entities_slice), "alias_id", cfg)
+        .select("gram", "alias_id"),
         grams_tbl,
         grams_dir,
         batch_id,
@@ -310,7 +309,7 @@ def compact_directory(
         return None
     remap_path = os.path.join(out_dir, "remaps", f"watermark={watermark}")
     with scoped_caches():
-        dir_df = spark.read.parquet(*paths)
+        dir_df = spark.read.schema(ENTITIES_SCHEMA).parquet(*paths)
         remap = persist(
             merge_entities(
                 dir_df, cfg, max_dist=max_dist,

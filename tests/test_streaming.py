@@ -1083,22 +1083,34 @@ def test_batch_releases_its_caches(spark, stored_rdds, tmp_path, batch_fn):
 # Most Spark jobs per call seen on local[4], one count per batch of
 # ``_job_batches``, over two sets of six runs once each batch wrote its
 # bucketed history last (neardup_batch (16-18, 27-29), embed_neardup_batch
-# (12-13, 24-25), resolve_batch (23, 33, 37) in every run).
+# (12-13, 24-25) in every run), and for resolve_batch over seven runs once
+# it wrote one file per plain slice and read its entities slices with their
+# declared schema ((18, 25, 30) in every run).
 _BATCH_JOBS = {
     "neardup_batch": (18, 29),
     "embed_neardup_batch": (13, 25),
-    "resolve_batch": (23, 33, 37),
+    "resolve_batch": (18, 25, 30),
 }
-# (table slice, its columns, plain slice, its columns) a resuming stream reads
+# (table slice, its columns, plain slice, its columns) a resuming stream
+# reads, each column with its type
 _BATCH_HISTORY = {
-    "neardup_batch": ("buckets", ["bucket", "doc_id"], "shingles", ["doc_id", "shingles"]),
+    "neardup_batch": (
+        "buckets", [("bucket", "string"), ("doc_id", "bigint")],
+        "shingles", [("doc_id", "bigint"), ("shingles", "array<string>")],
+    ),
     "embed_neardup_batch": (
-        "embuckets", ["table_id", "bucket", "vec_id"], "embeddings", ["vec_id", "embedding"],
+        "embuckets", [("table_id", "int"), ("bucket", "bigint"), ("vec_id", "bigint")],
+        "embeddings", [("vec_id", "bigint"), ("embedding", "array<float>")],
     ),
     "resolve_batch": (
-        "grams", ["gram", "alias_id"], "entities", ["alias_id", "entity_id", "name_norm"],
+        "grams", [("gram", "string"), ("alias_id", "bigint")],
+        "entities", [("alias_id", "bigint"), ("entity_id", "bigint"), ("name_norm", "string")],
     ),
 }
+
+
+def _typed_columns(df):
+    return [(f.name, f.dataType.simpleString()) for f in df.schema if f.name != "batch_id"]
 
 
 def _job_batches(spark, batch_fn):
@@ -1120,8 +1132,8 @@ def _job_batches(spark, batch_fn):
 )
 def test_batch_jobs_and_history_layout(spark, tmp_path, batch_fn):
     """A streaming batch runs no more Spark jobs than the measured count,
-    and its history keeps the table name and column names a running
-    stream resumes from."""
+    and its history keeps the table name and the column names and types a
+    running stream resumes from."""
     from linkorgs_software_spark import streaming
     from linkorgs_software_spark.streaming.history import history_table_name
 
@@ -1143,10 +1155,9 @@ def test_batch_jobs_and_history_layout(spark, tmp_path, batch_fn):
     assert len(jobs) == len(caps), jobs
     assert all(0 < n <= cap for n, cap in zip(jobs, caps)), jobs
     table, table_cols, plain, plain_cols = _BATCH_HISTORY[batch_fn]
-    hist = spark.table(history_table_name(out, table))
-    assert [c for c in hist.columns if c != "batch_id"] == table_cols
+    assert _typed_columns(spark.table(history_table_name(out, table))) == table_cols
     plain_df = spark.read.parquet(os.path.join(out, "history", plain))
-    assert [c for c in plain_df.columns if c != "batch_id"] == plain_cols
+    assert _typed_columns(plain_df) == plain_cols
 
 
 def test_resolve_history_insert_runs_after_batch_caches_release(
@@ -1229,6 +1240,33 @@ def test_resolve_gram_history_is_the_entities_gram_index(spark, tmp_path):
             for r in gram_index(slice_df, "alias_id", LinkConfig()).collect()
         }
     assert grams == want
+
+
+def test_resolve_batch_writes_one_file_per_plain_slice(spark, tmp_path):
+    """A small resolver batch writes its assignments and entities slices as
+    one data file each, not one per shuffle partition, and the gram insert
+    that reads the entities slice back writes at most one file per bucket."""
+    from linkorgs_software_spark.streaming import resolve_batch
+    from linkorgs_software_spark.streaming.history import recommended_history_buckets
+
+    def data_files(*parts):
+        return sum(f.startswith("part-") for f in os.listdir(os.path.join(out, *parts)))
+
+    batches, kw = _job_batches(spark, "resolve_batch")
+    buckets = recommended_history_buckets(batches[0])
+    out = str(tmp_path / "resolve_files")
+    counts = []
+    for batch_id, df in enumerate(batches):
+        resolve_batch(df, batch_id, out, **kw)
+        part = f"batch_id={batch_id}"
+        counts.append(
+            (
+                data_files("assignments", part),
+                data_files("history", "entities", part),
+                data_files("history", "grams", part),
+            )
+        )
+    assert all(a == e == 1 and 0 < g <= buckets for a, e, g in counts), counts
 
 
 def test_compact_directory_merges_split_entities(spark, tmp_path):
