@@ -1218,7 +1218,6 @@ def _q_incremental_resolve(spark, sf_dir):
     import tempfile
 
     from linkorgs_software_spark.streaming import resolve_batch
-    from linkorgs_software_spark.streaming.history import history_table_name
 
     part = _read(spark, sf_dir, "part")
     base = part.select(
@@ -1232,10 +1231,6 @@ def _q_incremental_resolve(spark, sf_dir):
     )
     key = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
     out = os.path.join(tempfile.gettempdir(), f"linkorgs_resolve_q_{key}")
-    try:
-        spark.sql(f"DROP TABLE IF EXISTS {history_table_name(out, 'grams')}")
-    except Exception:
-        pass
     shutil.rmtree(out, ignore_errors=True)
     cfg = CFG.with_(distance_measure="dl")
     # 8 history buckets (vs the 64 production default): the correctness

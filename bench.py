@@ -184,7 +184,6 @@ def bench_incremental_resolve(spark, sf_dir: str):
 
     from linkorgs_software_spark.sources.fixtures import gen_linkage_fixture
     from linkorgs_software_spark.streaming import resolve_batch
-    from linkorgs_software_spark.streaming.history import history_table_name
 
     n = 1500 if "0.1" in sf_dir.rstrip("/").rsplit("sf", 1)[-1] else 500
     fx = gen_linkage_fixture(spark, n_entities=n, seed=42)
@@ -204,10 +203,6 @@ def bench_incremental_resolve(spark, sf_dir: str):
             .select("entity_id").distinct().count()
         )
     finally:
-        try:
-            spark.sql(f"DROP TABLE IF EXISTS {history_table_name(out, 'grams')}")
-        except Exception:
-            pass
         shutil.rmtree(out, ignore_errors=True)
 
 
@@ -366,7 +361,6 @@ def bench_incremental_neardup(spark, sf_dir: str):
     from pyspark.sql import functions as F
 
     from linkorgs_software_spark.streaming import neardup_batch
-    from linkorgs_software_spark.streaming.history import history_table_name
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     out = tempfile.mkdtemp(prefix="linkorgs_bench_neardup_")
@@ -377,10 +371,6 @@ def bench_incremental_neardup(spark, sf_dir: str):
             )
         return spark.read.parquet(f"{out}/docs").count()
     finally:
-        try:
-            spark.sql(f"DROP TABLE IF EXISTS {history_table_name(out, 'buckets')}")
-        except Exception:
-            pass
         shutil.rmtree(out, ignore_errors=True)
 
 
@@ -395,7 +385,6 @@ def bench_incremental_neardup_compact(spark, sf_dir: str):
     from pyspark.sql import functions as F
 
     from linkorgs_software_spark.streaming import neardup_batch
-    from linkorgs_software_spark.streaming.history import history_table_name
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     out = tempfile.mkdtemp(prefix="linkorgs_bench_ndcompact_")
@@ -407,10 +396,6 @@ def bench_incremental_neardup_compact(spark, sf_dir: str):
             )
         return spark.read.parquet(f"{out}/docs").count()
     finally:
-        try:
-            spark.sql(f"DROP TABLE IF EXISTS {history_table_name(out, 'buckets')}")
-        except Exception:
-            pass
         shutil.rmtree(out, ignore_errors=True)
 
 
@@ -425,7 +410,6 @@ def bench_incremental_embed_neardup(spark, sf_dir: str):
     from pyspark.sql import functions as F
 
     from linkorgs_software_spark.streaming import embed_neardup_batch
-    from linkorgs_software_spark.streaming.history import history_table_name
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
         "vec_id", "embedding"
@@ -448,12 +432,6 @@ def bench_incremental_embed_neardup(spark, sf_dir: str):
             )
         return spark.read.parquet(f"{out}/docs").count()
     finally:
-        try:
-            spark.sql(
-                f"DROP TABLE IF EXISTS {history_table_name(out, 'embuckets')}"
-            )
-        except Exception:
-            pass
         shutil.rmtree(out, ignore_errors=True)
 
 

@@ -11,10 +11,8 @@ carrying row counts — a re-run detects a completed stage and skips it.
 
 from __future__ import annotations
 
-import hashlib
 import json
 import os
-import re
 import time
 
 from pyspark.sql import DataFrame, SparkSession
@@ -25,17 +23,6 @@ def hadoop_fs(spark: SparkSession, path: str):
     Path = spark._jvm.org.apache.hadoop.fs.Path
     hpath = Path(path)
     return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath, Path
-
-
-def dir_table_name(prefix: str, directory: str, name: str) -> str:
-    """Catalog name for a table stored under ``directory``. The sanitized
-    path is lossy (``/data/a-b`` and ``/data/a_b`` collide), so an md5 of the
-    exact absolute path keeps two directories from sharing one table (the
-    first registration's LOCATION would win: silent cross-writes)."""
-    abspath = os.path.abspath(directory)
-    suffix = re.sub(r"\W+", "_", abspath).strip("_")
-    digest = hashlib.md5(abspath.encode("utf-8")).hexdigest()[:8]
-    return f"{prefix}_{suffix}_{digest}_{name}"
 
 
 def plan_size_bytes(df: DataFrame) -> int | None:
@@ -141,51 +128,6 @@ class StageCheckpointer:
         fs.rename(Path(tmp), hpath)
         fs.create(marker, True).close()
         return self.spark.read.parquet(path)
-
-    def run_bucketed(
-        self,
-        name: str,
-        build,
-        *,
-        bucket_cols,
-        num_buckets: int = 64,
-        sort_cols=None,
-    ) -> DataFrame:
-        """Materialize a stage as a BUCKETED table (hash-bucketed on
-        ``bucket_cols``, optionally sorted within buckets).
-
-        The co-located-join lever: two stages bucketed on the same key with
-        the same bucket count join WITHOUT a shuffle (no Exchange on either
-        side — asserted in tests/test_plan_shapes.py), and sorted buckets
-        skip the sort of a sort-merge join. This is the parquet/metastore
-        stand-in for Iceberg's bucket partition transform; repeated pair-key
-        joins (score → dedup → fuse → back-merge) reuse one physical
-        distribution instead of re-shuffling per stage.
-        """
-        table = dir_table_name("ckpt", self.base_dir, name)
-        if self.spark.catalog.tableExists(table):
-            return self.spark.table(table)
-        t0 = time.time()
-        df = build()
-        writer = df.write.mode("overwrite").format("parquet").bucketBy(
-            num_buckets, *bucket_cols
-        )
-        if sort_cols:
-            writer = writer.sortBy(*sort_cols)
-        writer.saveAsTable(table)
-        out = self.spark.table(table)
-        rows = out.count()
-        rec = {
-            "stage": name,
-            "table": table,
-            "rows": rows,
-            "bucket_cols": list(bucket_cols),
-            "num_buckets": num_buckets,
-            "secs": round(time.time() - t0, 3),
-        }
-        with open(os.path.join(self.base_dir, "_metrics.jsonl"), "a") as f:
-            f.write(json.dumps(rec) + "\n")
-        return out
 
     def metrics(self) -> list[dict]:
         p = os.path.join(self.base_dir, "_metrics.jsonl")

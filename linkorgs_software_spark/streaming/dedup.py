@@ -30,10 +30,14 @@ import os
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType, StructType
 
 from ..cache import persist, scoped_caches
-from .history import maybe_compact, prior_batch_paths
+from .history import maybe_compact, read_prior_slices
 from .incremental import bind_batch, run_stream
+
+# the history column the cross-batch anti-join reads
+_SEEN_SCHEMA = StructType().add("_h", StringType())
 
 
 @scoped_caches()
@@ -73,12 +77,8 @@ def dedup_batch(
         "_keep"
     )
     # cross-batch: drop anything whose hash is already in PRIOR history
-    prior = prior_batch_paths(spark, history_dir, batch_id)
-    if prior:
-        seen = spark.read.parquet(*prior).select("_h")
-        fresh = hashed.join(seen, "_h", "left_anti")
-    else:
-        fresh = hashed
+    seen = read_prior_slices(spark, history_dir, batch_id, _SEEN_SCHEMA)
+    fresh = hashed if seen is None else hashed.join(seen, "_h", "left_anti")
     fresh = persist(fresh)  # both writes read the persisted frame
     fresh.drop("_h", "_keep").write.mode("overwrite").parquet(
         f"{docs_dir}/batch_id={batch_id}"

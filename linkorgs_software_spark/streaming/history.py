@@ -1,11 +1,16 @@
-"""Bucketed on-disk history tables for the streaming near-dup operators.
+"""Directory-backed history for the streaming operators.
 
-The scale problem this solves (round-3 audit finding): with the history
-stored as plain ``batch_id=N`` parquet directories, every micro-batch's
-candidate join SHUFFLES the ever-growing full posting-list table — per-batch
-cost grows linearly with corpus lifetime. Here the bucket history is a
-catalog table **partitioned by ``batch_id`` and hash-bucketed on the join
-key** (the ``sources/io.py run_bucketed`` pattern; Iceberg's bucket
+The directory is the table. Every history slice lives under the stream's
+``out_dir`` as ``batch_id=N`` partitions, and this module alone decides how
+a catalog table maps onto such a directory; callers never create, drop or
+re-register one.
+
+The scale problem the bucketed slices solve (round-3 audit finding): with
+the history stored as plain ``batch_id=N`` parquet directories, every
+micro-batch's candidate join SHUFFLES the ever-growing full posting-list
+table — per-batch cost grows linearly with corpus lifetime. A bucketed
+slice is therefore an external catalog table **partitioned by
+``batch_id`` and hash-bucketed on the join key** (Iceberg's bucket
 partition transform at prod):
 
   * the candidate join's history side is an Exchange-free bucketed scan —
@@ -13,36 +18,49 @@ partition transform at prod):
     partitions, so per-batch join cost is O(batch + matching buckets), not
     O(history);
   * ``batch_id`` partition pruning gives the same replay-safety rule as
-    ``prior_batch_paths`` (a replayed batch never anti-joins its own
+    ``read_prior_slices`` (a replayed batch never anti-joins its own
     previous attempt) without listing directories;
   * per-batch idempotent overwrite is dynamic partition overwrite on
     ``batch_id`` — a replay rewrites exactly its own partition.
 
-Durability across driver restarts: the default session catalog is
-in-memory, so the TABLE METADATA dies with the session while the DATA
-(external table under ``out_dir``) survives. Creation therefore writes a
-``_table_spec.json`` sidecar (column DDL + bucket spec) next to the data;
-``_ensure_table`` re-registers the table from the sidecar and runs ``MSCK
-REPAIR`` to recover partitions. A genuinely unreadable sidecar/table fails
+The table's spec lives in the directory: creation writes a
+``_table_spec.json`` sidecar (column DDL + bucket spec) next to the data,
+and ``_ensure_table`` trusts the sidecar, never the catalog. The default
+session catalog is in-memory, so a driver restart loses the registration
+while the data survives: ``_ensure_table`` re-registers the table from the
+sidecar and runs ``MSCK REPAIR`` to recover partitions. A registration
+whose directory has no sidecar (the directory was deleted, or rewritten
+without one) is stale: it is dropped and the directory counts as holding
+no history, the answer a new session gives, so the next write creates the
+table and its sidecar afresh. A genuinely unreadable sidecar/table fails
 the batch (checkpoint retries) rather than being mistaken for "no history
-yet" — same error contract as the exact-dedup history.
+yet" — same error contract as the plain slices.
 """
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
-from ..sources.io import dir_table_name, hadoop_fs, plan_size_bytes
+from ..sources.io import hadoop_fs, plan_size_bytes
 
 
 def history_table_name(out_dir: str, slice_name: str) -> str:
-    """Deterministic catalog name derived from the stream's output dir
-    (``sources.io.dir_table_name`` — distinct dirs never share a table)."""
-    return dir_table_name("stream_hist", out_dir, slice_name)
+    """Deterministic catalog name for a history slice under ``out_dir``. The
+    sanitized path is lossy (``/data/a-b`` and ``/data/a_b`` collide), so an
+    md5 of the exact absolute path keeps two directories from sharing one
+    table (the first registration's LOCATION would win: silent
+    cross-writes)."""
+    abspath = os.path.abspath(out_dir)
+    suffix = re.sub(r"\W+", "_", abspath).strip("_")
+    digest = hashlib.md5(abspath.encode("utf-8")).hexdigest()[:8]
+    return f"stream_hist_{suffix}_{digest}_{slice_name}"
 
 
 def _spec_path(path: str) -> str:
@@ -73,26 +91,30 @@ def _read_spec(spark: SparkSession, path: str) -> dict | None:
     return json.loads(text)
 
 
-def _ensure_table(spark: SparkSession, table: str, path: str) -> bool:
-    """Re-register ``table`` from its on-disk sidecar if the catalog lost it
-    (driver restart with the default in-memory catalog). Returns True when
-    the table is registered afterwards, False when there is genuinely no
-    history yet. A present-but-unreadable sidecar raises (fail the batch)."""
-    if spark.catalog.tableExists(table):
-        return True
+def _ensure_table(spark: SparkSession, table: str, path: str) -> dict | None:
+    """The sidecar spec of the history under ``path``, with ``table``
+    registered over it (re-registered from the sidecar when the catalog lost
+    it, e.g. a driver restart with the default in-memory catalog), or None
+    when there is no history yet. A registration without a sidecar is stale
+    and is dropped (module docstring). A present-but-unreadable sidecar
+    raises (fail the batch)."""
     spec = _read_spec(spark, path)
+    registered = spark.catalog.tableExists(table)
     if spec is None:
-        return False
-    cols = ", ".join(f"{c} {t}" for c, t in spec["columns"])
-    bucket_cols = ", ".join(spec["bucket_cols"])
-    spark.sql(
-        f"CREATE TABLE {table} ({cols}, batch_id INT) USING PARQUET "
-        f"PARTITIONED BY (batch_id) CLUSTERED BY ({bucket_cols}) "
-        f"SORTED BY ({bucket_cols}) INTO {spec['num_buckets']} BUCKETS "
-        f"LOCATION '{path}'"
-    )
-    spark.sql(f"MSCK REPAIR TABLE {table}")
-    return True
+        if registered:
+            spark.sql(f"DROP TABLE {table}")  # external: the files stay
+        return None
+    if not registered:
+        cols = ", ".join(f"{c} {t}" for c, t in spec["columns"])
+        bucket_cols = ", ".join(spec["bucket_cols"])
+        spark.sql(
+            f"CREATE TABLE {table} ({cols}, batch_id INT) USING PARQUET "
+            f"PARTITIONED BY (batch_id) CLUSTERED BY ({bucket_cols}) "
+            f"SORTED BY ({bucket_cols}) INTO {spec['num_buckets']} BUCKETS "
+            f"LOCATION '{path}'"
+        )
+        spark.sql(f"MSCK REPAIR TABLE {table}")
+    return spec
 
 
 def recommended_history_buckets(
@@ -137,7 +159,7 @@ def write_history_bucketed(
     clears every cached frame reading it, so later actions recompute them."""
     spark = df.sparkSession
     stamped = df.withColumn("batch_id", F.lit(int(batch_id)).cast("int"))
-    if _ensure_table(spark, table, path):
+    if _ensure_table(spark, table, path) is not None:
         # dynamic partition overwrite: a replay rewrites ONLY batch_id=N
         old_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
@@ -186,13 +208,21 @@ def list_batch_ids(spark: SparkSession, path: str) -> list[int]:
     return sorted(out)
 
 
-def prior_batch_paths(spark: SparkSession, path: str, batch_id: int) -> list[str]:
-    """The ``batch_id=N`` directories under ``path`` except ``batch_id``'s
-    own, which may hold a failed prior attempt a replay must not read.
-    Missing dir => [] (the first batch); any other listing failure
-    propagates, so a transient FS error never passes for "no history"."""
-    ids = list_batch_ids(spark, path)
-    return [os.path.join(path, f"batch_id={b}") for b in ids if b != batch_id]
+def read_prior_slices(
+    spark: SparkSession, path: str, batch_id: int, schema: StructType
+) -> DataFrame | None:
+    """The plain ``batch_id=N`` slices under ``path`` except ``batch_id``'s
+    own, which may hold a failed prior attempt a replay must not read, read
+    with the caller's declared ``schema`` (no footer-inference job). None
+    when there is no such slice (the first batch, or a missing dir); any
+    other listing failure propagates, so a transient FS error never passes
+    for "no history"."""
+    paths = [
+        os.path.join(path, f"batch_id={b}")
+        for b in list_batch_ids(spark, path)
+        if b != batch_id
+    ]
+    return spark.read.schema(schema).parquet(*paths) if paths else None
 
 
 def _fold_set(
@@ -278,9 +308,7 @@ def compact_bucketed_history(
     fold, new_id = _fold_set(ids, watermark, which=which)
     if len(fold) <= 1:
         return None
-    if not _ensure_table(spark, table, path):
-        return None
-    spec = _read_spec(spark, path)
+    spec = _ensure_table(spark, table, path)
     if spec is None:
         return None
     data_cols = [c for c, _ in spec["columns"]]
@@ -379,8 +407,8 @@ def read_prior_history(
     spark: SparkSession, table: str, path: str, batch_id: int
 ) -> DataFrame | None:
     """PRIOR batches' history (``batch_id != N`` — partition pruning), or
-    None when no history exists yet. Mirrors ``prior_batch_paths``
-    semantics: missing history => first batch; unreadable history raises."""
-    if not _ensure_table(spark, table, path):
+    None when no history exists yet. Mirrors ``read_prior_slices``:
+    missing history => first batch; unreadable history raises."""
+    if _ensure_table(spark, table, path) is None:
         return None
     return spark.table(table).filter(F.col("batch_id") != int(batch_id))

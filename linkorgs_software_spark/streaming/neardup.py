@@ -57,8 +57,8 @@ from .history import (
     history_table_name,
     list_batch_ids,
     maybe_compact,
-    prior_batch_paths,
     read_prior_history,
+    read_prior_slices,
     recommended_history_buckets,
     write_history_bucketed,
 )
@@ -131,6 +131,9 @@ def _lsh_dedup_batch(
     def payload_of(rows: DataFrame) -> DataFrame:
         return rows.select(F.col(id_col).alias("id"), payload.alias("p"))
 
+    def as_slice(p: DataFrame) -> DataFrame:  # an (id, p) frame as a payload slice
+        return p.select(F.col("id").alias(hist_id), F.col("p").alias(hist_p))
+
     batch_p = persist(payload_of(batch_df)) if cache_payload else payload_of(batch_df)
     # materialize the persist AND take the cap's free no-op guard in one
     # action: each id emits exactly `rows_per_id` bucket rows, so no
@@ -165,11 +168,11 @@ def _lsh_dedup_batch(
     prior = read_prior_history(spark, hist_tbl, buckets_dir, batch_id)
     if check_prior is not None:
         check_prior(n_keys, prior)
-    # the payload slice is written in lockstep with the bucket table, so an
-    # empty prior listing means no PRIOR batch exists (e.g. a replay of the
-    # very first batch) — skip
-    prior_plain = prior_batch_paths(spark, plain_dir, batch_id)
-    if prior is not None and prior_plain:
+    # the payload slice is written in lockstep with the bucket table, so no
+    # prior slice means no PRIOR batch exists (e.g. a replay of the very
+    # first batch) — skip; it is read with the schema this batch writes
+    prior_plain = read_prior_slices(spark, plain_dir, batch_id, as_slice(batch_p).schema)
+    if prior is not None and prior_plain is not None:
         new_b = keys.join(survivors.select(F.col(id_col).alias("id")), "id", "left_semi")
         if probe is not None:
             # probes expand the micro-batch side (small side); the history
@@ -186,9 +189,7 @@ def _lsh_dedup_batch(
         )
         # the candidates restrict a cached batch payload to survivors
         new_p = batch_p if cache_payload else payload_of(survivors)
-        old_p = spark.read.parquet(*prior_plain).select(
-            F.col(hist_id).alias("id"), F.col(hist_p).alias("p")
-        )
+        old_p = prior_plain.select(F.col(hist_id).alias("id"), F.col(hist_p).alias("p"))
         dup_new = (
             _verified(cand, new_p, old_p, sim, threshold)
             .select(F.col("id_a").alias(id_col))
@@ -202,9 +203,7 @@ def _lsh_dedup_batch(
     fresh.write.mode("overwrite").parquet(os.path.join(out_dir, "docs", f"batch_id={batch_id}"))
     kept = fresh.select(F.col(id_col).alias("id"))
     kept_p = batch_p.join(kept, "id", "left_semi") if cache_payload else payload_of(fresh)
-    kept_p.select(F.col("id").alias(hist_id), F.col("p").alias(hist_p)).write.mode(
-        "overwrite"
-    ).parquet(os.path.join(plain_dir, f"batch_id={batch_id}"))
+    as_slice(kept_p).write.mode("overwrite").parquet(os.path.join(plain_dir, f"batch_id={batch_id}"))
     write_history_bucketed(
         keys.join(kept, "id", "left_semi").select(*key_cols, F.col("id").alias(hist_id)),
         hist_tbl,
@@ -241,7 +240,7 @@ def neardup_batch(
     batch (which can never replay — only the LAST uncommitted batch
     re-executes) plus any prior snapshot fold into ONE new snapshot
     partition with the same bucket spec, and the shingle slice folds in
-    lockstep. This bounds file count, ``MSCK`` recovery time, and
+    lockstep. This bounds file count, catalog recovery time, and
     per-batch scan metadata at O(compact_every) instead of O(stream
     lifetime); without it a year-long stream accumulates
     O(batches · num_history_buckets) files.
@@ -302,7 +301,7 @@ def embed_neardup_batch(
     ``compact_every`` folds committed history partitions older than this
     batch into one snapshot partition once ``compact_every`` of them
     accumulate — same lifecycle bound as the text sibling (file count,
-    MSCK recovery, and scan metadata stay O(compact_every)).
+    catalog recovery, and scan metadata stay O(compact_every)).
 
     ``occupancy_warn_factor``: a stream is pinned to its start-time
     ``n_planes`` (bucket ids must be stream-constant), so as kept history

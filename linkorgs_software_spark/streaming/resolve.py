@@ -100,8 +100,8 @@ from .history import (
     history_table_name,
     list_batch_ids,
     maybe_compact,
-    prior_batch_paths,
     read_prior_history,
+    read_prior_slices,
     recommended_history_buckets,
     write_history_bucketed,
 )
@@ -173,14 +173,14 @@ def resolve_batch(
         if prior_grams is None and num_history_buckets is None:
             # scale-adaptive default, used only by the table-creating batch
             num_history_buckets = recommended_history_buckets(batch_df)
-        prior_ent_paths = prior_batch_paths(spark, entities_dir, batch_id)
+        prior_ents = read_prior_slices(spark, entities_dir, batch_id, ENTITIES_SCHEMA)
         matched = None
-        if prior_grams is not None and prior_ent_paths:
+        if prior_grams is not None and prior_ents is not None:
             # alias rows are scored as listed, never deduplicated by alias_id:
             # a compact_directory crash leaves one alias under its old and its
             # merged entity id, and the min (distance, entity_id) pick below
             # resolves the pair to the merged one
-            aliases = name_sets(spark.read.schema(ENTITIES_SCHEMA).parquet(*prior_ent_paths), cfg)
+            aliases = name_sets(prior_ents, cfg)
             prior = IndexedSide(aliases, prior_grams.select("gram", "alias_id"), "alias_id")
             pairs = match_sides(IndexedSide(names, tri, "_nid"), prior, cfg, x_count=n_names)
             # best alias (NULL distance last), then max_dist: a filter above

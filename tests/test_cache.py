@@ -89,13 +89,20 @@ def test_one_name_blocking_rule_and_one_name_scorer():
     ``operators/scoring.py``, and a side's scoring sets (``name_sets``) are
     built only by ``scoring.index_side`` and for the resolver's entity
     alias rows, which are scored as listed, never deduplicated by
-    ``alias_id`` (the ``compact_directory`` crash window). A home is a
-    module, or one function in it."""
+    ``alias_id`` (the ``compact_directory`` crash window). Catalog tables
+    over directories are created, registered and repaired only in
+    ``streaming/history.py`` (``sources/tables.py`` is the Iceberg table
+    seam, unreached and kept). A home is a module, or one function in it."""
     blocking, scoring = pathlib.Path("operators", "blocking.py"), pathlib.Path("operators", "scoring.py")
+    tables = {(pathlib.Path("streaming", "history.py"), None), (pathlib.Path("sources", "tables.py"), None)}
     homes = {
         "cfg.min_shared_frac": {(blocking, None)},
         "jaccard_dist_from_sizes_expr(": {(scoring, None)},
         "name_sets(": {(scoring, "index_side"), (pathlib.Path("streaming", "resolve.py"), "resolve_batch")},
+        "saveAsTable(": tables,
+        "insertInto(": tables,
+        "tableExists(": tables,
+        "MSCK": tables,
     }
     hits = []
     for path in sorted(PKG.rglob("*.py")):

@@ -72,50 +72,6 @@ def test_scoring_barrier_is_memory_and_disk_deserialized(spark):
     spark.catalog.clearCache()
 
 
-def test_bucketed_stages_join_without_shuffle(spark, tmp_path):
-    """Two stages bucketed on the same key + count must sort-merge join with
-    NO Exchange on either side — the co-located join the checkpointer's
-    bucketed mode exists for."""
-    from linkorgs_software_spark.sources.io import StageCheckpointer
-
-    ckpt = StageCheckpointer(spark, str(tmp_path / "bucketed"))
-    a = ckpt.run_bucketed(
-        "side_a",
-        lambda: spark.range(1000).selectExpr("id", "id * 2 as va"),
-        bucket_cols=("id",),
-        num_buckets=8,
-        sort_cols=("id",),
-    )
-    b = ckpt.run_bucketed(
-        "side_b",
-        lambda: spark.range(1000).selectExpr("id", "id * 3 as vb"),
-        bucket_cols=("id",),
-        num_buckets=8,
-        sort_cols=("id",),
-    )
-    # tiny sides would be broadcast (also shuffle-free, but not what this
-    # test asserts); force the sort-merge path to expose the bucketed read
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = a.join(b, "id")
-        assert joined.count() == 1000
-        plan = _plan(joined)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-    assert "Bucketed: true" in plan, plan
-    assert "Exchange hashpartitioning" not in plan, plan
-    # resumability: second run() returns the committed table, no rebuild
-    calls = {"n": 0}
-
-    def rebuild():
-        calls["n"] += 1
-        return spark.range(5).selectExpr("id", "id as va")
-
-    ckpt.run_bucketed("side_a", rebuild, bucket_cols=("id",))
-    assert calls["n"] == 0
-
-
 def test_small_dim_join_broadcasts(spark):
     big = spark.read.parquet(f"{SF}/orders.parquet")
     small = spark.read.parquet(f"{SF}/region.parquet")

@@ -633,6 +633,33 @@ def test_neardup_history_survives_catalog_loss(spark, tmp_path):
     assert kept1 == []  # 4 is a near-dup of batch-0 doc 1: history recovered
 
 
+def test_resolve_history_survives_reset_then_restart(spark, tmp_path):
+    """A stream directory deleted and rebuilt within one session keeps its
+    history through a later driver restart: the rebuild writes the sidecar
+    the restart re-registers from, so batch 2 still sees batches 0 and 1
+    and matches an exact alias of batch 0 instead of minting a duplicate
+    entity over an overwritten history."""
+    import shutil
+
+    from linkorgs_software_spark.streaming import resolve_batch
+    from linkorgs_software_spark.streaming.history import history_table_name
+
+    b0, b1, kw = _release_batches(spark, "resolve_batch")
+    out = str(tmp_path / "reset_restart")
+    resolve_batch(b0, 0, out, **kw)
+    shutil.rmtree(out)
+    resolve_batch(b0, 0, out, **kw)
+    resolve_batch(b1, 1, out, **kw)
+    tbl = history_table_name(out, "grams")
+    spark.sql(f"DROP TABLE {tbl}")  # simulate driver restart (external: data stays)
+    b2 = spark.createDataFrame([("Acme Corp",), ("Initech",)], "name string")
+    resolve_batch(b2, 2, out, **kw)
+    batch_ids = {r.batch_id for r in spark.table(tbl).select("batch_id").distinct().collect()}
+    assert batch_ids == {0, 1, 2}
+    a2 = {r.name: r for r in spark.read.parquet(f"{out}/assignments/batch_id=2").collect()}
+    assert a2["Acme Corp"].matched_prior and a2["Acme Corp"].stringdist == 0.0
+
+
 def test_history_compaction_bounds_partitions_and_preserves_dedup(spark, tmp_path):
     """The round-5 lifecycle fix: with ``compact_every=K``, committed batch
     partitions older than the current batch fold into ONE snapshot
@@ -1085,26 +1112,31 @@ def test_batch_releases_its_caches(spark, stored_rdds, tmp_path, batch_fn):
 # bucketed history last (neardup_batch (16-18, 27-29), embed_neardup_batch
 # (12-13, 24-25) in every run), and for resolve_batch over seven runs once
 # it wrote one file per plain slice and read its entities slices with their
-# declared schema ((18, 25, 30) in every run).
+# declared schema ((18, 25, 30) in every run). Once every plain prior slice
+# was read with its declared schema (no footer-inference job), eighteen runs
+# gave dedup_batch (4, 5) in every run, neardup_batch (16-18, 26-28) and
+# embed_neardup_batch (12-13, 22-24).
 _BATCH_JOBS = {
-    "neardup_batch": (18, 29),
-    "embed_neardup_batch": (13, 25),
+    "neardup_batch": (18, 28),
+    "embed_neardup_batch": (13, 24),
+    "dedup_batch": (4, 5),
     "resolve_batch": (18, 25, 30),
 }
-# (table slice, its columns, plain slice, its columns) a resuming stream
-# reads, each column with its type
+# (table slice or None, its columns, plain slice dir, its columns) a resuming
+# stream reads, each column with its type
 _BATCH_HISTORY = {
     "neardup_batch": (
         "buckets", [("bucket", "string"), ("doc_id", "bigint")],
-        "shingles", [("doc_id", "bigint"), ("shingles", "array<string>")],
+        "history/shingles", [("doc_id", "bigint"), ("shingles", "array<string>")],
     ),
     "embed_neardup_batch": (
         "embuckets", [("table_id", "int"), ("bucket", "bigint"), ("vec_id", "bigint")],
-        "embeddings", [("vec_id", "bigint"), ("embedding", "array<float>")],
+        "history/embeddings", [("vec_id", "bigint"), ("embedding", "array<float>")],
     ),
+    "dedup_batch": (None, None, "history", [("_h", "string"), ("doc_id", "bigint")]),
     "resolve_batch": (
         "grams", [("gram", "string"), ("alias_id", "bigint")],
-        "entities", [("alias_id", "bigint"), ("entity_id", "bigint"), ("name_norm", "string")],
+        "history/entities", [("alias_id", "bigint"), ("entity_id", "bigint"), ("name_norm", "string")],
     ),
 }
 
@@ -1128,7 +1160,7 @@ def _job_batches(spark, batch_fn):
 
 
 @pytest.mark.parametrize(
-    "batch_fn", ["neardup_batch", "embed_neardup_batch", "resolve_batch"]
+    "batch_fn", ["neardup_batch", "embed_neardup_batch", "dedup_batch", "resolve_batch"]
 )
 def test_batch_jobs_and_history_layout(spark, tmp_path, batch_fn):
     """A streaming batch runs no more Spark jobs than the measured count,
@@ -1155,9 +1187,9 @@ def test_batch_jobs_and_history_layout(spark, tmp_path, batch_fn):
     assert len(jobs) == len(caps), jobs
     assert all(0 < n <= cap for n, cap in zip(jobs, caps)), jobs
     table, table_cols, plain, plain_cols = _BATCH_HISTORY[batch_fn]
-    assert _typed_columns(spark.table(history_table_name(out, table))) == table_cols
-    plain_df = spark.read.parquet(os.path.join(out, "history", plain))
-    assert _typed_columns(plain_df) == plain_cols
+    if table is not None:
+        assert _typed_columns(spark.table(history_table_name(out, table))) == table_cols
+    assert _typed_columns(spark.read.parquet(os.path.join(out, plain))) == plain_cols
 
 
 def test_resolve_history_insert_runs_after_batch_caches_release(
@@ -1200,7 +1232,7 @@ def test_neardup_payload_slice_precedes_bucket_insert(spark, tmp_path, monkeypat
     committed = []
 
     def insert(df, table, path, batch_id, **kw):
-        slice_dir = os.path.join(out, "history", plain, f"batch_id={batch_id}")
+        slice_dir = os.path.join(out, plain, f"batch_id={batch_id}")
         committed.append(os.path.exists(os.path.join(slice_dir, "_SUCCESS")))
         return real(df, table, path, batch_id, **kw)
 

@@ -101,7 +101,6 @@ def _stream_text(spark, tag, *, name, compact_every):
     from pyspark.sql import functions as F
 
     from linkorgs_software_spark.streaming import neardup_batch
-    from linkorgs_software_spark.streaming.history import history_table_name
 
     docs = spark.read.parquet(f"{SCALE}/documents_{tag}.parquet")
     out = tempfile.mkdtemp(prefix="scale_nd_")
@@ -116,10 +115,6 @@ def _stream_text(spark, tag, *, name, compact_every):
             times.append(round(time.time() - t0, 2))
         kept = spark.read.parquet(f"{out}/docs").count()
     finally:
-        try:
-            spark.sql(f"DROP TABLE IF EXISTS {history_table_name(out, 'buckets')}")
-        except Exception:
-            pass
         shutil.rmtree(out, ignore_errors=True)
     PER_BATCH.setdefault(f"{name}_{tag}", []).append(times)
     return kept
@@ -147,7 +142,6 @@ def q_incremental_embed(spark, tag):
     from pyspark.sql import functions as F
 
     from linkorgs_software_spark.streaming import embed_neardup_batch
-    from linkorgs_software_spark.streaming.history import history_table_name
 
     emb = spark.read.parquet(f"{SCALE}/embeddings_{tag}.parquet")
     out = tempfile.mkdtemp(prefix="scale_embnd_")
@@ -162,12 +156,6 @@ def q_incremental_embed(spark, tag):
             times.append(round(time.time() - t0, 2))
         kept = spark.read.parquet(f"{out}/docs").count()
     finally:
-        try:
-            spark.sql(
-                f"DROP TABLE IF EXISTS {history_table_name(out, 'embuckets')}"
-            )
-        except Exception:
-            pass
         shutil.rmtree(out, ignore_errors=True)
     PER_BATCH.setdefault(f"incremental_embed_neardup_{tag}", []).append(times)
     return kept
@@ -192,7 +180,6 @@ def q_incremental_resolve(spark, tag):
 
     from linkorgs_software_spark import LinkConfig
     from linkorgs_software_spark.streaming import resolve_batch
-    from linkorgs_software_spark.streaming.history import history_table_name
 
     base = spark.read.parquet(f"{SCALE}/names_{tag}.parquet").select("name")
     variants = [
@@ -217,10 +204,6 @@ def q_incremental_resolve(spark, tag):
             .select("entity_id").distinct().count()
         )
     finally:
-        try:
-            spark.sql(f"DROP TABLE IF EXISTS {history_table_name(out, 'grams')}")
-        except Exception:
-            pass
         shutil.rmtree(out, ignore_errors=True)
     PER_BATCH.setdefault(f"incremental_resolve_{tag}", []).append(times)
     return n_ent
