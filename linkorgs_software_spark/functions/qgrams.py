@@ -112,6 +112,12 @@ def jaccard_qgram_dist_expr(a_set: Column | str, b_set: Column | str) -> Column:
     return F.when(union == 0, F.lit(0.0)).otherwise(F.lit(1.0) - inter / union)
 
 
+def jaccard_sim_expr(a_set: Column | str, b_set: Column | str) -> Column:
+    """Set jaccard *similarity*, ``1 − jaccard_qgram_dist_expr`` — the
+    near-dup family's shingle-set verify score."""
+    return F.lit(1.0) - jaccard_qgram_dist_expr(a_set, b_set)
+
+
 def jaccard_dist_from_sizes_expr(
     a_set: Column | str, b_set: Column | str, n_a: Column | str, n_b: Column | str
 ) -> Column:

@@ -144,6 +144,22 @@ def fingerprint_expr(col: Column | str) -> Column:
     )
 
 
+def token_windows_expr(toks: Column | str, k: int, window=None) -> Column:
+    """The length-``k`` windows of a token array, in order: each the
+    space-joined tokens, passed through ``window`` when given (for example
+    ``F.md5``). Fewer than ``k`` tokens (or a NULL array) give no window."""
+    t = _c(toks)
+    n = F.size(t)
+
+    def at(i):
+        w = F.concat_ws(" ", F.slice(t, i, k))
+        return w if window is None else window(w)
+
+    return F.when(
+        n >= k, F.transform(F.sequence(F.lit(1), n - k + 1), at)
+    ).otherwise(F.array().cast("array<string>"))
+
+
 def word_shingles_expr(col: Column | str, k: int = 3) -> Column:
     """Distinct word k-shingles (space-joined) — minhash/jaccard unit."""
     toks = tokens_expr(F.lower(_c(col)))

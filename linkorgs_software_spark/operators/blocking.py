@@ -142,6 +142,30 @@ def bucket_pairs(
     )
 
 
+def verified_pairs(
+    cand: DataFrame,
+    left: DataFrame,
+    right: DataFrame,
+    sim: Callable[[str, str], Column],
+    threshold: float,
+    *,
+    score: str = "sim",
+) -> DataFrame:
+    """The near-dup family's one verify step, after ``bucket_pairs``:
+    ``cand (id_a, id_b)`` joined to each side's ``(id, <payload>)`` frame,
+    the payload carried as ``<payload>_a`` / ``<payload>_b`` (the
+    ``bucket_pairs`` naming), scored as ``score = sim(<payload>_a,
+    <payload>_b)`` and kept where ``score >= threshold``. Both frames name
+    their payload column alike."""
+    (p,) = [c for c in left.columns if c != "id"]
+    return (
+        cand.join(left.select(F.col("id").alias("id_a"), F.col(p).alias(f"{p}_a")), "id_a")
+        .join(right.select(F.col("id").alias("id_b"), F.col(p).alias(f"{p}_b")), "id_b")
+        .withColumn(score, sim(f"{p}_a", f"{p}_b"))
+        .filter(F.col(score) >= F.lit(float(threshold)))
+    )
+
+
 def recommended_block_df(n_rows: int, *, frac: float = 0.1, lo: int = 500) -> int:
     """Posting-list cap that scales with the side's row count — the
     round-6 measured law (BENCH/BASELINE.md, link_many 10x run): a FIXED

@@ -14,7 +14,11 @@ an ANSI-SQL oracle:
 The four near-dup families share one candidate step,
 ``blocking.bucket_pairs``: df-cap hot keys, self-join on the key, keep
 ``id_a < id_b``, one row per pair. They differ only in the key (shingle,
-band, bit-block, LSH bucket) and in the verify that follows.
+band, bit-block, LSH bucket) and in the verify score; the shingle-set
+verifies join their payloads through ``blocking.verified_pairs``. The
+span family (duplicated spans and runs, passage dedup, boilerplate,
+decontamination, repetition) builds its token windows with
+``functions.text.token_windows_expr``.
 
 Hash portability: every hash is ``md5`` of a visible string (hex compared
 lexicographically), so Spark and DuckDB agree bit-for-bit; no engine-private
@@ -28,10 +32,10 @@ from pyspark.sql import functions as F
 
 from ..cache import persist
 from ..functions.embedding import cosine_sim_expr
-from ..functions.qgrams import jaccard_qgram_dist_expr
+from ..functions.qgrams import jaccard_sim_expr
 from ..functions.text import word_shingles_expr
 from ..sources.io import plan_size_bytes
-from .blocking import bucket_pairs
+from .blocking import bucket_pairs, verified_pairs
 
 
 def _spread_small_input(df: DataFrame, key_col: str) -> DataFrame:
@@ -106,17 +110,9 @@ def duplicated_spans(
     ids would put their window explodes on few tasks; the ids are not
     checked here.
     """
-    from ..functions.text import tokens_expr
+    from ..functions.text import token_windows_expr, tokens_expr
 
-    toks = tokens_expr(F.lower(F.col(text_col)))
-    n = F.size(toks)
-    spans_expr = F.when(
-        n >= k,
-        F.transform(
-            F.sequence(F.lit(1), n - k + 1),
-            lambda i: F.md5(F.concat_ws(" ", F.slice(toks, i, k))),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    spans_expr = token_windows_expr(tokens_expr(F.lower(F.col(text_col))), k, window=F.md5)
     # A small input (one split) would run the whole window explode on one
     # core — the measured one-file-split trap. The shared guard keys on the
     # optimizer's size estimate (so one HUGE file is also caught, which the
@@ -188,18 +184,10 @@ def duplicated_span_runs(
     window over only the DUPLICATED positions (a small fraction of tokens
     in a healthy corpus).
     """
-    from ..functions.text import tokens_expr
+    from ..functions.text import token_windows_expr, tokens_expr
 
     df = _spread_small_input(df, id_col)
-    toks = tokens_expr(F.lower(F.col(text_col)))
-    n = F.size(toks)
-    spans_expr = F.when(
-        n >= k,
-        F.transform(
-            F.sequence(F.lit(1), n - k + 1),
-            lambda i: F.md5(F.concat_ws(" ", F.slice(toks, i, k))),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    spans_expr = token_windows_expr(tokens_expr(F.lower(F.col(text_col))), k, window=F.md5)
     ex = persist(
         df.select(F.col(id_col).alias("_id"), F.posexplode(spans_expr).alias("_p0", "span"))
         .withColumn("pos", F.col("_p0") + 1)
@@ -276,7 +264,6 @@ def dedup_passages(
     )
     toks = tokens_expr(F.lower(F.col(text_col)))
     base = df.select(F.col(id_col).alias("_id"), toks.alias("_toks"))
-    n = F.size("_toks")
     head = runs.select(
         F.col(id_col).alias("_id"),
         "start_pos",
@@ -295,14 +282,27 @@ def dedup_passages(
     d = base.join(cut, "_id", "left").withColumn(
         "_cuts", F.coalesce("_cuts", F.array().cast("array<struct<start_pos:long,end_pos:long>>"))
     )
+    return _remove_cut_tokens(d, id_col, k)
+
+
+def _remove_cut_tokens(d: DataFrame, id_col: str, k: int) -> DataFrame:
+    """``(id_col, text_clean, n_tokens, n_removed)`` from ``d``'s ``_id``,
+    ``_toks`` (token array) and ``_cuts`` columns — the removal step of
+    ``dedup_passages`` and ``strip_boilerplate_spans``. ``_cuts`` holds
+    ``(start_pos, end_pos)`` runs of 1-based window starts; a run covers
+    tokens ``start_pos`` .. ``end_pos + k − 1``, and every covered token is
+    dropped. NULL text (NULL ``_toks``) reads as the empty token stream."""
+    toks = F.coalesce(F.col("_toks"), F.array().cast("array<string>"))
+    # filter's lambda index is 0-based: the token's position is i + 1
     kept = F.filter(
-        F.col("_toks"),
+        toks,
         lambda t, i: ~F.exists(
             F.col("_cuts"),
             lambda c: (c["start_pos"] <= i + 1)
             & (i + 1 < c["end_pos"] + F.lit(k)),
         ),
     )
+    n = F.size(toks)
     return d.select(
         F.col("_id").alias(id_col),
         F.concat_ws(" ", kept).alias("text_clean"),
@@ -334,17 +334,9 @@ def top_boilerplate_spans(
     qualifying span vocabulary (hundreds of millions of distinct repeated
     spans at web-corpus scale) through one task.
     """
-    from ..functions.text import tokens_expr
+    from ..functions.text import token_windows_expr, tokens_expr
 
-    toks = tokens_expr(F.lower(F.col(text_col)))
-    n = F.size(toks)
-    spans_expr = F.when(
-        n >= k,
-        F.transform(
-            F.sequence(F.lit(1), n - k + 1),
-            lambda i: F.concat_ws(" ", F.slice(toks, i, k)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    spans_expr = token_windows_expr(tokens_expr(F.lower(F.col(text_col))), k)
     agg = (
         df.select(F.col(id_col).alias("_id"), F.explode(spans_expr).alias("span"))
         .groupBy("span")
@@ -396,7 +388,7 @@ def strip_boilerplate_spans(
     execution of its own (typically explode + groupBy + window) plan just
     to be validated; oversize input still fails fast with a clear error.
     """
-    from ..functions.text import tokens_expr
+    from ..functions.text import token_windows_expr, tokens_expr
 
     n_spans = spans.limit(max_spans + 1).count()
     if n_spans > max_spans:
@@ -407,33 +399,21 @@ def strip_boilerplate_spans(
             "(top_boilerplate_spans), or raise max_spans deliberately"
         )
     spans_arr = spans.agg(F.collect_set(span_col).alias("_span_set"))
-    toks = tokens_expr(F.lower(F.col(text_col)))
-    d = df.crossJoin(F.broadcast(spans_arr)).withColumn("_toks", toks)
-    n = F.size("_toks")
-    starts = F.filter(
-        F.when(n >= k, F.sequence(F.lit(1), n - k + 1)).otherwise(
-            F.array().cast("array<int>")
-        ),
-        lambda i: F.array_contains(
-            F.col("_span_set"), F.concat_ws(" ", F.slice(F.col("_toks"), i, k))
-        ),
+    d = df.crossJoin(F.broadcast(spans_arr)).select(
+        F.col(id_col).alias("_id"),
+        tokens_expr(F.lower(F.col(text_col))).alias("_toks"),
+        "_span_set",
     )
-    d = d.withColumn("_starts", starts)
-    # token at 1-based position p survives iff no covered start s has
-    # s <= p < s+k (filter's lambda index is 0-based: p = i+1)
-    kept = F.filter(
-        F.col("_toks"),
-        lambda t, i: ~F.exists(
-            F.col("_starts"),
-            lambda s: (s <= i + 1) & (i + 1 < s + F.lit(k)),
+    # each listed window is a one-start run; the rest are dropped as NULL
+    hits = F.transform(
+        token_windows_expr("_toks", k),
+        lambda w, i: F.when(
+            F.array_contains("_span_set", w),
+            F.struct((i + 1).alias("start_pos"), (i + 1).alias("end_pos")),
         ),
     )
-    return d.select(
-        F.col(id_col),
-        F.concat_ws(" ", kept).alias("text_clean"),
-        F.size("_toks").cast("long").alias("n_tokens"),
-        (F.size("_toks") - F.size(kept)).cast("long").alias("n_removed"),
-    )
+    d = d.withColumn("_cuts", F.filter(hits, lambda c: c.isNotNull()))
+    return _remove_cut_tokens(d, id_col, k)
 
 
 def ngram_jaccard_dups(
@@ -451,23 +431,28 @@ def ngram_jaccard_dups(
     set jaccard on the full shingle sets. Returns (id_a, id_b, jaccard_sim),
     id_a < id_b.
     """
-    df = _spread_small_input(df, id_col)
-    sh = df.select(
-        F.col(id_col).alias("id"),
-        word_shingles_expr(text_col, shingle_k).alias("shingles"),
+    cand, sh = _shingle_candidates(df, id_col, text_col, shingle_k, max_block_df)
+    return verified_pairs(
+        cand, sh, sh, jaccard_sim_expr, threshold, score="jaccard_sim"
+    ).select("id_a", "id_b", "jaccard_sim")
+
+
+def _shingle_sets(df: DataFrame, id_col: str, text_col: str, shingle_k: int) -> DataFrame:
+    """``(id, sh)``: each doc's distinct word shingles, the verify payload
+    of the shingle-set families."""
+    return df.select(
+        F.col(id_col).alias("id"), word_shingles_expr(text_col, shingle_k).alias("sh")
     )
-    idx = persist(sh.select("id", F.explode("shingles").alias("s")))
-    cand = bucket_pairs(idx, "s", cap=max_block_df)
-    a = sh.select(F.col("id").alias("id_a"), F.col("shingles").alias("sh_a"))
-    b = sh.select(F.col("id").alias("id_b"), F.col("shingles").alias("sh_b"))
-    sim = F.lit(1.0) - jaccard_qgram_dist_expr("sh_a", "sh_b")
-    return (
-        cand.join(a, "id_a")
-        .join(b, "id_b")
-        .withColumn("jaccard_sim", sim)
-        .filter(F.col("jaccard_sim") >= F.lit(float(threshold)))
-        .select("id_a", "id_b", "jaccard_sim")
-    )
+
+
+def _shingle_candidates(
+    df: DataFrame, id_col: str, text_col: str, shingle_k: int, max_block_df: int
+) -> tuple[DataFrame, DataFrame]:
+    """``(candidate pairs, shingle sets)`` of ``ngram_jaccard_dups`` and
+    ``containment_pairs``: docs sharing at least one df-capped shingle."""
+    sh = _shingle_sets(_spread_small_input(df, id_col), id_col, text_col, shingle_k)
+    idx = persist(sh.select("id", F.explode("sh").alias("s")))
+    return bucket_pairs(idx, "s", cap=max_block_df), sh
 
 
 def containment_pairs(
@@ -499,26 +484,25 @@ def containment_pairs(
     shingles, enter no posting list, and never pair. round(·, 6) for
     oracle parity.
     """
-    df = _spread_small_input(df, id_col)
-    sh = df.select(
-        F.col(id_col).alias("id"),
-        word_shingles_expr(text_col, shingle_k).alias("shingles"),
-    )
-    idx = persist(sh.select("id", F.explode("shingles").alias("s")))
-    cand = bucket_pairs(idx, "s", cap=max_block_df)
-    a = sh.select(F.col("id").alias("id_a"), F.col("shingles").alias("sh_a"))
-    b = sh.select(F.col("id").alias("id_b"), F.col("shingles").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    scored = (
-        cand.join(a, "id_a")
-        .join(b, "id_b")
-        .select(
-            "id_a",
-            "id_b",
-            inter.alias("_i"),
-            F.size("sh_a").cast("long").alias("_na"),
-            F.size("sh_b").cast("long").alias("_nb"),
-        )
+    cand, sh = _shingle_candidates(df, id_col, text_col, shingle_k, max_block_df)
+
+    def inter(a, b):
+        return F.size(F.array_intersect(a, b)).cast("double")
+
+    # verify keeps a pair when either direction reaches the threshold (the
+    # larger containment is over the smaller set); the split follows
+    scored = verified_pairs(
+        cand,
+        sh,
+        sh,
+        lambda a, b: inter(a, b) / F.least(F.size(a), F.size(b)),
+        threshold,
+    ).select(
+        "id_a",
+        "id_b",
+        inter("sh_a", "sh_b").alias("_i"),
+        F.size("sh_a").cast("long").alias("_na"),
+        F.size("sh_b").cast("long").alias("_nb"),
     )
     t = F.lit(float(threshold))
     fwd = scored.filter(F.col("_i") / F.col("_na") >= t).select(
@@ -634,23 +618,16 @@ def minhash_lsh_dups(
     # the banded frame feeds the cap count AND both self-join sides: persist
     # (disk-spillable) so the signature aggregation runs once, not 3x
     cand = bucket_pairs(persist(banded), "bucket", cap=max_bucket_df)
-    sh = df.select(
-        F.col(id_col).alias("id"), word_shingles_expr(text_col, shingle_k).alias("sh")
-    )
-    sim = F.lit(1.0) - jaccard_qgram_dist_expr("sh_a", "sh_b")
-    return (
-        cand.join(sh.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a")), "id_a")
-        .join(sh.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b")), "id_b")
-        .withColumn("jaccard_sim", sim)
-        .filter(F.col("jaccard_sim") >= F.lit(float(threshold)))
-        .select("id_a", "id_b", "jaccard_sim")
-    )
+    sh = _shingle_sets(df, id_col, text_col, shingle_k)
+    return verified_pairs(
+        cand, sh, sh, jaccard_sim_expr, threshold, score="jaccard_sim"
+    ).select("id_a", "id_b", "jaccard_sim")
 
 
 SIMHASH_BITS = 64
 
 
-def simhash_expr(text_col, *, bits: int = SIMHASH_BITS):
+def simhash_expr(text_col: str, *, bits: int = SIMHASH_BITS):
     """Portable 64-bit SimHash: per-token bit_j = bit ``j // 32`` of the
     ``(j % 32)``-th hex nibble of md5(token); signature bit j set iff the
     sum over tokens of (2*bit_j − 1) > 0.
@@ -665,17 +642,14 @@ def simhash_expr(text_col, *, bits: int = SIMHASH_BITS):
     plain signed long in both Spark and the DuckDB oracle — neither engine
     accepts a ``1 << 63`` literal.
 
-    Pure Catalyst, explode-free (aggregate over the token array). For a
-    string column name the expression is GENERATED AS ONE SQL TEXT (single
-    py4j call — the Column-algebra form costs a round trip per node,
+    Pure Catalyst, explode-free (aggregate over the token array), over the
+    column NAMED ``text_col``. The expression is GENERATED AS ONE SQL TEXT
+    (single py4j call — a Column-algebra form costs a round trip per node,
     measured ~2 s of driver time per call at 64 bits; see
-    ``ann._sign_bucket_expr`` for the same fix); a Column input falls back
-    to the identical Column-algebra formulation.
+    ``ann._sign_bucket_expr`` for the same fix).
     """
     if not 1 <= bits <= 64:
         raise ValueError(f"simhash bits must be in [1, 64]; got {bits}")
-    if not isinstance(text_col, str):
-        return _simhash_expr_col(text_col, bits=bits)
     c = f"lower(`{text_col}`)"
     toks = (
         f"case when length(trim({c})) = 0 then array() "
@@ -700,42 +674,6 @@ def simhash_expr(text_col, *, bits: int = SIMHASH_BITS):
     return F.expr(
         f"element_at(transform(array({sums}), s -> (" + " + ".join(terms) + ")), 1)"
     )
-
-
-def _simhash_expr_col(text_col, *, bits: int):
-    """Column-algebra formulation (the textual generator's reference)."""
-    from ..functions.text import tokens_expr
-
-    toks = tokens_expr(F.lower(text_col))
-    hashes = F.transform(toks, lambda t: F.md5(t))
-    zero = F.array(*[F.lit(0).cast("long") for _ in range(bits)])
-
-    def contrib(h):
-        return F.array(
-            *[
-                (
-                    (
-                        F.shiftright(
-                            F.conv(F.substring(h, (j % 32) + 1, 1), 16, 10).cast("long"),
-                            j // 32,
-                        )
-                        % 2
-                    )
-                    * 2
-                    - 1
-                ).cast("long")
-                for j in range(bits)
-            ]
-        )
-
-    sums = F.aggregate(hashes, zero, lambda acc, h: F.zip_with(acc, contrib(h), lambda a, b: a + b))
-    out = F.lit(0).cast("long")
-    for j in range(bits):
-        weight = -(2**63) if j == 63 else 2**j
-        out = out + F.when(
-            F.element_at(sums, j + 1) > 0, F.lit(weight).cast("long")
-        ).otherwise(F.lit(0).cast("long"))
-    return out
 
 
 def simhash_dups(
@@ -954,18 +892,10 @@ def decontaminate_flags(
     joins on the window hash, and a per-doc count aggregates matches. No
     doc x benchmark-doc pairs ever materialize.
     """
-    from ..functions.text import tokens_expr
+    from ..functions.text import token_windows_expr, tokens_expr
 
     def spans_of(frame: DataFrame, col: str, out_id: str | None):
-        toks = tokens_expr(F.lower(F.col(col)))
-        n = F.size(toks)
-        spans = F.when(
-            n >= k,
-            F.transform(
-                F.sequence(F.lit(1), n - k + 1),
-                lambda i: F.md5(F.concat_ws(" ", F.slice(toks, i, k))),
-            ),
-        ).otherwise(F.array().cast("array<string>"))
+        spans = token_windows_expr(tokens_expr(F.lower(F.col(col))), k, window=F.md5)
         cols = [F.explode(spans).alias("span")]
         if out_id is not None:
             cols = [F.col(out_id).alias("_id")] + cols
@@ -1352,7 +1282,7 @@ def repetition_profile(
     except the final narrow doc-id re-attach that restores zero-token docs.
     All ratios are round(·, 6) integer-ratio doubles for oracle bit-parity.
     """
-    from ..functions.text import tokens_expr
+    from ..functions.text import token_windows_expr, tokens_expr
 
     base = df.select(
         F.col(id_col), tokens_expr(F.lower(F.col(text_col))).alias("_toks")
@@ -1364,16 +1294,7 @@ def repetition_profile(
         F.count(F.lit(1)).alias("_d"),
         F.max("_c").alias("_m"),
     )
-    bigrams = F.when(
-        F.size("_toks") >= 2,
-        F.transform(
-            F.sequence(F.lit(1), F.size("_toks") - 1),
-            lambda i: F.concat_ws(
-                " ", F.element_at("_toks", i), F.element_at("_toks", i + 1)
-            ),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    bg = base.select(id_col, F.explode(bigrams).alias("_g"))
+    bg = base.select(id_col, F.explode(token_windows_expr("_toks", 2)).alias("_g"))
     bc = bg.groupBy(id_col, "_g").agg(F.count(F.lit(1)).alias("_c"))
     bstats = bc.groupBy(id_col).agg(
         F.sum("_c").alias("_bn"),
@@ -1668,22 +1589,14 @@ def source_overlap(
     )
 
 
-def _source_term_frame(
-    df: DataFrame, *, text_col: str, source_col: str
-) -> tuple[DataFrame, int]:
-    """Prep for ``divergent_terms``: the persisted per-(source, term)
-    count frame over lowercase whitespace tokens (NULL sources dropped —
-    they belong to no mixture slice), plus the corpus token total as one
-    driver scalar. The frame feeds three downstream branches (corpus
-    term counts, per-source totals, the scored join), so it is persisted
-    (``cache.persist``, ``release_caches`` lifecycle) like
-    ``skew_profile``'s counts — without it the explode + count shuffle
-    runs once per consuming branch. (``vocab_divergence``
-    uses the shared ``categorical_divergence`` core instead, which
-    persists its own count frame.)"""
+def _source_term_counts(df: DataFrame, *, text_col: str, source_col: str) -> DataFrame:
+    """``(source, term, c_st)``: token counts per (source, term) over
+    lowercase whitespace tokens, NULL sources dropped (they belong to no
+    mixture slice) — the one count frame of ``vocab_divergence`` and
+    ``divergent_terms``."""
     from ..functions.text import tokens_expr
 
-    st = persist(
+    return (
         df.filter(F.col(source_col).isNotNull())
         .select(
             F.col(source_col).alias("source"),
@@ -1692,8 +1605,6 @@ def _source_term_frame(
         .groupBy("source", "term")
         .agg(F.count(F.lit(1)).alias("c_st"))
     )
-    n_total = st.agg(F.sum("c_st")).collect()[0][0] or 0
-    return st, int(n_total)
 
 
 def vocab_divergence(
@@ -1732,20 +1643,13 @@ def vocab_divergence(
     the corpus total is one collected scalar. round(·, 6) for oracle
     parity (ln is IEEE libm on both engines).
     """
-    from ..functions.text import tokens_expr
     from .drift import categorical_divergence
 
-    counts = (
-        df.filter(F.col(source_col).isNotNull())
-        .select(
-            F.col(source_col).alias("source"),
-            F.explode(tokens_expr(F.lower(F.col(text_col)))).alias("term"),
-        )
-        .groupBy("source", "term")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
     out = categorical_divergence(
-        counts, group_col="source", key_col="term", count_col="c"
+        _source_term_counts(df, text_col=text_col, source_col=source_col),
+        group_col="source",
+        key_col="term",
+        count_col="c_st",
     )
     return out.select(
         F.col("group").alias("source"),
@@ -1776,7 +1680,10 @@ def divergent_terms(
     window is PARTITIONED by source, ties break (log_ratio desc, term
     asc) so the top-k is stable run-to-run and against the SQL oracle.
     """
-    st, n_total = _source_term_frame(df, text_col=text_col, source_col=source_col)
+    # three consumers below (corpus term counts, per-source totals, the
+    # scored join): persisted, so the explode + count shuffle runs once
+    st = persist(_source_term_counts(df, text_col=text_col, source_col=source_col))
+    n_total = int(st.agg(F.sum("c_st")).collect()[0][0] or 0)
     ct = st.groupBy("term").agg(F.sum("c_st").alias("c_t"))
     ns = st.groupBy("source").agg(F.sum("c_st").alias("n_s"))
     p_s = F.col("c_st").cast("double") / F.col("n_s").cast("double")

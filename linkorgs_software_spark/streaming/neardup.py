@@ -48,10 +48,10 @@ from pyspark.sql import functions as F
 
 from ..cache import persist, scoped_caches
 from ..functions.embedding import cosine_sim_expr
-from ..functions.qgrams import jaccard_qgram_dist_expr
+from ..functions.qgrams import jaccard_sim_expr
 from ..functions.text import word_shingles_expr
 from ..operators.ann import expand_probes, lsh_buckets, lsh_occupancy_guard
-from ..operators.blocking import apply_df_cap, bucket_pairs
+from ..operators.blocking import apply_df_cap, bucket_pairs, verified_pairs
 from ..operators.corpus import minhash_band_buckets
 from .history import (
     history_table_name,
@@ -63,16 +63,6 @@ from .history import (
     write_history_bucketed,
 )
 from .incremental import bind_batch, run_stream
-
-
-def _verified(cand, left, right, sim, threshold: float) -> DataFrame:
-    """``cand (id_a, id_b)`` joined to each side's ``(id, p)`` payload,
-    kept where ``sim(p_a, p_b) >= threshold``."""
-    return (
-        cand.join(left.select(F.col("id").alias("id_a"), F.col("p").alias("p_a")), "id_a")
-        .join(right.select(F.col("id").alias("id_b"), F.col("p").alias("p_b")), "id_b")
-        .filter(sim("p_a", "p_b") >= F.lit(float(threshold)))
-    )
 
 
 def _lsh_dedup_batch(
@@ -153,7 +143,7 @@ def _lsh_dedup_batch(
     # (same semantics as the batch operators)
     cand_in = bucket_pairs(capped, key_cols, probe=probe)
     dropped = (
-        _verified(cand_in, batch_p, batch_p, sim, threshold)
+        verified_pairs(cand_in, batch_p, batch_p, sim, threshold)
         .select(F.col("id_b").alias(id_col))
         .distinct()
     )
@@ -191,7 +181,7 @@ def _lsh_dedup_batch(
         new_p = batch_p if cache_payload else payload_of(survivors)
         old_p = prior_plain.select(F.col(hist_id).alias("id"), F.col(hist_p).alias("p"))
         dup_new = (
-            _verified(cand, new_p, old_p, sim, threshold)
+            verified_pairs(cand, new_p, old_p, sim, threshold)
             .select(F.col("id_a").alias(id_col))
             .distinct()
         )
@@ -258,7 +248,7 @@ def neardup_batch(
         cache_payload=True,
         id_col=id_col,
         history=("buckets", "shingles", "doc_id", "shingles"),
-        sim=lambda a, b: F.lit(1.0) - jaccard_qgram_dist_expr(a, b),
+        sim=jaccard_sim_expr,
         threshold=threshold,
         rows_per_id=bands,
         max_bucket_df=max_bucket_df,

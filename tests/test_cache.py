@@ -92,7 +92,10 @@ def test_one_name_blocking_rule_and_one_name_scorer():
     ``alias_id`` (the ``compact_directory`` crash window). Catalog tables
     over directories are created, registered and repaired only in
     ``streaming/history.py`` (``sources/tables.py`` is the Iceberg table
-    seam, unreached and kept). A home is a module, or one function in it."""
+    seam, unreached and kept). Token windows are sliced only in
+    ``functions/text.py`` (``token_windows_expr``, ``word_shingles_expr``);
+    ``ann.ivf_topk`` slices its top centroids, not windows. A home is a
+    module, or one function in it."""
     blocking, scoring = pathlib.Path("operators", "blocking.py"), pathlib.Path("operators", "scoring.py")
     tables = {(pathlib.Path("streaming", "history.py"), None), (pathlib.Path("sources", "tables.py"), None)}
     homes = {
@@ -103,6 +106,7 @@ def test_one_name_blocking_rule_and_one_name_scorer():
         "insertInto(": tables,
         "tableExists(": tables,
         "MSCK": tables,
+        "F.slice(": {(pathlib.Path("functions", "text.py"), None), (pathlib.Path("operators", "ann.py"), "ivf_topk")},
     }
     hits = []
     for path in sorted(PKG.rglob("*.py")):

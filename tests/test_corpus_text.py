@@ -710,6 +710,55 @@ def test_strip_boilerplate_matches_python_reference(spark, docs_toks, span_tuple
 
 
 @settings(max_examples=15, deadline=None)
+@given(_doc_strategy)
+def test_dedup_passages_matches_python_reference(spark, docs_toks):
+    """Property: passage dedup over arbitrary small corpora matches a
+    pure-Python keep-one-canonical-copy reference — runs of consecutive
+    window starts whose window occurs in >= 2 docs, each run owned by the
+    minimum doc id among the runs with its head window, and every other
+    copy's run tokens removed."""
+    from collections import Counter
+
+    from linkorgs_software_spark.operators.corpus import dedup_passages
+
+    k = 3
+    wins = {i: [" ".join(t[s : s + k]) for s in range(len(t) - k + 1)]
+            for i, t in enumerate(docs_toks)}
+    n_docs = Counter(w for ws in wins.values() for w in set(ws))
+    runs = {}
+    for i, ws in wins.items():
+        for s, w in enumerate(ws):
+            if n_docs[w] < 2:
+                continue
+            if runs.get(i) and runs[i][-1][1] == s - 1:
+                runs[i][-1][1] = s
+            else:
+                runs.setdefault(i, []).append([s, s])
+    keeper = {}
+    for i, rs in runs.items():
+        for s, _ in rs:
+            keeper[wins[i][s]] = min(keeper.get(wins[i][s], i), i)
+
+    def ref(i, toks):
+        cut = set()
+        for s, e in runs.get(i, []):
+            if keeper[wins[i][s]] != i:
+                cut.update(range(s, e + k))
+        kept = [t for j, t in enumerate(toks) if j not in cut]
+        return " ".join(kept), len(toks), len(toks) - len(kept)
+
+    expect = {i: ref(i, toks) for i, toks in enumerate(docs_toks)}
+    df = spark.createDataFrame(
+        [(i, " ".join(toks)) for i, toks in enumerate(docs_toks)], "doc_id long, text string"
+    )
+    got = {
+        r.doc_id: (r.text_clean, r.n_tokens, r.n_removed)
+        for r in dedup_passages(df, k=k).collect()
+    }
+    assert got == expect
+
+
+@settings(max_examples=15, deadline=None)
 @given(
     st.integers(min_value=0, max_value=255),
     st.integers(min_value=0, max_value=2),
@@ -741,7 +790,7 @@ def test_duplicated_span_runs_merge_maximal_passages(spark):
     """Overlapping duplicated windows merge into ONE maximal run covering
     the exact shared passage; distinct passages in one doc stay separate
     runs; docs without duplication produce no rows."""
-    from linkorgs_software_spark.operators.corpus import duplicated_span_runs
+    from linkorgs_software_spark.operators.corpus import duplicated_span_runs, duplicated_spans
 
     shared = "one two three four five six seven eight nine ten"  # 10 tokens
     other = "red orange yellow green blue indigo violet umbra"   # 8 tokens
@@ -766,6 +815,11 @@ def test_duplicated_span_runs_merge_maximal_passages(spark):
     assert runs[2] == [(1, 3, 10)]
     assert runs[3] == [(3, 3, 8)]
     assert 4 not in runs
+    # the runs tile exactly the duplicated window starts duplicated_spans counts
+    spans = duplicated_spans(spark.createDataFrame(rows, "doc_id long, text string"), k=8)
+    assert {r.doc_id: r.n_dup_spans for r in spans.collect()} == {
+        d: sum(e - s + 1 for s, e, _ in runs.get(d, [])) for d in (1, 2, 3, 4)
+    }
 
 
 def test_dedup_passages_keeps_one_canonical_copy(spark):
@@ -989,15 +1043,23 @@ def test_source_profile_per_source_dup_rates(spark):
 
 
 def test_round5_ops_tolerate_null_and_empty_text(spark):
-    """NULL/empty text must not crash or corrupt the new analysis ops:
-    tfidf emits no rows for token-less docs, LM scoring and
-    decontamination keep a zero/NULL row for every input doc."""
+    """NULL/empty text must not crash or corrupt the corpus ops: tfidf
+    emits no rows for token-less docs; LM scoring, decontamination, the
+    span family and the repetition profile keep a zero/NULL row for every
+    input doc (or, for runs and top spans, add no row); the two removal
+    ops read NULL text as the empty token stream ('', 0 tokens, 0 removed)."""
     from pyspark.sql import functions as F
 
     from linkorgs_software_spark.operators.corpus import (
         decontaminate_flags,
+        dedup_passages,
+        duplicated_span_runs,
+        duplicated_spans,
         lm_quality_scores,
+        repetition_profile,
+        strip_boilerplate_spans,
         tfidf_top_terms,
+        top_boilerplate_spans,
     )
 
     docs = spark.createDataFrame(
@@ -1015,6 +1077,29 @@ def test_round5_ops_tolerate_null_and_empty_text(spark):
     de = {r.doc_id: r.contaminated for r in decontaminate_flags(docs, bench, k=8).collect()}
     assert set(de) == {1, 2, 3, 4}
     assert de[1] and not (de[2] or de[3] or de[4])
+    text1 = "real words here three four five six seven eight"
+    empty = {2: ("", 0, 0), 3: ("", 0, 0), 4: ("", 0, 0)}
+    dp = {r.doc_id: (r.text_clean, r.n_tokens, r.n_removed)
+          for r in dedup_passages(docs, k=8).collect()}
+    assert dp == {1: (text1, 9, 0), **empty}
+    spans = spark.createDataFrame([("real words here three four five six seven",)], "span string")
+    sb = {r.doc_id: (r.text_clean, r.n_tokens, r.n_removed)
+          for r in strip_boilerplate_spans(docs, spans, k=8).collect()}
+    assert sb == {1: ("eight", 9, 8), **empty}
+    ds = {r.doc_id: (r.n_spans, r.n_dup_spans, r.dup_span_frac)
+          for r in duplicated_spans(docs, k=8, min_docs=1).collect()}
+    assert ds == {1: (2, 2, 1.0), 2: (0, 0, 0.0), 3: (0, 0, 0.0), 4: (0, 0, 0.0)}
+    runs = [(r.doc_id, r.start_pos, r.end_pos, r.n_tokens)
+            for r in duplicated_span_runs(docs, k=8, min_docs=1).collect()]
+    assert runs == [(1, 1, 2, 9)]
+    top = {r.span: (r.n_docs, r.n_occurrences)
+           for r in top_boilerplate_spans(docs, k=8, min_docs=1).collect()}
+    assert top == {"real words here three four five six seven": (1, 1),
+                   "words here three four five six seven eight": (1, 1)}
+    rp = {r.doc_id: (r.n_tokens, r.distinct_token_ratio, r.top_token_share, r.dup_bigram_share)
+          for r in repetition_profile(docs).collect()}
+    assert rp[2] == rp[3] == rp[4] == (0, 0.0, 0.0, 0.0)
+    assert rp[1] == (9, 1.0, round(1 / 9, 6), 0.0)
 
 
 def test_stratified_sample_quota_nesting_and_stability(spark):
