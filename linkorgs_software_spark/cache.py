@@ -13,8 +13,7 @@ lifetimes cover the traffic:
 
 * ``scoped_caches()`` releases its frames at block exit. Streaming
   micro-batches and operator temporaries whose results are collected inside
-  the block (calibration's distinct-value base, assessment's pair sets) use
-  it.
+  the block (assessment's pair sets) use it.
 * ``call_caches()`` keeps its frames until the NEXT ``call_caches()`` block
   opens. ``link_orgs`` runs under it: it returns a lazy frame that still
   reads its persisted stages (prepared sides, candidate and scored

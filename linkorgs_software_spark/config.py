@@ -66,9 +66,6 @@ class LinkConfig:
     calibration_sample: int = 1000
     seed: int = 42
 
-    # --- misc ------------------------------------------------------------
-    shuffle_partitions: int | None = None  # None => leave session setting
-
     def with_(self, **kw) -> "LinkConfig":
         """``dataclasses.replace`` with correct ``by`` shorthand semantics.
 

@@ -12,11 +12,17 @@ returns Inf meaning no constraint on an empty side). Unlike the reference's
 unseeded ``sample()``, ours is **seeded** (SURVEY.md §7.4 risk 3) so the
 threshold — and therefore F1 — is reproducible run-to-run.
 
+Every side holds ONE ROW PER VALUE it counts (an indexed side's distinct
+names; an embedded side's one vector per distinct name): ``calibrate``
+neither deduplicates nor persists, so a side's ``n`` is its row count.
+``link_orgs`` passes the indexed sides it already persists; the public
+``calibrated_threshold`` deduplicates its two inputs at entry.
+
 The work is bounded (≤ ``calibration_sample`` names per side), so Spark
 does only what needs the full data: for a batch of requests ``(side_a,
-side_b, k)``, ONE action counts every side's distinct names and ONE collect
-gathers every ``(side, seed)`` sample, each shared by all requests naming
-it. The driver scores jaccard sample matrices in numpy; other measures
+side_b, k)``, ONE action counts every side's rows and ONE collect gathers
+every ``(side, seed)`` sample, each shared by all requests naming it.
+The driver scores jaccard sample matrices in numpy; other measures
 (Catalyst and registered scorers, embedding L2) score their sample pairs in
 one Spark job per request and collect the ≤ cap² distances. Either way the
 threshold is the ⌈q·n⌉-th smallest distance, picked with ``np.partition``.
@@ -33,7 +39,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
-from ..cache import persist, scoped_caches
 from ..config import LinkConfig
 from ..functions.normalize import NORM_COL
 from ..functions.scorers import distance_expr
@@ -44,13 +49,13 @@ _VOCAB_CHUNK = 4096
 
 
 class Side(NamedTuple):
-    """The distinct values of ``frame[col]``; ``n`` is their count when the
-    caller already knows it. Requests naming the same (frame, col, n)
-    share one count and one sample per seed."""
+    """``frame[col]`` with one row per value counted (a distinct name):
+    ``calibrate`` takes the rows as given, so its count is the row count.
+    Requests naming the same (frame, col) share one count and one sample
+    per seed."""
 
     frame: DataFrame
     col: str = NORM_COL
-    n: int | None = None
 
 
 def _seeded_sample(df: DataFrame, cap: int, seed: int, n: int | None = None) -> DataFrame:
@@ -134,57 +139,57 @@ def _spark_dists(spark, xs: list, ys: list, dtype, pair_dist) -> np.ndarray:
 
 
 def calibrate(
-    requests: Sequence[tuple[Side | DataFrame, Side | DataFrame, float]],
+    requests: Sequence[tuple[Side | DataFrame, Side | DataFrame, float | None]],
     cfg: LinkConfig,
     *,
     measure: str | None = None,
     pair_dist: Callable[[str, str], Column] | None = None,
-) -> list[tuple[float, int, int]]:
+) -> list[tuple[float | None, int, int]]:
     """One ``(thr, n_a, n_b)`` per request ``(side_a, side_b, k)``, in order.
+    ``k=None`` only counts: ``thr`` is None and nothing is sampled.
 
     A bare frame means ``Side(frame)``. ``side_a`` samples with
     ``cfg.seed``, ``side_b`` with ``cfg.seed + 1``. ``pair_dist(a, b) ->
     Column`` scores sample pairs in Spark; without it ``measure`` (default
     ``cfg.distance_measure``) does, on the driver for ``jaccard``.
 
-    ``n_a`` / ``n_b`` are exact distinct-value counts. They bound a side's
-    distinct ids — and so may be passed to ``candidate_pairs`` — only for
-    ``prepare_side`` frames, whose ids are content hashes of the name.
+    ``n_a`` / ``n_b`` are the sides' row counts. For ``index_side`` frames
+    they are exact distinct-id counts, the bound ``shared_gram_pairs``
+    takes.
     """
     measure = cfg.distance_measure if measure is None else measure
     if pair_dist is None and measure != "jaccard":
         pair_dist = lambda a, b: distance_expr(measure, a, b, qgram=cfg.qgram)  # noqa: E731
     reqs = [[s if isinstance(s, Side) else Side(s) for s in (a, b)] + [k] for a, b, k in requests]
-    uniq = {(id(s.frame), s.col, s.n): s for r in reqs for s in r[:2]}
+    uniq = {(id(s.frame), s.col): s for r in reqs for s in r[:2]}
     if not uniq:
         return []
     pos = {key: i for i, key in enumerate(uniq)}
-    index = [[pos[(id(s.frame), s.col, s.n)] for s in r[:2]] + r[2:] for r in reqs]
-    sides = list(uniq.values())
+    index = [[pos[(id(s.frame), s.col)] for s in r[:2]] + r[2:] for r in reqs]
+    vals = [s.frame.select(F.col(s.col).alias("_v")) for s in uniq.values()]
 
-    tagged = [s.frame.select(F.lit(i).alias("_side"), F.col(s.col).alias("_v")) for i, s in enumerate(sides)]
-    with scoped_caches():
-        base = persist(reduce(DataFrame.unionAll, tagged).distinct())
-        counts = [s.n for s in sides]
-        if None in counts:
-            got = dict(base.groupBy("_side").count().collect())
-            counts = [got.get(i, 0) if n is None else n for i, n in enumerate(counts)]
-        live = [(a, b) for a, b, _ in index if counts[a] and counts[b]]
-        draws = sorted({(a, cfg.seed) for a, _ in live} | {(b, cfg.seed + 1) for _, b in live})
-        samples: dict[tuple[int, int], list] = {d: [] for d in draws}
-        parts = [
-            _seeded_sample(
-                base.filter(F.col("_side") == i).select("_v"), cfg.calibration_sample, seed, counts[i]
-            ).select(F.lit(t).alias("_t"), "_v")
-            for t, (i, seed) in enumerate(draws)
-        ]
-        for r in reduce(DataFrame.unionAll, parts).collect() if parts else []:
-            samples[draws[r["_t"]]].append(r["_v"])
+    tagged = [v.select(F.lit(i).alias("_side"), "_v") for i, v in enumerate(vals)]
+    got = dict(reduce(DataFrame.unionAll, tagged).groupBy("_side").count().collect())
+    counts = [got.get(i, 0) for i in range(len(vals))]
+    live = [(a, b) for a, b, k in index if k is not None and counts[a] and counts[b]]
+    draws = sorted({(a, cfg.seed) for a, _ in live} | {(b, cfg.seed + 1) for _, b in live})
+    samples: dict[tuple[int, int], list] = {d: [] for d in draws}
+    parts = [
+        _seeded_sample(vals[i], cfg.calibration_sample, seed, counts[i]).select(
+            F.lit(t).alias("_t"), "_v"
+        )
+        for t, (i, seed) in enumerate(draws)
+    ]
+    for r in reduce(DataFrame.unionAll, parts).collect() if parts else []:
+        samples[draws[r["_t"]]].append(r["_v"])
 
     grams = {d: _gram_sets(v, cfg.qgram) for d, v in samples.items()} if pair_dist is None else {}
     out = []
     for a, b, k in index:
         na, nb = counts[a], counts[b]
+        if k is None:
+            out.append((None, na, nb))
+            continue
         if na == 0 or nb == 0:
             out.append((float("inf"), na, nb))
             continue
@@ -192,31 +197,11 @@ def calibrate(
         if pair_dist is None:
             dists = _jaccard_dists(grams[xs], grams[ys])
         else:
-            dtype = base.schema["_v"].dataType
-            dists = _spark_dists(base.sparkSession, samples[xs], samples[ys], dtype, pair_dist)
+            dtype = vals[a].schema["_v"].dataType
+            dists = _spark_dists(vals[a].sparkSession, samples[xs], samples[ys], dtype, pair_dist)
         thr = _rank_pick(dists, min(max(k / math.sqrt(float(na) * float(nb)), 0.0), 1.0))
         out.append((float("inf") if thr is None else max(thr, 1e-6), na, nb))
     return out
-
-
-def calibrated_threshold_on_column(
-    x_df: DataFrame,
-    y_df: DataFrame,
-    cfg: LinkConfig,
-    pair_dist_expr,
-    *,
-    k: float,
-    x_col: str,
-    y_col: str,
-    nx: int | None = None,
-    ny: int | None = None,
-) -> float:
-    """Calibrate over precomputed per-side columns (e.g. embeddings) scored
-    by ``pair_dist_expr(x_col, y_col) -> Column``; expensive per-row
-    derivations must already live in the columns so they run once per
-    sampled row, not per sampled pair. ``nx``/``ny`` replace the counts."""
-    sides = Side(x_df, x_col, nx), Side(y_df, y_col, ny)
-    return calibrate([(*sides, k)], cfg, pair_dist=pair_dist_expr)[0][0]
 
 
 def calibrated_threshold(
@@ -228,9 +213,13 @@ def calibrated_threshold(
     measure: str | None = None,
     return_counts: bool = False,
 ) -> float | tuple[float, int, int]:
-    """Data-dependent MaxDist for ``measure`` at budget ``k`` matches/row;
+    """Data-dependent MaxDist for ``measure`` at budget ``k`` matches/row
+    over the distinct ``name_norm`` values of two frames;
     ``return_counts=True`` returns ``(thr, nx, ny)`` with the exact
-    distinct-name counts (see ``calibrate`` on using them as bounds)."""
+    distinct-name counts. They bound a side's distinct ids — and so may
+    be passed to ``candidate_pairs`` — only for ``prepare_side`` frames,
+    whose ids are content hashes of the name."""
     k = cfg.ave_match_number_per_alias if k is None else k
-    [res] = calibrate([(x_prep, y_prep, k)], cfg, measure=measure)
+    x, y = (p.select(NORM_COL).distinct() for p in (x_prep, y_prep))
+    [res] = calibrate([(x, y, k)], cfg, measure=measure)
     return res if return_counts else res[0]

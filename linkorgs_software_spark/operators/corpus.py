@@ -302,12 +302,14 @@ def _remove_cut_tokens(d: DataFrame, id_col: str, k: int) -> DataFrame:
             & (i + 1 < c["end_pos"] + F.lit(k)),
         ),
     )
-    n = F.size(toks)
+    # kept in its own projection, so the per-token lambda runs once per
+    # document: Catalyst collapses projections but never duplicates it
+    d = d.select("_id", F.size(toks).alias("_n"), kept.alias("_kept"))
     return d.select(
         F.col("_id").alias(id_col),
-        F.concat_ws(" ", kept).alias("text_clean"),
-        n.cast("long").alias("n_tokens"),
-        (n - F.size(kept)).cast("long").alias("n_removed"),
+        F.concat_ws(" ", "_kept").alias("text_clean"),
+        F.col("_n").cast("long").alias("n_tokens"),
+        (F.col("_n") - F.size("_kept")).cast("long").alias("n_removed"),
     )
 
 

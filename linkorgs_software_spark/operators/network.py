@@ -26,7 +26,7 @@ from pyspark.sql import functions as F
 
 from ..config import FALLBACK_MAX_DIST, LinkConfig
 from ..functions.normalize import NORM_COL, prepare_side
-from .calibrate import calibrated_threshold
+from .calibrate import calibrate
 from .dedup import keep_min_per_group
 from .scoring import DIST_COL, IndexedSide, index_side, indexed, match_sides
 
@@ -59,20 +59,16 @@ def match_to_directory(
     ``directory_matches``.
 
     ``calibration``: a precomputed ``(thr, n_side, n_dir)``; None
-    calibrates here when ``cfg.ave_match_number_per_alias_network`` is set
-    (its distinct-name counts bound the blocking cap).
+    calibrates here, over the two indexed sides, when
+    ``cfg.ave_match_number_per_alias_network`` is set (their row counts
+    bound the blocking cap).
     """
-    if calibration is None and cfg.ave_match_number_per_alias_network is not None:
-        calibration = calibrated_threshold(
-            side_prep, dir_prep, cfg, k=cfg.ave_match_number_per_alias_network,
-            return_counts=True,
-        )
     side = indexed(index_side(side_prep, side_id, cfg), side_id, cfg)
-    dir_names = index_side(dir_prep, ALIAS_ID, cfg, carry=("canonical_id",))
-    return directory_matches(
-        side, indexed(dir_names, ALIAS_ID, cfg), cfg,
-        out_dist=out_dist, calibration=calibration,
-    )
+    dir_side = indexed(index_side(dir_prep, ALIAS_ID, cfg, carry=("canonical_id",)), ALIAS_ID, cfg)
+    if calibration is None and cfg.ave_match_number_per_alias_network is not None:
+        k = cfg.ave_match_number_per_alias_network
+        [calibration] = calibrate([(side.names, dir_side.names, k)], cfg)
+    return directory_matches(side, dir_side, cfg, out_dist=out_dist, calibration=calibration)
 
 
 def directory_matches(

@@ -30,7 +30,7 @@ from ..config import DEFAULT, FALLBACK_MAX_DIST, LinkConfig
 from ..functions.embedding import l2_dist_udf, make_hash_embed_udf
 from ..functions.normalize import NORM_COL, pair_id_expr, prepare_side
 from ..operators.blocking import gram_index, shared_gram_pairs
-from ..operators.calibrate import calibrate
+from ..operators.calibrate import Side, calibrate
 from ..operators.dedup import keep_min_per_group, min_over_group
 from ..operators.network import (
     ALIAS_ID,
@@ -56,27 +56,36 @@ def _rep_rows(prep: DataFrame, id_col: str, by_col: str, suffix: str) -> DataFra
 
 
 def _resolve_thresholds(
-    x_prep: DataFrame, y_prep: DataFrame, cfg: LinkConfig, dir_prep: DataFrame | None = None
-) -> tuple[tuple[float, int | None, int | None], tuple | None, tuple | None]:
+    xs: DataFrame, ys: DataFrame, cfg: LinkConfig, ds: DataFrame | None = None
+) -> tuple[tuple[float, int, int], tuple | None, tuple | None]:
     """Reference threshold priority (``LinkOrgs_PFuzzyDiscreteFullFxn.R:67-76``):
     a non-None ``ave_match_number_per_alias`` recomputes the threshold by
     calibration and OVERRIDES ``max_dist``; ``max_dist`` applies only when the
     ave knob is None; both None falls back to the reference's internal
-    default MaxDist = 0.20.
+    default MaxDist = 0.20. The network pair follows the same rule.
 
-    Returns ``(thr, nx, ny)``; the counts are the calibration's exact
-    distinct-name counts when it ran (recycled as ``shared_gram_pairs``
-    posting-list bounds), else None — never computed just for the bound.
-    Then the x→ and y→``dir_prep`` calibrations, None when there is no
-    directory or its threshold is pinned. All run as ONE ``calibrate`` batch."""
+    ``xs``, ``ys`` and ``ds`` are the x, y and directory ``index_side``
+    rows (one per distinct name); ``ds`` is None when there is no
+    directory or its matches are already checkpointed.
+
+    Returns ``(thr, nx, ny)`` for the raw match, then ``(thr, nx, nd)`` and
+    ``(thr, ny, nd)`` for the x→ and y→directory matches (None without
+    ``ds``). The counts are the sides' row counts, which bound their
+    distinct ids for ``shared_gram_pairs``. Calibrations and counts run
+    as ONE ``calibrate`` batch, so a pinned threshold costs the same one
+    count action."""
     raw_k = cfg.ave_match_number_per_alias
-    net_k = None if dir_prep is None else cfg.ave_match_number_per_alias_network
-    reqs = [] if raw_k is None else [(x_prep, y_prep, raw_k)]
-    reqs += [] if net_k is None else [(x_prep, dir_prep, net_k), (y_prep, dir_prep, net_k)]
-    got = calibrate(reqs, cfg)
-    pinned = (FALLBACK_MAX_DIST if cfg.max_dist is None else cfg.max_dist, None, None)
-    raw = pinned if raw_k is None else got.pop(0)
-    return raw, *(got or (None, None))
+    reqs = [(xs, ys, raw_k)]
+    pins = [cfg.max_dist]
+    if ds is not None:
+        net_k = cfg.ave_match_number_per_alias_network
+        reqs += [(xs, ds, net_k), (ys, ds, net_k)]
+        pins += [cfg.max_dist_network] * 2
+    got = [
+        ((FALLBACK_MAX_DIST if pin is None else pin) if thr is None else thr, *n)
+        for (thr, *n), pin in zip(calibrate(reqs, cfg), pins)
+    ]
+    return got[0], *(got[1:] or (None, None))
 
 
 def _embedded_side(prep: DataFrame, cfg: LinkConfig, embed_col: str | None) -> DataFrame:
@@ -264,8 +273,8 @@ def link_orgs(
     if algorithm in ("lookup", "alias") and directory is None:
         raise ValueError(f"algorithm {algorithm!r} requires a directory DataFrame")
 
-    # The prepared sides feed several plan branches (calibration, the
-    # indexed sides, representative-row back-merge) — cache them so each
+    # The prepared sides feed several plan branches (the indexed or
+    # embedded sides, representative-row back-merge) — cache them so each
     # branch reads the normalized frame instead of re-deriving it.
     x_prep = persist(prepare_side(x, cfg.by_x, "x_id", cfg))
     y_prep = persist(prepare_side(y, cfg.by_y, "y_id", cfg))
@@ -298,18 +307,13 @@ def link_orgs(
         xe = persist(_embedded_side(x_prep, cfg, embed_col_x))
         ye = persist(_embedded_side(y_prep, cfg, embed_col_y))
         if cfg.ave_match_number_per_alias is not None:
-            from ..operators.calibrate import calibrated_threshold_on_column
-
-            thr = calibrated_threshold_on_column(
-                xe,
-                ye,
+            # one sampled row per distinct NAME: n counts names, and two
+            # names sharing a vector are two rows
+            sides = Side(xe, "_emb"), Side(ye, "_emb")
+            [(thr, _, _)] = calibrate(
+                [(*sides, cfg.ave_match_number_per_alias)],
                 cfg,
-                lambda a, b: l2_dist_udf(F.col(a), F.col(b)),
-                k=cfg.ave_match_number_per_alias,
-                x_col="_emb",
-                y_col="_emb",
-                nx=xe.count(),
-                ny=ye.count(),
+                pair_dist=lambda a, b: l2_dist_udf(F.col(a), F.col(b)),
             )
         elif cfg.max_dist is not None:
             thr = cfg.max_dist
@@ -349,21 +353,21 @@ def link_orgs(
         def index(prep, id_col, carry=()):
             return indexed(persist(index_side(prep, id_col, cfg, carry=carry)), id_col, cfg)
 
-        dir_prep = None
+        # The calibrations sample these indexed sides, and their one count
+        # action materializes the persists the matches read next.
+        xs, ys = index(x_prep, "x_id"), index(y_prep, "y_id")
+        ds = None
         if algorithm == "alias":
-            # cached: the calibrations and the directory index read it
-            dir_prep = persist(prepare_directory(directory, cfg))
+            ds = index(prepare_directory(directory, cfg), ALIAS_ID, ("canonical_id",))
         # a resumed run skips the calibrations of completed directory stages
         done = checkpointer is not None and all(map(checkpointer.is_complete, ("x2net", "y2net")))
-        cal_dir = None if done else dir_prep
-        (thr, nxc, nyc), x_cal, y_cal = _resolve_thresholds(x_prep, y_prep, cfg, cal_dir)
-        xs, ys = index(x_prep, "x_id"), index(y_prep, "y_id")
+        cal_dir = None if ds is None or done else ds.names
+        (thr, nxc, nyc), x_cal, y_cal = _resolve_thresholds(xs.names, ys.names, cfg, cal_dir)
         z_raw = _stage(
             "scored_raw",
             lambda: match_sides(xs, ys, cfg, x_count=nxc, y_count=nyc, max_dist=thr),
         )
-        if dir_prep is not None:
-            ds = index(dir_prep, ALIAS_ID, ("canonical_id",))
+        if ds is not None:
             x2net = _stage(
                 "x2net",
                 lambda: directory_matches(xs, ds, cfg, out_dist="netdist_x", calibration=x_cal),

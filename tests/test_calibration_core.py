@@ -82,7 +82,8 @@ def test_core_matches_spark_formulation(spark, case):
     cfg = LinkConfig(**kw)
     x, y = _names(spark, xs), _names(spark, ys)
     want = _spark_oracle(x, y, cfg, k)
-    [got] = calibrate([(x, y, k)], cfg)
+    # the core takes one row per value; the public wrapper deduplicates
+    [got] = calibrate([(x.distinct(), y.distinct(), k)], cfg)
     assert got == want
     assert calibrated_threshold(x, y, cfg, k=k, return_counts=True) == want
 
@@ -125,6 +126,9 @@ def test_batched_call_equals_single_calls(spark):
     batched = calibrate(reqs, cfg)
     assert batched == [calibrate([r], cfg)[0] for r in reqs]
     assert batched == [_spark_oracle(a, b, cfg, k) for a, b, k in reqs]
+    # k=None only counts (a pinned threshold's bounds), in the same batch
+    counted = calibrate([(y, d, None), *reqs], cfg)
+    assert counted == [(None, batched[2][1], batched[2][2]), *batched]
 
 
 def test_rank_pick_is_exact_kth_smallest():

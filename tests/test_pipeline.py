@@ -78,7 +78,8 @@ def test_alias_call_indexes_each_input_once(spark, fixture_tables, monkeypatch):
             if orig is not None and getattr(m, name, None) is orig:
                 monkeypatch.setattr(m, name, counted)
 
-    # side dedupes, by the blocking / scoring / network function issuing them
+    # side dedupes, by the blocking / scoring / network / calibrate function
+    # issuing them: calibration samples the indexed sides as they are
     dedupes = collections.Counter()
     frame = type(spark.range(1))
     for meth in ("dropDuplicates", "distinct"):
@@ -86,7 +87,7 @@ def test_alias_call_indexes_each_input_once(spark, fixture_tables, monkeypatch):
         def traced(self, *a, _orig=getattr(frame, meth), **kw):
             code = sys._getframe(1).f_code
             path = pathlib.Path(code.co_filename)
-            if path.parent.name == "operators" and path.stem in ("blocking", "scoring", "network"):
+            if path.parent.name == "operators" and path.stem in ("blocking", "scoring", "network", "calibrate"):
                 dedupes[code.co_name] += 1
             return _orig(self, *a, **kw)
 
@@ -98,8 +99,9 @@ def test_alias_call_indexes_each_input_once(spark, fixture_tables, monkeypatch):
 
 # Most Spark jobs seen for one ``_alias_call`` plus the collect of its
 # result on local[4], over N runs (the layout before one indexed side per
-# input ran 53 in every run).
-_ALIAS_CALL_JOBS = 40
+# input ran 53 in every run; before calibration sampled the indexed sides,
+# 40).
+_ALIAS_CALL_JOBS = 35
 
 
 def test_alias_call_jobs(spark, fixture_tables):
@@ -115,6 +117,27 @@ def test_alias_call_jobs(spark, fixture_tables):
         sc.setLocalProperty("spark.job.description", None)
     jobs = len(sc.statusTracker().getJobIdsForGroup(group))
     assert rows and 0 < jobs <= _ALIAS_CALL_JOBS, jobs
+
+
+def test_fixed_threshold_counts_prune_df_caps(spark, fixture_tables):
+    """A pinned-threshold call counts its indexed sides in one action and
+    passes the counts as ``shared_gram_pairs`` bounds: sides under
+    ``max_block_df`` lose their df-cap subtrees (the cap's anti-join),
+    sides over it keep them."""
+
+    def plan_of(df):
+        return df._sc._jvm.PythonSQLUtils.explainString(df._jdf.queryExecution(), "formatted")
+
+    def call(cfg):
+        return link_orgs(
+            fixture_tables["org_x"], fixture_tables["org_y"], cfg, algorithm="alias",
+            directory=fixture_tables["alias_directory"], one_to_one=True,
+        )
+
+    cfg = fixed_threshold_config(max_dist=0.4, max_dist_network=0.3)
+    pruned = call(cfg)
+    assert "LeftAnti" not in plan_of(pruned) and pruned.count() == 60
+    assert "LeftAnti" in plan_of(call(cfg.with_(max_block_df=59)))  # 60 names per side
 
 
 def test_network_bridge_links_tiny_directory(spark):
@@ -280,6 +303,39 @@ def test_precomputed_embeddings_passthrough(spark):
     assert ("beta partners", "beta partners") in pairs
     assert pairs[("beta partners", "beta partners")] == 0.0
     assert ("alpha systems", "alpha systems") not in pairs  # orthogonal vectors
+
+
+def test_embed_calibration_counts_and_samples_names(spark, monkeypatch):
+    """The embedding calibration's unit is the distinct NAME: two names
+    sharing one user-supplied vector are two rows, both in ``n`` and in the
+    sample. Rows: x (a, b share [1, 0]; c is [0, 1]) × y ([1, 0], [0, 3])
+    give distances 0, 0, √2, 2, √10, √10; q = 0.3 picks the 2nd smallest
+    (0, clamped to 1e-6). Distinct vectors would give 0, √2, 2, √10 and
+    pick √2."""
+    import math
+
+    from linkorgs_software_spark.plans import pipeline
+
+    got = []
+
+    def recorded(*a, _orig=pipeline.calibrate, **kw):
+        got.extend(_orig(*a, **kw))
+        return got[-1:]
+
+    monkeypatch.setattr(pipeline, "calibrate", recorded)
+    x = spark.createDataFrame(
+        [(1, "acme corp", [1.0, 0.0]), (2, "acme co", [1.0, 0.0]), (3, "beta inc", [0.0, 1.0])],
+        "id long, name string, vec array<float>",
+    )
+    y = spark.createDataFrame(
+        [(1, "acme corporation", [1.0, 0.0]), (2, "zeta llc", [0.0, 3.0])],
+        "id long, name string, vec array<float>",
+    )
+    cfg = LinkConfig(ave_match_number_per_alias=0.3 * math.sqrt(6))
+    z = link_orgs(x, y, cfg, embed_col_x="vec", embed_col_y="vec", embed_blocking="none")
+    pairs = {(r.name_x, r.name_y) for r in z.collect()}
+    assert pairs == {("acme corp", "acme corporation"), ("acme co", "acme corporation")}
+    assert got == [(1e-6, 3, 2)]
 
 
 def test_embed_ann_blocking_matches_without_shared_trigrams(spark):
